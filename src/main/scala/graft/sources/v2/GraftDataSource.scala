@@ -514,9 +514,9 @@ class GraftV2Table(tableName: String, val table: StreamTable,
         if (files.isEmpty)
           throw new IllegalStateException(s"$tableName has no committed snapshot")
         // engine-internal sequencing columns never surface through the source;
-        // mergeSchema unions layouts across evolution (old files null-fill)
-        StructType(spark.read.option("mergeSchema", "true")
-          .parquet(files.map(_.path): _*).schema
+        // the merged file schema unions layouts across evolution (old files
+        // null-fill)
+        StructType(StreamTable.fileSchema(spark, files)
           .filterNot(f => f.name == StreamTable.SeqColName ||
             f.name == StreamTable.TombstoneColName ||
             f.name.startsWith(StreamTable.FieldSeqPrefix) ||

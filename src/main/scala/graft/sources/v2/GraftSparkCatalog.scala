@@ -307,8 +307,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
             n.startsWith(graft.table.StreamTable.FieldSeqPrefix) ||
             n.startsWith(graft.table.StreamTable.FieldListPrefix))
           .toSet
-      else SparkSession.active.read.option("mergeSchema", "true")
-        .parquet(files.map(_.path): _*).schema.fieldNames.toSet
+      else graft.table.StreamTable.fileSchema(SparkSession.active, files)
+        .fieldNames.toSet
           .filterNot(n => n == graft.table.StreamTable.SeqColName ||
             n == graft.table.StreamTable.TombstoneColName ||
             n.startsWith(graft.table.StreamTable.FieldSeqPrefix) ||

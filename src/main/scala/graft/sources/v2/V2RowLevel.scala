@@ -705,7 +705,8 @@ class GraftPkDeltaBatchWrite(table: GraftV2Table, rowSchema0: StructType,
         // compute the same batch id and appendBatch's replay guard would
         // silently drop the loser. Cross-driver concurrency keeps the
         // library doors' single-logical-writer contract.
-        val df = spark.read.option("mergeSchema", "true")
+        val df = spark.read.schema(StreamTable.pathSchema(spark,
+          visible.map(p => (p, java.nio.file.Files.size(java.nio.file.Paths.get(p))))))
           .parquet(visible: _*)
         GraftPkDeltaBatchWrite.dmlLock
           .computeIfAbsent(t.root, _ => new Object).synchronized {

@@ -58,13 +58,15 @@ object LookupRetry {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
         // newest pending file from an EARLIER batch (replay-safe)
+        val fresh = batch.withColumn("__attempts", lit(0))
+        // parked rows have exactly `fresh`'s columns; a replay overwrites
+        // pending-<id>, so its schema is passed, never inferred or memoized
         val pending = graft.table.StreamTable.listDir(Paths.get(retryDir)).iterator
           .map(_.getFileName.toString)
           .filter(_.startsWith("pending-"))
           .map(_.stripPrefix("pending-").toLong)
           .filter(_ < id).toSeq.sorted.lastOption
-          .map(m => s.read.parquet(s"$retryDir/pending-$m"))
-        val fresh = batch.withColumn("__attempts", lit(0))
+          .map(m => s.read.schema(fresh.schema).parquet(s"$retryDir/pending-$m"))
         val input = pending.map(fresh.unionByName(_)).getOrElse(fresh)
 
         val d = dim().withColumn("__hit", lit(1))

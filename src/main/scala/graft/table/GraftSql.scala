@@ -121,7 +121,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
       case AlterAddRe(name, body) =>
         // schema evolution (Paimon ALTER TABLE ADD COLUMN): append to the
         // declared schema; existing data files simply lack the column and
-        // read as NULL (mergeSchema), new writers carry it — no rewrite
+        // read as NULL (merged file schema), new writers carry it — no rewrite
         val t = name.split("\\.").last
         val existing = declaredCols(t)
         require(existing.nonEmpty,
@@ -370,9 +370,11 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
           .filter(_.startsWith("pending-"))
           .map(_.stripPrefix("pending-").toLong)
           .filter(_ < absId).toSeq.sorted
-        val pending = pendingIds.lastOption
-          .map(m => s.read.parquet(s"$retryDir/pending-$m"))
         val fresh = batch.withColumn("__attempts", lit(0))
+        // parked rows have exactly `fresh`'s columns; a replay overwrites
+        // pending-<id>, so its schema is passed, never inferred or memoized
+        val pending = pendingIds.lastOption
+          .map(m => s.read.schema(fresh.schema).parquet(s"$retryDir/pending-$m"))
         val input = pending.map(fresh.unionByName(_)).getOrElse(fresh)
         // a miss = a row failing the temporal JOIN itself (the hint's
         // lookup_miss predicate); the dim stays broadcast — the retry path
@@ -452,10 +454,6 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
     df
   }
 
-  /** Current database's tables as `<table>` temp views (plus `<db>_<table>`),
-    * so SELECT/INSERT bodies reference them by bare name like the reference;
-    * each table's `$files` / `$snapshots` metadata views register as
-    * `<table>__files` / `<table>__snapshots` / `<table>__tags`. */
   /** The table's declared (evolved) schema from `ddl.schema`, if it was
     * created through the shell. */
   private def declaredCols(t: String): Seq[(String, String)] =
@@ -471,6 +469,10 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
       o.get("bucket-key") ++ o.get("sequence.field")
   }
 
+  /** Current database's tables as `<table>` temp views (plus `<db>_<table>`),
+    * so SELECT/INSERT bodies reference them by bare name like the reference;
+    * each table's `$files` / `$snapshots` metadata views register as
+    * `<table>__files` / `<table>__snapshots` / `<table>__tags`. */
   private def registerViews(): Unit =
     catalog.listTables(currentDb).foreach { t =>
       val table = catalog.getTable(currentDb, t)

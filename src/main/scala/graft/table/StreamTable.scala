@@ -392,8 +392,8 @@ class StreamTable(
   /** The effective engine: aggSpec implies aggregation. */
   private val engine: String = if (aggSpec.isDefined) "aggregation" else mergeEngine
 
-  /** The effective merge engine, for connector-layer capability checks
-    * (the V2 PK merge-on-read supports deduplicate/first-row only). */
+  /** The effective merge engine, which selects the V2 PK merge-on-read's
+    * per-key fold (deduplicate, first-row, aggregation or partial-update). */
   private[graft] def effectiveEngine: String = engine
 
   private val dataAppend = s"$root/data/append"
@@ -1337,7 +1337,7 @@ class StreamTable(
     // join (readFiles would hide _metadata behind it), suppress already-
     // deleted positions explicitly, then apply the predicate
     import spark.implicits._
-    val raw = spark.read.option("mergeSchema", "true")
+    val raw = spark.read.schema(StreamTable.fileSchema(spark, live))
       .parquet(live.map(_.path): _*)
       .withColumn("__graft_dv_name", col("_metadata.file_name"))
       .withColumn("__graft_dv_pos", col("_metadata.row_index"))
@@ -1449,7 +1449,8 @@ class StreamTable(
     import spark.implicits._
     // raw file offsets: read WITHOUT the DV-suppression join, then drop
     // already-deleted positions explicitly (exactly dvDelete's discipline)
-    def raw() = spark.read.option("mergeSchema", "true")
+    val liveSchema = StreamTable.fileSchema(spark, live)
+    def raw() = spark.read.schema(liveSchema)
       .parquet(live.map(_.path): _*)
       .withColumn("__graft_dv_name", col("_metadata.file_name"))
       .withColumn("__graft_dv_pos", col("_metadata.row_index"))
@@ -1918,35 +1919,41 @@ class StreamTable(
 
   // ---- reads -------------------------------------------------------------
 
-  private def readFiles(files: Seq[DataFileMeta]): DataFrame = {
-    if (columnDefaults.isEmpty || files.isEmpty) return readFilesRaw(files)
+  /** Read data files under ONE schema, [[StreamTable.fileSchema]] of the
+    * files, widened by the columns of `widenTo` that they lack (appended,
+    * read as NULL): an interval of only delete tombstones, which carry key
+    * and sequence columns alone, still reads every column of the table. */
+  private def readFiles(files: Seq[DataFileMeta],
+      widenTo: Seq[DataFileMeta] = Nil): DataFrame = {
+    val own = StreamTable.fileSchema(spark, files)
+    val schema =
+      if (widenTo.isEmpty) own
+      else org.apache.spark.sql.graft.SchemaMerge.merge(own,
+        StreamTable.fileSchema(spark, widenTo),
+        spark.sessionState.conf.caseSensitiveAnalysis)
+    if (columnDefaults.isEmpty) return readFilesRaw(files, schema)
     // EXISTS_DEFAULT substitution (ADD COLUMN … DEFAULT): group files by
     // the set of defaulted columns each provably lacks (manifest fileCols;
     // a legacy meta without the census conservatively counts as carrying
     // everything = plain null-fill), fill each group's absent columns with
-    // the frozen literal, and union back in the canonical column order.
+    // the frozen literal, and union back in the schema's column order.
     // Group count is bounded by the (tiny) number of schema generations.
     val groups = files.groupBy(f =>
       columnDefaults.keySet.filter(c => f.fileCols.exists(!_.contains(c))))
-    if (groups.keySet == Set(Set.empty[String])) return readFilesRaw(files)
-    // newest schema generation first (fewest absent columns): its column
-    // order IS the full current layout, so the union needs no extra footer
-    // pass just to recover ordering — the groups' own schemas (already read
-    // by readFilesRaw) carry it
-    val parts = groups.toSeq.sortBy(_._1.size).map { case (absent, fs) =>
-      absent.foldLeft(readFilesRaw(fs))((df, c) =>
+    if (groups.keySet == Set(Set.empty[String])) return readFilesRaw(files, schema)
+    groups.toSeq.map { case (absent, fs) =>
+      absent.foldLeft(readFilesRaw(fs, schema))((df, c) =>
         df.withColumn(c, expr(columnDefaults(c))))
-    }
-    val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    val order = parts.map(_.columns.toSeq)
-      .reduce((a, b) => a ++ b.filterNot(a.contains))
-    unioned.select(order.filter(unioned.columns.contains).map(col): _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  private def readFilesRaw(files: Seq[DataFileMeta]): DataFrame = {
-    // mergeSchema: delete-tombstone files carry only (pk, marker) columns
-    def raw(fs: Seq[DataFileMeta]) =
-      spark.read.option("mergeSchema", "true").parquet(fs.map(_.path): _*)
+  /** The data files read under `schema`, with deletion vectors applied.
+    * The schema is never inferred here: [[readFiles]] takes it from
+    * [[StreamTable.fileSchema]] (memoized footers, no Spark job), and a
+    * file lacking one of its columns reads that column as NULL. */
+  private def readFilesRaw(files: Seq[DataFileMeta],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    def raw(fs: Seq[DataFileMeta]) = spark.read.schema(schema).parquet(fs.map(_.path): _*)
     val (dv, plain) = files.partition(_.dvCount.exists(_ > 0))
     if (dv.isEmpty) return raw(files)
     // deletion-vector suppression: files with a DV read WITH their row
@@ -1967,12 +1974,7 @@ class StreamTable(
       .withColumn("__graft_dv_pos", col("_metadata.row_index"))
       .join(broadcast(delDf), Seq("__graft_dv_name", "__graft_dv_pos"), "left_anti")
       .drop("__graft_dv_name", "__graft_dv_pos")
-    // canonical column order = the single merged read's (schema-only probe)
-    val order = raw(files).schema.fieldNames
-    val unioned =
-      if (plain.isEmpty) dvRead
-      else raw(plain).unionByName(dvRead, allowMissingColumns = true)
-    unioned.select(order.map(col).toSeq: _*)
+    if (plain.isEmpty) dvRead else raw(plain).union(dvRead)
   }
 
   /** Last-writer-wins resolution incl. delete tombstones, under the Paimon
@@ -2538,7 +2540,10 @@ class StreamTable(
     // compaction rewrites are not logical changes
     val newFiles = addedBetween(fromId, toId).filter(_.level == 0)
     if (newFiles.isEmpty) return read.limit(0).withColumn("op", lit(""))
-    val added = readFiles(newFiles)
+    // widened to the table's value schema at toId: an interval of only
+    // delete tombstones still returns every column, NULL on its -D rows
+    val added = readFiles(newFiles,
+      widenTo = snapshotAt(toId).map(_.files).getOrElse(Seq.empty))
     primaryKey match {
       case None => added.drop(SeqColName).withColumn("op", lit("+I"))
       case Some(pk) =>
@@ -2984,7 +2989,8 @@ class StreamTable(
         // persisted changelog files are SELF-CONTAINED — retention expiring
         // the predecessor must not drop history we still hold
         if (s.changelog.isEmpty) None
-        else Some(spark.read.parquet(s.changelog.map(_.path): _*)
+        else Some(spark.read.schema(StreamTable.fileSchema(spark, s.changelog))
+          .parquet(s.changelog.map(_.path): _*)
           .withColumnRenamed("op", "rowkind"))
       else if (coveredByDeferred(s.id))
         None // emitted at the covering deferred-producer snapshot
@@ -4415,7 +4421,8 @@ object StreamTable {
     val captured: Seq[(String, CapturedStats, Long)] =
       if (paths.size < DistributedStatsThreshold) {
         val conf = new org.apache.hadoop.conf.Configuration()
-        paths.map(p => (p, footerColumnStats(p, conf), Files.size(Paths.get(p))))
+        paths.map(p =>
+          (p, footerColumnStats(p, conf, seedSchema = true), Files.size(Paths.get(p))))
       } else {
         // distributed capture: executors open the footers they can reach on
         // the shared table filesystem (the same contract every read path
@@ -4424,7 +4431,7 @@ object StreamTable {
           .parallelize(paths, math.min(paths.size, 64))
           .map { p =>
             val conf = new org.apache.hadoop.conf.Configuration()
-            (p, footerColumnStats(p, conf), Files.size(Paths.get(p)))
+            (p, footerColumnStats(p, conf, seedSchema = true), Files.size(Paths.get(p)))
           }.collect().map(x => x._1 -> x).toMap
         paths.map(byPath)
       }
@@ -4443,6 +4450,75 @@ object StreamTable {
     * stats-pruned plan over a current-format manifest performs ZERO footer
     * I/O on the driver. */
   val planFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Driver footer opens made by [[fileSchema]] for a file its memo has not
+    * seen (a sink-committed file, or one committed by another JVM). A
+    * second read of the same files leaves this untouched. */
+  val schemaFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Footer metadata (parquet schema + key/value metadata) per data file,
+    * keyed by (path, size). Table files are immutable and UUID-named, so an
+    * entry never goes stale. BOUNDED (LRU) like the manifest cache: a
+    * long-running writer commits new files forever; a miss costs one
+    * footer open. */
+  private val FileSchemaMemoSize = 8192
+  private val fileSchemaMemo = new java.util.LinkedHashMap[(String, Long),
+      org.apache.parquet.hadoop.metadata.FileMetaData](256, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, Long),
+        org.apache.parquet.hadoop.metadata.FileMetaData]): Boolean =
+      size > FileSchemaMemoSize
+  }
+
+  private def memoFileMeta(path: String, size: Long,
+      m: org.apache.parquet.hadoop.metadata.FileMetaData): Unit =
+    fileSchemaMemo.synchronized(fileSchemaMemo.put((path, size), m))
+
+  /** The Spark schema of a set of table data files — exactly what
+    * `spark.read.option("mergeSchema","true").parquet(paths).schema` infers,
+    * with no Spark job: each file's footer converts as Spark's parquet
+    * inference converts it (the session's converter settings), and the
+    * schemas merge on the driver in Spark's own order (files sorted by path
+    * string, a left fold of `StructType.merge` under
+    * `spark.sql.caseSensitive`), so column order matches the inferred one.
+    * Footers come from the (path, size) memo; a miss opens the footer once.
+    * Every read of table files passes this as its `.schema(...)`: tombstone
+    * files carry only key + sequence columns and evolved files differ, and
+    * the merged schema null-fills what a file lacks. */
+  private[graft] def fileSchema(spark: SparkSession,
+      files: Seq[DataFileMeta]): org.apache.spark.sql.types.StructType =
+    pathSchema(spark, files.map(f => (f.path, f.fileSizeInBytes)))
+
+  /** [[fileSchema]] over (path, size) pairs. */
+  private[graft] def pathSchema(spark: SparkSession,
+      files: Seq[(String, Long)]): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.graft.SchemaMerge
+    require(files.nonEmpty, "no data files to take a schema from")
+    val sqlConf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(sqlConf)
+    lazy val hadoopConf = spark.sessionState.newHadoopConf()
+    val schemas = files.distinct.sortBy(_._1).map { case (path, size) =>
+      val meta = fileSchemaMemo.synchronized(
+        Option(fileSchemaMemo.get((path, size)))).getOrElse {
+        schemaFooterReads.incrementAndGet()
+        val m = ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(path), hadoopConf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter
+            .SKIP_ROW_GROUPS).getFileMetaData
+        memoFileMeta(path, size, m)
+        m
+      }
+      ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(new org.apache.hadoop.fs.Path(path),
+          new org.apache.parquet.hadoop.metadata.ParquetMetadata(meta,
+            java.util.Collections.emptyList())), converter)
+    }
+    val caseSensitive = sqlConf.caseSensitiveAnalysis
+    SchemaMerge.asNullable(
+      schemas.reduceLeft((a, b) => SchemaMerge.merge(a, b, caseSensitive)))
+  }
 
   /** Paths deleted BY THE DRIVER during maintenance (expiry / rollback /
     * orphan sweep) — large batches run as a distributed pass instead
@@ -4618,7 +4694,8 @@ object StreamTable {
     * stats poisons the COLUMN (`bad`) instead of being silently skipped, so
     * manifest-served pruning can trust an entry's absence. */
   private[graft] def footerColumnStats(path: String,
-      conf: org.apache.hadoop.conf.Configuration): CapturedStats = {
+      conf: org.apache.hadoop.conf.Configuration,
+      seedSchema: Boolean = false): CapturedStats = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     if (org.apache.spark.TaskContext.get() == null)
@@ -4626,6 +4703,9 @@ object StreamTable {
     val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
     val reader = ParquetFileReader.open(in)
     try {
+      // a committed file's schema is known from this open: reads of it
+      // then plan without a footer open of their own ([[fileSchema]])
+      if (seedSchema) memoFileMeta(path, in.getLength, reader.getFooter.getFileMetaData)
       val blocks = reader.getFooter.getBlocks.asScala
       val rows = blocks.map(_.getRowCount).sum
       type AnyStats = org.apache.parquet.column.statistics.Statistics[_ <: Comparable[_]]

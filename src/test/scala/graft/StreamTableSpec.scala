@@ -277,6 +277,23 @@ class StreamTableSpec extends AnyFunSuite {
     assert(t.read.count() == 3)
   }
 
+  test("changesBetween over a delete-only commit returns every column") {
+    // tombstone files carry only key + sequence columns; the interval read
+    // still has the table's full value schema, NULL on the -D rows
+    val t = new StreamTable(tmp(), spark, primaryKey = Some(Seq("id")),
+      seqCol = Some("updated_at"), bucketKey = Some("id"), numBuckets = 2)
+    t.appendBatch(Seq((1L, 10L, "a", 1.5), (2L, 11L, "b", 2.5), (3L, 12L, "c", 3.5))
+      .toDF("id", "updated_at", "name", "lat"), 0)
+    t.deleteBatch(Seq((2L, 20L), (3L, 21L)).toDF("id", "updated_at"), 1)
+    val ch = t.changesBetween(0, 1)
+    assert(ch.columns.toSet == Set("id", "updated_at", "name", "lat", "op"),
+      ch.columns.toSeq)
+    val got = ch.orderBy("id").select("id", "updated_at", "name", "lat", "op")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.isNullAt(2), r.isNullAt(3),
+        r.getString(4)))
+    assert(got.toSeq == Seq((2L, 20L, true, true, "-D"), (3L, 21L, true, true, "-D")))
+  }
+
   test("time travel: readAt earlier snapshots sees the table as of then") {
     val t = new StreamTable(tmp(), spark, primaryKey = Some(Seq("id")))
     t.appendBatch(Seq((1L, "v1")).toDF("id", "v"), 0)
