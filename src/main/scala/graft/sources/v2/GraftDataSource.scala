@@ -276,14 +276,12 @@ object GraftV2Table {
     }
     val declared = opts.get(GraftSparkCatalog.SchemaOption)
       .flatMap(s => scala.util.Try(StructType.fromDDL(s)).toOption)
-      .orElse(opts.get("ddl.schema").flatMap { s =>
-        val cols = s.split("\\|").filter(_.nonEmpty).toSeq.map { cd =>
-          val p = cd.split("\\s+", 2)
-          (p(0), p.lift(1).flatMap(graft.table.GraftSql.sparkType))
-        }
+      .orElse {
+        val cols = graft.table.GraftCatalog.ddlColumns(opts).map { case (n, ty) =>
+          (n, graft.table.GraftSql.sparkType(ty)) }
         if (cols.isEmpty || cols.exists(_._2.isEmpty)) None
         else Some(StructType(cols.map { case (n, t) => StructField(n, t.get) }))
-      })
+      }
     // `ddl.default.<declared>` (ADD COLUMN … DEFAULT, frozen at ADD time as
     // a canonical literal) rides the schema as Spark's own default-column
     // metadata: EXISTS_DEFAULT makes the vectorized parquet reader fill
@@ -502,33 +500,31 @@ class GraftV2Table(tableName: String, val table: StreamTable,
 
   override def name(): String = tableName
 
+  /** The declared schema, else the live files' merged one. A declared
+    * schema is the CREATE TABLE contract and carries metadata-only
+    * evolution (ADD: files lack it, readers null-fill; DROP: files keep it,
+    * hidden; RENAME: files keep the old name). */
+  private def storedSchema: StructType = declaredSchema match {
+    case Some(d) => d
+    case None =>
+      val files = liveFiles
+      if (files.isEmpty)
+        throw new IllegalStateException(s"$tableName has no committed snapshot")
+      // bookkeeping columns never surface; the merged file schema unions
+      // layouts across evolution (old files null-fill)
+      StructType(StreamTable.fileSchema(spark, files)
+        .filterNot(f => StreamTable.isBookkeepingCol(f.name)))
+  }
+
   override def schema(): StructType = {
-    // a DECLARED schema is authoritative: it is the CREATE TABLE contract
-    // and the carrier of metadata-only evolution (ADD appends a column no
-    // file has yet — readers null-fill; DROP hides one files still carry;
-    // RENAME shows the new name while files keep the old)
-    val base = declaredSchema match {
-      case Some(d) => d
-      case None =>
-        val files = liveFiles
-        if (files.isEmpty)
-          throw new IllegalStateException(s"$tableName has no committed snapshot")
-        // engine-internal sequencing columns never surface through the source;
-        // the merged file schema unions layouts across evolution (old files
-        // null-fill)
-        StructType(StreamTable.fileSchema(spark, files)
-          .filterNot(f => f.name == StreamTable.SeqColName ||
-            f.name == StreamTable.TombstoneColName ||
-            f.name.startsWith(StreamTable.FieldSeqPrefix) ||
-            f.name.startsWith(StreamTable.FieldListPrefix)))
-    }
+    val base = storedSchema
     // an aggregation table's READ view is exactly (primary key, aggregated
     // fields) — the library's aggResolve groups by pk and aggregates the
     // declared fields, so any other stored column has no merged value.
-    // Additive fields WIDEN like Spark's own sum (INT→BIGINT, FLOAT→DOUBLE):
-    // the declared V2 schema carries the widened type and the reader's fold
-    // accumulates in it, so the connector view matches the library view
-    // bit-for-bit on every input type.
+    // Additive fields WIDEN like Spark's own sum (INT→BIGINT, FLOAT→DOUBLE,
+    // DECIMAL(p,s)→DECIMAL(p+10,s)): the declared V2 schema carries the
+    // widened type and the fold accumulates in it, so the connector view
+    // matches the library view on every input type.
     (table.primaryKey, table.aggSpec) match {
       case (Some(pk), Some(spec)) =>
         val fns = spec.toMap
@@ -537,11 +533,41 @@ class GraftV2Table(tableName: String, val table: StreamTable,
           (fns.get(n), f.dataType) match {
             case (Some("sum" | "count"), IntegerType) => f.copy(dataType = LongType)
             case (Some("sum" | "count"), FloatType) => f.copy(dataType = DoubleType)
+            case (Some("sum" | "count"), d: DecimalType) => f.copy(dataType =
+              DecimalType(math.min(d.precision + 10, DecimalType.MAX_PRECISION), d.scale))
             case _ => f
           }
         }).map(pkNotNull))
       case _ => StructType(base.map(pkNotNull))
     }
+  }
+
+  /** Aggregation tables whose merge the per-bucket readers do not fold —
+    * an ordered function (`last_non_null_value`, `listagg`, `collect`,
+    * `merge_map`) or a sum over a type other than INT/BIGINT/FLOAT/DOUBLE —
+    * read through the library's merge view ([[StreamTable.read]]) instead,
+    * decided from the table's merge spec and stored types. */
+  private[v2] def libraryMerged: Boolean = table.aggSpec.exists { spec =>
+    lazy val base = storedSchema
+    spec.exists {
+      case (_, "last_non_null_value" | "listagg" | "collect" | "merge_map") => true
+      case (f, "sum" | "count") => !base.find(_.name == f).exists(x =>
+        Set[DataType](IntegerType, LongType, FloatType, DoubleType)(x.dataType))
+      case _ => false
+    }
+  }
+
+  /** A library frame over this table (stored names) in its declared names
+    * and types, then `extra` columns as they are; declared columns no live
+    * file carries read NULL. */
+  private[v2] def declaredFrame(df: org.apache.spark.sql.DataFrame,
+      extra: String*): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    df.select(schema().map { f =>
+      val stored = renameMap.getOrElse(f.name, f.name)
+      (if (df.columns.contains(stored)) col(stored) else lit(null))
+        .cast(f.dataType).as(f.name)
+    } ++ extra.map(col): _*)
   }
 
   /** Primary-key columns surface NOT NULL (the Paimon contract — a PK row
@@ -577,6 +603,11 @@ class GraftV2Table(tableName: String, val table: StreamTable,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     table.primaryKey match {
+      case Some(_) if libraryMerged =>
+        // a V1 bridge over the library's plan (pruning and filters reach
+        // that plan; every filter also stays post-scan)
+        MetadataV2Table.frameScan(s"GraftLibraryMergeScan $tableName",
+          schema(), declaredFrame(atSnapshot.fold(table.read)(table.readAt)))
       case Some(pk) =>
         // PK merge-on-read: per-bucket resolution inside the readers (see
         // V2PkRead.scala) — last-writer-wins for deduplicate, first wins

@@ -29,11 +29,12 @@ import graft.table.GraftCatalog
   * usable through the imperative [[graft.table.GraftCatalog]]/[[graft.table.StreamTable]]
   * API — one storage layout, two front doors.
   *
-  * Reads only surface append tables (see [[GraftDataSource]] for why PK
-  * merge-on-read is refused). Writes (`INSERT INTO`, `df.writeTo`) ARE
-  * supported: [[GraftV2Table.newWriteBuilder]] routes them into
-  * [[graft.table.StreamTable.appendBatch]]'s distributed staging write +
-  * atomic manifest commit — the same protocol the streaming writer uses.
+  * Reads serve every table (PK tables merge-on-read, see
+  * [[GraftV2Table.newScanBuilder]]). Writes (`INSERT INTO`, `df.writeTo`)
+  * route into [[graft.table.StreamTable.appendBatch]]'s distributed staging
+  * write + atomic manifest commit — the same protocol the streaming writer
+  * uses. The SQL shell ([[graft.table.GraftSql]]) resolves every table name
+  * through one of these per shell catalog.
   */
 class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     with FunctionCatalog with ProcedureCatalog with StagingTableCatalog {
@@ -132,6 +133,12 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           val v2 = new GraftV2Table(
             s"$catalogName.${db(ident.namespace())}.$base",
             t, SparkSession.active, declared, renameMap = renames)
+          // folds the change readers do not compute: the library's views
+          if (v2.libraryMerged) return new MetadataV2Table(
+            s"$catalogName.${db(ident.namespace())}.${ident.name()}",
+            v2.declaredFrame(if (sys == "changelog") t.changeHistoryView else
+              t.read.withColumn("rowkind", org.apache.spark.sql.functions.lit("+I")),
+              "rowkind"))
           return if (sys == "audit_log") new GraftAuditLogV2Table(v2)
           else new GraftChangeHistoryV2Table(v2)
         }
@@ -157,10 +164,10 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     }
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val t = backing.getTable(db(ident.namespace()), ident.name())
-    // PK tables resolve merge-on-read inside the scan (per-bucket
-    // last-writer-wins, V2PkRead.scala); distributed-aggregate merge
-    // engines are refused at scan build, not here, so DDL still works
-    // the declared (possibly EVOLVED) schema + rename mappings persist as
+    // PK tables resolve merge-on-read inside the scan (V2PkRead.scala, or
+    // the library's merge view for the aggregation folds the per-bucket
+    // readers do not compute — GraftV2Table.newScanBuilder decides); the
+    // declared (possibly EVOLVED) schema + rename mappings persist as
     // options: they resolve INSERT INTO on empty tables and carry
     // metadata-only ADD/DROP/RENAME COLUMN evolution on committed ones
     val (declared, renames) = GraftV2Table.evolutionOf(
@@ -170,7 +177,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `VERSION AS OF <id|'tag'>` — snapshot-pinned reads through plain SQL
-    * (the shell's time-travel surface, now native to the catalog). */
+    * (the SQL shell's time travel too). */
   override def loadTable(ident: Identifier, version: String): Table = {
     val base = loadTable(ident)
     base match {
@@ -277,6 +284,9 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     var decl: StructType = declared0.getOrElse(
       loadTable(ident).asInstanceOf[GraftV2Table].schema())
     var renames = renames0
+    // the shell's `ddl.schema` keeps its Flink type spellings (DESCRIBE
+    // shows them): unchanged columns keep theirs through every change
+    val spelling = scala.collection.mutable.Map(GraftCatalog.ddlColumns(opts): _*)
     // STABLE FIELD IDS (Paimon's evolution model, by storage-name minting):
     // a declared column's physical storage name may differ from its
     // declared name (`ddl.rename.<declared> = <storage>`, the same mapping
@@ -302,17 +312,10 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
         // old files' struct data resurface under the new declared name
         fromManifest.flatten.iterator
           .map(_.split("\\.", 2)(0))
-          .filterNot(n => n == graft.table.StreamTable.SeqColName ||
-            n == graft.table.StreamTable.TombstoneColName ||
-            n.startsWith(graft.table.StreamTable.FieldSeqPrefix) ||
-            n.startsWith(graft.table.StreamTable.FieldListPrefix))
+          .filterNot(graft.table.StreamTable.isBookkeepingCol)
           .toSet
       else graft.table.StreamTable.fileSchema(SparkSession.active, files)
-        .fieldNames.toSet
-          .filterNot(n => n == graft.table.StreamTable.SeqColName ||
-            n == graft.table.StreamTable.TombstoneColName ||
-            n.startsWith(graft.table.StreamTable.FieldSeqPrefix) ||
-            n.startsWith(graft.table.StreamTable.FieldListPrefix))
+        .fieldNames.toSet.filterNot(graft.table.StreamTable.isBookkeepingCol)
     }
     val setOpts = scala.collection.mutable.Map[String, String]()
     changes.foreach {
@@ -352,6 +355,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           renames += (n -> storage)
         }
         decl = StructType(decl.fields :+ StructField(n, a.dataType, a.isNullable))
+        spelling(n) = a.dataType.sql
       case d: TableChange.DeleteColumn =>
         require(d.fieldNames.length == 1, "nested DROP COLUMN is unsupported")
         val n = d.fieldNames.head
@@ -361,6 +365,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           require(!keyCols.contains(n),
             s"cannot drop key column '$n' (primary/bucket/sequence key)")
           decl = StructType(decl.filterNot(_.name == n))
+          spelling -= n
           if (renames.contains(n)) { setOpts(s"ddl.rename.$n") = ""; renames -= n }
           if (opts.contains(s"ddl.default.$n")) setOpts(s"ddl.default.$n") = ""
         }
@@ -385,6 +390,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           s"cannot rename aggregated field '$from' " +
             "(its aggregate-function option is keyed by name)")
         decl = StructType(decl.map(f => if (f.name == from) f.copy(name = to) else f))
+        spelling.remove(from).foreach(spelling(to) = _)
         setOpts(s"ddl.rename.$from") = "" // retired mapping (empty = removed)
         if (fileN != to) setOpts(s"ddl.rename.$to") = fileN
         renames = renames - from ++ (if (fileN != to) Map(to -> fileN) else Map.empty)
@@ -427,6 +433,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           "DECIMAL(p,s)→DECIMAL(p+k,s))")
         decl = StructType(decl.map(f =>
           if (f.name == n) f.copy(dataType = to) else f))
+        spelling(n) = to.sql
         // a stored default was folded at the OLD type — re-fold at the new
         // one so read substitution and new writes agree on the widened type
         opts.get(s"ddl.default.$n").filter(_.nonEmpty).foreach { sql =>
@@ -452,7 +459,8 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     // keep the shell's store in sync when the table carries one, so a table
     // created in the shell and evolved here stays coherent in both doors
     if (opts.contains("ddl.schema"))
-      setOpts("ddl.schema") = decl.map(f => s"${f.name} ${f.dataType.sql}").mkString("|")
+      setOpts("ddl.schema") = GraftCatalog.ddlSchema(decl.map(f =>
+        f.name -> spelling.getOrElse(f.name, f.dataType.sql)))
     backing.alterTable(dbN, tn, setOpts.toMap)
   }
 

@@ -49,9 +49,8 @@ import graft.table.{Snapshot, StreamTable}
   *    sees only inserts; history lives in `` `t$changelog` `` and the CDC
   *    stream). Served distributed: the PK engines resolve per bucket via
   *    the catch-up interval plan, append tables pass their live files
-  *    through. Matches the shell's [[StreamTable.auditLogView]] row-for-
-  *    row (the shell leads with `rowkind`, this door appends it — project
-  *    by name).
+  *    through. The SQL shell's `t$audit_log` is this table (resolved
+  *    through the catalog plugin), so `rowkind` is the last column in both.
   *
   * 100 TB posture: both surfaces plan one partition per changelog/data
   * file (per bucket where the layout records them), read only the files

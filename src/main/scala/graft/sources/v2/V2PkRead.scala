@@ -14,7 +14,8 @@ import graft.table.{DataFileMeta, StreamTable}
 /** Primary-key merge-on-read through the V2 connector — the reference's
   * signature table (the PK `sensor_info` upsert table,
   * `tutorial/guide.md:59-74`) readable through plain SQL
-  * (`SELECT * FROM graft.db.sensor_info`), not just the library view.
+  * (`SELECT * FROM graft.db.sensor_info`), not just the library's
+  * [[StreamTable.read]].
   *
   * Execution model — the distributed dual of [[StreamTable.read]]'s
   * window-resolve, with NO shuffle at all:
@@ -27,10 +28,9 @@ import graft.table.{DataFileMeta, StreamTable}
   *    hash merge: winner per key by largest (`sequence.field`, commit batch)
   *    for `deduplicate`, smallest for `first-row`; tombstone winners emit
   *    nothing. The library's global window shuffle becomes zero exchanges.
-  *  - Merge engines that require a distributed AGGREGATE
-  *    (aggregation/partial-update re-merge partial states) cannot run inside
-  *    a per-file reader and keep the library view
-  *    ([[GraftV2Table.newScanBuilder]] refuses them).
+  *  - All four merge engines fold here. Aggregation tables with a fold
+  *    this reader does not compute never reach it: they read the library's
+  *    merge view ([[GraftV2Table.libraryMerged]]).
   *
   * Filter safety: only predicates over PRIMARY-KEY columns may prune files
   * or rows before the merge — all versions of a key share its key columns,
@@ -128,33 +128,11 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
       s"${table.name()}: metadata columns are undefined on a partial-update " +
         "merge view (the merged row has no single source file)")
 
-  // aggregation-engine constraints the reader's fold depends on: no
-  // metadata columns (an accumulated row has no single source file), and
-  // additive fields in a type whose sum the library view matches bit-for-bit
-  if (aggregation) {
+  // an accumulated row has no single source file
+  if (aggregation)
     require(!required.fieldNames.exists(GraftV2Table.MetaCols.contains),
       s"${table.name()}: metadata columns are undefined on an aggregation " +
         "merge view (the merged row has no single source file)")
-    t.aggSpec.get.foreach { case (f, fn) =>
-      // the ORDERED function needs per-field sequence provenance the
-      // native order-blind fold cannot track — the library view
-      // (StreamTable.read) serves it; same posture as decimal sums
-      require(!Set("last_non_null_value", "listagg", "collect",
-          "merge_map").contains(fn) ||
-          !required.fieldNames.contains(f),
-        s"${table.name()}: $fn($f) is sequence-ordered and keeps the " +
-          "library view (StreamTable.read) — the native V2 fold is " +
-          "order-blind")
-      if ((fn == "sum" || fn == "count") && required.fieldNames.contains(f))
-        // INT/FLOAT fields already widened in the declared schema (the
-        // reader folds in the accumulator type); only exotic additive
-        // types (decimal) stay library-only
-        require(fullSchema.find(_.name == f).exists(x =>
-            x.dataType == LongType || x.dataType == DoubleType),
-          s"${table.name()}: $fn($f) needs an integral/floating field " +
-            "(decimal sums keep the library view — StreamTable.read)")
-    }
-  }
 
   // ---- driver-side pruning (metadata-only, like partition pruning) -------
   // auto-heal first: buckets a PREVIOUS scan flagged as hash-degraded at

@@ -385,7 +385,7 @@ object V2Queries {
     // The `t$audit_log` system table: Paimon's literal BATCH semantics —
     // the current resolved state with every live row `+I` (history lives in
     // `t$changelog` below and the CDC stream). Pins the cross-door parity:
-    // this is exactly the shell's auditLogView and the resolved PK view.
+    // the resolved PK view with `rowkind` appended.
     QDef(
       "q_source_v2_audit_log",
       """SELECT c_custkey, c_name,

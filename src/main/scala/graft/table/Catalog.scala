@@ -226,6 +226,17 @@ object GraftCatalog {
   private val mapper = new ObjectMapper()
   mapper.registerModule(DefaultScalaModule)
 
+  /** The `ddl.schema` option: a shell-created table's declared columns with
+    * the Flink type spellings `DESCRIBE` shows, as `name type|name type`
+    * ("|": commas appear inside types such as DECIMAL(5, 1)). */
+  def ddlColumns(opts: Map[String, String]): Seq[(String, String)] =
+    opts.getOrElse("ddl.schema", "").split("\\|").filter(_.nonEmpty).toSeq
+      .map { cd => val p = cd.split("\\s+", 2); (p(0), p.lift(1).getOrElse("")) }
+
+  /** `cols` as the `ddl.schema` option value ([[ddlColumns]]' inverse). */
+  def ddlSchema(cols: Seq[(String, String)]): String =
+    cols.map { case (n, ty) => s"$n $ty" }.mkString("|")
+
   /** Construct a [[StreamTable]] from a root dir + its Paimon-style option
     * map. Recognized structural keys: `primary-key` (comma-separated),
     * `sequence.field`, `bucket` (int), `bucket-key`, `merge-engine`,

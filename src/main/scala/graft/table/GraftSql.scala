@@ -3,33 +3,45 @@ package graft.table
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.catalog.{Identifier, TableChange}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.sources.v2.GraftSparkCatalog
 
 /** SQL front-end over [[GraftCatalog]]: executes the reference tutorial's
   * literal statement surface, so the Flink SQL client session it walks through
   * (`/root/reference/Readme.md:38-78`, `/root/reference/tutorial/guide.md`)
-  * replays statement-for-statement against the Spark-native engine:
+  * replays statement-for-statement against the Spark-native engine.
+  *
+  * Every table name in a statement Spark runs (SELECT bodies, INSERT and
+  * MERGE sources, the enrichment's dimension) resolves through the
+  * [[GraftSparkCatalog]] plugin each shell catalog registers in the session,
+  * so the shell and `spark.sql` over a catalog serve identical tables,
+  * time travel, `t$files`-style metadata tables and metadata-only column
+  * evolution (`ALTER TABLE t ADD/DROP/RENAME COLUMN`, applied by the
+  * catalog's `alterTable`). The shell itself owns only the Flink syntax:
   *
   *  - `CREATE CATALOG c WITH ('type'='paimon','warehouse'='…')`,
-  *    `USE CATALOG c` (guide.md:11-17)
+  *    `USE CATALOG c`, `USE db` (guide.md:11-17)
   *  - `CREATE TABLE t (cols…, PRIMARY KEY (…) NOT ENFORCED) WITH ('k'='v')`
-  *    incl. computed `AS PROCTIME()` columns (guide.md:23-31, :59-74)
-  *  - `ALTER TABLE t SET ('k'='v')` (guide.md:180-184, :265-271); schema
-  *    evolution `ALTER TABLE t ADD/DROP/RENAME COLUMN` — metadata-only, no
-  *    file rewrite: adds read as typed NULLs from old files, drops are
-  *    projected away, renames map the declared name back to the stable
-  *    file-level column (SELECT/INSERT/DESCRIBE honor the evolved schema)
+  *    incl. computed `AS PROCTIME()` columns (guide.md:23-31, :59-74); the
+  *    declared columns keep their Flink spelling for `DESCRIBE t`
+  *  - `ALTER TABLE t SET ('k'='v')` (guide.md:180-184, :265-271)
   *  - `SET 'key' = 'value'` session config (guide.md:3-4; `spark.*` keys pass
   *    through to the Spark conf, Flink-only keys are recorded)
-  *  - `SHOW CATALOGS / DATABASES / TABLES` (Readme.md:57-78)
+  *  - `SHOW CATALOGS / DATABASES / TABLES / FUNCTIONS / VIEWS`
+  *    (Readme.md:57-78; VIEWS lists the database's tables)
   *  - `INSERT INTO t SELECT …` — batch analog of the tutorial's continuous
-  *    pipes (guide.md:36-39): the SELECT runs through `spark.sql` over the
-  *    catalog's registered views, a PROCTIME column is stamped at ingest,
-  *    and the result commits as the table's next batch
-  *  - `SELECT …` — queries over the catalog views, Catalyst end-to-end
-  *  - `DELETE FROM t WHERE …` / `UPDATE t SET … WHERE …` — row-level ops
-  *    (merge-on-read on PK tables, pruned copy-on-write on append tables;
-  *    see [[StreamTable.deleteWhere]] / [[StreamTable.updateWhere]])
+  *    pipes (guide.md:36-39): the SELECT result maps by position onto the
+  *    declared schema, a PROCTIME column is stamped at ingest, and the
+  *    result commits as the table's next batch; `JOIN dim FOR SYSTEM_TIME
+  *    AS OF …` runs as a streaming lookup-join enrichment (with the LOOKUP
+  *    hint's retry-on-miss honored)
+  *  - `DELETE FROM t WHERE …` / `UPDATE t SET … WHERE …` / `MERGE INTO` —
+  *    row-level ops (merge-on-read on PK tables, pruned copy-on-write on
+  *    append tables; see [[StreamTable.deleteWhere]] /
+  *    [[StreamTable.updateWhere]] / [[StreamTable.mergeInto]])
   *  - `DROP TABLE t`, `DESCRIBE t`
   *  - `CALL sys.<proc>(…)` — the maintenance actions the reference drives as
   *    flink-action jobs (guide.md:172-177, :180-184), as SQL procedures:
@@ -39,26 +51,75 @@ import org.apache.spark.sql.functions._
   *    `compact_small_files(table[, smallBytes[, trigger]])` (targeted
   *    minor compaction — rewrite only groups with a small-file backlog),
   *    `remove_orphan_files(table[, olderThan])` (crash-leftover cleanup)
-  *  - metadata tables `t$files` / `t$snapshots` / `t$tags` / `t$options` /
-  *    `t$consumers` / `t$audit_log` / `t$changelog` in any SELECT
-  *    (guide.md:200-232)
   *
   * The statement grammar is intentionally exactly the subset the reference
   * exercises — this is a catalog shell, not a SQL parser (SELECT bodies are
-  * handed to Spark's real parser untouched).
+  * handed to Spark's real parser, with only `t$meta` quoted and
+  * `TIMESTAMP AS OF '<ts>'` given as an instant).
   */
 class GraftSql(spark: SparkSession, defaultWarehouse: String) {
   import GraftSql._
 
-  private val catalogs = mutable.Map[String, GraftCatalog](
-    "default_catalog" -> new GraftCatalog(spark, defaultWarehouse))
+  /** One shell catalog: its warehouse, and the catalog plugin that serves
+    * the warehouse's tables to Spark under a session-unique name. */
+  private final class ShellCatalog(val graft: GraftCatalog, val plugin: GraftSparkCatalog)
+
+  private val catalogs = mutable.Map[String, ShellCatalog](
+    "default_catalog" -> open(defaultWarehouse))
   private var currentCatalog = "default_catalog"
   private var currentDb = "default"
   /** `SET` statements, verbatim (the Flink-only keys have no Spark effect
     * but remain inspectable, e.g. execution.checkpointing.interval). */
   val sessionConf: mutable.Map[String, String] = mutable.Map.empty
 
-  def catalog: GraftCatalog = catalogs(currentCatalog)
+  def catalog: GraftCatalog = catalogs(currentCatalog).graft
+  private def plugin: GraftSparkCatalog = catalogs(currentCatalog).plugin
+
+  /** Register `warehouse`'s [[GraftSparkCatalog]] under a name no other
+    * warehouse ever gets: Spark's catalog manager caches a plugin by name
+    * for the session's life, and many shells share one session. */
+  private def open(warehouse: String): ShellCatalog = {
+    val name = s"graft_shell_${PluginSeq.incrementAndGet()}"
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftSparkCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", warehouse)
+    val plugin = new GraftSparkCatalog
+    plugin.initialize(name,
+      new CaseInsensitiveStringMap(java.util.Map.of("warehouse", warehouse)))
+    new ShellCatalog(new GraftCatalog(spark, warehouse), plugin)
+  }
+
+  /** Run `body` with this shell's catalog plugin and database as the
+    * session's current catalog and namespace, so bare table names resolve
+    * through the plugin (session temp views still shadow them). The
+    * session is shared: its previous catalog and namespace come back
+    * afterwards, also when `body` throws. A database with no directory has
+    * no tables (and Spark would not enter it): there `body` runs in the
+    * session's own catalog, and the warehouse is left untouched. */
+  private def inShell[T](body: => T): T =
+    if (!plugin.namespaceExists(Array(currentDb))) body
+    else {
+      val sc = spark.catalog
+      val (prevCatalog, prevDb) = (sc.currentCatalog(), sc.currentDatabase)
+      sc.setCurrentCatalog(plugin.name())
+      try { sc.setCurrentDatabase(s"`$currentDb`"); body }
+      finally { sc.setCurrentCatalog(prevCatalog); sc.setCurrentDatabase(prevDb) }
+    }
+
+  /** A SELECT body through Spark's parser: `t$meta` becomes the quoted
+    * identifier the catalog serves, and `TIMESTAMP AS OF '<ts>'` keeps the
+    * shell's meaning — epoch milliseconds, or a UTC wall-clock datetime —
+    * as the instant `timestamp_millis(<ms>)`. */
+  private def sparkSql(body: String): DataFrame = {
+    val quoted = MetaTableRe.replaceAllIn(body, "`$1\\$$2`")
+    inShell(spark.sql(TimestampAsOfRe.replaceAllIn(quoted, m => {
+      val ts = m.group(1).trim
+      val ms =
+        if (ts.matches("\\d{10,}")) ts.toLong
+        else java.time.LocalDateTime.parse(ts.replace(" ", "T"))
+          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+      s"TIMESTAMP AS OF timestamp_millis($ms)"
+    })))
+  }
 
   /** Execute one statement; returns a DataFrame (DDL returns a one-row OK). */
   def sql(statement: String): DataFrame = {
@@ -71,7 +132,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
         val o = parseOptions(opts)
         val wh = o.getOrElse("warehouse", s"$defaultWarehouse/$name")
           .stripPrefix("file:")
-        catalogs(name) = new GraftCatalog(spark, wh)
+        catalogs(name) = open(wh)
         ok(s"catalog $name created")
       case UseCatalogRe(name) =>
         require(catalogs.contains(name), s"no catalog $name")
@@ -92,16 +153,8 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
         case "FUNCTIONS" =>
           spark.sql("SHOW FUNCTIONS").orderBy("function")
             .withColumnRenamed("function", "function_name")
-        case "VIEWS" =>
-          // only the bare-name views a user would SELECT from — the shell's
-          // internal registrations (`<t>__files`, `<db>_<t>`) and unrelated
-          // session temp views are implementation detail, not user views
-          registerViews()
-          val mine = catalog.listTables(currentDb)
-          spark.sql("SHOW VIEWS")
-            .select(col("viewName").as("view_name"))
-            .filter(col("view_name").isin(mine: _*))
-            .orderBy("view_name")
+        // the names a user SELECTs from: the database's tables
+        case "VIEWS"     => catalog.listTables(currentDb).toDF("view_name")
       }
       case CreateTableRe(ifNotExists, name, body, opts) =>
         val t = name.split("\\.").last
@@ -112,79 +165,30 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
           val o = mutable.Map[String, String]() ++ parseOptions(opts)
           pk.foreach(cols => o("primary-key") = cols.mkString(","))
           proctime.foreach(c => o("computed.proctime") = c)
-          // "|" separator: commas appear inside parameterized types
-          // (DECIMAL(5, 1)), so a comma-joined schema would not split back
-          o("ddl.schema") = schemaCols.map { case (n, ty) => s"$n $ty" }.mkString("|")
+          o("ddl.schema") = GraftCatalog.ddlSchema(schemaCols)
           catalog.createTable(currentDb, t, o.toMap)
           ok(s"table $t created")
         }
-      case AlterAddRe(name, body) =>
-        // schema evolution (Paimon ALTER TABLE ADD COLUMN): append to the
-        // declared schema; existing data files simply lack the column and
-        // read as NULL (merged file schema), new writers carry it — no rewrite
+      case AlterColumnsRe(name, clause) =>
+        // metadata-only schema evolution, applied by the catalog plugin
+        // (stable storage names: a re-ADDed name never reads old files' data)
         val t = name.split("\\.").last
-        val existing = declaredCols(t)
-        require(existing.nonEmpty,
-          s"$t has no declared schema (created outside the shell)")
-        val defs = splitTopLevel(body.trim.stripPrefix("(").stripSuffix(")"))
-          .map { cd =>
-            val p = cd.split("\\s+", 2)
-            require(p.length == 2, s"ADD COLUMN needs '<name> <type>', got '$cd'")
-            require(!existing.exists(_._1 == p(0)),
-              s"column '${p(0)}' already exists in $t")
-            require(sparkType(p(1)).nonEmpty, s"unsupported type '${p(1)}'")
-            (p(0), p(1))
-          }
-        val merged = (existing ++ defs).map { case (n, ty) => s"$n $ty" }.mkString("|")
-        catalog.alterTable(currentDb, t, Map("ddl.schema" -> merged))
-        ok(s"table $t: added ${defs.map(_._1).mkString(", ")}")
-      case AlterDropColRe(name, c) =>
-        // Paimon ALTER TABLE DROP COLUMN: metadata-only — the column leaves
-        // the declared schema and the read view projects it away; data
-        // files are never rewritten (old files simply carry a column no
-        // reader selects)
-        val t = name.split("\\.").last
-        val existing = declaredCols(t)
-        require(existing.nonEmpty,
-          s"$t has no declared schema (created outside the shell)")
-        require(existing.exists(_._1 == c), s"no column '$c' in $t")
-        keyColsOf(t).foreach(k => require(k != c,
-          s"cannot drop key column '$c' (primary/bucket/sequence key)"))
-        catalog.alterTable(currentDb, t, Map("ddl.schema" ->
-          existing.filterNot(_._1 == c)
-            .map { case (n, ty) => s"$n $ty" }.mkString("|")))
-        ok(s"table $t: dropped $c")
-      case AlterRenameColRe(name, from, to) =>
-        // Paimon ALTER TABLE RENAME COLUMN: metadata-only — the declared
-        // name changes and a rename record maps it back to the FILE-level
-        // name (chasing prior renames), so every existing data file keeps
-        // serving the column under its new name without a rewrite
-        val t = name.split("\\.").last
-        val existing = declaredCols(t)
-        require(existing.nonEmpty,
-          s"$t has no declared schema (created outside the shell)")
-        require(existing.exists(_._1 == from), s"no column '$from' in $t")
-        require(!existing.exists(_._1 == to), s"column '$to' already exists in $t")
-        keyColsOf(t).foreach(k => require(k != from,
-          s"cannot rename key column '$from' (primary/bucket/sequence key)"))
-        val opts = catalog.tableOptions(currentDb, t)
-        val fileName = opts.get(s"ddl.rename.$from").filter(_.nonEmpty).getOrElse(from)
-        catalog.alterTable(currentDb, t, Map(
-          "ddl.schema" -> existing.map { case (n, ty) =>
-            if (n == from) s"$to $ty" else s"$n $ty" }.mkString("|"),
-          s"ddl.rename.$from" -> "", // retired mapping (empty = removed)
-          s"ddl.rename.$to" -> fileName))
-        ok(s"table $t: renamed $from to $to")
+        plugin.alterTable(Identifier.of(Array(currentDb), t), columnChanges(clause): _*)
+        // DESCRIBE shows an added column's type as the statement spelled it
+        val spelled = addedColumns(clause).toMap
+        val o = catalog.tableOptions(currentDb, t)
+        if (spelled.nonEmpty && o.contains("ddl.schema")) catalog.alterTable(currentDb, t,
+          Map("ddl.schema" -> GraftCatalog.ddlSchema(GraftCatalog.ddlColumns(o)
+            .map { case (n, ty) => n -> spelled.getOrElse(n, ty) })))
+        ok(s"table $t altered: $clause")
       case AlterTableRe(name, opts) =>
         catalog.alterTable(currentDb, name.split("\\.").last, parseOptions(opts))
         ok(s"table $name altered")
       case DropTableRe(name) =>
         catalog.dropTable(currentDb, name.split("\\.").last); ok(s"table $name dropped")
       case DescribeRe(name) =>
-        val o = catalog.tableOptions(currentDb, name.split("\\.").last)
-        o.getOrElse("ddl.schema", "").split("\\|").filter(_.nonEmpty)
-          .map { cd => val p = cd.split("\\s+", 2); (p(0), p.lift(1).getOrElse("")) }
-          .toSeq.toDF("col_name", "data_type")
+        GraftCatalog.ddlColumns(catalog.tableOptions(currentDb, name.split("\\.").last))
+          .toDF("col_name", "data_type")
       case SetConfRe(k, v) =>
         sessionConf(k) = v
         if (k.startsWith("spark.")) spark.conf.set(k, v)
@@ -193,11 +197,10 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
         val t = tName.split("\\.").last
         val tAlias = Option(tAliasOpt).getOrElse(t)
         val sAlias = Option(sAliasOpt).getOrElse(sName.split("\\.").last)
-        registerViews()
         val clauses = parseMergeClauses(whenBody, sAlias,
           () => catalog.getTable(currentDb, t).read.columns.toSeq)
         val r = catalog.getTable(currentDb, t).mergeInto(
-          spark.table(sName), expr(onCond), clauses, tAlias, sAlias)
+          inShell(spark.table(sName)), expr(onCond), clauses, tAlias, sAlias)
         ok(s"merged into $t: ${r.updated} updated, ${r.deleted} deleted, " +
           s"${r.inserted} inserted")
       case DeleteWhereRe(name, cond) =>
@@ -215,7 +218,6 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
         ok(s"updated $n rows in $t")
       case InsertRe(name, select) =>
         val t = name.split("\\.").last
-        registerViews()
         val table = catalog.getTable(currentDb, t)
         // the LOOKUP hint's options must be read BEFORE hints are stripped
         val lookupHint: Map[String, String] =
@@ -274,16 +276,20 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
                 "SYSTEM_TIME enrichment INSERT must reference it exactly " +
                 s"once (the rewrite streams only the first): $select")
           val factT = catalog.getTable(currentDb, fact)
+          // the dimension by its catalog identifier: the retry path resolves
+          // it inside foreachBatch, whose cloned session has its own
+          // current catalog
+          val dimRef = s"`${plugin.name()}`.`$currentDb`.`$dim`"
           def rewrittenFor(view: String): String =
             FromTableRe.replaceFirstIn(
               SystemTimeJoinRe.replaceFirstIn(cleaned,
-                scala.util.matching.Regex.quoteReplacement(s"JOIN $dim AS $dimAlias")),
+                scala.util.matching.Regex.quoteReplacement(s"JOIN $dimRef AS $dimAlias")),
               scala.util.matching.Regex.quoteReplacement(s"FROM $view AS $factAlias"))
               .replaceFirst("(?i)^\\s*SELECT",
                 scala.util.matching.Regex.quoteReplacement(
                   s"SELECT /*+ BROADCAST($dimAlias) */"))
           if (lookupHint.get("retry-predicate").contains("lookup_miss")) {
-            runRetryEnrichment(t, table, factT, fact, factAlias, dim,
+            runRetryEnrichment(t, table, factT, fact, factAlias, dim, dimRef,
               dimAlias, jm, cleaned, lookupHint, rewrittenFor)
           } else {
             val streamView = s"${fact}__stream"
@@ -292,7 +298,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
             // that happen to reference it — drop it whatever happens, INCLUDING
             // an analysis failure of the rewritten SQL itself
             try {
-              val df = conformToDeclared(t, spark.sql(rewrittenFor(streamView)))
+              val df = conformToDeclared(t, sparkSql(rewrittenFor(streamView)))
               table.writeStream(df,
                 org.apache.spark.sql.streaming.Trigger.AvailableNow())
                 .awaitTermination()
@@ -301,7 +307,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
               s"(lookup join: $dim AS OF processing time)")
           }
         } else {
-          val df = conformToDeclared(t, spark.sql(select))
+          val df = conformToDeclared(t, sparkSql(select))
           val nextBatch = table.latestSnapshot.map(_.batchId + 1).getOrElse(0L)
           table.appendBatch(df, nextBatch)
           ok(s"inserted into $t (batch $nextBatch)")
@@ -310,12 +316,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
         callProcedure(proc.toLowerCase, parseCallArgs(rawArgs))
       case _ if flat.toUpperCase.startsWith("SELECT") ||
                 flat.toUpperCase.startsWith("WITH") =>
-        registerViews()
-        // Paimon metadata-table syntax `t$files` / `t$snapshots`
-        // (guide.md:200-232): Spark identifiers can't carry the `$`, so
-        // rewrite to the registered `<t>__<meta>` views
-        spark.sql(rewriteTimeTravel(stmt).replaceAll(
-          "(\\w+)\\$(files|snapshots|tags|options|consumers|audit_log|changelog)", "$1__$2"))
+        sparkSql(stmt)
       case other =>
         throw new IllegalArgumentException(s"unsupported statement: $other")
     }
@@ -337,7 +338,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
     * replayed batch rewrites exactly its own state. */
   private def runRetryEnrichment(t: String, table: StreamTable,
       factT: StreamTable, fact: String, factAlias: String, dim: String,
-      dimAlias: String, jm: scala.util.matching.Regex.Match, cleaned: String,
+      dimRef: String, dimAlias: String, jm: scala.util.matching.Regex.Match, cleaned: String,
       hint: Map[String, String], rewrittenFor: String => String): DataFrame = {
     import java.nio.file.{Files, Paths}
     hint.get("output-mode").foreach(m => require(m == "allow_unordered",
@@ -380,7 +381,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
         // lookup_miss predicate); the dim stays broadcast — the retry path
         // must not start shuffling the stream
         val missed = input.alias(factAlias)
-          .join(broadcast(s.table(dim).alias(dimAlias)), expr(onCond),
+          .join(broadcast(s.table(dimRef).alias(dimAlias)), expr(onCond),
             "left_anti")
           .withColumn("__attempts", col("__attempts") + lit(1))
           .cache()
@@ -411,8 +412,9 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
     * by the batch INSERT and the SYSTEM_TIME streaming-enrichment doors. */
   private def conformToDeclared(t: String, in: DataFrame): DataFrame = {
     var df = in
-    val proct = catalog.tableOptions(currentDb, t).get("computed.proctime")
-    val decl = declaredCols(t)
+    val opts = catalog.tableOptions(currentDb, t)
+    val proct = opts.get("computed.proctime")
+    val decl = GraftCatalog.ddlColumns(opts)
     if (decl.nonEmpty) {
       // SQL INSERT maps by POSITION against the declared schema and
       // casts to the declared types; a shorter row (a pre-ADD COLUMN
@@ -428,7 +430,6 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
       // default when omitted (the V2 door's contract — the two doors must
       // store the same bytes for the same statement); the stored literal is
       // keyed by the DECLARED name
-      val opts = catalog.tableOptions(currentDb, t)
       df = df.select(target.map { case (n, ty) =>
         val c =
           if (have.contains(n)) col(n)
@@ -445,7 +446,7 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
     // file (pre- and post-rename) carries one uniform column; the read
     // view maps it back to the declared name (Paimon's stable-field-id
     // model)
-    catalog.tableOptions(currentDb, t).foreach { case (k, v) =>
+    opts.foreach { case (k, v) =>
       if (k.startsWith("ddl.rename.") && v.nonEmpty) {
         val n = k.stripPrefix("ddl.rename.")
         if (n != v && df.columns.contains(n)) df = df.withColumnRenamed(n, v)
@@ -454,66 +455,30 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
     df
   }
 
-  /** The table's declared (evolved) schema from `ddl.schema`, if it was
-    * created through the shell. */
-  private def declaredCols(t: String): Seq[(String, String)] =
-    catalog.tableOptions(currentDb, t).getOrElse("ddl.schema", "")
-      .split("\\|").filter(_.nonEmpty).toSeq.map { cd =>
-        val p = cd.split("\\s+", 2); (p(0), p.lift(1).getOrElse("STRING")) }
-
-  /** Columns a schema-evolution statement must not touch: primary key,
-    * bucket key, sequence field. */
-  private def keyColsOf(t: String): Seq[String] = {
-    val o = catalog.tableOptions(currentDb, t)
-    o.get("primary-key").toSeq.flatMap(_.split(",").map(_.trim)) ++
-      o.get("bucket-key") ++ o.get("sequence.field")
+  /** An `ALTER TABLE … ADD COLUMN(S) / DROP COLUMN / RENAME COLUMN` clause
+    * as catalog [[TableChange]]s; ADD's column types are Flink spellings. */
+  private def columnChanges(clause: String): Seq[TableChange] = clause match {
+    case AddColsRe(_) => addedColumns(clause).map { case (n, ty) =>
+      TableChange.addColumn(Array(n), sparkType(ty).getOrElse(
+        throw new IllegalArgumentException(s"unsupported type '$ty'")))
+    }
+    case DropColRe(c) => Seq(TableChange.deleteColumn(Array(c), false))
+    case RenameColRe(from, to) => Seq(TableChange.renameColumn(Array(from), to))
+    case other => throw new IllegalArgumentException(s"unsupported column change: $other")
   }
 
-  /** Current database's tables as `<table>` temp views (plus `<db>_<table>`),
-    * so SELECT/INSERT bodies reference them by bare name like the reference;
-    * each table's `$files` / `$snapshots` metadata views register as
-    * `<table>__files` / `<table>__snapshots` / `<table>__tags`. */
-  private def registerViews(): Unit =
-    catalog.listTables(currentDb).foreach { t =>
-      val table = catalog.getTable(currentDb, t)
-      val df0 = table.read
-      // project the DECLARED (evolved) schema: evolution-added columns no
-      // data file carries yet read as typed NULLs, renamed columns map back
-      // to their file-level name, dropped columns vanish — metadata-only
-      // evolution, no file rewrite (the Paimon model)
-      val df = {
-        val decl = declaredCols(t)
-        if (decl.isEmpty || df0.columns.isEmpty) df0
-        else {
-          val opts = catalog.tableOptions(currentDb, t)
-          df0.select(decl.map { case (n, ty) =>
-            val fileN = opts.get(s"ddl.rename.$n").filter(_.nonEmpty).getOrElse(n)
-            val c = if (df0.columns.contains(n)) col(n)
-                    else if (df0.columns.contains(fileN)) col(fileN)
-                    else sparkType(ty).map(lit(null).cast).getOrElse(lit(null))
-            c.as(n)
-          }: _*)
-        }
+  /** The columns of `ADD COLUMNS (a T, b U)` or `ADD COLUMN a VARCHAR(20)`
+    * with their Flink type spellings; none for any other clause. */
+  private def addedColumns(clause: String): Seq[(String, String)] = clause match {
+    case AddColsRe(body) =>
+      val b = body.trim
+      val list = if (b.startsWith("(")) b.stripPrefix("(").stripSuffix(")") else b
+      splitTopLevel(list).map { cd =>
+        val p = cd.split("\\s+", 2)
+        require(p.length == 2, s"ADD COLUMN needs '<name> <type>', got '$cd'")
+        (p(0), p(1))
       }
-      df.createOrReplaceTempView(t)
-      df.createOrReplaceTempView(s"${currentDb}_$t")
-      table.filesView.createOrReplaceTempView(s"${t}__files")
-      table.snapshotsView.createOrReplaceTempView(s"${t}__snapshots")
-      table.tagsView.createOrReplaceTempView(s"${t}__tags")
-      table.consumersView.createOrReplaceTempView(s"${t}__consumers")
-      table.auditLogView.createOrReplaceTempView(s"${t}__audit_log")
-      // lazily served: $changelog refuses on pre-producer PK history, which
-      // must not break registration of the OTHER views
-      try table.changeHistoryView.createOrReplaceTempView(s"${t}__changelog")
-      catch { case _: UnsupportedOperationException => () }
-      optionsView(t).createOrReplaceTempView(s"${t}__options")
-    }
-
-  /** The `$options` system table: the table's property map as (key, value)
-    * rows (Paimon's `$options` shape — the WITH clause plus ALTERs). */
-  private def optionsView(t: String): DataFrame = {
-    import spark.implicits._
-    catalog.tableOptions(currentDb, t).toSeq.sortBy(_._1).toDF("key", "value")
+    case _ => Seq.empty
   }
 
   /** Paimon's `CALL sys.<procedure>(…)` maintenance surface, the SQL face of
@@ -608,40 +573,6 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
     "'([^']*)'|(-?\\d+\\s*[a-zA-Z]*)".r.findAllMatchIn(raw)
       .map(m => Option(m.group(1)).getOrElse(m.group(2)).trim).toSeq
 
-  /** Paimon's Spark time-travel syntax: `t VERSION AS OF <id|'tag'>` and
-    * `t TIMESTAMP AS OF '<ts>'` (wall-clock, UTC). Each travel clause pins
-    * the snapshot as a temp view and rewrites to its name, so travel
-    * composes with any SELECT body (joins against the live view included). */
-  private def rewriteTimeTravel(body: String): String = {
-    val afterVersion = VersionAsOfRe.replaceAllIn(body, m => {
-      val (t, v) = (m.group(1), m.group(2))
-      val table = catalog.getTable(currentDb, t)
-      val (df, view) =
-        if (v.startsWith("'")) {
-          val tag = v.stripPrefix("'").stripSuffix("'")
-          (table.readTag(tag), s"${t}__tag_${tag.replaceAll("[^A-Za-z0-9_]", "_")}")
-        } else (table.readAt(v.toLong), s"${t}__v$v")
-      df.createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-    TimestampAsOfRe.replaceAllIn(afterVersion, m => {
-      val (t, ts) = (m.group(1), m.group(2))
-      val ms =
-        if (ts.matches("\\d{10,}")) ts.toLong // epoch millis
-        else java.time.LocalDateTime
-          .parse(ts.trim.replace(" ", "T"))
-          .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      val view = s"${t}__ts$ms"
-      catalog.getTable(currentDb, t).readAtTime(ms).createOrReplaceTempView(view)
-      scala.util.matching.Regex.quoteReplacement(view)
-    })
-  }
-
-  private val VersionAsOfRe =
-    "(?i)(\\w+)\\s+VERSION\\s+AS\\s+OF\\s+(\\d+|'[^']+')".r
-  private val TimestampAsOfRe =
-    "(?i)(\\w+)\\s+TIMESTAMP\\s+AS\\s+OF\\s+'([^']+)'".r
-
   private def ok(msg: String): DataFrame = {
     import spark.implicits._
     Seq(msg).toDF("result")
@@ -688,10 +619,18 @@ object GraftSql {
   // clause, up to any trailing batch-clause keyword
   private val OnCondRe =
     "(?is)\\bON\\b(.+?)(?=\\bWHERE\\b|\\bGROUP\\b|\\bORDER\\b|\\bLIMIT\\b|$)".r
-  private val AlterAddRe = "(?i)ALTER TABLE ([\\w.]+) ADD COLUMNS? (.+)".r
-  private val AlterDropColRe = "(?i)ALTER TABLE ([\\w.]+) DROP COLUMNS? (\\w+)".r
-  private val AlterRenameColRe =
-    "(?i)ALTER TABLE ([\\w.]+) RENAME COLUMNS? (\\w+) TO (\\w+)".r
+  private val AlterColumnsRe =
+    "(?i)ALTER TABLE ([\\w.]+) ((?:ADD|DROP|RENAME) COLUMNS? .+)".r
+  private val AddColsRe = "(?i)ADD COLUMNS? (.+)".r
+  private val DropColRe = "(?i)DROP COLUMNS? (\\w+)".r
+  private val RenameColRe = "(?i)RENAME COLUMNS? (\\w+) TO (\\w+)".r
+  // Paimon's metadata-table syntax (guide.md:200-232): `$` is no identifier
+  // character in Spark SQL, so the shell backtick-quotes the name
+  private val MetaTableRe = ("(?<![\\w`])(\\w+)\\$(files|snapshots|tags|" +
+    "options|consumers|audit_log|changelog|partitions|branch_\\w+)(?![\\w`])").r
+  private val TimestampAsOfRe = "(?i)\\bTIMESTAMP\\s+AS\\s+OF\\s+'([^']+)'".r
+  /** Suffixes of the catalog plugin names shells register in the session. */
+  private val PluginSeq = new java.util.concurrent.atomic.AtomicLong()
   private val DeleteWhereRe = "(?i)DELETE FROM ([\\w.]+) WHERE (.*)".r
   private val UpdateRe = "(?i)UPDATE ([\\w.]+) SET (.*?) WHERE (.*)".r
   private val MergeRe =
@@ -753,8 +692,9 @@ object GraftSql {
     parts.toSeq
   }
 
-  /** Best-effort Flink-DDL → Spark type (INSERT alignment + view padding).
-    * Unparseable types yield None and the column is carried uncast. */
+  /** Best-effort Flink-DDL → Spark type (INSERT alignment, the catalog's
+    * declared schema). CHAR/VARCHAR read as STRING, as the files store
+    * them. Unparseable types yield None and the column is carried uncast. */
   private[graft] def sparkType(ddl: String)
       : Option[org.apache.spark.sql.types.DataType] = {
     val norm = ddl.replaceAll("/\\*.*?\\*/", " ")
@@ -762,6 +702,7 @@ object GraftSql {
       .replaceAll("(?i)\\bDOUBLE PRECISION\\b", "DOUBLE")
       .trim
     scala.util.Try(org.apache.spark.sql.types.DataType.fromDDL(norm)).toOption
+      .map(org.apache.spark.sql.catalyst.util.CharVarcharUtils.replaceCharVarcharWithString)
   }
 
   /** `'k' = 'v', …` option lists (WITH blocks, guide.md:27-31). */

@@ -2912,15 +2912,6 @@ class StreamTable(
       .orderBy("consumer_id")
   }
 
-  /** The `$audit_log` system table, batch semantics: the current resolved
-    * rows with a leading `rowkind` column (`+I` — a batch scan sees every
-    * live row as an insert; the streaming alphabet lives in
-    * [[changesBetween]] / [[changelogWithRetractions]]). */
-  def auditLogView: DataFrame = {
-    val r = read
-    r.select(lit("+I").as("rowkind") +: r.columns.map(col): _*)
-  }
-
   /** The `$changelog` system table: the table's RETAINED change history as
     * `rowkind` + columns — per retained commit, its persisted changelog rows
     * when produced (`changelog-producer`; a log, no netting across commits),
@@ -4246,6 +4237,13 @@ object StreamTable {
     * arrivals to the same seq-ordered fold (the sequence-group closure,
     * [[FieldSeqPrefix]] generalized from one winner to a list). */
   val FieldListPrefix = "__graft_flist_"
+
+  /** Engine bookkeeping columns of a data file (commit sequence, tombstone
+    * marker, per-field sequence and contribution-list companions): stored,
+    * never part of a reader's schema. */
+  def isBookkeepingCol(name: String): Boolean =
+    name == SeqColName || name == TombstoneColName ||
+      name.startsWith(FieldSeqPrefix) || name.startsWith(FieldListPrefix)
 
   /** Dynamic bucket mode defaults: Paimon's `dynamic-bucket.target-row-num`
     * default (2M rows ≈ a few hundred MB per bucket at typical row widths),

@@ -230,6 +230,26 @@ class MaintenanceSpec extends AnyFunSuite {
       sh2.sql("ALTER TABLE pk_t RENAME COLUMN id TO key_id") }
   }
 
+  test("DROP then re-ADD COLUMN through the shell: old rows read NULL, new rows their values") {
+    val wh = Files.createTempDirectory("graft_sql_readd_").toString
+    val sh = new GraftSql(spark, wh)
+    sh.sql("CREATE TABLE ra_t (id BIGINT, note STRING) WITH ('bucket' = '1')")
+    sh.sql("INSERT INTO ra_t SELECT 1, 'old'")
+    sh.sql("ALTER TABLE ra_t DROP COLUMN note")
+    sh.sql("ALTER TABLE ra_t ADD COLUMN note STRING")
+    sh.sql("INSERT INTO ra_t SELECT 2, 'new'")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), Option(r.getString(1)))).toSeq
+    val expected = Seq((1L, None), (2L, Some("new")))
+    assert(rows(sh.sql("SELECT id, note FROM ra_t ORDER BY id")) == expected)
+    // the same table through spark.sql over a catalog on the warehouse
+    spark.conf.set("spark.sql.catalog.maint_readd",
+      classOf[graft.sources.v2.GraftSparkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.maint_readd.warehouse", wh)
+    assert(rows(spark.sql(
+      "SELECT id, note FROM maint_readd.default.ra_t ORDER BY id")) == expected)
+  }
+
   test("SELECT … VERSION AS OF / TIMESTAMP AS OF travels through the shell") {
     val sh = new GraftSql(spark, Files.createTempDirectory("graft_sql_tt_").toString)
     sh.sql("CREATE TABLE tt_t (id BIGINT, v STRING) WITH ('bucket' = '1')")
