@@ -3,6 +3,9 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -23,9 +26,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * At scale this is the planner-free pattern: no custom operator, one
   * broadcast join per batch, retry state is a small parquet file keyed by
-  * batch id. Replay-safe end to end: every write of batch `id` (matches,
-  * pending, dead letters) is an overwrite of a batch-`id`-keyed path, and
-  * pending GC always keeps the newest predecessor, so a batch replayed
+  * batch id. The join is evaluated once: one [[RoutedWrite]] job sends each
+  * row to `data/batch-<id>` (hit), `retry/pending-<id>` (miss under the
+  * cap) or `dead/batch-<id>` (miss at the cap), with no cache; a batch with
+  * no rows writes their schema-only files with no job at all. Replay-safe
+  * end to end: the job replaces those three batch-`id`-keyed directories,
+  * and pending GC always keeps the newest predecessor, so a batch replayed
   * after a crash rewrites exactly its own outputs from exactly its inputs.
   * Read the sink with `option("recursiveFileLookup", true)` (per-batch
   * subdirectories).
@@ -61,31 +67,34 @@ object LookupRetry {
         val fresh = batch.withColumn("__attempts", lit(0))
         // parked rows have exactly `fresh`'s columns; a replay overwrites
         // pending-<id>, so its schema is passed, never inferred or memoized
-        val pending = graft.table.StreamTable.listDir(Paths.get(retryDir)).iterator
+        val pendingDir = graft.table.StreamTable.listDir(Paths.get(retryDir)).iterator
           .map(_.getFileName.toString)
           .filter(_.startsWith("pending-"))
           .map(_.stripPrefix("pending-").toLong)
           .filter(_ < id).toSeq.sorted.lastOption
-          .map(m => s.read.schema(fresh.schema).parquet(s"$retryDir/pending-$m"))
-        val input = pending.map(fresh.unionByName(_)).getOrElse(fresh)
+          .map(m => s"$retryDir/pending-$m")
+        val input = pendingDir
+          .map(p => fresh.unionByName(s.read.schema(fresh.schema).parquet(p)))
+          .getOrElse(fresh)
 
         val d = dim().withColumn("__hit", lit(1))
-        val joined = input.join(broadcast(d), Seq(key), "left").cache()
-        try {
-          // per-batch output dirs + overwrite ⇒ a replayed batch rewrites its
-          // own files instead of double-appending (exactly-once sink)
-          joined.filter(col("__hit").isNotNull)
-            .drop("__hit", "__attempts")
-            .write.mode("overwrite").parquet(s"$outDir/data/batch-$id")
-          val missed = joined.filter(col("__hit").isNull)
-            .select(input.columns.map(col): _*)
-            .withColumn("__attempts", col("__attempts") + 1)
-          missed.filter(col("__attempts") < maxAttempts)
-            .write.mode("overwrite").parquet(s"$retryDir/pending-$id")
-          missed.filter(col("__attempts") >= maxAttempts)
-            .drop("__attempts")
-            .write.mode("overwrite").parquet(s"$outDir/dead/batch-$id")
-        } finally joined.unpersist()
+        // one job routes the joined rows by the next attempt count; every
+        // destination is a batch-id-keyed directory it replaces, so a
+        // replayed batch rewrites its own outputs (exactly-once sink)
+        val joined = input.join(broadcast(d), Seq(key), "left")
+          .withColumn("__attempts", col("__attempts") + 1)
+        // a batch with no rows (a compaction commit fires one) writes its
+        // schema-only outputs from an empty plan: no dimension read, no job
+        val noRows = batch.queryExecution.toRdd.getNumPartitions == 0 &&
+          pendingDir.forall(parquetRows(s, _) == 0L)
+        RoutedWrite.write(if (noRows) joined.limit(0) else joined, Seq(
+          RoutedWrite.Dest(s"$outDir/data/batch-$id", col("__hit").isNotNull,
+            joined.columns.toSeq.filterNot(Set("__hit", "__attempts"))),
+          RoutedWrite.Dest(s"$retryDir/pending-$id",
+            col("__attempts") < maxAttempts, input.columns.toSeq),
+          RoutedWrite.Dest(s"$outDir/dead/batch-$id",
+            col("__attempts") >= maxAttempts,
+            input.columns.toSeq.filterNot(_ == "__attempts"))), outDir)
         // GC superseded pending files, but KEEP the newest predecessor: a
         // replay of this batch (crash before the checkpoint commit) must be
         // able to re-read the pending state it consumed
@@ -98,5 +107,16 @@ object LookupRetry {
       .option("checkpointLocation", s"$outDir/chk")
       .trigger(trigger)
       .start()
+  }
+
+  /** Rows in a directory's parquet files, from their footers. */
+  private def parquetRows(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    graft.table.StreamTable.listDir(Paths.get(dir)).iterator
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map { p =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.toString), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.v2.GraftSparkCatalog
+import graft.streaming.RoutedWrite
 
 /** SQL front-end over [[GraftCatalog]]: executes the reference tutorial's
   * literal statement surface, so the Flink SQL client session it walks through
@@ -333,9 +334,12 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
     * fixed delay maps to the micro-batch cadence (one AvailableNow drain =
     * one attempt round; a rerun of the INSERT retries what is parked) —
     * [[graft.streaming.LookupRetry]] is the library-door twin of this pipe.
-    * Replay-safe: batch ids ride the target's writer-epoch discipline and
-    * every side write is an overwrite of a batch-id-keyed path, so a
-    * replayed batch rewrites exactly its own state. */
+    * The misses are written as its are: one [[RoutedWrite]] job sends each
+    * to `pending-<id>` or `dead/batch-<id>`, with no cache; the matches
+    * commit through the target's streaming write. Replay-safe: batch ids
+    * ride the target's writer-epoch discipline and the routed job replaces
+    * its batch-id-keyed directories, so a replayed batch rewrites exactly
+    * its own state. */
   private def runRetryEnrichment(t: String, table: StreamTable,
       factT: StreamTable, fact: String, factAlias: String, dim: String,
       dimRef: String, dimAlias: String, jm: scala.util.matching.Regex.Match, cleaned: String,
@@ -384,13 +388,13 @@ class GraftSql(spark: SparkSession, defaultWarehouse: String) {
           .join(broadcast(s.table(dimRef).alias(dimAlias)), expr(onCond),
             "left_anti")
           .withColumn("__attempts", col("__attempts") + lit(1))
-          .cache()
-        try {
-          missed.filter(col("__attempts") < maxAttempts)
-            .write.mode("overwrite").parquet(s"$retryDir/pending-$absId")
-          missed.filter(col("__attempts") >= maxAttempts).drop("__attempts")
-            .write.mode("overwrite").parquet(s"$retryDir/dead/batch-$absId")
-        } finally missed.unpersist()
+        // one job parks the misses under the cap and dead-letters the rest
+        RoutedWrite.write(missed, Seq(
+          RoutedWrite.Dest(s"$retryDir/pending-$absId",
+            col("__attempts") < maxAttempts, missed.columns.toSeq),
+          RoutedWrite.Dest(s"$retryDir/dead/batch-$absId",
+            col("__attempts") >= maxAttempts,
+            missed.columns.toSeq.filterNot(_ == "__attempts"))), retryDir.toString)
         // GC superseded pending files, KEEPING the newest predecessor (a
         // replayed batch must be able to re-read the state it consumed)
         pendingIds.dropRight(1).foreach(m =>

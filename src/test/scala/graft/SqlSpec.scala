@@ -476,6 +476,67 @@ class SqlSpec extends AnyFunSuite {
     assert(ej.getMessage.contains("exactly ONE join"), ej.getMessage)
   }
 
+  test("LOOKUP retry drain: one job writes a batch's parked misses and " +
+      "dead letters, with no cache") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val wh = Files.createTempDirectory("graft_sql_retry1_").toString
+    val sh = new GraftSql(spark, wh)
+    sh.sql("""CREATE TABLE meas_j (sensor_id BIGINT, reading DECIMAL(5, 1),
+             |    event_time AS PROCTIME()
+             |) WITH ('bucket' = '1', 'bucket-key' = 'sensor_id')""".stripMargin)
+    sh.sql("""CREATE TABLE dim_j (sensor_id BIGINT, latitude DOUBLE PRECISION,
+             |    PRIMARY KEY (sensor_id) NOT ENFORCED
+             |) WITH ('changelog-producer' = 'input')""".stripMargin)
+    sh.sql("""CREATE TABLE enr_j (sensor_id BIGINT, reading DECIMAL(5, 1), latitude DOUBLE
+             |) WITH ('bucket' = '1', 'bucket-key' = 'sensor_id')""".stripMargin)
+    def add(t: String, ids: Long*): Unit = {
+      val view = s"${t}_rows"
+      (if (t == "dim_j") ids.toDF("sensor_id").withColumn("latitude", lit(9.5))
+       else ids.toDF("sensor_id").withColumn("reading", lit(1.0).cast("decimal(5,1)")))
+        .createOrReplaceTempView(view)
+      sh.sql(s"INSERT INTO $t SELECT * FROM $view")
+    }
+    val stmt = """INSERT INTO enr_j
+                 |SELECT /*+ LOOKUP('table'='s', 'retry-predicate'='lookup_miss',
+                 |         'output-mode'='allow_unordered', 'max-attempts'='2') */
+                 |    m.sensor_id, m.reading, s.latitude
+                 |FROM meas_j AS m
+                 |    JOIN dim_j FOR SYSTEM_TIME AS OF m.event_time AS s
+                 |        ON m.sensor_id = s.sensor_id""".stripMargin
+    val retryDir = java.nio.file.Paths.get(s"$wh/default.db/enr_j/lookup-retry")
+    def names(sub: String, prefix: String): Seq[String] =
+      graft.table.StreamTable.listDir(retryDir.resolve(sub)).map(_.getFileName.toString)
+        .filter(_.startsWith(prefix)).sorted
+    /** The write job ids in the names of a batch's miss files. */
+    def writeJobs(id: String): Set[String] = {
+      val JobOf = "part-\\d{5}-(.{36})-c\\d{3}.*\\.parquet".r
+      Seq(s"pending-$id", s"dead/batch-$id").flatMap(d => names(d, "part-"))
+        .collect { case JobOf(job) => job }.toSet
+    }
+    // drain 1: key 2 parks, nothing dead-letters; drain 2: key 2 reaches
+    // the cap, key 3 parks
+    add("dim_j", 1L); add("meas_j", 1L, 2L)
+    sh.sql(stmt)
+    add("meas_j", 3L)
+    sh.sql(stmt)
+    val batches = names(".", "pending-").map(_.stripPrefix("pending-"))
+    assert(batches.size == 2, batches)
+    for (id <- batches)
+      assert(writeJobs(id).size == 1,
+        s"batch $id: one job writes the parked misses and the dead letters: " +
+          (names(s"pending-$id", "part-") ++ names(s"dead/batch-$id", "part-")))
+    val last = batches.maxBy(_.toLong)
+    assert(spark.read.parquet(retryDir.resolve(s"pending-$last").toString)
+      .select("sensor_id").as[Long].collect().toSeq == Seq(3L))
+    assert(spark.read.parquet(retryDir.resolve(s"dead/batch-$last").toString)
+      .select("sensor_id").as[Long].collect().toSeq == Seq(2L))
+    assert(sh.sql("SELECT sensor_id FROM enr_j").as[Long].collect().toSeq == Seq(1L))
+    assert(spark.sharedState.cacheManager.isEmpty, "the drain caches nothing")
+    assert(!graft.table.StreamTable.listDir(retryDir)
+      .exists(_.getFileName.toString.startsWith("_routed-")), "no staging dir is left")
+  }
+
   test("SYSTEM_TIME rewrite refuses ambiguous fact-table shapes (CTE, " +
       "subquery FROM, fact referenced twice) instead of streaming the wrong table") {
     import spark.implicits._
