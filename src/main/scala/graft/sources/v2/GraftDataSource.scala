@@ -720,12 +720,13 @@ class GraftV2Table(tableName: String, val table: StreamTable,
                 table.bucketKey.exists(info.schema().fieldNames.contains))
               table.currentBuckets // dynamic mode: the head's count (advisory)
             else 0 // partitioned: |partitions| is data-dependent, Spark picks
-          // PK targets also request per-task ordering by the primary key:
+          // PK targets also require per-task ordering by the primary key:
           // Spark plans ONE spillable SortExec before the writers, so sink
-          // epochs come out as key-sorted runs (the streaming writer
-          // verifies and flags them; the batch door's appendBatch sorts for
-          // itself either way). Best-effort like the distribution — an
-          // unhonored request only costs the sorted-run flag.
+          // epochs and dynamic overwrites come out as key-sorted runs, the
+          // layout every PK data file must have (the executor writer checks
+          // it and fails the task on a key inversion; the batch door's
+          // appendBatch sorts for itself). Unlike the distribution, this
+          // request is mandatory.
           override def requiredOrdering
               : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
             table.primaryKey match {

@@ -36,12 +36,13 @@ import graft.table.StreamTable
   *    ([[GraftChangelogDeltaReader]]) — O(interval changelog) per trigger,
   *    never a table resolve. This is what a 20 s-trigger CDC consumer on a
   *    100 TB table stands on.
-  *  - **fallback (pre-option history)**: the PK merge-on-read plan run
-  *    TWICE per bucket — old winners, new winners — inside the reader:
-  *    per-bucket, zero exchanges, working set = the bucket's distinct keys;
-  *    the interval walks COMMIT-BY-COMMIT for its changed-key evidence, so
-  *    a level-0 file absorbed by an in-interval compaction still
-  *    contributes its keys (scanned key-only as `extraChanged`).
+  *  - **fallback (pre-option history)**: the PK merge-on-read kernel run
+  *    over each bucket's old, new and evidence files in ONE k-way merge
+  *    ([[GraftChangelogReader]]): per changed key, the old and new images
+  *    fold with the engine's [[PkMerge.Fold]] — per-bucket, zero exchanges,
+  *    O(open files) memory; the interval walks COMMIT-BY-COMMIT for its
+  *    changed-key evidence, so a level-0 file absorbed by an in-interval
+  *    compaction still contributes its keys (read as evidence).
   */
 class GraftChangelogV2Table(base: GraftV2Table) extends Table with SupportsRead {
 
@@ -277,7 +278,7 @@ private[graft] object ChangelogPlanning {
     // absorb a commit's changes) plus files a state-REPLACING commit
     // removed (keys an overwrite dropped must emit -D) — the shared rule
     // [[StreamTable.intervalEvidence]]; files not live at the end snapshot
-    // are scanned KEY-ONLY, their images come from the resolved states.
+    // contribute KEYS only, their images come from the resolved states.
     // The initial catch-up treats every file as new so the state emits +I.
     val oldPathSet = oldFiles.map(_.path).toSet
     val (newOnly: Set[String], extras: Seq[graft.table.DataFileMeta],
@@ -287,9 +288,9 @@ private[graft] object ChangelogPlanning {
         val (added, removedEv) = StreamTable.intervalEvidence(snapAt,
           table.deltaOf, table.hydrated, s, e)
         val endPaths = newFiles.map(_.path).toSet
-        // removal evidence LIVE at the start snapshot is key-collected
-        // during the old-state resolve (zero extra I/O); only evidence
-        // live at NEITHER end needs its own key-only scan
+        // removal evidence LIVE at the start snapshot is read by the merge
+        // anyway (zero extra I/O); only evidence live at NEITHER end adds a
+        // file to it
         (added.map(_.path).toSet.intersect(endPaths),
           (added.filterNot(f => endPaths(f.path)) ++
             removedEv.filterNot(f =>
@@ -299,6 +300,7 @@ private[graft] object ChangelogPlanning {
     // one partition per hash bucket when the layout proves co-location of
     // every key version; otherwise a single (serial, still correct) group
     val both = oldFiles ++ newFiles ++ extras
+    PkMerge.requireSortedRuns(table.root, table.primaryKey.get, both)
     val groups: Seq[(Seq[String], Seq[String], Seq[String], Seq[String])] =
       if (both.isEmpty) Seq.empty
       else if (both.forall(_.bucket.isDefined)) {
@@ -315,13 +317,14 @@ private[graft] object ChangelogPlanning {
       } else Seq((oldFiles.map(_.path).sorted, newFiles.map(_.path).sorted,
         extras.map(_.path).sorted, oldEv.map(_.path).sorted))
     groups.map { case (of, nf, xf, oc) =>
-      GraftChangelogPartition(of, nf, nf.filter(newOnly), xf, oc): InputPartition
+      GraftChangelogPartition(of, nf, nf.filter(newOnly) ++ xf ++ oc): InputPartition
     }.toArray
   }
 
-  /** The per-engine reader factory (winners for deduplicate/first-row,
-    * folds for aggregation, per-field merges for partial-update); every
-    * factory also serves the persisted-changelog delta partitions.
+  /** The reader factory: the engine's [[PkMerge.Fold]] (winners for
+    * deduplicate/first-row, folds for aggregation, per-field merges for
+    * partial-update) serves the state-diff partitions; the persisted
+    * changelog delta partitions are engine-agnostic.
     *
     * `pruned` (when the query projects a subset) makes the readers emit —
     * and READ — only the projected columns: the merge bookkeeping (pk,
@@ -343,33 +346,34 @@ private[graft] object ChangelogPlanning {
         s"key/sequence column $n missing from table schema")))
     val outLen = prunedFile.length
     val dataFields = prunedFile.fields.toSeq ++ extras
-    val dataLen = dataFields.length
-    val internal = StructType(dataFields ++ Seq(
+    val base = StructType(dataFields ++ Seq(
       StructField(StreamTable.SeqColName, LongType),
       StructField(StreamTable.TombstoneColName, BooleanType)))
-    if (table.effectiveEngine == "partial-update") {
-      // per-field last-non-null states, with the persisted fseq provenance
-      // structs in the read schema (the PK scan's exact fold) — only the
-      // PROJECTED fields race; dropped fields resolve independently
-      val internalP = StructType(internal.fields ++ prunedFile.collect {
+    val partial = table.effectiveEngine == "partial-update"
+    // partial-update reads the persisted fseq provenance structs of the
+    // PROJECTED fields (the PK scan's exact fold); dropped fields resolve
+    // independently
+    val internal =
+      if (!partial) base
+      else StructType(base.fields ++ prunedFile.collect {
         case f if !pk.contains(f.name) =>
           StructField(StreamTable.FieldSeqPrefix + f.name, PkMerge.FseqType)
       })
-      GraftChangelogPartialReaderFactory(internalP, outLen, dataLen,
-        pk.map(internalP.fieldIndex).toArray,
-        prunedFile.fields.zipWithIndex.collect {
-          case (f, i) if !pk.contains(f.name) =>
-            (i, internalP.fieldIndex(StreamTable.FieldSeqPrefix + f.name))
-        },
-        table.seqCol.map(internalP.fieldIndex).getOrElse(-1),
-        internalP.fieldIndex(StreamTable.SeqColName))
-    } else if (table.effectiveEngine == "aggregation")
-      // the aggregation dual: old/new states are per-key FOLDS, not winners;
-      // sum/count fields must fold in BIGINT/DOUBLE (same guard as the
-      // scan); fields the projection dropped are neither read nor folded
-      GraftChangelogAggReaderFactory(internal, outLen, dataLen,
-        pk.map(internal.fieldIndex).toArray,
-        table.aggSpec.get.flatMap { case (f, fn) =>
+    val dts = internal.fields.map(_.dataType)
+    val seqIdx = table.seqCol.map(internal.fieldIndex).getOrElse(-1)
+    val commitIdx = internal.fieldIndex(StreamTable.SeqColName)
+    val fold: PkMerge.Fold =
+      if (partial)
+        PkMerge.PerField(internal, outLen,
+          prunedFile.fields.zipWithIndex.collect {
+            case (f, i) if !pk.contains(f.name) =>
+              (i, internal.fieldIndex(StreamTable.FieldSeqPrefix + f.name))
+          }, seqIdx, commitIdx)
+      else if (table.effectiveEngine == "aggregation")
+        // old/new states are per-key FOLDS, not winners; sum/count fields
+        // must fold in BIGINT/DOUBLE (same guard as the scan); fields the
+        // projection dropped are neither read nor folded
+        PkMerge.Accumulate(outLen, dts, table.aggSpec.get.flatMap { case (f, fn) =>
           val fileN = nameMap.getOrElse(f, f)
           if (!prunedFile.fieldNames.contains(fileN)) None
           else {
@@ -384,25 +388,22 @@ private[graft] object ChangelogPlanning {
             Some((internal.fieldIndex(fileN), fn))
           }
         }.toArray)
-    else
-      GraftChangelogReaderFactory(internal, outLen, dataLen,
-        pk.map(internal.fieldIndex).toArray,
-        table.seqCol.map(internal.fieldIndex).getOrElse(-1),
-        internal.fieldIndex(StreamTable.SeqColName),
-        internal.fieldIndex(StreamTable.TombstoneColName),
-        table.effectiveEngine == "first-row")
+      else
+        PkMerge.LastWriter(outLen, dts, seqIdx, commitIdx,
+          internal.fieldIndex(StreamTable.TombstoneColName),
+          table.effectiveEngine == "first-row")
+    GraftChangelogReaderFactory(internal, outLen, dataFields.length,
+      pk.map(internal.fieldIndex).toArray, fold)
   }
 }
 
 /** One bucket's changelog interval: the bucket's live files at the start
-  * snapshot, at the end snapshot, which of the latter are NEW level-0
-  * commits (the changed-key evidence), interval-touched files live at
-  * NEITHER end (scanned for KEYS only — their surviving content lives in
-  * the resolved states), and removal-evidence files live at the START
-  * (key-collected during the old resolve, zero extra reads). */
+  * snapshot, at the end snapshot, and the changed-key evidence — the NEW
+  * level-0 files among the latter, removal-evidence files, and
+  * interval-touched files live at NEITHER end (read for their KEYS only —
+  * their surviving content lives in the resolved states). */
 case class GraftChangelogPartition(oldFiles: Seq[String], newFiles: Seq[String],
-    newOnly: Seq[String], extraChanged: Seq[String] = Seq.empty,
-    oldChanged: Seq[String] = Seq.empty)
+    evidence: Seq[String])
     extends InputPartition
 
 /** One bucket's PRODUCED changelog slice: the interval's persisted
@@ -412,119 +413,63 @@ case class GraftChangelogDeltaPartition(files: Seq[(String, Long)])
     extends InputPartition
 
 case class GraftChangelogReaderFactory(internal: StructType, outLen: Int,
-    dataLen: Int, pkIdxs: Array[Int], seqIdx: Int, commitIdx: Int, tombIdx: Int,
-    firstRow: Boolean) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case d: GraftChangelogDeltaPartition =>
-        new GraftChangelogDeltaReader(d, internal, outLen, dataLen, pkIdxs)
-      case _ =>
-        new GraftChangelogReader(p.asInstanceOf[GraftChangelogPartition],
-          internal, outLen, pkIdxs, seqIdx, commitIdx, tombIdx, firstRow)
-    }
-}
-
-/** Executor-side interval diff of one bucket: resolve winners at the start
-  * and end snapshots (two hash merges), collect the keys the interval's new
-  * level-0 files touched (including tombstones), and emit the netted ops:
-  * old+new → `-U`/`+U`, old only → `-D`, new only → `+I`; a key inserted
-  * AND deleted inside the interval nets to nothing, and a stale arrival
-  * that lost resolution emits an identical `-U`/`+U` pair (a delta consumer
-  * nets zero) — the exact [[StreamTable.changelogWithRetractions]] rules. */
-class GraftChangelogReader(p: GraftChangelogPartition, internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], seqIdx: Int, commitIdx: Int, tombIdx: Int,
-    firstRow: Boolean) extends PartitionReader[InternalRow] {
-
-  private val dts: Array[DataType] = internal.fields.map(_.dataType)
-
-  private def opRow(w: InternalRow, op: String): InternalRow = {
-    val out = new Array[Any](outLen + 1)
-    var i = 0
-    while (i < outLen) { out(i) = w.get(i, dts(i)); i += 1 }
-    out(outLen) = UTF8String.fromString(op)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-  }
-
-  private lazy val rows: Iterator[InternalRow] = {
-    val changed = scala.collection.mutable.LinkedHashSet[List[Any]]()
-    val oldOnly = p.oldChanged.toSet
-    val oldW = PkMerge.winners(p.oldFiles.map((_, -1L)), internal, pkIdxs,
-      seqIdx, commitIdx, firstRow, Array.empty,
-      onRow = (key, path) => if (oldOnly(path)) changed += key)
-    val newOnly = p.newOnly.toSet
-    val newW = PkMerge.winners(p.newFiles.map((_, -1L)), internal, pkIdxs,
-      seqIdx, commitIdx, firstRow, Array.empty,
-      onRow = (key, path) => if (newOnly(path)) changed += key)
-    PkMerge.collectKeys(p.extraChanged, internal, pkIdxs, changed)
-    changed.iterator.flatMap { key =>
-      val o = Option(oldW.get(key)).filterNot(PkMerge.isTombstone(_, tombIdx))
-      val n = Option(newW.get(key)).filterNot(PkMerge.isTombstone(_, tombIdx))
-      (o, n) match {
-        case (Some(ow), Some(nw)) => Iterator(opRow(ow, "-U"), opRow(nw, "+U"))
-        case (Some(ow), None) => Iterator(opRow(ow, "-D"))
-        case (None, Some(nw)) => Iterator(opRow(nw, "+I"))
-        case (None, None) => Iterator.empty
-      }
-    }
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val has = rows.hasNext
-    if (has) current = rows.next()
-    has
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-case class GraftChangelogAggReaderFactory(internal: StructType, outLen: Int,
-    dataLen: Int, pkIdxs: Array[Int], specs: Array[(Int, String)])
+    dataLen: Int, pkIdxs: Array[Int], fold: PkMerge.Fold)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case d: GraftChangelogDeltaPartition =>
         // the fold already happened at write time: the persisted rows carry
-        // accumulated images, so the delta fold is engine-agnostic
+        // resolved images, so the delta fold is engine-agnostic
         new GraftChangelogDeltaReader(d, internal, outLen, dataLen, pkIdxs)
-      case _ =>
-        new GraftChangelogAggReader(p.asInstanceOf[GraftChangelogPartition],
-          internal, outLen, pkIdxs, specs)
+      case c: GraftChangelogPartition =>
+        new GraftChangelogReader(c, internal, outLen, pkIdxs, fold)
     }
 }
 
-/** The aggregation-engine interval diff of one bucket: old/new states are
-  * per-key FOLDS ([[PkMerge.accumulate]]) instead of winners; per changed
-  * key the old ACCUMULATED image retracts (`-U`) and the new asserts
-  * (`+U`) — a downstream aggregate that applies retract/accumulate lands on
-  * the merged value, exactly what a changelog over an aggregation table
-  * means. Keys first seen in the interval emit `+I`; the aggregation engine
-  * has no delete path, so `-D` never fires from commits (it can only arise
-  * from snapshot surgery like rollback, where the old image retracts). */
-class GraftChangelogAggReader(p: GraftChangelogPartition, internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], specs: Array[(Int, String)])
+/** Executor-side interval diff of one bucket: ONE k-way merge over the
+  * bucket's old, new and evidence files (each read once, in path order);
+  * per key whose versions include evidence (a new level-0 file, a removed
+  * file, a file absorbed inside the interval), the engine's fold over the
+  * start snapshot's files gives the old image and over the end snapshot's
+  * files the new image, and the netted op follows: old+new → `-U`/`+U`,
+  * old only → `-D`, new only → `+I`; a key inserted AND deleted inside the
+  * interval nets to nothing, and a stale arrival that lost resolution
+  * emits an identical `-U`/`+U` pair (a delta consumer nets zero) — the
+  * exact [[StreamTable.changelogWithRetractions]] rules. The aggregation
+  * and partial-update engines have no delete path, so their `-D` only
+  * arises from snapshot surgery (rollback). Memory is O(open files + one
+  * key's versions). */
+class GraftChangelogReader(p: GraftChangelogPartition, internal: StructType,
+    outLen: Int, pkIdxs: Array[Int], fold: PkMerge.Fold)
     extends PartitionReader[InternalRow] {
 
-  private def opRow(v: Array[Any], op: String): InternalRow = {
+  private val files: IndexedSeq[String] =
+    (p.oldFiles ++ p.newFiles ++ p.evidence).distinct.sorted.toIndexedSeq
+  private def flags(of: Seq[String]): Array[Boolean] = {
+    val set = of.toSet
+    files.map(set).toArray
+  }
+  private val inOld = flags(p.oldFiles)
+  private val inNew = flags(p.newFiles)
+  private val evidence = flags(p.evidence)
+
+  private def opRow(img: InternalRow, op: String): InternalRow = {
     val out = new Array[Any](outLen + 1)
-    System.arraycopy(v, 0, out, 0, outLen)
+    var i = 0
+    while (i < outLen) { out(i) = img.get(i, internal(i).dataType); i += 1 }
     out(outLen) = UTF8String.fromString(op)
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
   }
 
-  private lazy val rows: Iterator[InternalRow] = {
-    val changed = scala.collection.mutable.LinkedHashSet[List[Any]]()
-    val oldOnly = p.oldChanged.toSet
-    val oldAcc = PkMerge.accumulate(p.oldFiles.map((_, -1L)), internal,
-      pkIdxs, specs, outLen, Array.empty,
-      onRow = (key, path) => if (oldOnly(path)) changed += key)
-    val newOnly = p.newOnly.toSet
-    val newAcc = PkMerge.accumulate(p.newFiles.map((_, -1L)), internal,
-      pkIdxs, specs, outLen, Array.empty,
-      onRow = (key, path) => if (newOnly(path)) changed += key)
-    PkMerge.collectKeys(p.extraChanged, internal, pkIdxs, changed)
-    changed.iterator.flatMap { key =>
-      (Option(oldAcc.get(key)), Option(newAcc.get(key))) match {
+  private lazy val groups = PkMerge.sortedGroups(files.map((_, -1L)), internal,
+    pkIdxs, Array.empty)
+  private lazy val rows: Iterator[InternalRow] = groups.flatMap { group =>
+    val runs = groups.runs
+    if (!runs.exists(evidence)) Iterator.empty
+    else {
+      def image(in: Array[Boolean]) =
+        fold(group.iterator.zip(runs.iterator).collect { case (r, f) if in(f) => r })
+      (Option(image(inOld)), Option(image(inNew))) match {
         case (Some(o), Some(n)) => Iterator(opRow(o, "-U"), opRow(n, "+U"))
         case (Some(o), None) => Iterator(opRow(o, "-D"))
         case (None, Some(n)) => Iterator(opRow(n, "+I"))
@@ -540,68 +485,7 @@ class GraftChangelogAggReader(p: GraftChangelogPartition, internal: StructType,
     has
   }
   override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-case class GraftChangelogPartialReaderFactory(internal: StructType, outLen: Int,
-    dataLen: Int, pkIdxs: Array[Int], fields: Array[(Int, Int)], seqIdx: Int,
-    commitIdx: Int) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case d: GraftChangelogDeltaPartition =>
-        new GraftChangelogDeltaReader(d, internal, outLen, dataLen, pkIdxs)
-      case _ =>
-        new GraftChangelogPartialReader(p.asInstanceOf[GraftChangelogPartition],
-          internal, outLen, pkIdxs, fields, seqIdx, commitIdx)
-    }
-}
-
-/** The partial-update interval diff of one bucket: old/new states are
-  * per-key per-FIELD folds ([[PkMerge.partialState]]); per changed key the
-  * old merged image retracts (`-U`) and the new asserts (`+U`) — the
-  * partial-update engine has no delete path, so `-D` only arises from
-  * snapshot surgery (rollback). Keys first seen in the interval emit
-  * `+I`. */
-class GraftChangelogPartialReader(p: GraftChangelogPartition, internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], fields: Array[(Int, Int)], seqIdx: Int,
-    commitIdx: Int) extends PartitionReader[InternalRow] {
-
-  private def opRow(v: Array[Any], op: String): InternalRow = {
-    val out = new Array[Any](outLen + 1)
-    System.arraycopy(v, 0, out, 0, outLen)
-    out(outLen) = UTF8String.fromString(op)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-  }
-
-  private lazy val rows: Iterator[InternalRow] = {
-    val changed = scala.collection.mutable.LinkedHashSet[List[Any]]()
-    val oldOnly = p.oldChanged.toSet
-    val oldAcc = PkMerge.partialState(p.oldFiles.map((_, -1L)), internal,
-      pkIdxs, fields, seqIdx, commitIdx, outLen, Array.empty,
-      onRow = (key, path) => if (oldOnly(path)) changed += key)
-    val newOnly = p.newOnly.toSet
-    val newAcc = PkMerge.partialState(p.newFiles.map((_, -1L)), internal,
-      pkIdxs, fields, seqIdx, commitIdx, outLen, Array.empty,
-      onRow = (key, path) => if (newOnly(path)) changed += key)
-    PkMerge.collectKeys(p.extraChanged, internal, pkIdxs, changed)
-    changed.iterator.flatMap { key =>
-      (Option(oldAcc.get(key)), Option(newAcc.get(key))) match {
-        case (Some(o), Some(n)) => Iterator(opRow(o, "-U"), opRow(n, "+U"))
-        case (Some(o), None) => Iterator(opRow(o, "-D"))
-        case (None, Some(n)) => Iterator(opRow(n, "+I"))
-        case (None, None) => Iterator.empty
-      }
-    }
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val has = rows.hasNext
-    if (has) current = rows.next()
-    has
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+  override def close(): Unit = groups.close()
 }
 
 /** The O(delta) changelog reader: fold one bucket's PERSISTED per-commit

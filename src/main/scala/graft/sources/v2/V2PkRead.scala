@@ -1,13 +1,13 @@
 package graft.sources.v2
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.ByteArray
 
 import graft.table.{DataFileMeta, StreamTable}
 
@@ -24,13 +24,16 @@ import graft.table.{DataFileMeta, StreamTable}
   *    primary key (`pmod(murmur3(key), n)`, recorded per file in the
   *    manifest), so EVERY version of a key — updates, tombstones, compacted
   *    winners — lives in one bucket. The scan plans one [[InputPartition]]
-  *    per bucket and each reader resolves last-writer-wins locally with a
-  *    hash merge: winner per key by largest (`sequence.field`, commit batch)
-  *    for `deduplicate`, smallest for `first-row`; tombstone winners emit
-  *    nothing. The library's global window shuffle becomes zero exchanges.
-  *  - All four merge engines fold here. Aggregation tables with a fold
-  *    this reader does not compute never reach it: they read the library's
-  *    merge view ([[GraftV2Table.libraryMerged]]).
+  *    per bucket and one reader ([[GraftPkMergeReader]]) resolves it
+  *    locally: a k-way merge of the bucket's files hands each key's
+  *    versions to the engine's fold ([[PkMerge.Fold]]) — largest
+  *    (`sequence.field`, commit batch) wins for `deduplicate`, smallest for
+  *    `first-row`, tombstone winners emit nothing; per-key accumulation for
+  *    `aggregation`; per-field last-non-null for `partial-update`. The
+  *    library's global window shuffle becomes zero exchanges.
+  *  - Aggregation tables with a fold this reader does not compute never
+  *    reach it: they read the library's merge view
+  *    ([[GraftV2Table.libraryMerged]]).
   *
   * Filter safety: only predicates over PRIMARY-KEY columns may prune files
   * or rows before the merge — all versions of a key share its key columns,
@@ -40,17 +43,17 @@ import graft.table.{DataFileMeta, StreamTable}
   * as a residual anyway — pushdown is a fast path, never a correctness
   * dependency).
   *
-  * 100 TB posture: PK files write as SORTED RUNS (ascending pk) and
-  * compaction re-sorts, so the default reader is a STREAMING k-way merge
-  * with O(open files + one key's versions) memory — Paimon's sorted-run
-  * LSM merge, which survives a mis-sized or skew-hot bucket where a hash
-  * of the bucket's distinct keys would not. Unsorted files (legacy
-  * manifests, sink epochs) degrade that group to the hash merge until the
-  * next compaction; the bucket count remains the declared write-time
-  * parallelism knob, and a key-equality lookup prunes to a single bucket
-  * before any I/O (the PK point read). Files without recorded bucket ids
-  * degrade to one merge group — correct, not parallel; rewrite via
-  * compaction to restore the layout.
+  * Layout contract: every data file of a PK table is a SORTED RUN on the
+  * primary key (`sortedBy`, enforced at commit — Paimon's sorted-run LSM
+  * invariant), so the merge holds O(open files + one key's versions) on
+  * every path, whatever a bucket's size or skew. A planned file without the
+  * flag (a manifest written before the invariant) refuses the scan and
+  * names `CALL sys.compact`, which rewrites sorted runs through the
+  * library. The bucket count remains the declared write-time parallelism
+  * knob, and a key-equality lookup prunes to a single bucket before any
+  * I/O (the PK point read). Files without recorded bucket ids degrade to
+  * one merge group — correct, not parallel; rewrite via compaction to
+  * restore the layout.
   */
 class GraftPkScanBuilder(table: GraftV2Table, fullSchema: StructType,
     pk: Seq[String], nameMap: Map[String, String] = Map.empty) extends ScanBuilder
@@ -135,22 +138,6 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
         "merge view (the merged row has no single source file)")
 
   // ---- driver-side pruning (metadata-only, like partition pruning) -------
-  // auto-heal first: buckets a PREVIOUS scan flagged as hash-degraded at
-  // refinement size sort-compact now (once), so this and every later scan
-  // plans the k-way merge — then resolve the live set AFTER the heal.
-  // BEST-EFFORT by construction: the heal is an optimization riding a
-  // read-only query's planning, so losing its commit race (concurrent
-  // maintenance) must never abort the SELECT — the flags were consumed, a
-  // later degraded plan simply re-raises them
-  if (PkMerge.autoHeal && table.atSnapshot.isEmpty &&
-      t.pendingDegradedBuckets.nonEmpty)
-    try t.healDegradedBuckets()
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(classOf[GraftPkScan]).warn(
-          s"auto-heal of ${table.name()} lost to concurrent maintenance " +
-            s"(reads are unaffected): ${e.getMessage}")
-    }
   // ONE snapshot read: files AND (dynamic mode) the bucket count they were
   // labeled under — two separate disk reads could straddle an inline split
   private val scanSnap = table.liveSnapshot
@@ -200,14 +187,16 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
 
   /** One merge group per recorded bucket; a manifest with any unbucketed
     * file degrades to a single group (correct, serial — the documented
-    * legacy fallback). Files merge in commit order for deterministic
-    * iteration (exact (seq, commit) ties are arbitrary, as in the library). */
-  private val groups: Seq[(Int, Seq[DataFileMeta])] =
+    * legacy fallback). Files merge in commit order, `(minSeq, path)`, then
+    * row order: the tie order of every fold. */
+  private val groups: Seq[(Int, Seq[DataFileMeta])] = {
+    PkMerge.requireSortedRuns(table.name(), pk, kept)
     if (kept.isEmpty) Seq.empty
     else if (kept.forall(_.bucket.isDefined))
       kept.groupBy(_.bucket.get).toSeq.sortBy(_._1)
         .map { case (b, fs) => (b, fs.sortBy(f => (f.minSeq, f.path))) }
     else Seq((-1, kept.sortBy(f => (f.minSeq, f.path))))
+  }
 
   // ---- merge-internal schema: projection ++ pk/seq/commit/tombstone ------
   private[v2] val internal: StructType = {
@@ -305,189 +294,64 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
 
   override def planInputPartitions(): Array[InputPartition] =
     groups.map { case (b, fs) =>
-      // every file a SORTED RUN on the full pk → the reader streams a k-way
-      // merge with O(files) memory; any unsorted file (legacy manifest,
-      // sink-fed epoch) degrades the group to the hash merge until the next
-      // compaction re-sorts it
-      val sorted = fs.forall(_.sortedBy.contains(pk))
-      // a hash-degraded bucket big enough that the merge would engage
-      // grace-hash refinement (row count is the conservative upper bound on
-      // its distinct keys) flags itself for the auto-heal sort-compaction —
-      // the NEXT scan consumes the flag, so the refinement price is paid at
-      // most once per bucket, not per query. Only HEAD scans flag: a
-      // time-travel read of old unsorted history says nothing about the
-      // current layout and must never trigger a rewrite of a bucket that
-      // compaction already sorted
-      if (!sorted && PkMerge.autoHeal && table.atSnapshot.isEmpty &&
-          fs.iterator.map(_.rowCount).sum > PkMerge.HashMergeMaxKeys.get())
-        t.noteDegradedBucket(b)
-      GraftPkInputPartition(fs.map(f => (f.path, f.minSeq)), b,
-        sorted = sorted): InputPartition
+      GraftPkInputPartition(fs.map(f => (f.path, f.minSeq)), b): InputPartition
     }.toArray
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (partial)
-      GraftPkPartialReaderFactory(internal, required.length,
-        pk.map(internal.fieldIndex).toArray, partialFields,
-        t.seqCol.map(internal.fieldIndex).getOrElse(-1),
-        internal.fieldIndex(StreamTable.SeqColName), pushed)
-    else if (aggregation)
-      GraftPkAggReaderFactory(internal, required.length,
-        pk.map(internal.fieldIndex).toArray,
-        // fold plan: only projected aggregated fields accumulate (the rest
-        // of `required` is necessarily primary-key columns — constant per
-        // key); fields the projection dropped never cost anything
-        t.aggSpec.get.collect {
-          case (f, fn) if fileRequired.fieldNames.contains(
-              nameMap.getOrElse(f, f)) =>
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val dts = internal.fields.map(_.dataType)
+    val fold: PkMerge.Fold =
+      if (partial)
+        PkMerge.PerField(internal, required.length, partialFields,
+          t.seqCol.map(internal.fieldIndex).getOrElse(-1),
+          internal.fieldIndex(StreamTable.SeqColName))
+      else if (aggregation)
+        // only projected aggregated fields accumulate (the rest of
+        // `required` is necessarily primary-key columns — constant per key);
+        // fields the projection dropped never cost anything
+        PkMerge.Accumulate(required.length, dts, t.aggSpec.get.collect {
+          case (f, fn) if fileRequired.fieldNames.contains(nameMap.getOrElse(f, f)) =>
             (internal.fieldIndex(nameMap.getOrElse(f, f)), fn)
-        }.toArray, pushed)
-    else
-      GraftPkReaderFactory(internal, required.length,
-        pk.map(internal.fieldIndex).toArray,
-        t.seqCol.map(internal.fieldIndex).getOrElse(-1),
-        internal.fieldIndex(StreamTable.SeqColName),
-        internal.fieldIndex(StreamTable.TombstoneColName),
-        firstRow, pushed)
+        }.toArray)
+      else
+        PkMerge.LastWriter(required.length, dts,
+          t.seqCol.map(internal.fieldIndex).getOrElse(-1),
+          internal.fieldIndex(StreamTable.SeqColName),
+          internal.fieldIndex(StreamTable.TombstoneColName), firstRow)
+    GraftPkReaderFactory(internal, pk.map(internal.fieldIndex).toArray, fold, pushed)
+  }
 }
 
 /** All live files of one hash bucket (or the whole table for the legacy
-  * unbucketed fallback), with their manifest commit sequences. The bucket id
-  * doubles as the storage-partitioned-join partition key (ignored unless the
-  * scan reported KeyGroupedPartitioning). `sorted` = every file is a sorted
-  * run on the full primary key (streaming-merge eligible). */
-case class GraftPkInputPartition(files: Seq[(String, Long)], bucketId: Int,
-    sorted: Boolean = false)
+  * unbucketed fallback), with their manifest commit sequences, in tie
+  * order. The bucket id doubles as the storage-partitioned-join partition
+  * key (ignored unless the scan reported KeyGroupedPartitioning). */
+case class GraftPkInputPartition(files: Seq[(String, Long)], bucketId: Int)
     extends InputPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucketId))
 }
 
-case class GraftPkReaderFactory(internal: StructType, outLen: Int,
-    pkIdxs: Array[Int], seqIdx: Int, commitIdx: Int, tombIdx: Int,
-    firstRow: Boolean, pushed: Array[Filter]) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[GraftPkInputPartition]
-    if (part.sorted)
-      new GraftPkSortedMergeReader(part.files, internal, outLen, pkIdxs,
-        seqIdx, commitIdx, tombIdx, firstRow, pushed)
-    else
-      new GraftPkMergeReader(part.files,
-        internal, outLen, pkIdxs, seqIdx, commitIdx, tombIdx, firstRow, pushed)
-  }
+case class GraftPkReaderFactory(internal: StructType, pkIdxs: Array[Int],
+    fold: PkMerge.Fold, pushed: Array[Filter]) extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new GraftPkMergeReader(p.asInstanceOf[GraftPkInputPartition].files,
+      internal, pkIdxs, fold, pushed)
 }
 
-/** Executor-side hash merge of one bucket: stream every file's rows through
-  * the shared [[GraftPartitionReader]] (schema evolution null-fills, pushed
-  * PK predicates hit parquet row groups, metadata columns fill from the
-  * manifest), keep the winning version per key, then emit the non-tombstone
-  * winners projected to the scan's output schema. Working set = the bucket's
-  * distinct keys. */
+/** Executor-side merge of one bucket: k-way merge the bucket's sorted runs
+  * ([[PkMerge.sortedGroups]]) through the shared [[GraftPartitionReader]]
+  * (schema evolution null-fills, pushed PK predicates hit parquet row
+  * groups, metadata columns fill from the manifest), fold each key's
+  * versions as they stream past, and emit the merged rows projected to the
+  * scan's output schema. Memory is O(open files + one key's versions). */
 class GraftPkMergeReader(files: Seq[(String, Long)], internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], seqIdx: Int, commitIdx: Int, tombIdx: Int,
-    firstRow: Boolean, pushed: Array[Filter])
+    pkIdxs: Array[Int], fold: PkMerge.Fold, pushed: Array[Filter])
     extends PartitionReader[InternalRow] {
 
-  private val dts: Array[DataType] = internal.fields.map(_.dataType)
-
-  private lazy val merged: Iterator[InternalRow] = {
-    // bounded: over HashMergeMaxKeys distinct keys the pass restarts under
-    // key-hash refinement (re-reads instead of an executor OOM); each
-    // refined map is complete for its key slice, so emission streams
-    PkMerge.refined[InternalRow] { keyFilter =>
-      PkMerge.winners(files.map { case (p, s) => (p, s) },
-        internal, pkIdxs, seqIdx, commitIdx, firstRow, pushed,
-        keyFilter = keyFilter, maxKeys = PkMerge.HashMergeMaxKeys.get())
-    }.flatMap(_.values.iterator.asScala.collect {
-      case w if !PkMerge.isTombstone(w, tombIdx) =>
-        PkMerge.project(w, outLen, dts): InternalRow
-    })
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val has = merged.hasNext
-    if (has) current = merged.next()
-    has
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-case class GraftPkAggReaderFactory(internal: StructType, outLen: Int,
-    pkIdxs: Array[Int], specs: Array[(Int, String)], pushed: Array[Filter])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[GraftPkInputPartition]
-    if (part.sorted)
-      new GraftPkSortedAggReader(part.files, internal, outLen, pkIdxs,
-        specs, pushed)
-    else
-      new GraftPkAggMergeReader(part.files,
-        internal, outLen, pkIdxs, specs, pushed)
-  }
-}
-
-/** Executor-side per-bucket fold for merge-engine=aggregation: every
-  * version of a key combines field-wise by its declared function (sum/min/
-  * max/count — associative and commutative, which is exactly what makes the
-  * bucket-local fold equal the distributed aggregate; NULL is the identity,
-  * matching Spark's null-skipping aggregates). Compacted partial aggregates
-  * re-merge with fresh rows to the same result, the same closure the
-  * library's three merge sites rely on. */
-class GraftPkAggMergeReader(files: Seq[(String, Long)], internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], specs: Array[(Int, String)],
-    pushed: Array[Filter]) extends PartitionReader[InternalRow] {
-
-  private lazy val merged: Iterator[InternalRow] =
-    PkMerge.refined[Array[Any]] { keyFilter =>
-      PkMerge.accumulate(files, internal, pkIdxs, specs, outLen, pushed,
-        keyFilter = keyFilter, maxKeys = PkMerge.HashMergeMaxKeys.get())
-    }.flatMap(_.values.iterator.asScala
-      .map(v => new GenericInternalRow(v): InternalRow))
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val has = merged.hasNext
-    if (has) current = merged.next()
-    has
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Streaming dual of [[GraftPkMergeReader]] for buckets whose every file is
-  * a SORTED RUN on the primary key: k-way-merge the runs
-  * ([[PkMerge.sortedGroups]]), resolve each key's version group as it
-  * streams past, and emit the winner — memory is O(open files + one key's
-  * versions), never the bucket's distinct keys. This is what survives a
-  * mis-sized or skew-hot bucket at 100 TB; the hash merge remains the
-  * fallback for unsorted (legacy / sink-fed) files until compaction
-  * re-sorts them. Tie semantics are IDENTICAL to the hash path: group rows
-  * arrive in (file commit order, within-file order), and later wins exact
-  * ties (first-row: earlier). */
-class GraftPkSortedMergeReader(files: Seq[(String, Long)], internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], seqIdx: Int, commitIdx: Int, tombIdx: Int,
-    firstRow: Boolean, pushed: Array[Filter])
-    extends PartitionReader[InternalRow] {
-
-  private val dts: Array[DataType] = internal.fields.map(_.dataType)
-
   private lazy val groups = PkMerge.sortedGroups(files, internal, pkIdxs, pushed)
   private lazy val merged: Iterator[InternalRow] =
-    groups.flatMap { group =>
-      var w: InternalRow = null
-      group.foreach { row =>
-        val wins = w == null || {
-          val c = PkMerge.cmpOrd(row, w, seqIdx, commitIdx, dts)
-          if (firstRow) c < 0 else c >= 0
-        }
-        if (wins) w = row
-      }
-      if (PkMerge.isTombstone(w, tombIdx)) Iterator.empty
-      else Iterator(PkMerge.project(w, outLen, dts): InternalRow)
-    }
+    groups.map(g => fold(g.iterator)).filter(_ != null)
 
   private var current: InternalRow = _
   override def next(): Boolean = {
@@ -499,183 +363,40 @@ class GraftPkSortedMergeReader(files: Seq[(String, Long)], internal: StructType,
   override def close(): Unit = groups.close()
 }
 
-/** Streaming per-key fold for merge-engine=aggregation over sorted runs —
-  * the sorted dual of [[GraftPkAggMergeReader]], same O(open files) memory
-  * story as [[GraftPkSortedMergeReader]]. */
-class GraftPkSortedAggReader(files: Seq[(String, Long)], internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], specs: Array[(Int, String)],
-    pushed: Array[Filter]) extends PartitionReader[InternalRow] {
-
-  private val dts: Array[DataType] = internal.fields.map(_.dataType)
-
-  private lazy val groups = PkMerge.sortedGroups(files, internal, pkIdxs, pushed)
-  private lazy val merged: Iterator[InternalRow] =
-    groups.map { group =>
-      var acc: Array[Any] = null
-      group.foreach { row =>
-        if (acc == null) {
-          acc = new Array[Any](outLen)
-          var i = 0
-          while (i < outLen) { acc(i) = row.get(i, dts(i)); i += 1 }
-        } else specs.foreach { case (i, fn) =>
-          acc(i) = PkMerge.combineAgg(fn, acc(i), row.get(i, dts(i)))
-        }
-      }
-      new GenericInternalRow(acc): InternalRow
-    }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val has = merged.hasNext
-    if (has) current = merged.next()
-    has
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = groups.close()
-}
-
-/** Executor-side per-bucket fold for merge-engine=partial-update (hash
-  * variant): every non-key field resolves independently to the value set at
-  * the largest (per-field sequence) among rows where it is non-null —
-  * [[StreamTable]]'s partialResolve rule applied inside the reader, with
-  * the compaction-persisted `__graft_fseq_*` structs as each field's
-  * provenance (without them an out-of-order arrival would lose to a
-  * compacted row's inflated row-level sequence). */
-class GraftPkPartialMergeReader(files: Seq[(String, Long)], internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], fields: Array[(Int, Int)], seqIdx: Int,
-    commitIdx: Int, pushed: Array[Filter]) extends PartitionReader[InternalRow] {
-
-  private lazy val merged: Iterator[InternalRow] =
-    PkMerge.refined[Array[Any]] { keyFilter =>
-      PkMerge.partialState(files, internal, pkIdxs, fields, seqIdx, commitIdx,
-        outLen, pushed,
-        keyFilter = keyFilter, maxKeys = PkMerge.HashMergeMaxKeys.get())
-    }.flatMap(_.values.iterator.asScala
-      .map(v => new GenericInternalRow(v): InternalRow))
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val has = merged.hasNext
-    if (has) current = merged.next()
-    has
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Sorted-run dual of [[GraftPkPartialMergeReader]]: per-key groups stream
-  * out of the k-way merge and fold field-wise — O(open files) memory. */
-class GraftPkSortedPartialReader(files: Seq[(String, Long)], internal: StructType,
-    outLen: Int, pkIdxs: Array[Int], fields: Array[(Int, Int)], seqIdx: Int,
-    commitIdx: Int, pushed: Array[Filter]) extends PartitionReader[InternalRow] {
-
-  private lazy val groups = PkMerge.sortedGroups(files, internal, pkIdxs, pushed)
-  private lazy val merged: Iterator[InternalRow] = {
-    val op = new PkMerge.PartialOp(internal, outLen, fields, seqIdx, commitIdx)
-    groups.map { group =>
-      val acc = op.fresh(group.head)
-      group.iterator.drop(1).foreach(op.update(acc, _))
-      new GenericInternalRow(acc.out): InternalRow
-    }
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = {
-    val has = merged.hasNext
-    if (has) current = merged.next()
-    has
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = groups.close()
-}
-
-case class GraftPkPartialReaderFactory(internal: StructType, outLen: Int,
-    pkIdxs: Array[Int], fields: Array[(Int, Int)], seqIdx: Int, commitIdx: Int,
-    pushed: Array[Filter]) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[GraftPkInputPartition]
-    if (part.sorted)
-      new GraftPkSortedPartialReader(part.files, internal, outLen, pkIdxs,
-        fields, seqIdx, commitIdx, pushed)
-    else
-      new GraftPkPartialMergeReader(part.files, internal, outLen, pkIdxs,
-        fields, seqIdx, commitIdx, pushed)
-  }
-}
-
-/** Shared per-bucket hash-merge machinery (the PK scan and the changelog
-  * stream both resolve winners this way). */
+/** The per-bucket merge kernel shared by the PK scan and the changelog
+  * stream's state diff: one k-way merge of sorted runs plus one fold per
+  * merge engine. */
 private[graft] object PkMerge {
-  /** Hard cap on distinct keys one hash-merge pass may hold resident — the
-    * legacy/unsorted-bucket fallback's memory bound. A bucket over the cap
-    * restarts under grace-hash REFINEMENT (see [[refined]]): the pass
-    * re-reads the bucket's files keeping only one key-hash slice at a time,
-    * trading re-reads for never OOMing an executor on a hot legacy bucket.
-    * Sorted-run buckets never hash (the k-way merge is O(open files)).
-    * Override for tests/small executors: -Dgraft.pk.hash-merge.max-keys. */
-  val HashMergeMaxKeys = new java.util.concurrent.atomic.AtomicInteger(
-    Integer.getInteger("graft.pk.hash-merge.max-keys", 4000000))
+  /** Refuse to plan a merge over files that are not sorted runs on `pk`:
+    * every PK commit records the flag, so only a manifest written before
+    * the invariant (or edited by hand) lacks it. Compaction reads through
+    * the library and rewrites sorted runs. */
+  def requireSortedRuns(table: String, pk: Seq[String], files: Seq[DataFileMeta]): Unit =
+    files.find(!_.sortedBy.contains(pk)).foreach { f =>
+      throw new IllegalStateException(
+        s"$table: data file ${f.path} is not a sorted run on the primary key " +
+          s"${pk.mkString(", ")} (a manifest written before sorted runs were " +
+          "required); rewrite the table with CALL sys.compact before reading " +
+          "it through the connector")
+    }
 
-  /** Refinement passes performed (observability — specs assert the bounded
-    * path engaged without changing answers). */
-  val refinePasses = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Auto-heal switch: a PK scan that plans a hash-degraded bucket at
-    * refinement size flags it, and the next scan sort-compacts the flagged
-    * buckets before planning (see StreamTable.healDegradedBuckets).
-    * Disable with -Dgraft.pk.auto-heal=false (e.g. read-only deployments). */
-  def autoHeal: Boolean =
-    !"false".equalsIgnoreCase(System.getProperty("graft.pk.auto-heal", "true"))
-
-  private[v2] final class HashMergeOverflow extends RuntimeException {
-    // control flow only — never collect a stack
-    override def fillInStackTrace(): Throwable = this
-  }
-
-  /** Refinement fan-out per level: 8-way splits reach a 4M-key cap's
-    * practical limits at depth 2-3 while keeping re-read volume ≤ R× the
-    * bucket per level actually needed. */
-  private val RefineFanout = 8
-
-  /** Salted key-hash slice for refinement level `depth` — independent of
-    * the bucket function (murmur3 of the key's boxed elements), so a
-    * skew-hot bucket still splits. */
-  private def refineSlice(key: List[Any], depth: Int): Int = {
-    val h = scala.util.hashing.MurmurHash3.orderedHash(key, 0x9e3779b9 + depth)
-    ((h % RefineFanout) + RefineFanout) % RefineFanout
-  }
-
-  /** Run `build(keyFilter)` under the key cap: ONE pass when the bucket's
-    * keys fit; otherwise restart with recursive key-hash refinement. Each
-    * refined pass's map is COMPLETE for its key slice (a key hashes to
-    * exactly one slice), so the caller streams results pass-by-pass with
-    * peak memory ≤ the cap — bounded memory, more file re-reads. */
-  def refined[V](
-      build: (List[Any] => Boolean) => java.util.HashMap[List[Any], V])
-      : Iterator[java.util.HashMap[List[Any], V]] = {
-    def slice(filter: List[Any] => Boolean, depth: Int)
-        : Iterator[java.util.HashMap[List[Any], V]] =
-      try Iterator.single(build(filter))
-      catch {
-        case _: HashMergeOverflow =>
-          if (depth >= 8) throw new IllegalStateException(
-            "hash-merge refinement exceeded depth 8 — raise " +
-              "graft.pk.hash-merge.max-keys (pathological key distribution)")
-          (0 until RefineFanout).iterator.flatMap { i =>
-            refinePasses.incrementAndGet()
-            slice(k => filter(k) && refineSlice(k, depth) == i, depth + 1)
-          }
-      }
-    slice(_ => true, 0)
-  }
-
-  /** Null-safe ordering compare; null = -infinity (matches the library's
-    * window resolve: desc nulls-last / asc nulls-first). */
+  /** Spark's ascending order, nulls first — the order a `sortWithinPartitions`
+    * or a honored `requiredOrdering` writes — over the boxed values the
+    * readers and the sink's key check produce: BINARY unsigned
+    * lexicographic, DOUBLE/FLOAT as [[SQLOrderingUtil]] (NaN largest,
+    * -0.0 == 0.0), strings by UTF-8 bytes. The one comparator of the merge,
+    * its key order and the sink's sorted-run check. */
   def cmpAny(a: Any, b: Any): Int =
-    if (a == null && b == null) 0
-    else if (a == null) -1
+    if (a == null) { if (b == null) 0 else -1 }
     else if (b == null) 1
-    else a.asInstanceOf[Comparable[Any]].compareTo(b)
+    else (a, b) match {
+      case (x: Array[Byte], y: Array[Byte]) => ByteArray.compareBinary(x, y)
+      case (x: java.lang.Double, y: java.lang.Double) =>
+        SQLOrderingUtil.compareDoubles(x.doubleValue(), y.doubleValue())
+      case (x: java.lang.Float, y: java.lang.Float) =>
+        SQLOrderingUtil.compareFloats(x.floatValue(), y.floatValue())
+      case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    }
 
   /** The persisted per-field provenance struct (see
     * [[StreamTable.FieldSeqPrefix]]): s1 = the user sequence value at the
@@ -766,49 +487,13 @@ private[graft] object PkMerge {
     }
   }
 
-  /** Per-key partial-update fold over a bucket's files (hash variant;
-    * `onRow` observes every raw row, as in [[winners]]/[[accumulate]]). */
-  def partialState(files: Seq[(String, Long)], internal: StructType,
-      pkIdxs: Array[Int], fields: Array[(Int, Int)], seqIdx: Int,
-      commitIdx: Int, outLen: Int, pushed: Array[Filter],
-      onRow: (List[Any], String) => Unit = (_, _) => (),
-      keyFilter: List[Any] => Boolean = _ => true,
-      maxKeys: Int = Int.MaxValue)
-      : java.util.HashMap[List[Any], Array[Any]] = {
-    val dts = internal.fields.map(_.dataType)
-    val op = new PartialOp(internal, outLen, fields, seqIdx, commitIdx)
-    val accs = new java.util.HashMap[List[Any], PartialAcc]()
-    files.foreach { case (path, fileSeq) =>
-      val r = new GraftPartitionReader(path, internal, pushed,
-        limit = None, fileSeq = fileSeq)
-      try {
-        while (r.next()) {
-          val row = r.get()
-          val key = pkIdxs.map(i => row.get(i, dts(i))).toList
-          if (keyFilter(key)) {
-            onRow(key, path)
-            val acc = accs.get(key)
-            if (acc == null) {
-              accs.put(key, op.fresh(row))
-              if (accs.size() > maxKeys) throw new HashMergeOverflow
-            } else op.update(acc, row)
-          }
-        }
-      } finally r.close()
-    }
-    val out = new java.util.HashMap[List[Any], Array[Any]]()
-    accs.forEach { (k, a) => out.put(k, a.out) }
-    out
-  }
-
   def isTombstone(r: InternalRow, tombIdx: Int): Boolean = {
     val v = r.get(tombIdx, BooleanType)
     v != null && v.asInstanceOf[Boolean]
   }
 
   /** LWW ordering of two versions: by `sequence.field` (when declared), tie
-    * broken by commit batch — shared by the hash and sorted merges so their
-    * winners are bit-identical. */
+    * broken by commit batch. */
   def cmpOrd(x: InternalRow, y: InternalRow, seqIdx: Int, commitIdx: Int,
       dts: Array[DataType]): Int = {
     val bySeq = if (seqIdx < 0) 0
@@ -817,9 +502,8 @@ private[graft] object PkMerge {
     else cmpAny(x.get(commitIdx, dts(commitIdx)), y.get(commitIdx, dts(commitIdx)))
   }
 
-  /** Lexicographic primary-key comparison matching the writer's
-    * `sortWithinPartitions(pk)` order (ascending, nulls first; strings are
-    * binary-comparable [[org.apache.spark.unsafe.types.UTF8String]]s). */
+  /** Lexicographic primary-key comparison in the writers' key order
+    * ([[cmpAny]] per column). */
   def keyCmp(a: List[Any], b: List[Any]): Int = {
     var x = a; var y = b
     while (x.nonEmpty) {
@@ -832,10 +516,10 @@ private[graft] object PkMerge {
 
   /** K-way merge of sorted runs into per-key version GROUPS: each emitted
     * buffer holds every version of one key, ordered by (file position in
-    * `files`, within-file row order) — the exact iteration order the hash
-    * merge sees for that key, so exact-tie resolution agrees. Memory is
-    * O(open files + the current key's versions); emission is lazy (the
-    * caller pulls one key group at a time). */
+    * `files`, within-file row order) — the tie order every fold resolves
+    * exact ties by. Memory is O(open files + the current key's versions);
+    * emission is lazy (the caller pulls one key group at a time), and
+    * [[SortedGroupIterator.runs]] names each row's file. */
   def sortedGroups(files: Seq[(String, Long)], internal: StructType,
       pkIdxs: Array[Int], pushed: Array[Filter]): SortedGroupIterator = {
     val dts = internal.fields.map(_.dataType)
@@ -866,9 +550,12 @@ private[graft] object PkMerge {
     }
 
     new SortedGroupIterator {
+      private val groupRuns = scala.collection.mutable.ArrayBuffer.empty[Int]
+      override def runs: scala.collection.IndexedSeq[Int] = groupRuns
       override def hasNext: Boolean = !heap.isEmpty
       override def next(): Seq[InternalRow] = {
         val group = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        groupRuns.clear()
         val key = heap.peek().curKey
         // drain runs in (key, file idx) order; consecutive same-key rows of
         // one run drain before the next run is considered
@@ -877,6 +564,7 @@ private[graft] object PkMerge {
           var more = true
           while (more && keyCmp(run.curKey, key) == 0) {
             group += run.cur
+            groupRuns += run.idx
             more = run.advance()
           }
           if (more) heap.add(run)
@@ -892,7 +580,11 @@ private[graft] object PkMerge {
   /** Lazy per-key group stream over sorted runs; `close()` releases the
     * still-open file readers of an interrupted task (exhaustion closes each
     * run as it drains). */
-  trait SortedGroupIterator extends Iterator[Seq[InternalRow]] with AutoCloseable
+  trait SortedGroupIterator extends Iterator[Seq[InternalRow]] with AutoCloseable {
+    /** The file index (position in `files`) of each row of the group the
+      * last `next()` returned. */
+    def runs: scala.collection.IndexedSeq[Int]
+  }
 
   /** First `outLen` fields of a merged row as a fresh output row. */
   def project(w: InternalRow, outLen: Int, dts: Array[DataType]): GenericInternalRow = {
@@ -926,100 +618,69 @@ private[graft] object PkMerge {
           b.asInstanceOf[java.lang.Boolean].booleanValue())
     }
 
-  /** Per-key field-wise fold for merge-engine=aggregation: every version of
-    * a key combines by its declared function. Accumulators are the first
-    * `outLen` internal fields. `onRow(key, path)` observes every raw row. */
-  def accumulate(files: Seq[(String, Long)], internal: StructType,
-      pkIdxs: Array[Int], specs: Array[(Int, String)], outLen: Int,
-      pushed: Array[Filter],
-      onRow: (List[Any], String) => Unit = (_, _) => (),
-      keyFilter: List[Any] => Boolean = _ => true,
-      maxKeys: Int = Int.MaxValue)
-      : java.util.HashMap[List[Any], Array[Any]] = {
-    val dts = internal.fields.map(_.dataType)
-    val acc = new java.util.HashMap[List[Any], Array[Any]]()
-    files.foreach { case (path, fileSeq) =>
-      val r = new GraftPartitionReader(path, internal, pushed,
-        limit = None, fileSeq = fileSeq)
-      try {
-        while (r.next()) {
-          val row = r.get()
-          val key = pkIdxs.map(i => row.get(i, dts(i))).toList
-          if (keyFilter(key)) {
-            onRow(key, path)
-            val cur = acc.get(key)
-            if (cur == null) {
-              val fresh = new Array[Any](outLen)
-              var i = 0
-              while (i < outLen) { fresh(i) = row.get(i, dts(i)); i += 1 }
-              acc.put(key, fresh)
-              if (acc.size() > maxKeys) throw new HashMergeOverflow
-            } else {
-              specs.foreach { case (i, fn) =>
-                cur(i) = combineAgg(fn, cur(i), row.get(i, dts(i)))
-              }
-            }
-          }
-        }
-      } finally r.close()
-    }
-    acc
+  /** One merge engine's per-key fold: a key's versions, in tie order, to
+    * its merged row (the first `outLen` internal fields), or null when the
+    * key resolves to nothing — no versions, or a tombstone winner. Built on
+    * the driver, shipped in the reader factory. */
+  sealed trait Fold extends Serializable {
+    def apply(versions: Iterator[InternalRow]): InternalRow
   }
 
-  /** Collect the distinct keys present in `paths` into `into` — the
-    * key-only scan the changelog fallback runs over interval-added files a
-    * later in-interval compaction absorbed (their images come from the
-    * resolved states; only the CHANGED-KEY evidence is needed here). */
-  def collectKeys(paths: Seq[String], internal: StructType, pkIdxs: Array[Int],
-      into: scala.collection.mutable.LinkedHashSet[List[Any]]): Unit = {
-    val dts = internal.fields.map(_.dataType)
-    paths.foreach { path =>
-      val r = new GraftPartitionReader(path, internal, Array.empty,
-        limit = None, fileSeq = -1L)
-      try {
-        while (r.next()) {
-          val row = r.get()
-          into += pkIdxs.map(i => row.get(i, dts(i))).toList
+  /** deduplicate / first-row: the largest (`sequence.field`, commit) wins
+    * (first-row: the smallest); on an exact tie the earlier version in tie
+    * order wins, as in the library's window resolve — so the doors agree,
+    * and a compaction (which persists the library's winner) never changes
+    * the answer. */
+  case class LastWriter(outLen: Int, dts: Array[DataType], seqIdx: Int,
+      commitIdx: Int, tombIdx: Int, firstRow: Boolean) extends Fold {
+    override def apply(versions: Iterator[InternalRow]): InternalRow = {
+      var w: InternalRow = null
+      versions.foreach { row =>
+        val wins = w == null || {
+          val c = cmpOrd(row, w, seqIdx, commitIdx, dts)
+          if (firstRow) c < 0 else c > 0
         }
-      } finally r.close()
+        if (wins) w = row
+      }
+      if (w == null || isTombstone(w, tombIdx)) null else project(w, outLen, dts)
     }
   }
 
-  /** Stream every file's rows through [[GraftPartitionReader]] and keep the
-    * winning version per key — largest (sequence.field, commit batch) for
-    * deduplicate, smallest for first-row; exact ties resolve to the later-
-    * merged row (arbitrary, as in the library's window resolve). Tombstone
-    * winners STAY in the map (callers decide whether a tombstone means
-    * "absent" or "-D evidence"). `onRow(key, path)` observes every raw row. */
-  def winners(files: Seq[(String, Long)], internal: StructType,
-      pkIdxs: Array[Int], seqIdx: Int, commitIdx: Int, firstRow: Boolean,
-      pushed: Array[Filter],
-      onRow: (List[Any], String) => Unit = (_, _) => (),
-      keyFilter: List[Any] => Boolean = _ => true,
-      maxKeys: Int = Int.MaxValue)
-      : java.util.HashMap[List[Any], InternalRow] = {
-    val dts = internal.fields.map(_.dataType)
-    val winners = new java.util.HashMap[List[Any], InternalRow]()
-    files.foreach { case (path, fileSeq) =>
-      val r = new GraftPartitionReader(path, internal, pushed,
-        limit = None, fileSeq = fileSeq)
-      try {
-        while (r.next()) {
-          val row = r.get() // fresh GenericInternalRow per call — safe to keep
-          val key = pkIdxs.map(i => row.get(i, dts(i))).toList
-          if (keyFilter(key)) {
-            onRow(key, path)
-            val prev = winners.get(key)
-            val wins = prev == null || {
-              val c = cmpOrd(row, prev, seqIdx, commitIdx, dts)
-              if (firstRow) c < 0 else c >= 0
-            }
-            if (wins) winners.put(key, row)
-            if (winners.size() > maxKeys) throw new HashMergeOverflow
-          }
+  /** aggregation: every version combines field-wise by its declared
+    * function (sum/min/max/count — associative and commutative, so the
+    * bucket-local fold equals the distributed aggregate and compacted
+    * partial aggregates re-merge with fresh rows to the same result). */
+  case class Accumulate(outLen: Int, dts: Array[DataType],
+      specs: Array[(Int, String)]) extends Fold {
+    override def apply(versions: Iterator[InternalRow]): InternalRow = {
+      var acc: Array[Any] = null
+      versions.foreach { row =>
+        if (acc == null) {
+          acc = new Array[Any](outLen)
+          var i = 0
+          while (i < outLen) { acc(i) = row.get(i, dts(i)); i += 1 }
+        } else specs.foreach { case (i, fn) =>
+          acc(i) = combineAgg(fn, acc(i), row.get(i, dts(i)))
         }
-      } finally r.close()
+      }
+      if (acc == null) null else new GenericInternalRow(acc)
     }
-    winners
+  }
+
+  /** partial-update: every non-key field resolves independently to the
+    * value set at the largest per-field sequence ([[PartialOp]]), with the
+    * compaction-persisted `__graft_fseq_*` structs as each field's
+    * provenance. */
+  case class PerField(internal: StructType, outLen: Int, fields: Array[(Int, Int)],
+      seqIdx: Int, commitIdx: Int) extends Fold {
+    @transient private lazy val op =
+      new PartialOp(internal, outLen, fields, seqIdx, commitIdx)
+    override def apply(versions: Iterator[InternalRow]): InternalRow =
+      if (!versions.hasNext) null
+      else {
+        val acc = op.fresh(versions.next())
+        versions.foreach(op.update(acc, _))
+        new GenericInternalRow(acc.out)
+      }
   }
 }

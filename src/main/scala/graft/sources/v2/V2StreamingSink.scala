@@ -56,15 +56,14 @@ import graft.table.StreamTable
   *    so LWW ordering interleaves correctly with prior DataFrame-written
   *    history and epoch replays re-stamp identically. Single logical
   *    writer at a time, the same contract every stamped write path carries.
-  *  - PK sink files write as SORTED RUNS: the write REQUESTS per-task
-  *    ordering by the primary key (Spark plans a spillable SortExec before
-  *    the writers — never task memory), and the writer VERIFIES each
-  *    per-bucket file's keys arrived non-decreasing under the merge's own
-  *    comparator before flagging it `sortedBy` in the commit. Sink-fed
-  *    buckets therefore ride the streaming k-way merge (O(open files)
-  *    memory) exactly like compacted/batch files; a plan shape that ignored
-  *    the ordering request simply leaves the flag off and the hash fallback
-  *    reads that epoch — correctness never depends on the plan.
+  *  - PK sink files write as SORTED RUNS, the layout every PK reader
+  *    requires: the write REQUIRES per-task ordering by the primary key
+  *    (Spark plans a spillable SortExec before the writers — never task
+  *    memory), and the writer CHECKS each per-bucket file's keys arrive
+  *    non-decreasing under the merge's own comparator ([[PkMerge.cmpAny]],
+  *    Spark's sort order for every key type the sink accepts). A key
+  *    inversion fails the task — a plan that ignored the ordering must
+  *    never commit an unsorted run.
   */
 class GraftStreamingWrite(table: StreamTable, schema: StructType,
     queryId: String) extends StreamingWrite {
@@ -133,18 +132,7 @@ class GraftStreamingWrite(table: StreamTable, schema: StructType,
     * time. */
   private val partPlan: Array[Int] = GraftStreamingWrite.partPlanOf(table, schema)
 
-  /** PK column indices for the writer's sorted-run verification — defined
-    * iff every key column's type carries the merge comparator's ordering
-    * ([[PkMerge.cmpAny]]); binary keys (not `Comparable`) never verify. */
-  private val pkVerify: Option[Array[Int]] = table.primaryKey.flatMap { pk =>
-    val idxs = pk.map(c => schema.fieldNames.indexOf(c)).toArray
-    val ok = idxs.forall(i => i >= 0 && (schema(i).dataType match {
-      case LongType | IntegerType | DoubleType | FloatType | BooleanType |
-           StringType | DateType | TimestampType | TimestampNTZType => true
-      case _ => false
-    }))
-    if (ok) Some(idxs) else None
-  }
+  private val pkVerify: Option[Array[Int]] = GraftStreamingWrite.pkPlanOf(table, schema)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
@@ -204,6 +192,11 @@ class GraftStreamingWrite(table: StreamTable, schema: StructType,
 }
 
 object GraftStreamingWrite {
+  /** PK column indices for the writer's sorted-run check (PK targets only;
+    * every key type the sink writes has a [[PkMerge.cmpAny]] order). */
+  private[v2] def pkPlanOf(table: StreamTable, schema: StructType): Option[Array[Int]] =
+    table.primaryKey.map(_.map(c => schema.fieldNames.indexOf(c)).toArray)
+
   /** Partition-key column indices for a task-side per-partition file split.
     * Mandatory for PARTITIONED BY targets (a mixed file would poison the
     * partition proofs), so a missing key column refuses at plan time —
@@ -300,6 +293,7 @@ class GraftDynOverwriteBatchWrite(table: StreamTable, schema: StructType,
 
   private val partPlan: Array[Int] =
     GraftStreamingWrite.partPlanOf(table, schema)
+  private val pkVerify = GraftStreamingWrite.pkPlanOf(table, schema)
   private val bucketPlan: Option[(Int, Boolean)] =
     table.bucketKey.flatMap { k =>
       val i = schema.fieldNames.indexOf(k)
@@ -314,7 +308,7 @@ class GraftDynOverwriteBatchWrite(table: StreamTable, schema: StructType,
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DataWriterFactory =
     GraftDynOverwriteWriterFactory(table.root, schema, writerId,
-      bucketPlan, table.numBuckets, next, partPlan)
+      bucketPlan, table.numBuckets, next, partPlan, pkVerify)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val files = messages.collect { case m: GraftSinkCommitMessage => m }
@@ -376,12 +370,14 @@ class GraftDynOverwriteBatchWrite(table: StreamTable, schema: StructType,
 
 case class GraftDynOverwriteWriterFactory(tableRoot: String,
     schema: StructType, writerId: String, bucketPlan: Option[(Int, Boolean)],
-    numBuckets: Int, stamp: Long, partPlan: Array[Int])
+    numBuckets: Int, stamp: Long, partPlan: Array[Int],
+    pkVerify: Option[Array[Int]])
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new GraftStreamingDataWriter(tableRoot, schema, writerId, 0L,
-      partitionId, bucketPlan, numBuckets, Some(stamp), partPlan = partPlan)
+      partitionId, bucketPlan, numBuckets, Some(stamp), pkVerify,
+      partPlan = partPlan)
 }
 
 case class GraftStreamingWriterFactory(tableRoot: String, schema: StructType,
@@ -430,9 +426,7 @@ class GraftStreamingDataWriter(tableRoot: String, schema: StructType,
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
     var rows = 0L
-    // sorted-run evidence: keys observed non-decreasing so far (PK targets
-    // with a verifiable key type only; flips off at the first inversion)
-    var sortedOk: Boolean = pkVerify.isDefined
+    // the previous row's key (PK targets): the sorted-run check
     var lastKey: Array[Any] = _
   }
 
@@ -489,6 +483,7 @@ class GraftStreamingDataWriter(tableRoot: String, schema: StructType,
           case DoubleType => java.lang.Double.valueOf(row.getDouble(i))
           case FloatType => java.lang.Float.valueOf(row.getFloat(i))
           case BooleanType => java.lang.Boolean.valueOf(row.getBoolean(i))
+          case BinaryType => row.getBinary(i).clone()
           case dt => throw new IllegalStateException(s"unverifiable pk type $dt")
         }
       j += 1
@@ -511,9 +506,13 @@ class GraftStreamingDataWriter(tableRoot: String, schema: StructType,
     val b = bucketOf(row)
     val sink = sinks.getOrElseUpdate((b, partKeyOf(row)),
       new Sink(if (bucketPlan.isDefined) Some(b) else None))
-    if (sink.sortedOk) pkVerify.foreach { idxs =>
+    pkVerify.foreach { idxs =>
       val k = keyOf(row, idxs)
-      if (sink.lastKey != null && !keyLeq(sink.lastKey, k)) sink.sortedOk = false
+      if (sink.lastKey != null && !keyLeq(sink.lastKey, k))
+        throw new IllegalStateException(
+          s"primary-key rows reached ${sink.path.getName} out of key order " +
+            "(the write's required ordering was not applied): a PK data " +
+            "file must be a sorted run")
       sink.lastKey = k
     }
     val g = factory.newGroup()
@@ -552,7 +551,8 @@ class GraftStreamingDataWriter(tableRoot: String, schema: StructType,
           if (s.rows == 0L || !captureStats) // empty files are deleted unread
             StreamTable.CapturedStats(s.rows, Map.empty, Map.empty, Nil, Nil)
           else StreamTable.footerColumnStats(s.path.toString, conf)
-        StreamTable.StagedSinkFile(s.path.toString, s.bucket, s.sortedOk, stats)
+        StreamTable.StagedSinkFile(s.path.toString, s.bucket,
+          sorted = pkVerify.isDefined, stats)
       })
   }
 

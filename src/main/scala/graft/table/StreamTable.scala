@@ -29,12 +29,12 @@ case class DataFileMeta(
       * (storage-partitioned joins) fall back gracefully when absent. */
     bucket: Option[Int] = None,
     /** Columns this file's rows are ascending-sorted by (nulls first), when
-      * the writer sorted them — PK writes sort by the primary key, making
-      * each file a SORTED RUN: the per-bucket merge-on-read can then stream
-      * a k-way merge with O(open files) memory instead of hashing the
-      * bucket's distinct keys (Paimon's sorted-run LSM invariant). None for
-      * legacy manifests and unsorted writers — readers fall back to the
-      * hash merge. */
+      * the writer sorted them. Every data file of a PK table is a SORTED
+      * RUN on the primary key — the commit refuses any other — so the
+      * per-bucket merge-on-read streams a k-way merge with O(open files)
+      * memory (Paimon's sorted-run LSM invariant). None on append tables
+      * and on manifests written before the invariant, which the PK readers
+      * refuse until a compaction rewrites them. */
     sortedBy: Option[Seq[String]] = None,
     /** Per-column min/max captured ONCE from the footer at commit time and
       * served from the manifest ever after (Paimon's DataFileMeta value
@@ -614,6 +614,14 @@ class StreamTable(
       }
       val baseFiles = base.map(_.files).getOrElse(Seq.empty)
       val ch = recompute(baseFiles)
+      // the sorted-run invariant the PK readers' k-way merge stands on
+      primaryKey.foreach { pk =>
+        ch.added.find(!_.sortedBy.contains(pk)).foreach { f =>
+          throw new IllegalStateException(
+            s"$root: refusing to commit ${f.path}: a primary-key data file " +
+              s"must be a sorted run on ${pk.mkString(", ")}")
+        }
+      }
       val basePaths = baseFiles.iterator.map(_.path).toSet
       // an added meta whose path is already live replaces it: remove+re-add
       val removedAll =
@@ -1148,9 +1156,8 @@ class StreamTable(
     // Stats arrive FROM THE WRITER TASKS (captured executor-side right
     // after each file closed) — the driver commit performs zero footer
     // opens per sink epoch. minSeq/maxSeq get restamped below. A
-    // writer-VERIFIED key-sorted file records the sorted-run flag so the
-    // PK scan's streaming k-way merge reads sink epochs too (no hash-merge
-    // degradation between compactions on continuously-fed tables).
+    // writer-VERIFIED key-sorted file records the sorted-run flag the
+    // commit requires of every PK data file.
     val now = System.currentTimeMillis()
     val metas0 = moved.map { case (p, sf) =>
       DataFileMeta(p, sf.stats.rows, Files.size(Paths.get(p)),
@@ -3368,7 +3375,8 @@ class StreamTable(
     require(bucketKey.isEmpty,
       "sortCompact replaces the clustering policy; a bucket-keyed table's " +
         "co-location contract would be silently lost — unset bucket-key first")
-    rewriteLive { resolved =>
+    // a PK table keeps the z-range per file, each file sorted by the key
+    rewriteLive(sortByKey = primaryKey.isDefined, layout = { resolved =>
       val stats = resolved.agg(
         min(col(colA)).cast("double").as("amn"), max(col(colA)).cast("double").as("amx"),
         min(col(colB)).cast("double").as("bmn"), max(col(colB)).cast("double").as("bmx"))
@@ -3393,7 +3401,7 @@ class StreamTable(
         .repartitionByRange(targetFileCount, col("__graft_z"))
         .sortWithinPartitions("__graft_z")
         .drop("__graft_z")
-    }
+    })
   }
 
   /** Linear sort-compaction (Paimon's `sort-compact` with
@@ -3403,7 +3411,8 @@ class StreamTable(
     * unsorted ingest; trailing columns tighten within ties. The 1-D sibling
     * of [[sortCompact]]: use this when one column dominates the scan
     * predicates, the z-curve when two do. Same one-range-shuffle cost as a
-    * plain compaction. */
+    * plain compaction. A PK table keeps the ranges; each file is sorted by
+    * the key (the sorted-run invariant). */
   def sortCompactOrder(cols: Seq[String], targetFileCount: Int): Snapshot = {
     require(cols.nonEmpty, "sortCompactOrder needs at least one column")
     require(bucketKey.isEmpty,
@@ -3412,7 +3421,8 @@ class StreamTable(
         "bucket-key first")
     rewriteLive(resolved => resolved
       .repartitionByRange(targetFileCount, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*))
+      .sortWithinPartitions(cols.map(col): _*),
+      sortByKey = primaryKey.isDefined)
   }
 
   /** Materialize deletion vectors ONLY: rewrite exactly the files carrying
@@ -3487,21 +3497,13 @@ class StreamTable(
     * when no group qualifies — the probe is manifest metadata only, zero
     * file I/O. */
   def compactSmallFiles(smallBytes: Long = 32L << 20,
-      trigger: Int = 4, onlyBuckets: Option[Set[Int]] = None): Option[Snapshot] = {
+      trigger: Int = 4): Option[Snapshot] = {
     val live = latestSnapshot.map(_.files).getOrElse(Seq.empty)
     if (live.isEmpty) return None
     val clustered = bucketKey.isDefined && live.forall(_.bucket.isDefined)
-    val groups: Seq[Seq[DataFileMeta]] = (onlyBuckets, clustered) match {
-      case (Some(bs), true) =>
-        live.groupBy(_.bucket.get).filter(kv => bs(kv._1)).values.toSeq
-      // a TARGETED request on a non-fully-bucketed layout refuses rather
-      // than silently widening to a whole-table coalesce(1) rewrite that
-      // would also strip the surviving bucket ids
-      case (Some(_), false) => Seq.empty
-      case (None, true) => live.groupBy(_.bucket.get).values.toSeq
-      // unbucketed layout: the single legacy group IS the whole table
-      case (None, false) => Seq(live)
-    }
+    // unbucketed layout: the single legacy group IS the whole table
+    val groups: Seq[Seq[DataFileMeta]] =
+      if (clustered) live.groupBy(_.bucket.get).values.toSeq else Seq(live)
     val targets = groups.map(_.filter(_.fileSizeInBytes < smallBytes))
       .filter(_.size >= trigger)
     if (targets.isEmpty) return None
@@ -3551,61 +3553,6 @@ class StreamTable(
       CommitChange(metas, compactedPaths,
         latestSnapshot.map(_.batchId).getOrElse(-1L))
     }, produced = clogAtWrite, kind = "compact"))
-  }
-
-  /** Buckets whose last PK-scan planning degraded to the HASH merge at a
-    * size the grace-hash refinement would engage on (unsorted files + rows
-    * beyond the resident-key cap) — queued by the V2 planner, consumed by
-    * [[healDegradedBuckets]] so the refinement's 8× re-read price is paid
-    * once, not per query. DRIVER-global by table root (planning always runs
-    * on the driver; catalog resolution mints a fresh handle per query, so a
-    * handle-local flag would never survive to the next scan). */
-  private def degradedBuckets: java.util.Set[Integer] =
-    StreamTable.degradedByRoot.computeIfAbsent(root,
-      _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]())
-  private[graft] def noteDegradedBucket(b: Int): Unit =
-    degradedBuckets.add(Integer.valueOf(b))
-  private[graft] def pendingDegradedBuckets: Set[Int] =
-    degradedBuckets.asScala.map(_.intValue()).toSet
-
-  /** Sort-compact exactly the hash-degraded buckets a previous PK scan
-    * flagged: a TARGETED minor compaction (rows concatenate raw, strict
-    * conservation) whose key-sorted output re-establishes the sorted-run
-    * invariant, so the next scan of those buckets plans the O(open files)
-    * k-way merge instead of hash-merging (and possibly grace-refining)
-    * every query. The next PK scan's construction calls this automatically
-    * (disable: -Dgraft.pk.auto-heal=false); a heal lost to concurrent
-    * maintenance simply re-flags on the following scan. Returns the number
-    * of buckets consumed. */
-  def healDegradedBuckets(): Int = {
-    if (primaryKey.isEmpty) return 0
-    val buckets = degradedBuckets.asScala.map(_.intValue()).toSet
-    if (buckets.isEmpty) return 0
-    buckets.foreach(b => degradedBuckets.remove(Integer.valueOf(b)))
-    // Only a FULLY bucketed layout heals targeted: on a mixed/legacy layout
-    // (any file without a bucket id, or the scan's -1 whole-table group)
-    // compactSmallFiles would widen to a whole-table single-partition
-    // rewrite that also strips the surviving bucket ids — a rewrite of that
-    // magnitude is an explicit maintenance decision (sys.compact
-    // re-clusters properly), never a side effect of planning a read. The
-    // flags stay consumed either way (the heal is an optimization).
-    val live = latestSnapshot.map(_.files).getOrElse(Seq.empty)
-    val clustered = bucketKey.isDefined && live.nonEmpty &&
-      live.forall(_.bucket.isDefined)
-    if (buckets.contains(-1) || !clustered) {
-      // permanently unhealable here: without the warn, every
-      // refinement-sized scan silently re-pays the grace-hash price with no
-      // operator-visible signal (once per table root per JVM)
-      if (StreamTable.healRefusalWarned.add(root))
-        log.warn(s"PK scan flagged hash-degraded bucket(s) ${buckets.mkString(",")} " +
-          s"at $root, but the layout is mixed/legacy (files without bucket ids) " +
-          "— auto-heal refuses a whole-table rewrite as a read side effect. " +
-          "Run CALL sys.compact to re-cluster, or set -Dgraft.pk.auto-heal=false " +
-          "to silence the per-scan flagging.")
-      return 0
-    }
-    compactSmallFiles(Long.MaxValue, trigger = 1, onlyBuckets = Some(buckets))
-    buckets.size
   }
 
   /** Preserve the newest SOURCE `creationTimeMs` (per partition on a
@@ -4541,19 +4488,6 @@ object StreamTable {
     * gated path avoids). Deliberately LOW so the estimate errs toward
     * distributing: per-entry JSON runs ~300-600 bytes with stats. */
   val ManifestBytesPerEntry = 256L
-
-  /** Hash-degraded bucket flags by table root (see the instance-side
-    * `noteDegradedBucket`/`healDegradedBuckets`): driver-JVM-global so the
-    * flag a scan's planning raises survives to the NEXT scan's fresh
-    * catalog-resolved handle. */
-  private val degradedByRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[Integer]]()
-
-  /** Table roots whose mixed-layout auto-heal refusal has been logged
-    * (once per root per JVM — the recurring grace-hash cost must be
-    * diagnosable without flooding the log). */
-  private val healRefusalWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Unlink one partition's worth of maintenance paths (driver or executor
     * side): entries failing the `mtimeBelow` grace check, already vanished,

@@ -83,6 +83,179 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  // ---- door agreement: every PK merge engine through every read door ------
+
+  /** One PK merge engine under test. `row` draws a random image for key
+    * `k`; `fold` is the model: one key's ops in write order (write index,
+    * the row, whether it is a delete) to the key's resolved row, if any. */
+  private case class PkEngine(name: String,
+      schema: org.apache.spark.sql.types.StructType, props: String,
+      deletes: Boolean, row: (Long, scala.util.Random) => Seq[Any],
+      fold: Seq[(Int, Seq[Any], Boolean)] => Option[Seq[Any]])
+
+  private def pkEngines: Seq[PkEngine] = {
+    import org.apache.spark.sql.types._
+    def st(fs: (String, DataType)*) =
+      StructType(fs.map { case (n, t) => StructField(n, t) })
+    def str(r: scala.util.Random) = r.alphanumeric.take(3).mkString
+    def opt[T](r: scala.util.Random, v: => T): Any =
+      if (r.nextInt(4) == 0) null else v
+    // per field, the non-null value of the largest (sequence, write index)
+    def lastNonNull(ops: Seq[(Int, Seq[Any], Boolean)], seqOf: Seq[Any] => Long,
+        j: Int): Any = {
+      val set = ops.filter(_._2(j) != null)
+      if (set.isEmpty) null else set.maxBy(o => (seqOf(o._2), o._1))._2(j)
+    }
+    Seq(
+      PkEngine("dedup_seq", st("id" -> LongType, "ver" -> LongType, "v" -> StringType),
+        "'sequence.field' = 'ver'", deletes = true,
+        (k, r) => Seq(k, r.nextInt(6).toLong, str(r)),
+        ops => {
+          val w = ops.maxBy(o => (o._2(1).asInstanceOf[Long], o._1))
+          if (w._3) None else Some(w._2)
+        }),
+      PkEngine("dedup", st("id" -> LongType, "v" -> StringType), "", deletes = true,
+        (k, r) => Seq(k, str(r)),
+        ops => Some(ops.last).filterNot(_._3).map(_._2)),
+      PkEngine("first_row", st("id" -> LongType, "v" -> StringType),
+        "'merge-engine' = 'first-row'", deletes = false,
+        (k, r) => Seq(k, str(r)), ops => Some(ops.head._2)),
+      PkEngine("agg",
+        st("id" -> LongType, "s" -> LongType, "d" -> DoubleType,
+          "lo" -> LongType, "hi" -> DoubleType),
+        "'merge-engine' = 'aggregation', 'fields.s.aggregate-function' = 'sum', " +
+          "'fields.d.aggregate-function' = 'sum', " +
+          "'fields.lo.aggregate-function' = 'min', " +
+          "'fields.hi.aggregate-function' = 'max'", deletes = false,
+        // halves keep every DOUBLE sum exact in any fold order
+        (k, r) => Seq(k, r.nextInt(100).toLong - 50, r.nextInt(40) * 0.5 - 10,
+          opt(r, r.nextInt(100).toLong - 50), r.nextInt(40) * 0.5 - 10),
+        ops => {
+          val rs = ops.map(_._2)
+          def nn(j: Int) = rs.map(_(j)).filter(_ != null)
+          val lo = nn(3).map(_.asInstanceOf[Long])
+          Some(Seq(rs.head.head, nn(1).map(_.asInstanceOf[Long]).sum,
+            nn(2).map(_.asInstanceOf[Double]).sum,
+            if (lo.isEmpty) null else lo.min, nn(4).map(_.asInstanceOf[Double]).max))
+        }),
+      PkEngine("partial",
+        st("id" -> LongType, "seq" -> LongType, "a" -> StringType, "b" -> LongType),
+        "'merge-engine' = 'partial-update', 'sequence.field' = 'seq'", deletes = false,
+        (k, r) => Seq(k, r.nextInt(6).toLong, opt(r, str(r)), opt(r, r.nextInt(99).toLong)),
+        ops => {
+          val seqOf = (x: Seq[Any]) => x(1).asInstanceOf[Long]
+          Some(Seq(ops.head._2.head, ops.map(o => seqOf(o._2)).max,
+            lastNonNull(ops, seqOf, 2), lastNonNull(ops, seqOf, 3)))
+        }))
+  }
+
+  test("PK doors agree: library, connector and model, every engine, both writers") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    val wh = Files.createTempDirectory("graft_pdoor_wh_").toString
+    val cat = s"gpd_${Integer.toHexString(wh.hashCode).take(6)}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.v2.GraftSparkCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val gc = new graft.table.GraftCatalog(spark, wh)
+    def canon(rows: Seq[Row]): Seq[String] =
+      rows.map(_.toSeq.map(String.valueOf).mkString("|")).sorted
+    def canonModel(rows: Iterable[Seq[Any]], op: Option[String] = None): Seq[String] =
+      rows.map(r => (r.map(String.valueOf) ++ op).mkString("|")).toSeq.sorted
+    for (e <- pkEngines; seed <- 1L to 2L) {
+      val rnd = new scala.util.Random(seed * 31 + e.name.hashCode)
+      val name = s"${e.name}_$seed"
+      val cols = e.schema.fieldNames.toSeq
+      val ddl = e.schema.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+      spark.sql(s"CREATE TABLE $cat.db.$name ($ddl) TBLPROPERTIES (" +
+        s"'primary-key' = 'id', 'bucket' = '2'${if (e.props.isEmpty) "" else ", " + e.props})")
+      val t = gc.getTable("db", name)
+      val root = t.root
+      def frame(rows: Seq[Seq[Any]], schema: org.apache.spark.sql.types.StructType) =
+        spark.createDataFrame(rows.map(r => Row(r: _*)).asJava, schema)
+      def nextBatch = t.latestSnapshot.map(_.batchId + 1).getOrElse(0L)
+      val chk = Files.createTempDirectory("graft_pdoor_clog_").toString
+      def drain(): Seq[String] = {
+        val buf = java.util.Collections.synchronizedList(new java.util.ArrayList[Row]())
+        spark.readStream.format("graft").option("read-changelog", "true").load(root)
+          .writeStream
+          .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+            buf.addAll(df.select((cols :+ "op").map(org.apache.spark.sql.functions.col): _*)
+              .collect().toSeq.asJava); ()
+          }
+          .option("checkpointLocation", chk)
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+        canon(buf.asScala.toSeq)
+      }
+      // the model: every op in write order, and the state after each commit
+      val ops = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Seq[Any], Boolean)]
+      def state: Map[Long, Seq[Any]] = ops.groupBy(_._1).flatMap { case (k, os) =>
+        e.fold(os.toSeq.map(o => (o._2, o._3, o._4))).map(k -> _) }
+      val states = scala.collection.mutable.ArrayBuffer.empty[(Long, Map[Long, Seq[Any]])]
+      var clogFrom = -1L
+      for (b <- 0 until 6) {
+        val keys = rnd.shuffle((0L to 5L).toList).take(1 + rnd.nextInt(4))
+        val kind =
+          if (b == 0) "append" else if (b == 1) "sink"
+          else if (e.deletes && rnd.nextInt(4) == 0) "delete"
+          else if (rnd.nextBoolean()) "sink" else "append"
+        if (kind == "delete") {
+          // a delete carries the sequence field when the table declares one
+          val dels = keys.map(k =>
+            if (cols.contains("ver")) Seq(k, rnd.nextInt(6).toLong) else Seq(k))
+          val pkCols = if (cols.contains("ver")) Seq("id", "ver") else Seq("id")
+          t.deleteBatch(frame(dels, org.apache.spark.sql.types.StructType(
+            pkCols.map(c => e.schema(c)))), nextBatch)
+          dels.foreach(d => ops += ((d.head.asInstanceOf[Long], b,
+            Seq(d.head) ++ d.drop(1) ++ Seq.fill(cols.size - d.size)(null), true)))
+        } else {
+          val rows = keys.map(k => e.row(k, rnd))
+          if (kind == "append") t.appendBatch(frame(rows, e.schema), nextBatch)
+          else {
+            val src = Files.createTempDirectory("graft_pdoor_src_").toString
+            new StreamTable(src, spark).appendBatch(frame(rows, e.schema), 0L)
+            spark.readStream.format("graft").load(src).writeStream
+              .option("checkpointLocation",
+                Files.createTempDirectory("graft_pdoor_chk_").toString)
+              .trigger(Trigger.AvailableNow()).toTable(s"$cat.db.$name")
+              .awaitTermination()
+          }
+          rows.foreach(r => ops += ((r.head.asInstanceOf[Long], b, r, false)))
+        }
+        states += (t.latestSnapshot.get.id -> state)
+        if (b == 2) {
+          t.compact(targetFileCount = 1)
+          states += (t.latestSnapshot.get.id -> state)
+        }
+        if (b == 1) {
+          // catch-up: the current state as +I
+          assert(drain() == canonModel(state.values, Some("+I")),
+            s"$name: changelog catch-up")
+          clogFrom = t.latestSnapshot.get.id
+        }
+      }
+      val ctx = s"$name ops=$ops"
+      for ((id, model) <- states) {
+        val want = canonModel(model.values)
+        assert(canon(t.readAt(id).select(cols.head, cols.tail: _*).collect()) == want,
+          s"$ctx: library readAt($id)")
+        assert(canon(spark.sql(s"SELECT ${cols.mkString(", ")} FROM $cat.db.$name " +
+          s"VERSION AS OF $id").collect()) == want, s"$ctx: connector VERSION AS OF $id")
+      }
+      val head = canonModel(states.last._2.values)
+      assert(canon(t.read.select(cols.head, cols.tail: _*).collect()) == head,
+        s"$ctx: library read")
+      assert(canon(spark.read.format("graft").load(root)
+        .select(cols.head, cols.tail: _*).collect()) == head, s"$ctx: format(graft)")
+      // one interval on a table without a changelog producer: the stream's
+      // state diff equals the library's retraction changelog
+      val oracle = canon(t.changelogWithRetractions(clogFrom, t.latestSnapshot.get.id)
+        .select((cols :+ "op").map(org.apache.spark.sql.functions.col): _*).collect())
+      assert(drain() == oracle, s"$ctx: changelog interval ($clogFrom, head]")
+    }
+  }
+
   test("TopKPairs ≡ sort-take on random data, under any partitioning") {
     import org.apache.spark.sql.functions._
     graft.functions.TopKFunctions.registerOn(spark)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.table.StreamTable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -459,6 +460,62 @@ class StreamTableSpec extends AnyFunSuite {
     // values are untouched by the re-layout
     assert(t.readWhere("y", 10.0, 25.0).agg(sum("id")).head().getLong(0) ==
       rows.filter(r => r._3 >= 10.0 && r._3 <= 25.0).map(_._1).sum)
+  }
+
+  test("sorted runs: a commit adding an unsorted PK data file is refused") {
+    import org.apache.spark.sql.types._
+    val t = new StreamTable(tmp(), spark, primaryKey = Some(Seq("id")))
+    t.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
+    val before = t.latestSnapshot.get.id
+    // a file staged by a writer that did not check the key order
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    val w = new graft.sources.v2.GraftStreamingDataWriter(t.root, schema,
+      "unsorted", 0L, 0, bucketPlan = None, numBuckets = 0, stamp = Some(1L))
+    Seq(3L -> "c", 2L -> "B").foreach { case (id, v) =>
+      w.write(org.apache.spark.sql.catalyst.InternalRow(id,
+        org.apache.spark.unsafe.types.UTF8String.fromString(v)))
+    }
+    val staged = w.commit().asInstanceOf[graft.sources.v2.GraftSinkCommitMessage].files
+    assert(staged.size == 1 && !staged.head.sorted)
+    val err = intercept[IllegalStateException](
+      t.commitExternalFiles(staged, "unsorted", 0L, stampedSeq = Some(1L)))
+    assert(err.getMessage.contains("must be a sorted run"), err.getMessage)
+    assert(t.latestSnapshot.get.id == before, "nothing may commit")
+    assert(t.read.count() == 2L)
+  }
+
+  test("sorted runs: sortCompact and sortCompactOrder keep them on a PK table") {
+    val t = new StreamTable(tmp(), spark, primaryKey = Some(Seq("id")),
+      seqCol = Some("ver"))
+    val rnd = new scala.util.Random(7)
+    (0 until 4).foreach { b =>
+      t.appendBatch((0 until 200).map { _ =>
+        (rnd.nextInt(300).toLong, rnd.nextInt(5).toLong,
+          rnd.nextInt(1000) * 1.0, rnd.nextInt(1000) * 1.0)
+      }.distinctBy(_._1).toDF("id", "ver", "x", "y"), b.toLong)
+    }
+    def answers = t.read.select("id", "ver", "x", "y").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).sorted.toSeq
+    val want = answers
+    def assertSortedRuns(what: String): Unit = {
+      val files = t.latestSnapshot.get.files
+      assert(files.size > 1 && files.forall(_.sortedBy.contains(Seq("id"))), s"$what: $files")
+      files.foreach { f =>
+        val ids = spark.read.parquet(f.path).select("id").collect().map(_.getLong(0)).toSeq
+        assert(ids == ids.sorted, s"$what: ${f.path} is not sorted by the key")
+      }
+      assert(answers == want, s"$what changed the answers")
+    }
+    t.sortCompact("x", "y", targetFileCount = 3)
+    assertSortedRuns("sortCompact")
+    t.sortCompactOrder(Seq("x"), targetFileCount = 3)
+    assertSortedRuns("sortCompactOrder")
+    // the x ranges of the files stay disjoint: the range layout is kept
+    val ranges = t.latestSnapshot.get.files.map(f =>
+      spark.read.parquet(f.path).agg(min("x"), max("x")).head())
+      .map(r => (r.getDouble(0), r.getDouble(1))).sortBy(_._1)
+    ranges.zip(ranges.drop(1)).foreach { case (a, b) =>
+      assert(a._2 <= b._1, s"overlapping x ranges: $ranges") }
   }
 
   test("aggregation merge-engine: blind appends merge by declared functions") {

@@ -2219,8 +2219,10 @@ class V2ConnectorSpec extends AnyFunSuite {
     }.get.asInstanceOf[graft.sources.v2.GraftPkScan]
     val parts = scan.planInputPartitions()
     assert(parts.nonEmpty)
-    assert(parts.forall(_.asInstanceOf[graft.sources.v2.GraftPkInputPartition].sorted),
-      "every bucket group must be streaming-merge eligible")
+    val sortedPaths = files.filter(_.sortedBy.contains(Seq("id"))).map(_.path).toSet
+    assert(parts.forall(_.asInstanceOf[graft.sources.v2.GraftPkInputPartition]
+      .files.forall(f => sortedPaths(f._1))),
+      "every planned file must be a sorted run")
     // resolved view matches the library (incl. stale-arrival + tombstone)
     val viaSql = df.orderBy("id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
@@ -2239,43 +2241,25 @@ class V2ConnectorSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq)
   }
 
-  test("sorted-run merge: exact-tie resolution agrees with the hash merge") {
+  test("sorted-run merge: exact-tie resolution agrees with the library") {
     import spark.implicits._
-    import org.apache.spark.sql.types._
-    val (_, gc) = freshCatalog()
+    val (cat, gc) = freshCatalog()
     // NO sequence field: exact (seq, commit) ties happen where a key repeats
-    // within one batch — tie resolution is arbitrary BUT the sorted and hash
-    // paths must agree bit-for-bit (the same files must read the same either
-    // way, or a compaction could appear to change data)
+    // within one batch — the connector's k-way merge must resolve them as
+    // the library's read does (the earlier version in file order wins), or
+    // the door a query goes through, or a compaction, would change the answer
     val tbl = gc.createTable("db", "srt_tie", Map("primary-key" -> "id", "bucket" -> "1"))
     tbl.appendBatch(Seq((1L, "x1"), (1L, "x2"), (2L, "y")).toDF("id", "v"), 0L)
     tbl.appendBatch(Seq((1L, "x3"), (2L, "y2"), (2L, "y3")).toDF("id", "v"), 1L)
-    val files = tbl.latestSnapshot.get.files.sortBy(f => (f.minSeq, f.path))
-      .map(f => (f.path, f.minSeq))
-    val internal = StructType(Seq(
-      StructField("id", LongType), StructField("v", StringType),
-      StructField(StreamTable.SeqColName, LongType),
-      StructField(StreamTable.TombstoneColName, BooleanType)))
-    val hash = graft.sources.v2.PkMerge.winners(files, internal, Array(0),
-      seqIdx = -1, commitIdx = 2, firstRow = false, Array.empty)
-    val groups = graft.sources.v2.PkMerge.sortedGroups(files, internal,
-      Array(0), Array.empty)
-    try {
-      var seen = 0
-      groups.foreach { g =>
-        var w: org.apache.spark.sql.catalyst.InternalRow = null
-        g.foreach { row =>
-          if (w == null ||
-              graft.sources.v2.PkMerge.cmpOrd(row, w, -1, 2,
-                internal.fields.map(_.dataType)) >= 0) w = row
-        }
-        val h = hash.get(List(w.getLong(0)))
-        assert(h.getUTF8String(1).toString == w.getUTF8String(1).toString,
-          s"key ${w.getLong(0)}: sorted=${w.getUTF8String(1)} hash=${h.getUTF8String(1)}")
-        seen += 1
-      }
-      assert(seen == 2)
-    } finally groups.close()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "v").collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val viaSql = rows(spark.sql(s"SELECT id, v FROM $cat.db.srt_tie"))
+    assert(viaSql.size == 2)
+    assert(viaSql == rows(tbl.read))
+    // and a compaction of the same files does not change the answer
+    tbl.compact(1)
+    assert(rows(spark.sql(s"SELECT id, v FROM $cat.db.srt_tie")) == viaSql)
+    assert(rows(tbl.read) == viaSql)
   }
 
   test("sorted-run merge: an oversized single bucket streams (O(files) memory)") {
@@ -2370,15 +2354,15 @@ class V2ConnectorSpec extends AnyFunSuite {
       files.forall(_.sortedBy.contains(Seq("id"))),
       s"every sink epoch file must be a verified sorted run: " +
         files.map(f => (f.path, f.sortedBy)).mkString(", "))
-    // the scan therefore plans the streaming k-way merge, not the hash path
+    // the scan therefore plans the streaming k-way merge over them
     val df = spark.sql(s"SELECT id, ver, v FROM $cat.db.srt_sink")
     val scan = df.queryExecution.optimizedPlan.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan
     }.get.asInstanceOf[graft.sources.v2.GraftPkScan]
-    assert(scan.planInputPartitions().forall(
-      _.asInstanceOf[graft.sources.v2.GraftPkInputPartition].sorted),
-      "sink-fed buckets must be streaming-merge eligible")
+    assert(scan.planInputPartitions().flatMap(
+      _.asInstanceOf[graft.sources.v2.GraftPkInputPartition].files.map(_._1)).toSet ==
+      files.map(_.path).toSet, "sink-fed buckets must plan every sorted run")
     // and the LWW view is right (stale arrival loses; per-key latest wins)
     assert(df.orderBy("id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq ==
@@ -2387,11 +2371,11 @@ class V2ConnectorSpec extends AnyFunSuite {
     StreamTable.deleteTree(java.nio.file.Paths.get(src))
   }
 
-  test("sorted-run verification: an out-of-order epoch keeps the flag OFF") {
+  test("sorted-run verification: an out-of-order epoch fails the task") {
     import org.apache.spark.sql.types._
     // drive the executor writer directly with inverted key order — the
-    // commit message must refuse the sorted-run flag (correctness never
-    // trusts the plan shape to have honored the ordering request)
+    // task must fail (a PK data file is always a sorted run; correctness
+    // never trusts the plan shape to have honored the ordering request)
     val root = java.nio.file.Files.createTempDirectory("v2_srtver_").toString
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("v", StringType)))
@@ -2401,10 +2385,10 @@ class V2ConnectorSpec extends AnyFunSuite {
     def row(id: Long, v: String) =
       org.apache.spark.sql.catalyst.InternalRow(id,
         org.apache.spark.unsafe.types.UTF8String.fromString(v))
-    w.write(row(2L, "b")); w.write(row(1L, "a"))
-    val m = w.commit().asInstanceOf[graft.sources.v2.GraftSinkCommitMessage]
-    assert(m.files.size == 1 && !m.files.head.sorted,
-      s"inverted order must not flag a sorted run: ${m.files}")
+    w.write(row(2L, "b"))
+    val err = intercept[IllegalStateException](w.write(row(1L, "a")))
+    assert(err.getMessage.contains("out of key order"), err.getMessage)
+    w.abort()
     // and a sorted epoch through the same writer DOES flag
     val w2 = new graft.sources.v2.GraftStreamingDataWriter(root, schema,
       "qtest", 1L, 0, bucketPlan = None, numBuckets = 1, stamp = Some(6L),
@@ -2423,7 +2407,7 @@ class V2ConnectorSpec extends AnyFunSuite {
     StreamTable.deleteTree(java.nio.file.Paths.get(root))
   }
 
-  test("oversized legacy hash merge refines under a capped heap, same answers") {
+  test("files without sortedBy: the connector refuses until sys.compact") {
     import scala.jdk.CollectionConverters._
     val (cat, gc) = freshCatalog()
     val tbl = gc.createTable("db", "href",
@@ -2433,8 +2417,13 @@ class V2ConnectorSpec extends AnyFunSuite {
       .selectExpr("id", "1L AS ver", "id * 2 AS x"), 0L)
     tbl.appendBatch(spark.range(0, n, 2)
       .selectExpr("id", "2L AS ver", "id * 3 AS x"), 1L)
-    // strip the sorted-run flags from the manifests — a pre-sorted-run
-    // (legacy) table: the scan must fall back to the HASH merge
+    def answers = spark.sql(s"SELECT id, x FROM $cat.db.href").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val before = answers
+    assert(before.size == n.toInt &&
+      before.map(_._2).sum == (0L until n).map(i => if (i % 2 == 0) i * 3 else i * 2).sum)
+    // strip the sorted-run flags from the manifests — a table written
+    // before sorted runs were required
     java.nio.file.Files.list(
       java.nio.file.Paths.get(tbl.root, "_manifests")).iterator().asScala
       .foreach { p =>
@@ -2442,113 +2431,29 @@ class V2ConnectorSpec extends AnyFunSuite {
         java.nio.file.Files.write(p,
           s.replace("\"sortedBy\":[\"id\"]", "\"sortedBy\":null").getBytes)
       }
-    val expected = (0L until n).map(i => if (i % 2 == 0) i * 3 else i * 2).sum
-    val oldCap = graft.sources.v2.PkMerge.HashMergeMaxKeys.get()
-    val passesBefore = graft.sources.v2.PkMerge.refinePasses.get()
-    // cap far below the bucket's 5000 distinct keys: the merge must refine
-    // (bounded memory, more re-reads) instead of holding them all resident
-    graft.sources.v2.PkMerge.HashMergeMaxKeys.set(500)
-    try {
-      val rows = spark.sql(s"SELECT id, x FROM $cat.db.href").collect()
-      assert(rows.length == n.toInt)
-      assert(rows.map(_.getLong(1)).sum == expected)
-      assert(rows.map(_.getLong(0)).toSet.size == n.toInt)
-    } finally graft.sources.v2.PkMerge.HashMergeMaxKeys.set(oldCap)
-    assert(graft.sources.v2.PkMerge.refinePasses.get() > passesBefore,
-      "the capped hash merge must have engaged refinement")
-    // and at the default cap the single-pass answers are identical
-    assert(spark.sql(s"SELECT sum(x) FROM $cat.db.href").head().getLong(0)
-      == expected)
+    val stripped = gc.getTable("db", "href") // past the edited manifest cache
+    require(stripped.latestSnapshot.get.files.forall(_.sortedBy.isEmpty))
+    val err = intercept[Exception](answers)
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
+    assert(messages(err).exists(_.contains("CALL sys.compact")), messages(err))
+    // the library still reads the layout, so the compaction rewrites it
+    spark.sql(s"CALL $cat.sys.compact(`table` => 'db.href')").collect()
+    assert(gc.getTable("db", "href").latestSnapshot.get.files
+      .forall(_.sortedBy.contains(Seq("id"))))
+    assert(answers == before, "the upgrade must not change answers")
   }
 
-  test("auto-heal: a refinement-sized hash bucket sort-compacts; the next scan plans the k-way merge") {
-    import scala.jdk.CollectionConverters._
-    val (cat, gc) = freshCatalog()
-    val tbl = gc.createTable("db", "heal",
-      Map("primary-key" -> "id", "sequence.field" -> "ver", "bucket" -> "1"))
-    val n = 2000L
-    tbl.appendBatch(spark.range(n)
-      .selectExpr("id", "1L AS ver", "id * 2 AS x"), 0L)
-    tbl.appendBatch(spark.range(0, n, 2)
-      .selectExpr("id", "2L AS ver", "id * 3 AS x"), 1L)
-    // strip the sorted-run flags — a pre-sorted-run (legacy) table whose
-    // single bucket must hash-merge
-    java.nio.file.Files.list(
-      java.nio.file.Paths.get(tbl.root, "_manifests")).iterator().asScala
-      .foreach { p =>
-        val s = new String(java.nio.file.Files.readAllBytes(p))
-        java.nio.file.Files.write(p,
-          s.replace("\"sortedBy\":[\"id\"]", "\"sortedBy\":null").getBytes)
-      }
-    val expected = (0L until n).map(i => if (i % 2 == 0) i * 3 else i * 2).sum
-    def pkParts(df: org.apache.spark.sql.DataFrame) =
-      pkScanOf(df).planInputPartitions()
-        .map(_.asInstanceOf[graft.sources.v2.GraftPkInputPartition])
-    val oldCap = graft.sources.v2.PkMerge.HashMergeMaxKeys.get()
-    graft.sources.v2.PkMerge.HashMergeMaxKeys.set(500)
-    try {
-      // FIRST read: plans the hash merge (unsorted bucket over the cap) and
-      // flags the bucket for healing
-      val q1 = spark.sql(s"SELECT id, x FROM $cat.db.heal")
-      val parts1 = pkParts(q1)
-      assert(parts1.length == 1 && !parts1.head.sorted,
-        "the stripped bucket must plan the hash merge")
-      assert(q1.collect().map(_.getLong(1)).sum == expected)
-      assert(gc.getTable("db", "heal").pendingDegradedBuckets.nonEmpty,
-        "a refinement-sized hash bucket must flag itself for healing")
-      // SECOND read: scan construction consumes the flag — the bucket
-      // sort-compacts once, and THIS plan is already the k-way merge
-      val q2 = spark.sql(s"SELECT id, x FROM $cat.db.heal")
-      val passesBefore = graft.sources.v2.PkMerge.refinePasses.get()
-      val parts2 = pkParts(q2)
-      assert(parts2.length == 1 && parts2.head.sorted,
-        "the healed bucket must plan the sorted-run k-way merge")
-      assert(q2.collect().map(_.getLong(1)).sum == expected,
-        "healing must not change answers")
-      assert(graft.sources.v2.PkMerge.refinePasses.get() == passesBefore,
-        "the healed read must never refine again")
-      assert(gc.getTable("db", "heal").pendingDegradedBuckets.isEmpty)
-    } finally graft.sources.v2.PkMerge.HashMergeMaxKeys.set(oldCap)
-  }
-
-  test("time-travel reads never flag buckets for healing") {
-    import scala.jdk.CollectionConverters._
-    val (cat, gc) = freshCatalog()
-    val tbl = gc.createTable("db", "healtt",
-      Map("primary-key" -> "id", "sequence.field" -> "ver", "bucket" -> "1"))
-    tbl.appendBatch(spark.range(1200L)
-      .selectExpr("id", "1L AS ver", "id * 2 AS x"), 0L)
-    tbl.appendBatch(spark.range(0, 1200L, 2)
-      .selectExpr("id", "2L AS ver", "id * 3 AS x"), 1L)
-    java.nio.file.Files.list(
-      java.nio.file.Paths.get(tbl.root, "_manifests")).iterator().asScala
-      .foreach { p =>
-        val s = new String(java.nio.file.Files.readAllBytes(p))
-        java.nio.file.Files.write(p,
-          s.replace("\"sortedBy\":[\"id\"]", "\"sortedBy\":null").getBytes)
-      }
-    val oldCap = graft.sources.v2.PkMerge.HashMergeMaxKeys.get()
-    graft.sources.v2.PkMerge.HashMergeMaxKeys.set(500)
-    try {
-      // a pinned read of unsorted HISTORY says nothing about the head
-      // layout — planning it must not enqueue a rewrite
-      val pinned = spark.sql(
-        s"SELECT id, x FROM $cat.db.healtt VERSION AS OF 0")
-      pkScanOf(pinned).planInputPartitions()
-      assert(gc.getTable("db", "healtt").pendingDegradedBuckets.isEmpty,
-        "time-travel planning must never flag buckets")
-    } finally graft.sources.v2.PkMerge.HashMergeMaxKeys.set(oldCap)
-  }
-
-  test("auto-heal refuses mixed layouts: no read-triggered whole-table rewrite") {
+  test("mixed bucket layout: the connector reads as the library does") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    val (_, gc) = freshCatalog()
+    val (cat, gc) = freshCatalog()
     val tbl = gc.createTable("db", "healmix",
       Map("primary-key" -> "id", "bucket" -> "2"))
     tbl.appendBatch((1L to 20L).map(i => (i, i * 2)).toDF("id", "x"), 0L)
     tbl.appendBatch((1L to 20L by 2).map(i => (i, i * 3)).toDF("id", "x"), 1L)
-    // strip ONE file's bucket id — a legacy/externally-registered file
+    // strip ONE file's bucket id — a legacy/externally-registered file: the
+    // scan plans one merge group over every file
     java.nio.file.Files.list(
       java.nio.file.Paths.get(tbl.root, "_manifests")).iterator().asScala
       .take(1).foreach { p =>
@@ -2558,17 +2463,50 @@ class V2ConnectorSpec extends AnyFunSuite {
       }
     val fresh = gc.getTable("db", "healmix") // past the edited manifest cache
     require(!fresh.latestSnapshot.get.files.forall(_.bucket.isDefined))
-    val before = fresh.latestSnapshot.get.id
-    fresh.noteDegradedBucket(0)
-    // the heal consumes the flag but must NOT rewrite: a targeted heal on a
-    // mixed layout would widen to a whole-table coalesce(1) that strips the
-    // surviving bucket ids — that is sys.compact's explicit decision
-    assert(fresh.healDegradedBuckets() == 0)
-    assert(fresh.pendingDegradedBuckets.isEmpty, "flags consumed either way")
-    assert(fresh.latestSnapshot.get.id == before,
-      "no commit may ride a refused heal")
-    // and the reads still resolve correctly over the mixed layout
-    assert(fresh.read.count() == 20L)
+    val viaSql = spark.sql(s"SELECT id, x FROM $cat.db.healmix").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(viaSql.size == 20)
+    assert(viaSql == fresh.read.select("id", "x").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq)
+  }
+
+  test("BINARY primary key: connector = library through both writers") {
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    val (cat, gc) = freshCatalog()
+    // -1 is byte 0xFF: Spark orders BINARY unsigned, so it sorts LAST
+    val batches = Seq(
+      Seq((Array[Byte](1, 2), "a"), (Array[Byte](-1), "z"), (Array[Byte](3), "b")),
+      Seq((Array[Byte](1, 2), "c"), (Array[Byte](-1), "y")))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("k", "v").collect()
+      .map(r => (r.getAs[Array[Byte]](0).toSeq, r.getString(1))).toSeq
+      .sortBy(r => (r._1.map(_ & 0xff).mkString(","), r._2))
+    val want = rows(Seq((Array[Byte](1, 2), "c"), (Array[Byte](3), "b"),
+      (Array[Byte](-1), "y")).toDF("k", "v"))
+    for (writer <- Seq("library", "sink")) {
+      val name = s"bin_$writer"
+      spark.sql(s"CREATE TABLE $cat.db.$name (k BINARY, v STRING) " +
+        "TBLPROPERTIES ('primary-key' = 'k')")
+      val t = gc.getTable("db", name)
+      if (writer == "library")
+        batches.zipWithIndex.foreach { case (b, i) => t.appendBatch(b.toDF("k", "v"), i.toLong) }
+      else {
+        // two epochs of one sink query: the second upserts the first
+        val src = new StreamTable(
+          java.nio.file.Files.createTempDirectory("v2_bin_src_").toString, spark)
+        val chk = java.nio.file.Files.createTempDirectory("v2_bin_chk_").toString
+        batches.zipWithIndex.foreach { case (b, i) =>
+          src.appendBatch(b.toDF("k", "v"), i.toLong)
+          spark.readStream.format("graft").load(src.root).writeStream
+            .option("checkpointLocation", chk)
+            .trigger(Trigger.AvailableNow()).toTable(s"$cat.db.$name")
+            .awaitTermination()
+        }
+      }
+      assert(rows(t.read) == want, s"$writer: library read")
+      assert(rows(spark.sql(s"SELECT k, v FROM $cat.db.$name")) == want,
+        s"$writer: connector read")
+    }
   }
 
   test("t$files is a distributed scan: manifest partitions, no driver rows") {
