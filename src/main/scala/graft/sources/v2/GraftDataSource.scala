@@ -248,6 +248,42 @@ object GraftV2Table {
     }
   }
 
+  /** The connector's table over a library [[StreamTable]], with the
+    * declared schema and renames its catalog persisted at its root, if
+    * any. `stored` reads in the file-level (stored) column names — what
+    * the table's own rewrites write back; the other arguments are the
+    * table-internal ones of the constructor. */
+  private[graft] def library(t: StreamTable, at: Option[Long],
+      stored: Boolean = false, files: Option[Seq[DataFileMeta]] = None,
+      bookkeeping: Boolean = false): GraftV2Table = {
+    val (declared, renames) = evolutionOf(graft.table.GraftCatalog.pathOptions(t.root))
+    val (d, r) =
+      if (!stored) (declared, renames)
+      else (declared.map(st => StructType(st.map(f =>
+        f.copy(name = renames.getOrElse(f.name, f.name))))), Map.empty[String, String])
+    new GraftV2Table(s"graft.`${t.root}`", t, SparkSession.active, d, at, r,
+      files, bookkeeping)
+  }
+
+  /** `df`, in the declared column names a library read of `t` shows, in
+    * the file-level names its data files carry: what a table-internal
+    * write of read-derived rows appends. One simultaneous rename, so a
+    * chain (`v` renamed to `label`, then a new `v` minted a storage name)
+    * maps each column once. */
+  private[graft] def storedNames(t: StreamTable,
+      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val (_, renames) = evolutionOf(graft.table.GraftCatalog.pathOptions(t.root))
+    if (!df.columns.exists(renames.contains)) df
+    else df.toDF(df.columns.map(c => renames.getOrElse(c, c)).toSeq: _*)
+  }
+
+  /** A batch read of `table`: a Dataset over its [[DataSourceV2Relation]],
+    * planned like `format("graft")` and SQL reads. */
+  private[graft] def frame(table: Table): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.graft.PlanFrame.ofRows(SparkSession.active,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None))
+
   def fromPath(root: String, declared: Option[StructType] = None): GraftV2Table = {
     val spark = SparkSession.active
     // honor catalog-persisted structural options (primary key, merge
@@ -314,7 +350,15 @@ class GraftV2Table(tableName: String, val table: StreamTable,
     /** Declared column name → FILE-level column name for columns renamed by
       * metadata-only schema evolution (`ALTER TABLE … RENAME COLUMN`): data
       * files keep serving the old name; the scan translates at plan time. */
-    renameMap: Map[String, String] = Map.empty)
+    renameMap: Map[String, String] = Map.empty,
+    /** Table-internal reads only (compaction): merge exactly these files
+      * instead of the snapshot's. */
+    files: Option[Seq[DataFileMeta]] = None,
+    /** Table-internal reads only (compaction): a primary-key read also
+      * emits the commit sequence and the per-field provenance columns the
+      * merge engine persists, so the rewritten rows keep merging with later
+      * writes. */
+    bookkeeping: Boolean = false)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -479,10 +523,10 @@ class GraftV2Table(tableName: String, val table: StreamTable,
       declaredSchema, Some(snapshotId), renameMap)
   }
 
-  private[v2] def liveSnapshot: Option[graft.table.Snapshot] = atSnapshot match {
+  private[v2] def liveSnapshot: Option[graft.table.Snapshot] = (atSnapshot match {
     case Some(id) => table.snapshotAt(id)
     case None => table.latestSnapshot
-  }
+  }).map(s => files.fold(s)(fs => s.copy(files = fs)))
 
   private[v2] def liveFiles: Seq[DataFileMeta] =
     liveSnapshot.map(_.files).getOrElse(Seq.empty)
@@ -516,58 +560,60 @@ class GraftV2Table(tableName: String, val table: StreamTable,
         .filterNot(f => StreamTable.isBookkeepingCol(f.name)))
   }
 
+  /** [[storedSchema]] in file-level names. */
+  private[v2] def storedFileSchema: StructType =
+    StructType(storedSchema.map(f => f.copy(name = renameMap.getOrElse(f.name, f.name))))
+
   override def schema(): StructType = {
     val base = storedSchema
     // an aggregation table's READ view is exactly (primary key, aggregated
-    // fields) — the library's aggResolve groups by pk and aggregates the
-    // declared fields, so any other stored column has no merged value.
-    // Additive fields WIDEN like Spark's own sum (INT→BIGINT, FLOAT→DOUBLE,
-    // DECIMAL(p,s)→DECIMAL(p+10,s)): the declared V2 schema carries the
-    // widened type and the fold accumulates in it, so the connector view
-    // matches the library view on every input type.
-    (table.primaryKey, table.aggSpec) match {
+    // fields): the merge groups by pk and aggregates the declared fields,
+    // so any other stored column has no merged value. Additive fields
+    // WIDEN like Spark's own sum (integral → BIGINT, FLOAT → DOUBLE,
+    // DECIMAL(p,s) → DECIMAL(min(p + 10, 38), s)): the schema carries the
+    // widened type and the fold accumulates in it. Compaction writes sums
+    // in that type, so the widening applies to the input type: the
+    // declared one, or for a table without one, that of its fresh
+    // (level-0) files — a table holding only compacted files is already
+    // widened.
+    val view = (table.primaryKey, table.aggSpec) match {
       case (Some(pk), Some(spec)) =>
         val fns = spec.toMap
+        lazy val freshFiles = liveFiles.filter(_.level == 0)
+        lazy val fresh = StreamTable.fileSchema(spark, freshFiles)
+        def input(f: StructField): Option[DataType] = f.dataType match {
+          case _: DecimalType if declaredSchema.isEmpty =>
+            if (freshFiles.isEmpty) None
+            else fresh.find(_.name == f.name).map(_.dataType)
+          case dt => Some(dt)
+        }
         val order = pk ++ spec.map(_._1)
         StructType(order.flatMap(n => base.find(_.name == n).map { f =>
           (fns.get(n), f.dataType) match {
-            case (Some("sum" | "count"), IntegerType) => f.copy(dataType = LongType)
+            case (Some("sum" | "count"), ByteType | ShortType | IntegerType) =>
+              f.copy(dataType = LongType)
             case (Some("sum" | "count"), FloatType) => f.copy(dataType = DoubleType)
-            case (Some("sum" | "count"), d: DecimalType) => f.copy(dataType =
-              DecimalType(math.min(d.precision + 10, DecimalType.MAX_PRECISION), d.scale))
+            case (Some("sum" | "count"), _: DecimalType) => input(f) match {
+              case Some(d: DecimalType) => f.copy(dataType =
+                DecimalType(math.min(d.precision + 10, DecimalType.MAX_PRECISION), d.scale))
+              case _ => f
+            }
             case _ => f
           }
         }).map(pkNotNull))
       case _ => StructType(base.map(pkNotNull))
     }
-  }
-
-  /** Aggregation tables whose merge the per-bucket readers do not fold —
-    * an ordered function (`last_non_null_value`, `listagg`, `collect`,
-    * `merge_map`) or a sum over a type other than INT/BIGINT/FLOAT/DOUBLE —
-    * read through the library's merge view ([[StreamTable.read]]) instead,
-    * decided from the table's merge spec and stored types. */
-  private[v2] def libraryMerged: Boolean = table.aggSpec.exists { spec =>
-    lazy val base = storedSchema
-    spec.exists {
-      case (_, "last_non_null_value" | "listagg" | "collect" | "merge_map") => true
-      case (f, "sum" | "count") => !base.find(_.name == f).exists(x =>
-        Set[DataType](IntegerType, LongType, FloatType, DoubleType)(x.dataType))
-      case _ => false
+    table.primaryKey match {
+      case None => view
+      case Some(pk) =>
+        // the list folds refuse a field of the wrong type on every read
+        val prov = PkMerge.provenance(table, view.map(f =>
+          f.copy(name = renameMap.getOrElse(f.name, f.name)))
+          .filterNot(f => pk.contains(f.name)), renameMap)
+        if (!bookkeeping) view
+        else StructType(view.fields ++
+          (StructField(StreamTable.SeqColName, LongType) +: prov))
     }
-  }
-
-  /** A library frame over this table (stored names) in its declared names
-    * and types, then `extra` columns as they are; declared columns no live
-    * file carries read NULL. */
-  private[v2] def declaredFrame(df: org.apache.spark.sql.DataFrame,
-      extra: String*): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    df.select(schema().map { f =>
-      val stored = renameMap.getOrElse(f.name, f.name)
-      (if (df.columns.contains(stored)) col(stored) else lit(null))
-        .cast(f.dataType).as(f.name)
-    } ++ extra.map(col): _*)
   }
 
   /** Primary-key columns surface NOT NULL (the Paimon contract — a PK row
@@ -603,11 +649,6 @@ class GraftV2Table(tableName: String, val table: StreamTable,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     table.primaryKey match {
-      case Some(_) if libraryMerged =>
-        // a V1 bridge over the library's plan (pruning and filters reach
-        // that plan; every filter also stays post-scan)
-        MetadataV2Table.frameScan(s"GraftLibraryMergeScan $tableName",
-          schema(), declaredFrame(atSnapshot.fold(table.read)(table.readAt)))
       case Some(pk) =>
         // PK merge-on-read: per-bucket resolution inside the readers (see
         // V2PkRead.scala) — last-writer-wins for deduplicate, first wins
@@ -3128,10 +3169,11 @@ class GraftPartitionReader(path: String, required: StructType,
     row
   }
 
-  /** Struct-aware conversion: flat structs of primitives (the partial-update
-    * `__graft_fseq_*` provenance markers) materialize as nested rows; inner
-    * fields resolve by NAME against the file's group layout, null-filling
-    * absent ones. Everything else is the primitive bridge. */
+  /** Field `i` of `g`: structs (inner fields resolve by
+    * NAME against the file's group layout, null-filling absent ones),
+    * arrays and maps in parquet's LIST/MAP layouts (the per-field
+    * provenance lists and the list folds' ARRAY/MAP fields), and the
+    * primitive bridge for everything else. */
   private def convertAny(g: Group, i: Int, dt: DataType,
       typ: org.apache.parquet.schema.Type): Any = dt match {
     case st: StructType =>
@@ -3148,19 +3190,46 @@ class GraftPartitionReader(path: String, required: StructType,
         }
       }
       new GenericInternalRow(vals)
+    case at: ArrayType =>
+      // the three-level LIST Spark writes: `repeated group list { element }`
+      val list = g.getGroup(i, 0)
+      val elem = typ.asGroupType().getType(0).asGroupType().getType(0)
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        Array.tabulate[Any](list.getFieldRepetitionCount(0)) { k =>
+          val e = list.getGroup(0, k)
+          if (e.getFieldRepetitionCount(0) == 0) null
+          else convertAny(e, 0, at.elementType, elem)
+        })
+    case mt: MapType =>
+      val m = g.getGroup(i, 0)
+      val kv = typ.asGroupType().getType(0).asGroupType()
+      val n = m.getFieldRepetitionCount(0)
+      val (ks, vs) = (new Array[Any](n), new Array[Any](n))
+      (0 until n).foreach { k =>
+        val e = m.getGroup(0, k)
+        ks(k) = convertAny(e, 0, mt.keyType, kv.getType(0))
+        vs(k) =
+          if (e.getFieldRepetitionCount(1) == 0) null
+          else convertAny(e, 1, mt.valueType, kv.getType(1))
+      }
+      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(ks),
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(vs))
     case _ => convert(g, i, dt, typ.asPrimitiveType())
   }
 
   private def convert(g: Group, i: Int, dt: DataType, prim: PrimitiveType): Any =
     dt match {
       // INT32→BIGINT / FLOAT→DOUBLE widen at read: the aggregation merge
-      // view declares additive fields in their accumulator type (Spark's
-      // own sum widening) while files keep the narrow written type
+      // (`PkMerge.plan`) declares additive fields in their accumulator type
+      // (Spark's own sum widening) while files keep the narrow written type
       case LongType =>
         if (prim.getPrimitiveTypeName == PrimitiveTypeName.INT32)
           g.getInteger(i, 0).toLong
         else g.getLong(i, 0)
       case IntegerType => g.getInteger(i, 0)
+      case ShortType => g.getInteger(i, 0).toShort
+      case ByteType => g.getInteger(i, 0).toByte
       case DoubleType =>
         if (prim.getPrimitiveTypeName == PrimitiveTypeName.FLOAT)
           g.getFloat(i, 0).toDouble
@@ -3204,8 +3273,7 @@ class GraftPartitionReader(path: String, required: StructType,
         org.apache.spark.sql.types.Decimal(
           scala.math.BigDecimal(unscaled, d.scale), d.precision, d.scale)
       case other => throw new UnsupportedOperationException(
-        s"graft source: unsupported read type $other (project it away; " +
-          "nested types go through StreamTable.read)")
+        s"graft source: unsupported read type $other (project it away)")
     }
 
   override def close(): Unit = reader.close()

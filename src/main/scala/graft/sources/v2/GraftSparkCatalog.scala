@@ -133,12 +133,6 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           val v2 = new GraftV2Table(
             s"$catalogName.${db(ident.namespace())}.$base",
             t, SparkSession.active, declared, renameMap = renames)
-          // folds the change readers do not compute: the library's views
-          if (v2.libraryMerged) return new MetadataV2Table(
-            s"$catalogName.${db(ident.namespace())}.${ident.name()}",
-            v2.declaredFrame(if (sys == "changelog") t.changeHistoryView else
-              t.read.withColumn("rowkind", org.apache.spark.sql.functions.lit("+I")),
-              "rowkind"))
           return if (sys == "audit_log") new GraftAuditLogV2Table(v2)
           else new GraftChangeHistoryV2Table(v2)
         }
@@ -164,9 +158,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     }
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val t = backing.getTable(db(ident.namespace()), ident.name())
-    // PK tables resolve merge-on-read inside the scan (V2PkRead.scala, or
-    // the library's merge view for the aggregation folds the per-bucket
-    // readers do not compute — GraftV2Table.newScanBuilder decides); the
+    // PK tables resolve merge-on-read inside the scan (V2PkRead.scala); the
     // declared (possibly EVOLVED) schema + rename mappings persist as
     // options: they resolve INSERT INTO on empty tables and carry
     // metadata-only ADD/DROP/RENAME COLUMN evolution on committed ones

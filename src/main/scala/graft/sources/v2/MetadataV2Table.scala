@@ -44,8 +44,7 @@ object MetadataV2Table {
   /** A scan over `frame`'s own plan through the [[V1Scan]] bridge, built
     * when Spark builds the scan. Spark's column pruning and the filters
     * [[GraftV2Table.filterToColumn]] translates are applied to `frame`, so
-    * they reach its plan (a key filter prunes files under a merge view);
-    * every filter also stays post-scan. Rows pass through in Spark's
+    * they reach its plan; every filter also stays post-scan. Rows pass through in Spark's
     * internal format, never converted to external `Row`s and back. */
   def frameScan(label: String, rowSchema: => StructType,
       frame: => DataFrame): ScanBuilder =

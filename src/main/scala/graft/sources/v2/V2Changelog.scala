@@ -53,6 +53,7 @@ class GraftChangelogV2Table(base: GraftV2Table) extends Table with SupportsRead 
 
   private[v2] val baseSchema: StructType = base.schema()
   private[v2] val renames: Map[String, String] = base.renames
+  private[v2] val stored: StructType = base.storedFileSchema
 
   override def name(): String = s"${base.name()}$$changelog"
 
@@ -86,7 +87,7 @@ class GraftChangelogScan(table: GraftChangelogV2Table,
       s"ReadSchema: ${readSchema().catalogString}"
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new GraftChangelogStream(table.t, table.baseSchema, table.renames,
-      consumerId, scanStart, pruned, onlyBucket)
+      consumerId, scanStart, pruned, onlyBucket, Some(table.stored))
 }
 
 /** Snapshot-pair micro-batch stream (same offset/admission model as
@@ -99,7 +100,10 @@ class GraftChangelogScan(table: GraftChangelogV2Table,
 class GraftChangelogStream(table: StreamTable, baseSchema: StructType,
     nameMap: Map[String, String], consumerId: Option[String] = None,
     scanStart: Option[Long] = None, pruned: Option[StructType] = None,
-    onlyBucket: Option[Int] = None)
+    onlyBucket: Option[Int] = None,
+    /** The table's stored schema (file-level names), for the key and
+      * sequence columns the read schema lacks; `baseSchema` by default. */
+    stored: Option[StructType] = None)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
@@ -138,7 +142,8 @@ class GraftChangelogStream(table: StreamTable, baseSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ChangelogPlanning.readerFactory(table, baseSchema, nameMap, pruned)
+    ChangelogPlanning.readerFactory(table, baseSchema, nameMap,
+      stored.getOrElse(ChangelogPlanning.fileBaseOf(baseSchema, nameMap)), pruned)
 
   override def commit(end: Offset): Unit =
     // committed trigger → the next undelivered snapshot is end+1; retention
@@ -165,11 +170,6 @@ private[graft] object ChangelogPlanning {
       nameMap: Map[String, String]): StructType =
     if (nameMap.isEmpty) baseSchema
     else StructType(baseSchema.map(f => f.copy(name = nameMap.getOrElse(f.name, f.name))))
-
-  private[v2] def internalOf(fileBase: StructType): StructType =
-    StructType(fileBase.fields ++ Seq(
-      StructField(StreamTable.SeqColName, LongType),
-      StructField(StreamTable.TombstoneColName, BooleanType)))
 
   /** Bucket point lookup over pushed filters: an equality on the bucket key
     * pins the single bucket that can hold the key — 1/numBuckets of every
@@ -204,7 +204,8 @@ private[graft] object ChangelogPlanning {
     * when the layout records bucket ids on every file (the unbucketed
     * fallback group must read everything to stay correct). */
   def planInterval(table: StreamTable, snaps: Seq[graft.table.Snapshot],
-      s: Long, e: Long, onlyBucket: Option[Int] = None): Array[InputPartition] = {
+      s: Long, e: Long, onlyBucket: Option[Int] = None,
+      persisted: Boolean = true): Array[InputPartition] = {
     if (e <= s) return Array.empty
     // indexed once: the walk below touches each id several times, and a
     // linear find per touch made catch-up planning O(interval × snapshots).
@@ -220,7 +221,7 @@ private[graft] object ChangelogPlanning {
     def filesAt(id: Long): Seq[graft.table.DataFileMeta] =
       table.hydrated(snapAt(id)).files
 
-    if (s >= 0) {
+    if (s >= 0 && persisted) {
       // fast path (`changelog-producer`): the interval (s, e] is EXACTLY
       // covered by a chain of changelog-carrying snapshots — a write-time
       // producer ('input') covers (id-1, id], a DEFERRED producer
@@ -297,29 +298,54 @@ private[graft] object ChangelogPlanning {
               endPaths(f.path) || oldPathSet(f.path))).distinct,
           removedEv.filter(f => oldPathSet(f.path)).distinct)
       }
-    // one partition per hash bucket when the layout proves co-location of
-    // every key version; otherwise a single (serial, still correct) group
-    val both = oldFiles ++ newFiles ++ extras
-    PkMerge.requireSortedRuns(table.root, table.primaryKey.get, both)
-    val groups: Seq[(Seq[String], Seq[String], Seq[String], Seq[String])] =
-      if (both.isEmpty) Seq.empty
-      else if (both.forall(_.bucket.isDefined)) {
-        val o = oldFiles.groupBy(_.bucket.get); val n = newFiles.groupBy(_.bucket.get)
-        val x = extras.groupBy(_.bucket.get)
-        val oc = oldEv.groupBy(_.bucket.get)
-        (o.keySet ++ n.keySet ++ x.keySet).toSeq
-          .filter(b => onlyBucket.forall(_ == b)).sorted.map { b =>
-          (o.getOrElse(b, Seq.empty).map(_.path).sorted,
-            n.getOrElse(b, Seq.empty).map(_.path).sorted,
-            x.getOrElse(b, Seq.empty).map(_.path).sorted,
-            oc.getOrElse(b, Seq.empty).map(_.path).sorted)
-        }
-      } else Seq((oldFiles.map(_.path).sorted, newFiles.map(_.path).sorted,
-        extras.map(_.path).sorted, oldEv.map(_.path).sorted))
-    groups.map { case (of, nf, xf, oc) =>
-      GraftChangelogPartition(of, nf, nf.filter(newOnly) ++ xf ++ oc): InputPartition
-    }.toArray
+    diffPartitions(table, oldFiles, newFiles,
+      newFiles.filter(f => newOnly(f.path)) ++ extras ++ oldEv, onlyBucket)
   }
+
+  /** The state-diff partitions of (old files, new files, evidence): one
+    * per hash bucket when the layout proves co-location of every key
+    * version, otherwise a single (serial, still correct) group. */
+  def diffPartitions(table: StreamTable, oldFiles: Seq[graft.table.DataFileMeta],
+      newFiles: Seq[graft.table.DataFileMeta], evidence: Seq[graft.table.DataFileMeta],
+      onlyBucket: Option[Int] = None): Array[InputPartition] = {
+    val all = oldFiles ++ newFiles ++ evidence
+    PkMerge.requireSortedRuns(table.root, table.primaryKey.get, all)
+    def paths(fs: Seq[graft.table.DataFileMeta]) = fs.map(_.path).distinct.sorted
+    if (all.isEmpty) Array.empty
+    else if (all.forall(_.bucket.isDefined)) {
+      val (o, n, x) = (oldFiles.groupBy(_.bucket.get), newFiles.groupBy(_.bucket.get),
+        evidence.groupBy(_.bucket.get))
+      (o.keySet ++ n.keySet ++ x.keySet).toSeq
+        .filter(b => onlyBucket.forall(_ == b)).sorted.map { b =>
+          def at(m: Map[Int, Seq[graft.table.DataFileMeta]]) = paths(m.getOrElse(b, Nil))
+          GraftChangelogPartition(at(o), at(n), at(x)): InputPartition
+        }.toArray
+    } else Array(GraftChangelogPartition(paths(oldFiles), paths(newFiles), paths(evidence)))
+  }
+
+  /** The netted changelog (table columns in stored names + `op`) of the
+    * per-bucket state diff over (old files, new files, evidence) — the
+    * write-time producer's diff of one commit. */
+  def diffFrame(table: StreamTable, oldFiles: Seq[graft.table.DataFileMeta],
+      newFiles: Seq[graft.table.DataFileMeta],
+      evidence: Seq[graft.table.DataFileMeta]): org.apache.spark.sql.DataFrame =
+    frame(table, oldFiles ++ newFiles, diffPartitions(table, oldFiles, newFiles, evidence, _))
+
+  /** [[StreamTable.changelogWithRetractions]]: the state diff of the
+    * `(s, e]` interval, never the persisted changelog. */
+  def intervalFrame(table: StreamTable, snaps: Seq[graft.table.Snapshot],
+      s: Long, e: Long, files: Seq[graft.table.DataFileMeta]): org.apache.spark.sql.DataFrame =
+    frame(table, files, planInterval(table, snaps, s, e, _, persisted = false))
+
+  /** A table whose rows are the planned state diff; its schema derives
+    * from `files` (the diff's endpoint files) when no schema is declared. */
+  private def frame(table: StreamTable, files: Seq[graft.table.DataFileMeta],
+      plan: Option[Int] => Array[InputPartition]): org.apache.spark.sql.DataFrame =
+    if (files.isEmpty)
+      org.apache.spark.sql.SparkSession.active.emptyDataFrame
+        .withColumn("op", org.apache.spark.sql.functions.lit(""))
+    else GraftV2Table.frame(new GraftStateDiffV2Table(GraftV2Table.library(table,
+      None, stored = true, files = Some(files.distinctBy(_.path))), plan))
 
   /** The reader factory: the engine's [[PkMerge.Fold]] (winners for
     * deduplicate/first-row, folds for aggregation, per-field merges for
@@ -333,68 +359,48 @@ private[graft] object ChangelogPlanning {
     * so a 3-column CDC consumer of a 200-column table reads 3 columns plus
     * keys, not 200. */
   def readerFactory(table: StreamTable, baseSchema: StructType,
-      nameMap: Map[String, String],
+      nameMap: Map[String, String], stored: StructType,
       pruned: Option[StructType] = None): PartitionReaderFactory = {
-    val fullFile = fileBaseOf(baseSchema, nameMap)
-    val prunedFile = fileBaseOf(pruned.getOrElse(baseSchema), nameMap)
-    val pk = table.primaryKey.get
+    val out = fileBaseOf(pruned.getOrElse(baseSchema), nameMap)
     // key/sequence columns the projection dropped still drive the merge —
-    // appended after the output region, read but never emitted
-    val extras = (pk ++ table.seqCol.toSeq).distinct
-      .filterNot(prunedFile.fieldNames.contains)
-      .map(n => fullFile.find(_.name == n).getOrElse(throw new IllegalStateException(
-        s"key/sequence column $n missing from table schema")))
-    val outLen = prunedFile.length
-    val dataFields = prunedFile.fields.toSeq ++ extras
-    val base = StructType(dataFields ++ Seq(
-      StructField(StreamTable.SeqColName, LongType),
-      StructField(StreamTable.TombstoneColName, BooleanType)))
-    val partial = table.effectiveEngine == "partial-update"
-    // partial-update reads the persisted fseq provenance structs of the
-    // PROJECTED fields (the PK scan's exact fold); dropped fields resolve
-    // independently
-    val internal =
-      if (!partial) base
-      else StructType(base.fields ++ prunedFile.collect {
-        case f if !pk.contains(f.name) =>
-          StructField(StreamTable.FieldSeqPrefix + f.name, PkMerge.FseqType)
-      })
-    val dts = internal.fields.map(_.dataType)
-    val seqIdx = table.seqCol.map(internal.fieldIndex).getOrElse(-1)
-    val commitIdx = internal.fieldIndex(StreamTable.SeqColName)
-    val fold: PkMerge.Fold =
-      if (partial)
-        PkMerge.PerField(internal, outLen,
-          prunedFile.fields.zipWithIndex.collect {
-            case (f, i) if !pk.contains(f.name) =>
-              (i, internal.fieldIndex(StreamTable.FieldSeqPrefix + f.name))
-          }, seqIdx, commitIdx)
-      else if (table.effectiveEngine == "aggregation")
-        // old/new states are per-key FOLDS, not winners; sum/count fields
-        // must fold in BIGINT/DOUBLE (same guard as the scan); fields the
-        // projection dropped are neither read nor folded
-        PkMerge.Accumulate(outLen, dts, table.aggSpec.get.flatMap { case (f, fn) =>
-          val fileN = nameMap.getOrElse(f, f)
-          if (!prunedFile.fieldNames.contains(fileN)) None
-          else {
-            require(fn != "last_non_null_value",
-              s"last_non_null_value($f) is sequence-ordered — the native " +
-                "CDC fold is order-blind; read the library changelog " +
-                "(StreamTable.changesBetween) instead")
-            if (fn == "sum" || fn == "count")
-              require(internal(internal.fieldIndex(fileN)).dataType == LongType ||
-                  internal(internal.fieldIndex(fileN)).dataType == DoubleType,
-                s"$fn($f): changelog fold needs a BIGINT or DOUBLE field")
-            Some((internal.fieldIndex(fileN), fn))
-          }
-        }.toArray)
-      else
-        PkMerge.LastWriter(outLen, dts, seqIdx, commitIdx,
-          internal.fieldIndex(StreamTable.TombstoneColName),
-          table.effectiveEngine == "first-row")
-    GraftChangelogReaderFactory(internal, outLen, dataFields.length,
-      pk.map(internal.fieldIndex).toArray, fold)
+    // read after the output region, never emitted; the commit sequence
+    // follows them
+    val (internal, fold) = PkMerge.plan(table, out, stored, nameMap)
+    GraftChangelogReaderFactory(internal, out.length,
+      internal.fieldIndex(StreamTable.SeqColName),
+      table.primaryKey.get.map(internal.fieldIndex).toArray, fold)
   }
+}
+
+/** A batch netted changelog over planned state-diff partitions: the
+  * table-internal door to [[GraftChangelogReader]] (the write-time
+  * producer, [[StreamTable.changelogWithRetractions]] and the first commit
+  * of the change history). */
+class GraftStateDiffV2Table(base: GraftV2Table,
+    plan: Option[Int] => Array[InputPartition]) extends Table with SupportsRead {
+  private val t = base.table
+  private val baseSchema: StructType = base.schema()
+
+  override def name(): String = s"${base.name()}$$diff"
+  override def schema(): StructType = GraftOpScanBuilder.withOp(baseSchema, "op")
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftOpScanBuilder(t, baseSchema, "op", base.renames,
+      (pruned, onlyBucket) => new Scan with Batch {
+        override def readSchema(): StructType =
+          GraftOpScanBuilder.withOp(pruned.getOrElse(baseSchema), "op")
+        override def description(): String =
+          s"GraftStateDiffScan ${name()} merge=${t.effectiveEngine} " +
+            onlyBucket.map(b => s"bucket=$b ").getOrElse("") +
+            s"ReadSchema: ${readSchema().catalogString}"
+        override def toBatch: Batch = this
+        override def planInputPartitions(): Array[InputPartition] = plan(onlyBucket)
+        override def createReaderFactory(): PartitionReaderFactory =
+          ChangelogPlanning.readerFactory(t, baseSchema, base.renames,
+            base.storedFileSchema, pruned)
+      })
 }
 
 /** One bucket's changelog interval: the bucket's live files at the start

@@ -66,6 +66,7 @@ class GraftIncrementalV2Table(base: GraftV2Table, from: Long, to: Long)
 
   private[v2] val baseSchema: StructType = base.schema()
   private[v2] val renames: Map[String, String] = base.renames
+  private[v2] val stored: StructType = base.storedFileSchema
 
   override def name(): String = s"${base.name()}$$incremental[$from,$to]"
 
@@ -108,7 +109,7 @@ class GraftIncrementalV2Table(base: GraftV2Table, from: Long, to: Long)
 
       override def createReaderFactory(): PartitionReaderFactory =
         if (t.primaryKey.isDefined)
-          ChangelogPlanning.readerFactory(t, baseSchema, renames, pruned)
+          ChangelogPlanning.readerFactory(t, baseSchema, renames, stored, pruned)
         else GraftPassthroughOpReaderFactory(ChangelogPlanning.fileBaseOf(
           pruned.getOrElse(baseSchema), renames))
     })
@@ -170,6 +171,7 @@ class GraftAuditLogV2Table(base: GraftV2Table) extends Table with SupportsRead {
   private[v2] val t = base.table
   private[v2] val baseSchema: StructType = base.schema()
   private[v2] val renames: Map[String, String] = base.renames
+  private[v2] val stored: StructType = base.storedFileSchema
 
   override def name(): String = s"${base.name()}$$audit_log"
 
@@ -209,7 +211,7 @@ class GraftAuditLogV2Table(base: GraftV2Table) extends Table with SupportsRead {
 
       override def createReaderFactory(): PartitionReaderFactory =
         if (t.primaryKey.isDefined)
-          ChangelogPlanning.readerFactory(t, baseSchema, renames, pruned)
+          ChangelogPlanning.readerFactory(t, baseSchema, renames, stored, pruned)
         else GraftPassthroughOpReaderFactory(ChangelogPlanning.fileBaseOf(
           pruned.getOrElse(baseSchema), renames))
     })
@@ -222,6 +224,7 @@ class GraftChangeHistoryV2Table(base: GraftV2Table) extends Table with SupportsR
   private[v2] val t = base.table
   private[v2] val baseSchema: StructType = base.schema()
   private[v2] val renames: Map[String, String] = base.renames
+  private[v2] val stored: StructType = base.storedFileSchema
 
   override def name(): String = s"${base.name()}$$changelog"
 
@@ -317,7 +320,7 @@ class GraftChangeHistoryV2Table(base: GraftV2Table) extends Table with SupportsR
           // wraps the engine factory so snapshot-0 state partitions and
           // passthrough/const partitions share one factory
           GraftAuditReaderFactory(prunedFile,
-            ChangelogPlanning.readerFactory(t, baseSchema, renames, pruned))
+            ChangelogPlanning.readerFactory(t, baseSchema, renames, stored, pruned))
         else GraftPassthroughOpReaderFactory(prunedFile)
       }
     })

@@ -11,14 +11,14 @@ import org.apache.spark.unsafe.types.ByteArray
 
 import graft.table.{DataFileMeta, StreamTable}
 
-/** Primary-key merge-on-read through the V2 connector — the reference's
-  * signature table (the PK `sensor_info` upsert table,
-  * `tutorial/guide.md:59-74`) readable through plain SQL
-  * (`SELECT * FROM graft.db.sensor_info`), not just the library's
-  * [[StreamTable.read]].
+/** Primary-key merge-on-read — the reference's signature table (the PK
+  * `sensor_info` upsert table, `tutorial/guide.md:59-74`), read the same
+  * way through every door: [[StreamTable.read]]/`readAt` plan this scan
+  * over the connector's relation, as `format("graft")` and SQL
+  * (`SELECT * FROM graft.db.sensor_info`) do, and compaction reads it with
+  * the commit sequence and per-field provenance kept.
   *
-  * Execution model — the distributed dual of [[StreamTable.read]]'s
-  * window-resolve, with NO shuffle at all:
+  * Execution model, with NO shuffle at all:
   *
   *  - PK tables write hash-bucketed on a bucket key that is a subset of the
   *    primary key (`pmod(murmur3(key), n)`, recorded per file in the
@@ -29,11 +29,8 @@ import graft.table.{DataFileMeta, StreamTable}
   *    versions to the engine's fold ([[PkMerge.Fold]]) — largest
   *    (`sequence.field`, commit batch) wins for `deduplicate`, smallest for
   *    `first-row`, tombstone winners emit nothing; per-key accumulation for
-  *    `aggregation`; per-field last-non-null for `partial-update`. The
-  *    library's global window shuffle becomes zero exchanges.
-  *  - Aggregation tables with a fold this reader does not compute never
-  *    reach it: they read the library's merge view
-  *    ([[GraftV2Table.libraryMerged]]).
+  *    `aggregation` (the sequence-ordered `last_non_null_value` and list
+  *    folds included); per-field last-non-null for `partial-update`.
   *
   * Filter safety: only predicates over PRIMARY-KEY columns may prune files
   * or rows before the merge — all versions of a key share its key columns,
@@ -48,12 +45,12 @@ import graft.table.{DataFileMeta, StreamTable}
   * invariant), so the merge holds O(open files + one key's versions) on
   * every path, whatever a bucket's size or skew. A planned file without the
   * flag (a manifest written before the invariant) refuses the scan and
-  * names `CALL sys.compact`, which rewrites sorted runs through the
-  * library. The bucket count remains the declared write-time parallelism
-  * knob, and a key-equality lookup prunes to a single bucket before any
-  * I/O (the PK point read). Files without recorded bucket ids degrade to
-  * one merge group — correct, not parallel; rewrite via compaction to
-  * restore the layout.
+  * names `CALL sys.compact`, which sorts each such file into a run before
+  * it merges them. The bucket count remains the declared write-time
+  * parallelism knob, and a key-equality lookup prunes to a single bucket
+  * before any I/O (the PK point read). Files without recorded bucket ids
+  * degrade to one merge group — correct, not parallel; rewrite via
+  * compaction to restore the layout.
   */
 class GraftPkScanBuilder(table: GraftV2Table, fullSchema: StructType,
     pk: Seq[String], nameMap: Map[String, String] = Map.empty) extends ScanBuilder
@@ -121,7 +118,6 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
     else StructType(required.map(f => f.copy(name = nameMap.getOrElse(f.name, f.name))))
 
   private val t = table.table
-  private val firstRow = t.effectiveEngine == "first-row"
   private val aggregation = t.effectiveEngine == "aggregation"
   private val partial = t.effectiveEngine == "partial-update"
 
@@ -199,34 +195,9 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
   }
 
   // ---- merge-internal schema: projection ++ pk/seq/commit/tombstone ------
-  private[v2] val internal: StructType = {
-    val extras = (pk ++ t.seqCol.toSeq).distinct
-      .filterNot(n => fileRequired.fieldNames.contains(n))
-      .map(n => fullSchema.find(_.name == n).getOrElse(
-        throw new IllegalStateException(s"key/sequence column $n missing from table schema")))
-    val base = fileRequired.fields.toSeq ++ extras ++ Seq(
-      StructField(StreamTable.SeqColName, LongType),
-      StructField(StreamTable.TombstoneColName, BooleanType))
-    // partial-update: each PROJECTED non-key field's persisted per-field
-    // winning sequence (struct<s1,s2>, written by compaction; null-filled
-    // in fresh level-0 files) rides along for the reader's per-field race —
-    // fields the projection dropped resolve independently and cost nothing
-    val fseqs =
-      if (!partial) Seq.empty
-      else fileRequired.fields.toSeq.collect {
-        case f if !pk.contains(f.name) =>
-          StructField(StreamTable.FieldSeqPrefix + f.name, PkMerge.FseqType)
-      }
-    StructType(base ++ fseqs)
-  }
-
-  /** partial-update fold plan: (value idx, persisted-fseq idx) per non-key
-    * field of the merge-internal schema. */
-  private def partialFields: Array[(Int, Int)] =
-    internal.fields.zipWithIndex.collect {
-      case (f, i) if internal.fieldNames.contains(StreamTable.FieldSeqPrefix + f.name) =>
-        (i, internal.fieldIndex(StreamTable.FieldSeqPrefix + f.name))
-    }
+  // (+ per-field provenance), and the engine's fold over it
+  private[v2] val (internal: StructType, fold: PkMerge.Fold) =
+    PkMerge.plan(t, fileRequired, table.storedFileSchema, nameMap)
 
   override def readSchema(): StructType = required
 
@@ -297,28 +268,8 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
       GraftPkInputPartition(fs.map(f => (f.path, f.minSeq)), b): InputPartition
     }.toArray
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val dts = internal.fields.map(_.dataType)
-    val fold: PkMerge.Fold =
-      if (partial)
-        PkMerge.PerField(internal, required.length, partialFields,
-          t.seqCol.map(internal.fieldIndex).getOrElse(-1),
-          internal.fieldIndex(StreamTable.SeqColName))
-      else if (aggregation)
-        // only projected aggregated fields accumulate (the rest of
-        // `required` is necessarily primary-key columns — constant per key);
-        // fields the projection dropped never cost anything
-        PkMerge.Accumulate(required.length, dts, t.aggSpec.get.collect {
-          case (f, fn) if fileRequired.fieldNames.contains(nameMap.getOrElse(f, f)) =>
-            (internal.fieldIndex(nameMap.getOrElse(f, f)), fn)
-        }.toArray)
-      else
-        PkMerge.LastWriter(required.length, dts,
-          t.seqCol.map(internal.fieldIndex).getOrElse(-1),
-          internal.fieldIndex(StreamTable.SeqColName),
-          internal.fieldIndex(StreamTable.TombstoneColName), firstRow)
+  override def createReaderFactory(): PartitionReaderFactory =
     GraftPkReaderFactory(internal, pk.map(internal.fieldIndex).toArray, fold, pushed)
-  }
 }
 
 /** All live files of one hash bucket (or the whole table for the legacy
@@ -369,8 +320,8 @@ class GraftPkMergeReader(files: Seq[(String, Long)], internal: StructType,
 private[graft] object PkMerge {
   /** Refuse to plan a merge over files that are not sorted runs on `pk`:
     * every PK commit records the flag, so only a manifest written before
-    * the invariant (or edited by hand) lacks it. Compaction reads through
-    * the library and rewrites sorted runs. */
+    * the invariant (or edited by hand) lacks it. Compaction sorts such
+    * files into runs before it merges them. */
   def requireSortedRuns(table: String, pk: Seq[String], files: Seq[DataFileMeta]): Unit =
     files.find(!_.sortedBy.contains(pk)).foreach { f =>
       throw new IllegalStateException(
@@ -404,6 +355,96 @@ private[graft] object PkMerge {
   val FseqType: StructType = StructType(Seq(
     StructField("s1", LongType), StructField("s2", LongType)))
 
+  /** The persisted contribution list of a list fold over a `v`-typed field
+    * (see [[StreamTable.FieldListPrefix]]): every contribution with its
+    * (sequence, commit) provenance. */
+  def flistType(v: DataType): ArrayType = ArrayType(StructType(Seq(
+    StructField("s1", LongType), StructField("s2", LongType), StructField("v", v))))
+
+  /** The per-field provenance columns a merge of `data` (non-key output
+    * fields, file-level names) reads and compaction persists: the winning
+    * (sequence, commit) of every partial-update field and
+    * `last_non_null_value` field, the contribution list of every list fold.
+    * Refuses a list fold over a field of the wrong type. */
+  def provenance(t: StreamTable, data: Seq[StructField],
+      nameMap: Map[String, String]): Seq[StructField] = {
+    val spec = t.aggSpec.getOrElse(Nil).map { case (f, fn) =>
+      nameMap.getOrElse(f, f) -> fn }.toMap
+    t.effectiveEngine match {
+      case "partial-update" =>
+        data.map(f => StructField(StreamTable.FieldSeqPrefix + f.name, FseqType))
+      case "aggregation" => data.flatMap(f => spec.get(f.name).collect {
+        case "last_non_null_value" =>
+          StructField(StreamTable.FieldSeqPrefix + f.name, FseqType)
+        case fn @ ("listagg" | "collect" | "merge_map") =>
+          val dt = f.dataType
+          fn match {
+            case "listagg" => require(dt == StringType,
+              s"listagg(${f.name}) needs a STRING field, got ${dt.simpleString}")
+            case "merge_map" => require(dt.isInstanceOf[MapType],
+              s"merge_map(${f.name}) needs a MAP field (later entries overwrite " +
+                s"earlier per map key), got ${dt.simpleString}")
+            case _ => require(dt.isInstanceOf[ArrayType],
+              s"collect(${f.name}) needs an ARRAY field (contributions " +
+                s"concatenate in sequence order), got ${dt.simpleString}")
+          }
+          StructField(StreamTable.FieldListPrefix + f.name, flistType(dt))
+      })
+      case _ => Nil
+    }
+  }
+
+  /** The merge of one PK read: the schema every version is read in, and
+    * the engine's fold of a key's versions to the first `out.length` of
+    * its fields. `out` is the read's output in file-level names; it may
+    * hold the commit sequence and provenance columns, which the folds then
+    * fill (compaction keeps them). Key and sequence columns `out` lacks
+    * come from `stored`. */
+  def plan(t: StreamTable, out: StructType, stored: StructType,
+      nameMap: Map[String, String]): (StructType, Fold) = {
+    val pk = t.primaryKey.get
+    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
+    def add(f: StructField): Unit = if (!fields.contains(f.name)) fields(f.name) = f
+    out.fields.foreach(add)
+    pk.foreach(n => add(stored.find(_.name == n).getOrElse(
+      throw new IllegalStateException(s"key column $n missing from table schema"))))
+    // a compacted-only aggregation table stores no sequence column: its
+    // rows race on their persisted provenance instead
+    t.seqCol.foreach(n => add(stored.find(_.name == n).getOrElse(StructField(n, LongType))))
+    add(StructField(StreamTable.SeqColName, LongType))
+    add(StructField(StreamTable.TombstoneColName, BooleanType))
+    val data = out.fields.toSeq.filterNot(f =>
+      pk.contains(f.name) || StreamTable.isBookkeepingCol(f.name) ||
+        GraftV2Table.MetaCols.contains(f.name))
+    provenance(t, data, nameMap).foreach(add)
+    val internal = StructType(fields.values.toSeq)
+    val idx = internal.fieldIndex _
+    val seqIdx = t.seqCol.map(idx).getOrElse(-1)
+    val commitIdx = idx(StreamTable.SeqColName)
+    val spec = t.aggSpec.getOrElse(Nil).map { case (f, fn) =>
+      nameMap.getOrElse(f, f) -> fn }.toMap
+    val fold = t.effectiveEngine match {
+      case "partial-update" =>
+        PerField(internal, out.length, data.map(f =>
+          (idx(f.name), idx(StreamTable.FieldSeqPrefix + f.name))).toArray,
+          seqIdx, commitIdx)
+      case "aggregation" =>
+        Accumulate(internal, out.length, data.flatMap(f => spec.get(f.name).map { fn =>
+          val prov = fn match {
+            case "last_non_null_value" => idx(StreamTable.FieldSeqPrefix + f.name)
+            case "listagg" | "collect" | "merge_map" =>
+              idx(StreamTable.FieldListPrefix + f.name)
+            case _ => -1
+          }
+          AggField(idx(f.name), fn, prov)
+        }).toArray, seqIdx, commitIdx)
+      case engine =>
+        LastWriter(out.length, internal.fields.map(_.dataType), seqIdx, commitIdx,
+          idx(StreamTable.TombstoneColName), engine == "first-row")
+    }
+    (internal, fold)
+  }
+
   /** Per-key partial-update accumulator: `out` is the output row under
     * construction; `s1`/`s2`/`has` track each folded field's winning
     * per-field sequence (indexed like `fields`). */
@@ -413,7 +454,7 @@ private[graft] object PkMerge {
   /** The per-row partial-update fold: per field, the candidate sequence is
     * the persisted `__graft_fseq_*` struct when present, else (user seq,
     * commit seq) when the row sets the field; the largest (s1, s2, value)
-    * wins — identical to the library's `max(struct(eff, value))`. */
+    * wins (Spark's struct order over `(sequence, value)`). */
   final class PartialOp(internal: StructType, outLen: Int,
       fields: Array[(Int, Int)], seqIdx: Int, commitIdx: Int) {
     private val dts = internal.fields.map(_.dataType)
@@ -437,12 +478,6 @@ private[graft] object PkMerge {
          else numAsLong(row.get(seqIdx, dts(seqIdx))),
           numAsLong(row.get(commitIdx, dts(commitIdx))))
       } else null
-    }
-
-    private def numAsLong(v: Any): Any = v match {
-      case null => null
-      case n: Number => java.lang.Long.valueOf(n.longValue())
-      case other => other
     }
 
     def fresh(row: InternalRow): PartialAcc = {
@@ -485,6 +520,26 @@ private[graft] object PkMerge {
         j += 1
       }
     }
+
+    /** Each output provenance column (compaction keeps them) takes its
+      * field's winning (s1, s2), null when no version set the field. */
+    def finish(acc: PartialAcc): Unit = {
+      var j = 0
+      while (j < fields.length) {
+        val fseqIdx = fields(j)._2
+        if (fseqIdx < outLen) acc.out(fseqIdx) =
+          if (acc.has(j)) new GenericInternalRow(Array[Any](acc.s1(j), acc.s2(j)))
+          else null
+        j += 1
+      }
+    }
+  }
+
+  /** A sequence value as the provenance structs hold it (BIGINT). */
+  def numAsLong(v: Any): Any = v match {
+    case null => null
+    case n: Number => java.lang.Long.valueOf(n.longValue())
+    case other => other
   }
 
   def isTombstone(r: InternalRow, tombIdx: Int): Boolean = {
@@ -596,16 +651,24 @@ private[graft] object PkMerge {
 
   /** Field-wise combine for the aggregation engine: NULL is the identity
     * (matching Spark's null-skipping aggregates); sum/count add in the
-    * field's own type (guarded to BIGINT/DOUBLE at scan build). */
-  def combineAgg(fn: String, a: Any, b: Any): Any =
+    * field's read type, which the table schema widens as Spark's `sum`
+    * does (BIGINT, DOUBLE, DECIMAL(p + 10, s)), so a DECIMAL sum is exact
+    * and its type never moves with the number of compactions. */
+  def combineAgg(fn: String, a: Any, b: Any, dt: DataType): Any =
     if (a == null) b
     else if (b == null) a
     else fn match {
       case "sum" | "count" => (a, b) match {
         case (x: java.lang.Long, y: java.lang.Long) =>
-          java.lang.Long.valueOf(x.longValue() + y.longValue())
+          java.lang.Long.valueOf(Math.addExact(x.longValue(), y.longValue()))
         case (x: java.lang.Double, y: java.lang.Double) =>
           java.lang.Double.valueOf(x.doubleValue() + y.doubleValue())
+        case (x: Decimal, y: Decimal) =>
+          val d = dt.asInstanceOf[DecimalType]
+          val r = x + y
+          if (!r.changePrecision(d.precision, d.scale))
+            throw new ArithmeticException(s"$fn overflows ${d.simpleString}")
+          r
         case other => throw new IllegalStateException(s"unsummable $other")
       }
       case "min" => if (cmpAny(a, b) <= 0) a else b
@@ -628,8 +691,7 @@ private[graft] object PkMerge {
 
   /** deduplicate / first-row: the largest (`sequence.field`, commit) wins
     * (first-row: the smallest); on an exact tie the earlier version in tie
-    * order wins, as in the library's window resolve — so the doors agree,
-    * and a compaction (which persists the library's winner) never changes
+    * order wins, so a compaction (which persists the winner) never changes
     * the answer. */
   case class LastWriter(outLen: Int, dts: Array[DataType], seqIdx: Int,
       commitIdx: Int, tombIdx: Int, firstRow: Boolean) extends Fold {
@@ -646,25 +708,139 @@ private[graft] object PkMerge {
     }
   }
 
+  /** One aggregated field of [[Accumulate]]: its index, its function, and
+    * its provenance column (-1 for the order-blind functions). */
+  case class AggField(idx: Int, fn: String, prov: Int)
+
   /** aggregation: every version combines field-wise by its declared
-    * function (sum/min/max/count — associative and commutative, so the
-    * bucket-local fold equals the distributed aggregate and compacted
-    * partial aggregates re-merge with fresh rows to the same result). */
-  case class Accumulate(outLen: Int, dts: Array[DataType],
-      specs: Array[(Int, String)]) extends Fold {
+    * function. sum/min/max/count/bool_and/bool_or are associative and
+    * commutative, so the bucket-local fold equals the distributed aggregate
+    * and compacted partial aggregates re-merge with fresh rows to the same
+    * result. The ordered functions keep that closure through provenance:
+    * `last_non_null_value` races per field on (sequence, commit) like
+    * partial-update ([[PartialOp]]); `listagg`/`collect`/`merge_map` fold
+    * every contribution in (sequence, commit, value) order, a compacted row
+    * contributing its persisted list. Output provenance columns (compaction
+    * keeps them) and the commit sequence (the largest) are filled too. */
+  case class Accumulate(internal: StructType, outLen: Int, fields: Array[AggField],
+      seqIdx: Int, commitIdx: Int) extends Fold {
+    @transient private lazy val dts = internal.fields.map(_.dataType)
+    @transient private lazy val lastOp = new PartialOp(internal, outLen,
+      fields.filter(_.fn == "last_non_null_value").map(f => (f.idx, f.prov)),
+      seqIdx, commitIdx)
+    @transient private lazy val combined =
+      fields.filter(f => f.prov < 0).map(f => (f.idx, f.fn, dts(f.idx)))
+    @transient private lazy val lists = fields.filter(f => ListFns(f.fn))
+
     override def apply(versions: Iterator[InternalRow]): InternalRow = {
-      var acc: Array[Any] = null
-      versions.foreach { row =>
-        if (acc == null) {
-          acc = new Array[Any](outLen)
-          var i = 0
-          while (i < outLen) { acc(i) = row.get(i, dts(i)); i += 1 }
-        } else specs.foreach { case (i, fn) =>
-          acc(i) = combineAgg(fn, acc(i), row.get(i, dts(i)))
+      if (!versions.hasNext) return null
+      val first = versions.next()
+      val acc = lastOp.fresh(first)
+      val contribs = lists.map { _ => scala.collection.mutable.ArrayBuffer.empty[InternalRow] }
+      def contribute(row: InternalRow): Unit = {
+        var j = 0
+        while (j < lists.length) {
+          val f = lists(j)
+          if (!row.isNullAt(f.prov)) {
+            val arr = row.getArray(f.prov)
+            val et = dts(f.prov).asInstanceOf[ArrayType].elementType
+            var i = 0
+            while (i < arr.numElements()) {
+              contribs(j) += arr.get(i, et).asInstanceOf[InternalRow]; i += 1
+            }
+          } else if (!row.isNullAt(f.idx))
+            contribs(j) += new GenericInternalRow(Array[Any](
+              if (seqIdx < 0) java.lang.Long.valueOf(0L)
+              else numAsLong(row.get(seqIdx, dts(seqIdx))),
+              numAsLong(row.get(commitIdx, dts(commitIdx))),
+              row.get(f.idx, dts(f.idx))))
+          j += 1
         }
       }
-      if (acc == null) null else new GenericInternalRow(acc)
+      contribute(first)
+      var commit = first.get(commitIdx, LongType)
+      versions.foreach { row =>
+        combined.foreach { case (i, fn, dt) =>
+          acc.out(i) = combineAgg(fn, acc.out(i), row.get(i, dt), dt)
+        }
+        lastOp.update(acc, row)
+        contribute(row)
+        commit = combineAgg("max", commit, row.get(commitIdx, LongType), LongType)
+      }
+      lastOp.finish(acc)
+      var j = 0
+      while (j < lists.length) {
+        val f = lists(j)
+        val vt = dts(f.idx)
+        val sorted = sortContributions(f.fn, contribs(j).toSeq, vt)
+        acc.out(f.idx) = if (sorted.isEmpty) null else render(f.fn, sorted, vt)
+        if (f.prov < outLen) acc.out(f.prov) =
+          if (sorted.isEmpty) null
+          else new org.apache.spark.sql.catalyst.util.GenericArrayData(sorted.toArray[Any])
+        j += 1
+      }
+      if (commitIdx < outLen) acc.out(commitIdx) = commit
+      new GenericInternalRow(acc.out)
     }
+  }
+
+  val ListFns: Set[String] = Set("listagg", "collect", "merge_map")
+
+  /** Ascending Spark order of one value type, nulls first. */
+  private def nullsFirst(dt: DataType): (Any, Any) => Int = {
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+    (a, b) => if (a == null) { if (b == null) 0 else -1 } else if (b == null) 1
+      else ord.compare(a, b)
+  }
+
+  /** A list fold's contributions `(s1, s2, v)` in fold order: by
+    * (sequence, commit), the value breaking exact ties — real feeds carry
+    * duplicate sequence values, and an arbitrary tie order would make the
+    * fold differ between runs. MAP values are not orderable, so merge_map
+    * keeps version order among exact ties (its entries order below). */
+  def sortContributions(fn: String, cs: Seq[InternalRow], vt: DataType): Seq[InternalRow] = {
+    val byV = if (fn == "merge_map") null else nullsFirst(vt)
+    cs.sortWith { (x, y) =>
+      val c1 = cmpAny(x.get(0, LongType), y.get(0, LongType))
+      val c = if (c1 != 0) c1 else {
+        val c2 = cmpAny(x.get(1, LongType), y.get(1, LongType))
+        if (c2 != 0 || byV == null) c2 else byV(x.get(2, vt), y.get(2, vt))
+      }
+      c < 0
+    }
+  }
+
+  /** The folded value of sorted contributions: listagg joins the strings
+    * with ','; collect concatenates the arrays; merge_map keeps, per map
+    * key, the entry of the latest (sequence, commit) — the larger value on
+    * an exact tie — with the kept entries in that order. */
+  def render(fn: String, sorted: Seq[InternalRow], vt: DataType): Any = fn match {
+    case "listagg" =>
+      org.apache.spark.unsafe.types.UTF8String.concatWs(
+        org.apache.spark.unsafe.types.UTF8String.fromString(","),
+        sorted.map(_.getUTF8String(2)): _*)
+    case "collect" =>
+      val et = vt.asInstanceOf[ArrayType].elementType
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        sorted.flatMap(_.getArray(2).toSeq[Any](et)).toArray)
+    case "merge_map" =>
+      val mt = vt.asInstanceOf[MapType]
+      val (byK, byW) = (nullsFirst(mt.keyType), nullsFirst(mt.valueType))
+      val entries = sorted.flatMap { c =>
+        val m = c.getMap(2)
+        val (ks, ws) = (m.keyArray(), m.valueArray())
+        (0 until m.numElements()).map(i => (c.get(0, LongType), c.get(1, LongType),
+          ks.get(i, mt.keyType), ws.get(i, mt.valueType)))
+      }.sortWith { (x, y) =>
+        val c = Seq(cmpAny(x._1, y._1), cmpAny(x._2, y._2), byK(x._3, y._3),
+          byW(x._4, y._4)).find(_ != 0).getOrElse(0)
+        c < 0
+      }
+      val seen = scala.collection.mutable.HashSet.empty[Any]
+      val kept = entries.reverseIterator.filter(e => seen.add(e._3)).toSeq.reverse
+      new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(kept.map(_._3).toArray),
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(kept.map(_._4).toArray))
   }
 
   /** partial-update: every non-key field resolves independently to the
@@ -678,8 +854,15 @@ private[graft] object PkMerge {
     override def apply(versions: Iterator[InternalRow]): InternalRow =
       if (!versions.hasNext) null
       else {
-        val acc = op.fresh(versions.next())
-        versions.foreach(op.update(acc, _))
+        val first = versions.next()
+        val acc = op.fresh(first)
+        var commit = first.get(commitIdx, LongType)
+        versions.foreach { row =>
+          op.update(acc, row)
+          commit = combineAgg("max", commit, row.get(commitIdx, LongType), LongType)
+        }
+        op.finish(acc)
+        if (commitIdx < outLen) acc.out(commitIdx) = commit
         new GenericInternalRow(acc.out)
       }
   }

@@ -450,8 +450,8 @@ object V2Queries {
     // order with per-contribution provenance persisted at compaction, so a
     // compacted partial fold re-merges with OUT-OF-ORDER arrivals to the
     // same seq-ordered result (the stager compacts between the two halves
-    // to force exactly that). Ordered folds keep the LIBRARY view — the
-    // native V2 fold is order-blind and refuses them loudly.
+    // to force exactly that). The per-bucket readers fold them in
+    // (sequence, commit, value) order.
     QDef(
       "q_source_v2_pk_listagg",
       """SELECT l_orderkey,

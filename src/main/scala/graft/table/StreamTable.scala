@@ -8,7 +8,6 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
@@ -742,11 +741,11 @@ class StreamTable(
     * guide.md:69-73): per key the batch touched, the OLD resolved image
     * retracts and the NEW resolved image asserts — exactly one commit's
     * slice of [[changelogWithRetractions]], written as level-0 files under
-    * `data/changelog/` and referenced by the snapshot. Cost: one resolve of
-    * the TOUCHED buckets (bucket-pruned when the layout allows), not the
-    * table — the write-time dual of Paimon's 'lookup' producer; the payoff
-    * is every downstream CDC trigger reading O(interval changelog) instead
-    * of re-resolving two full snapshots. */
+    * `data/changelog/` and referenced by the snapshot. Cost: one k-way
+    * merge of the TOUCHED buckets (bucket-pruned when the layout allows),
+    * not the table — the write-time dual of Paimon's 'lookup' producer;
+    * the payoff is every downstream CDC trigger reading O(interval
+    * changelog) instead of re-resolving two full snapshots. */
   private def stageChangelog(newMetas: Seq[DataFileMeta], batchId: Long): Seq[DataFileMeta] = {
     val pk = primaryKey.get
     val prev = latestSnapshot.map(_.files).getOrElse(Seq.empty)
@@ -757,17 +756,21 @@ class StreamTable(
         val touched = newMetas.flatMap(_.bucket).toSet
         prev.filter(f => touched.contains(f.bucket.get))
       } else prev
-    // co-locate the change rows with their key's bucket (via writeClustered's
-    // content-derived labeling) so the CDC reader keeps the per-bucket plan
-    val ops =
-      if (prevKept.isEmpty)
-        // first commit into these buckets: no old images exist, so the whole
-        // netted changelog is the resolved new state as +I — ONE resolve,
-        // no key join (resolveView already drops tombstone winners)
-        resolveView(readFiles(newMetas), pk, keepSeq = false)
-          .withColumn("op", lit("+I"))
-      else fusedChangelog(prevKept, newMetas, pk)
-    persistChangelog(ops, batchId, s"cl$batchId")
+    // the per-bucket state diff: per key the new files touch, the fold of
+    // the previous files retracts and the fold of previous + new asserts
+    // (first commit into a bucket: every touched key is +I); persisted
+    // co-located with its key's bucket (writeClustered's content-derived
+    // labeling) so the CDC reader keeps the per-bucket plan. A previous
+    // file written before sorted runs were required is diffed through a
+    // key-sorted copy, so appends keep working until compaction upgrades
+    // the layout.
+    val sortedRuns = s"$root/.staging-${UUID.randomUUID()}"
+    try {
+      val prevRuns = asSortedRuns(prevKept, pk, sortedRuns)
+      val ops = graft.sources.v2.ChangelogPlanning.diffFrame(this, prevRuns,
+        prevRuns ++ newMetas, newMetas)
+      persistChangelog(ops, batchId, s"cl$batchId")
+    } finally deleteRecursively(Paths.get(sortedRuns))
   }
 
   /** Stage a netted-ops frame (`op` column + images) as level-0 changelog
@@ -1419,7 +1422,7 @@ class StreamTable(
             .map(_.cast(schema(c).dataType).as(c)).getOrElse(col(c))
         }: _*)
         val n = images.count()
-        if (n > 0) appendBatch(images,
+        if (n > 0) appendBatch(graft.sources.v2.GraftV2Table.storedNames(this, images),
           latestSnapshot.map(s => math.max(s.batchId, -1L) + 1).getOrElse(0L))
         n
       case None =>
@@ -1869,7 +1872,7 @@ class StreamTable(
       val counts = actions.map { case (df, kind) => (df.count(), kind) }
       val all = actions.map(_._1).reduce(_.unionByName(_))
       if (counts.map(_._1).sum > 0)
-        appendBatch(all,
+        appendBatch(graft.sources.v2.GraftV2Table.storedNames(this, all),
           latestSnapshot.map(s => math.max(s.batchId, -1L) + 1).getOrElse(0L))
       def total(kind: Int) = counts.collect { case (n, `kind`) => n }.sum
       MergeResult(updated = total(0), deleted = total(1), inserted = total(2))
@@ -1984,189 +1987,26 @@ class StreamTable(
     if (plain.isEmpty) dvRead else raw(plain).union(dvRead)
   }
 
-  /** Last-writer-wins resolution incl. delete tombstones, under the Paimon
-    * `sequence.field` contract: when a sequence column is configured, the row
-    * with the LARGEST sequence value wins regardless of arrival order (a late
-    * batch carrying a stale sequence must not overwrite newer data); the
-    * commit batch id only breaks sequence ties. Without one, commit order
-    * decides. `keepSeq` retains the commit-sequence column (compaction needs
-    * it so later appends still resolve against the rewritten files). */
-  private def resolve(raw: DataFrame, pk: Seq[String], keepSeq: Boolean): DataFrame = {
-    val order = seqCol.map(c => col(c).desc).toSeq :+ col(SeqColName).desc
-    val w = Window.partitionBy(pk.map(col): _*).orderBy(order: _*)
-    val withTomb =
-      if (raw.columns.contains(TombstoneColName)) raw
-      else raw.withColumn(TombstoneColName, lit(false))
-    val resolved = withTomb.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .filter(!coalesce(col(TombstoneColName), lit(false)))
-      .drop("__rn", TombstoneColName)
-    if (keepSeq) resolved else resolved.drop(SeqColName)
-  }
-
-  /** Aggregation merge (merge-engine=aggregation): same-key rows collapse by
-    * the declared per-field function. `count` on a field means "sum the
-    * partial counts" (incoming rows carry 1, compacted rows carry their
-    * merged count) — that re-merge closure is why only associative+
-    * commutative functions are allowed. `bool_and`/`bool_or` fold like
-    * min/max (idempotent, order-insensitive). `last_non_null_value` is the
-    * one ORDERED function in the alphabet: it races on the declared
-    * sequence field (required at construction) with the same persisted
-    * per-field `__graft_fseq_<f>` provenance as partial-update — a
-    * compacted row's field keeps the sequence that actually set it, so an
-    * out-of-order arrival after compaction still loses to the true winner
-    * (re-merge closure holds). */
-  private def aggResolve(raw: DataFrame, pk: Seq[String], keepSeq: Boolean): DataFrame = {
-    val spec = aggSpec.get
-    // the aggregation view DROPS the sequence column (only pk + spec fields
-    // survive), so a compacted-only read has no seqCol column at all — its
-    // rows carry the persisted per-field provenance instead, and the
-    // baseOrd fallback is only consulted for FRESH rows (which do carry it)
-    val baseOrd = struct(
-      seqCol.filter(raw.columns.contains).map(col(_).cast("long"))
-        .getOrElse(lit(0L)).as("s1"),
-      col(SeqColName).cast("long").as("s2"))
-    def eff(f: String): org.apache.spark.sql.Column = {
-      val persisted =
-        if (raw.columns.contains(FieldSeqPrefix + f)) col(FieldSeqPrefix + f)
-        else lit(null).cast("struct<s1:bigint,s2:bigint>")
-      when(persisted.isNotNull, persisted)
-        .when(col(f).isNotNull, baseOrd)
-    }
-    val aggs = spec.flatMap { case (f, fn) =>
-      fn match {
-        case "sum" | "count" => Seq(sum(col(f)).as(f))
-        case "min"           => Seq(min(col(f)).as(f))
-        case "max"           => Seq(max(col(f)).as(f))
-        case "bool_and"      => Seq(bool_and(col(f)).as(f))
-        case "bool_or"       => Seq(bool_or(col(f)).as(f))
-        case "last_non_null_value" =>
-          val win = max(when(eff(f).isNotNull, struct(eff(f).as("s"), col(f).as("v"))))
-          Seq(win.getField("v").as(f), win.getField("s").as(FieldSeqPrefix + f))
-        case "listagg" | "collect" | "merge_map" =>
-          // ordered LIST folds — the sequence-group mechanism generalized
-          // from one winner to a list: every contribution keeps its
-          // (sequence, commit) provenance in a persisted companion array,
-          // so a compacted partial fold re-merges with out-of-order
-          // arrivals to the same seq-ordered result. listagg renders the
-          // ','-joined text of string contributions; collect concatenates
-          // array contributions in sequence order (the declared field IS
-          // the array type, so fresh and compacted files share one schema).
-          // The aggregate emits the sorted pair list (and merge_map's
-          // reversed entry list) as AGG OUTPUT columns — computed once per
-          // group, safe from predicate-pushdown re-inlining; the cheap view
-          // renders over the attributes below (see listFoldAggCols).
-          StreamTable.listFoldAggCols(fn,
-            StreamTable.listFoldRaw(fn, f, raw.schema, raw.columns,
-              baseOrd, gate = lit(true)),
-            FieldListPrefix + f, "__graft_rev_" + f)
-      }
-    } ++ (if (keepSeq) Seq(max(col(SeqColName)).as(SeqColName)) else Nil)
-    val grouped = raw.groupBy(pk.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    val listFns = Set("listagg", "collect", "merge_map")
-    val rendered = spec.foldLeft(grouped) { case (df, (f, fn)) =>
-      if (listFns(fn))
-        df.withColumn(f,
-            StreamTable.listFoldView(fn, FieldListPrefix + f, "__graft_rev_" + f))
-          .drop("__graft_rev_" + f)
-      else df
-    }
-    // restore the pre-render column order (view field before its companion)
-    val merged = rendered.select(
-      (pk.map(col) ++ spec.flatMap { case (f, fn) =>
-        if (fn == "last_non_null_value") Seq(col(f), col(FieldSeqPrefix + f))
-        else if (listFns(fn)) Seq(col(f), col(FieldListPrefix + f))
-        else Seq(col(f))
-      } ++ (if (keepSeq) Seq(col(SeqColName)) else Nil)): _*)
-    if (keepSeq) merged
-    else merged.drop(merged.columns.filter(c =>
-      c.startsWith(FieldSeqPrefix) || c.startsWith(FieldListPrefix)): _*)
-  }
-
-  /** First-writer-wins (merge-engine=first-row): the mirror image of
-    * [[resolve]] — ascending (seqCol, commit) order, smallest wins. Later
-    * arrivals are discarded at every merge site, so compaction is free to
-    * materialize the winner (keepSeq retains its commit seq; a re-merge
-    * against later appends still resolves to it because its seq is
-    * smallest). Deletes are refused at write (Paimon first-row has no
-    * retract path either). */
-  private def firstRowResolve(raw: DataFrame, pk: Seq[String], keepSeq: Boolean): DataFrame = {
-    val order = seqCol.map(c => col(c).asc).toSeq :+ col(SeqColName).asc
-    val w = Window.partitionBy(pk.map(col): _*).orderBy(order: _*)
-    val resolved = raw.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-    if (keepSeq) resolved else resolved.drop(SeqColName)
-  }
-
-  /** Per-field last-non-null merge (merge-engine=partial-update): every
-    * non-key field resolves independently to the value set at the LARGEST
-    * (seqCol, commit) among rows where it is non-null — NULL means "not
-    * written", never "set to null". Associativity needs per-field
-    * provenance: a compacted row's field may have been set at a sequence
-    * far below the row's own, so each field's winning sequence is persisted
-    * as a `__graft_fseq_<f>` struct column and re-used on re-merge (else an
-    * out-of-order arrival between the two would lose to the compacted row's
-    * inflated sequence — the bug Paimon's sequence-groups exist to fix).
-    * Within one (seq, commit) tie the larger value wins: deterministic,
-    * and Spark and DuckDB agree on it. */
-  private def partialResolve(raw: DataFrame, pk: Seq[String], keepSeq: Boolean): DataFrame = {
-    val meta = pk.toSet + SeqColName + TombstoneColName
-    val fields = raw.columns.filterNot(c => meta.contains(c) || c.startsWith(FieldSeqPrefix))
-    val baseOrd = struct(
-      seqCol.map(col(_).cast("long")).getOrElse(lit(0L)).as("s1"),
-      col(SeqColName).cast("long").as("s2"))
-    def eff(f: String): org.apache.spark.sql.Column = {
-      val persisted =
-        if (raw.columns.contains(FieldSeqPrefix + f)) col(FieldSeqPrefix + f)
-        else lit(null).cast("struct<s1:bigint,s2:bigint>")
-      when(persisted.isNotNull, persisted)
-        .when(col(f).isNotNull, baseOrd)
-    }
-    // max() skips null inputs, so rows that never set the field drop out of
-    // that field's race; struct comparison orders by (fseq, value)
-    val aggs = fields.flatMap { f =>
-      val win = max(when(eff(f).isNotNull, struct(eff(f).as("s"), col(f).as("v"))))
-      Seq(win.getField("v").as(f), win.getField("s").as(FieldSeqPrefix + f))
-    } ++ (if (keepSeq) Seq(max(col(SeqColName)).as(SeqColName)) else Nil)
-    val merged = raw.groupBy(pk.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    if (keepSeq) merged else merged.drop(merged.columns.filter(_.startsWith(FieldSeqPrefix)): _*)
-  }
-
-  private def resolveView(raw: DataFrame, pk: Seq[String], keepSeq: Boolean): DataFrame =
-    engine match {
-      case "aggregation"    => aggResolve(raw, pk, keepSeq)
-      case "first-row"      => firstRowResolve(raw, pk, keepSeq)
-      case "partial-update" => partialResolve(raw, pk, keepSeq)
-      case _                => resolve(raw, pk, keepSeq)
-    }
-
   /** Batch read of the current snapshot (manifest-based, so compaction and
-    * retention are invisible to readers). PK tables get the last-writer-wins
-    * view (upsert materialization, guide.md:59-74) — or the aggregation
-    * merge view when `aggSpec` declares one. */
-  def read: DataFrame = {
-    val files = latestSnapshot.map(_.files).getOrElse(Seq.empty)
-    if (files.isEmpty) return spark.emptyDataFrame
-    val raw = readFiles(files)
-    primaryKey match {
-      case None => raw.drop(SeqColName)
-      case Some(pk) => resolveView(raw, pk, keepSeq = false)
-    }
-  }
+    * retention are invisible to readers). A PK table reads through the
+    * connector's relation ([[graft.sources.v2.GraftPkScan]]: per bucket, a
+    * k-way merge of sorted runs and the merge engine's fold — upsert
+    * materialization, guide.md:59-74), pinned to the snapshot current at
+    * call time, so the frame keeps that answer after later commits. */
+  def read: DataFrame = latestSnapshot.map(readSnapshot).getOrElse(spark.emptyDataFrame)
 
   /** Time travel: batch read AS OF an earlier snapshot id (Paimon/Delta
     * snapshot reads — the manifest makes every committed version readable
     * until retention expires it). */
-  def readAt(snapshotId: Long): DataFrame = {
-    val snap = snapshotAt(snapshotId)
-      .getOrElse(throw new IllegalArgumentException(s"no snapshot $snapshotId"))
-    if (snap.files.isEmpty) return spark.emptyDataFrame
-    val raw = readFiles(snap.files)
-    primaryKey match {
-      case None => raw.drop(SeqColName)
-      case Some(pk) => resolveView(raw, pk, keepSeq = false)
-    }
-  }
+  def readAt(snapshotId: Long): DataFrame =
+    readSnapshot(snapshotAt(snapshotId)
+      .getOrElse(throw new IllegalArgumentException(s"no snapshot $snapshotId")))
+
+  private def readSnapshot(snap: Snapshot): DataFrame =
+    if (snap.files.isEmpty) spark.emptyDataFrame
+    else if (primaryKey.isEmpty) readFiles(snap.files).drop(SeqColName)
+    else graft.sources.v2.GraftV2Table.frame(
+      graft.sources.v2.GraftV2Table.library(this, Some(snap.id)))
 
   /** Time travel AS OF a wall-clock instant (Paimon `scan.timestamp-millis`):
     * read the newest snapshot committed at or before `tsMs`. Resolution is
@@ -2274,229 +2114,19 @@ class StreamTable(
     * pass-through view (`changelog-producer='input'`) that never reads old
     * images. */
   def changelogWithRetractions(fromId: Long, toId: Long): DataFrame = {
-    val pk = primaryKey.getOrElse(throw new UnsupportedOperationException(
-      "changelogWithRetractions requires a primary-key table"))
+    require(primaryKey.isDefined,
+      "changelogWithRetractions requires a primary-key table")
     val heads = snapshotHeaders
     val byId = heads.map(s => s.id -> s).toMap
-    def snapAt(id: Long) = byId.getOrElse(id,
-      throw new IllegalArgumentException(s"no snapshot $id"))
-    // only the two ENDPOINT snapshots hydrate (their resolved states carry
-    // the images); the per-commit walk reads delta manifests
-    def files(id: Long) = hydrated(snapAt(id)).files
-    // changed-key evidence walked COMMIT-BY-COMMIT — the rule shared with
-    // the V2 planner (see [[StreamTable.intervalEvidence]])
-    val (added, removedEv) =
-      StreamTable.intervalEvidence(snapAt, deltaOf, hydrated, fromId, toId)
-    val evidence = (added ++ removedEv).distinct
-    // a typed empty frame even when a snapshot has NO files (a truncating
-    // overwrite): `read` on an empty latest snapshot is schema-less, which
-    // would break the key join below
-    def emptyState(): DataFrame =
-      Seq(files(toId), files(fromId)).find(_.nonEmpty) match {
-        case Some(fs) => resolveView(readFiles(fs), pk, keepSeq = false).limit(0)
-        case None => read.limit(0)
-      }
-    // empty changelog keeps the table's schema + op so consumers can still
-    // select their columns
-    if (evidence.isEmpty) return emptyState().withColumn("op", lit(""))
-    // keys touched in the interval…
-    val changedKeys = readFiles(evidence).select(pk.map(col): _*).distinct()
-    // …but their images come from the RESOLVED states, so a stale-sequence
-    // arrival that loses last-writer-wins resolution (seqCol contract) can
-    // never retract the live row or emit a stale image: for such keys the
-    // -U/+U pair carries identical images and a delta-consumer nets zero.
-    val oldState =
-      if (files(fromId).isEmpty) emptyState()
-      else resolveView(readFiles(files(fromId)), pk, keepSeq = false)
-    val newState =
-      (if (files(toId).isEmpty) emptyState() // overwritten to empty: all -D
-       else resolveView(readFiles(files(toId)), pk, keepSeq = false))
-      .join(changedKeys, pk, "left_semi")
-    val oldChanged = oldState.join(changedKeys, pk, "left_semi")
-    netOps(oldChanged, newState, pk)
-  }
-
-  /** The producer's one-shuffle changelog: old AND new per-key images come
-    * out of a SINGLE aggregation over (previous ∪ fresh) rows — the old
-    * image aggregates only the pre-commit rows (a conditional aggregate /
-    * null-ordered `max_by`, which skips them like any null input), the new
-    * image aggregates everything, and `max(isNew)` marks the touched keys —
-    * so a commit costs ONE shuffle over the touched buckets instead of two
-    * resolves plus key joins. Engine-correct by the same arguments as the
-    * read-side merges: LWW/first-row pick by (sequence, commit) order,
-    * aggregation folds are associative+commutative, partial-update races
-    * per field on its provenance. Exact-tie image choice is arbitrary
-    * (matching every other merge site's contract).
-    *
-    * Emission matches [[netOps]]: old+new → `-U old, +U new` (identical
-    * images for a stale arrival — a delta consumer nets zero); old only
-    * (tombstone won) → `-D old`; new only → `+I new`. */
-  private def fusedChangelog(prevFiles: Seq[DataFileMeta],
-      newMetas: Seq[DataFileMeta], pk: Seq[String]): DataFrame = {
-    val marker = "__graft_isnew"
-    val all = readFiles(prevFiles).withColumn(marker, lit(false))
-      .unionByName(readFiles(newMetas).withColumn(marker, lit(true)),
-        allowMissingColumns = true)
-    val isNew = col(marker)
-    val metaCols = pk.toSet + SeqColName + TombstoneColName + marker
-    val fields = all.columns
-      .filterNot(c => metaCols.contains(c) || c.startsWith(FieldSeqPrefix) ||
-        c.startsWith(FieldListPrefix)).toSeq
-    val tomb =
-      if (all.columns.contains(TombstoneColName))
-        coalesce(col(TombstoneColName), lit(false))
-      else lit(false)
-
-    // (old image struct | null, new image struct | null, touched) per key;
-    // each branch also names ITS image fields (the aggregation view carries
-    // only the declared aggregate fields — a stored column outside the spec
-    // must not reach the emission select)
-    val (staged: DataFrame, imgFields: Seq[String]) = engine match {
-      case "aggregation" =>
-        val spec = aggSpec.get
-        // same compacted-only guard as aggResolve: the merged view drops
-        // the sequence column, provenance rides the persisted fseq structs
-        val baseOrd = struct(
-          seqCol.filter(all.columns.contains).map(col(_).cast("long"))
-            .getOrElse(lit(0L)).as("s1"),
-          col(SeqColName).cast("long").as("s2"))
-        def eff(f: String): org.apache.spark.sql.Column = {
-          val persisted =
-            if (all.columns.contains(FieldSeqPrefix + f)) col(FieldSeqPrefix + f)
-            else lit(null).cast("struct<s1:bigint,s2:bigint>")
-          when(persisted.isNotNull, persisted)
-            .when(col(f).isNotNull, baseOrd)
-        }
-        val listFns = Set("listagg", "collect", "merge_map")
-        def fold(fn: String, f: String, gate: org.apache.spark.sql.Column) = {
-          val c = when(gate, col(f))
-          fn match {
-            case "sum" | "count" => sum(c)
-            case "min"           => min(c)
-            case "max"           => max(c)
-            case "bool_and"      => bool_and(c)
-            case "bool_or"       => bool_or(c)
-            // the ordered functions race/fold on their persisted
-            // provenance, like the read-side merge (aggResolve); the LIST
-            // folds emit their sorted pair/entry lists as agg output
-            // columns (listFoldAggCols) and render below — never inlined
-            // where pushdown could re-evaluate them per reference
-            case "last_non_null_value" =>
-              max(when(gate && eff(f).isNotNull,
-                struct(eff(f).as("s"), col(f).as("v")))).getField("v")
-          }
-        }
-        val aggs = spec.flatMap { case (f, fn) =>
-          if (listFns(fn))
-            StreamTable.listFoldAggCols(fn,
-              StreamTable.listFoldRaw(fn, f, all.schema, all.columns,
-                baseOrd, lit(true)), s"__nwp_$f", s"__nwr_$f") ++
-            StreamTable.listFoldAggCols(fn,
-              StreamTable.listFoldRaw(fn, f, all.schema, all.columns,
-                baseOrd, !isNew), s"__owp_$f", s"__owr_$f")
-          else
-            Seq(fold(fn, f, lit(true)).as(s"__nw_$f"),
-              fold(fn, f, !isNew).as(s"__ow_$f"))
-        } ++ Seq(count(when(!isNew, lit(1))).as("__nold"), max(isNew).as("__t"))
-        val grouped = all.groupBy(pk.map(col): _*).agg(aggs.head, aggs.tail: _*)
-        val renderedG = spec.foldLeft(grouped) { case (df, (f, fn)) =>
-          if (!listFns(fn)) df
-          else df
-            .withColumn(s"__nw_$f",
-              StreamTable.listFoldView(fn, s"__nwp_$f", s"__nwr_$f"))
-            .withColumn(s"__ow_$f",
-              StreamTable.listFoldView(fn, s"__owp_$f", s"__owr_$f"))
-        }
-        (renderedG
-          .select(pk.map(col) ++ Seq(
-            when(col("__nold") > 0,
-              struct(spec.map(s => col(s"__ow_${s._1}").as(s._1)): _*)).as("__ow"),
-            struct(spec.map(s => col(s"__nw_${s._1}").as(s._1)): _*).as("__nw"),
-            col("__t")): _*), spec.map(_._1))
-      case "partial-update" =>
-        val baseOrd = struct(
-          seqCol.map(col(_).cast("long")).getOrElse(lit(0L)).as("s1"),
-          col(SeqColName).cast("long").as("s2"))
-        def eff(f: String) = {
-          val persisted =
-            if (all.columns.contains(FieldSeqPrefix + f)) col(FieldSeqPrefix + f)
-            else lit(null).cast("struct<s1:bigint,s2:bigint>")
-          when(persisted.isNotNull, persisted).when(col(f).isNotNull, baseOrd)
-        }
-        val aggs = fields.flatMap { f =>
-          val cand = struct(eff(f).as("s"), col(f).as("v"))
-          Seq(max(when(eff(f).isNotNull, cand)).getField("v").as(s"__nw_$f"),
-            max(when(eff(f).isNotNull && !isNew, cand)).getField("v").as(s"__ow_$f"))
-        } ++ Seq(count(when(!isNew, lit(1))).as("__nold"), max(isNew).as("__t"))
-        (all.groupBy(pk.map(col): _*).agg(aggs.head, aggs.tail: _*)
-          .select(pk.map(col) ++ Seq(
-            when(col("__nold") > 0,
-              struct(fields.map(f => col(s"__ow_$f").as(f)): _*)).as("__ow"),
-            struct(fields.map(f => col(s"__nw_$f").as(f)): _*).as("__nw"),
-            col("__t")): _*), fields)
-      case _ => // deduplicate | first-row: pick the winning VERSION per key
-        val ord = struct(
-          seqCol.map(col).getOrElse(lit(0L)).as("s1"), col(SeqColName).as("s2"))
-        val img = struct(fields.map(col) :+ tomb.as("__tomb"): _*)
-        def pick(o: org.apache.spark.sql.Column) =
-          if (engine == "first-row") min_by(img, o) else max_by(img, o)
-        (all.groupBy(pk.map(col): _*).agg(
-          pick(ord).as("__nwr"),
-          // null ordering skips the fresh rows — the old-state winner
-          pick(when(!isNew, ord)).as("__owr"),
-          max(isNew).as("__t"))
-          .select(pk.map(col) ++ Seq(
-            when(col("__owr").isNotNull && !col("__owr").getField("__tomb"),
-              struct(fields.map(f => col(s"__owr.$f").as(f)): _*)).as("__ow"),
-            when(col("__nwr").isNotNull && !col("__nwr").getField("__tomb"),
-              struct(fields.map(f => col(s"__nwr.$f").as(f)): _*)).as("__nw"),
-            col("__t")): _*), fields)
-    }
-    emitOps(staged.filter(col("__t")), pk, imgFields)
-  }
-
-  /** Shared changelog-alphabet emission over a per-key frame of
-    * `(__ow: old image | null, __nw: new image | null)`: both → `-U old,
-    * +U new` (identical images for a stale arrival — a delta consumer nets
-    * zero); old only → `-D old`; new only → `+I new`. Used by both the
-    * fused write-time producer and [[netOps]], so the fast path and the
-    * state-diff fallback can never drift. */
-  private def emitOps(staged: DataFrame, pk: Seq[String],
-      imgFields: Seq[String]): DataFrame =
-    staged.filter(col("__ow").isNotNull || col("__nw").isNotNull)
-      .select(pk.map(col) :+ explode(
-        when(col("__ow").isNotNull && col("__nw").isNotNull,
-          array(struct(lit("-U").as("op"), col("__ow").as("img")),
-            struct(lit("+U").as("op"), col("__nw").as("img"))))
-          .when(col("__nw").isNull,
-            array(struct(lit("-D").as("op"), col("__ow").as("img"))))
-          .otherwise(array(struct(lit("+I").as("op"), col("__nw").as("img")))))
-        .as("__e"): _*)
-      .select(pk.map(col) ++
-        imgFields.map(f => col(s"__e.img.$f").as(f)) :+
-        col("__e.op").as("op"): _*)
-
-  /** Net two per-key resolved states into the changelog alphabet: old+new →
-    * `-U old, +U new`; old only → `-D old`; new only → `+I new` (shared by
-    * [[changelogWithRetractions]] and the write-time changelog producer).
-    *
-    * ONE full-outer join on the key, payloads packed as structs, then the
-    * op rows explode out — retractions carry the OLD image (`-D` when the
-    * key is gone from the new state, i.e. a tombstone won). Columns align
-    * by name first (a pre-evolution old state null-fills columns it
-    * predates). */
-  private def netOps(oldChanged: DataFrame, newState: DataFrame,
-      pk: Seq[String]): DataFrame = {
-    val payload = (newState.schema.filterNot(f => pk.contains(f.name)) ++
-      oldChanged.schema.filterNot(f =>
-        pk.contains(f.name) || newState.columns.contains(f.name))).toSeq
-    def packed(df: DataFrame, as: String) = df.select(pk.map(col) :+
-      struct(payload.map(f =>
-        if (df.columns.contains(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)): _*).as(as): _*)
-    val joined = packed(oldChanged, "__ow")
-      .join(packed(newState, "__nw"), pk, "full_outer")
-    emitOps(joined, pk, payload.map(_.name))
+    def files(id: Long) = hydrated(byId.getOrElse(id,
+      throw new IllegalArgumentException(s"no snapshot $id"))).files
+    // per changed key (the interval's evidence walked commit-by-commit,
+    // [[StreamTable.intervalEvidence]]) the images come from the merged
+    // states, so a stale-sequence arrival that loses the merge never
+    // retracts the live row: its -U/+U pair carries identical images and
+    // a delta-consumer nets zero
+    graft.sources.v2.ChangelogPlanning.intervalFrame(this, heads, fromId, toId,
+      files(fromId) ++ files(toId))
   }
 
   /** Incremental changelog read between two snapshots (the
@@ -2543,10 +2173,19 @@ class StreamTable(
     }
   }
 
+  /** No rows, the head's columns in stored (file-level) names: the empty
+    * answer of the change surfaces, whose rows carry the files' names. */
+  private def storedEmpty: DataFrame = latestSnapshot match {
+    case Some(s) if primaryKey.isDefined && s.files.nonEmpty =>
+      graft.sources.v2.GraftV2Table.frame(
+        graft.sources.v2.GraftV2Table.library(this, Some(s.id), stored = true)).limit(0)
+    case _ => read.limit(0)
+  }
+
   def changesBetween(fromId: Long, toId: Long): DataFrame = {
     // compaction rewrites are not logical changes
     val newFiles = addedBetween(fromId, toId).filter(_.level == 0)
-    if (newFiles.isEmpty) return read.limit(0).withColumn("op", lit(""))
+    if (newFiles.isEmpty) return storedEmpty.withColumn("op", lit(""))
     // widened to the table's value schema at toId: an interval of only
     // delete tombstones still returns every column, NULL on its -D rows
     val added = readFiles(newFiles,
@@ -2883,7 +2522,7 @@ class StreamTable(
       // unconsumed one; next == 0 means "from table creation" (empty base)
       val df = if (next == 0L) {
         val added = latestSnapshot.get.files.filter(_.level == 0)
-        if (added.isEmpty) read.limit(0).withColumn("op", lit(""))
+        if (added.isEmpty) storedEmpty.withColumn("op", lit(""))
         else primaryKey match {
           case None => readFiles(added).drop(SeqColName).withColumn("op", lit("+I"))
           case Some(_) => changesBetween(fromId = snapshotHeaders.head.id, toId = latest.id)
@@ -2899,7 +2538,7 @@ class StreamTable(
   private def changesFromFirstSnapshot(): DataFrame = {
     val first = hydrated(snapshotHeaders.head)
     val added = first.files.filter(_.level == 0)
-    if (added.isEmpty) read.limit(0).withColumn("op", lit(""))
+    if (added.isEmpty) storedEmpty.withColumn("op", lit(""))
     else {
       val raw = readFiles(added)
       val noTomb =
@@ -2956,7 +2595,7 @@ class StreamTable(
   def changeHistoryView: DataFrame = {
     val heads = snapshotHeaders
     val byId = heads.map(s => s.id -> s).toMap
-    val empty = read.limit(0).withColumn("rowkind", lit(""))
+    val empty = storedEmpty.withColumn("rowkind", lit(""))
     // ids whose changes ride in a LATER snapshot's DEFERRED span
     // ('lookup'/'full-compaction' producers): they emit at the covering
     // snapshot's position, once, as the span's netted ops. Containment is
@@ -2981,8 +2620,10 @@ class StreamTable(
     val parts: Seq[DataFrame] = heads.flatMap { s =>
       val pred = byId.get(s.id - 1)
       if (s.id == 0 && primaryKey.isDefined)
-        Some(resolveView(readFiles(hydrated(s).files.filter(_.level == 0)),
-          primaryKey.get, keepSeq = false).withColumn("rowkind", lit("+I")))
+        // the first commit's merged rows, +I (the catch-up diff)
+        Some(hydrated(s).files.filter(_.level == 0)).filter(_.nonEmpty).map(fs =>
+          graft.sources.v2.ChangelogPlanning.diffFrame(this, Nil, fs, fs)
+            .withColumnRenamed("op", "rowkind"))
       else if (s.clogProduced && s.id > 0)
         // persisted changelog files are SELF-CONTAINED — retention expiring
         // the predecessor must not drop history we still hold
@@ -3586,31 +3227,58 @@ class StreamTable(
     }
   }
 
+  /** `files` as sorted runs on `pk`, for a merge: a file written before
+    * sorted runs were required is rewritten under `dir` sorted by the key,
+    * stable on its row order, and named by its place in the merge's tie
+    * order (`minSeq`, path), so exact ties keep their order; the others
+    * pass through. The rewritten copies are merge inputs only — the table
+    * keeps the original files until a compaction replaces them. */
+  private def asSortedRuns(files: Seq[DataFileMeta], pk: Seq[String],
+      dir: String): Seq[DataFileMeta] =
+    files.sortBy(f => (f.minSeq, f.path)).zipWithIndex.flatMap { case (f, i) =>
+      if (f.sortedBy.contains(pk)) Some(f)
+      else {
+        val out = f"$dir/$i%09d"
+        StreamTable.withMicrosTimestamps(spark)(
+          spark.read.schema(StreamTable.fileSchema(spark, Seq(f))).parquet(f.path)
+            .withColumn("__graft_row", col("_metadata.row_index"))
+            .coalesce(1).sortWithinPartitions((pk :+ "__graft_row").map(col): _*)
+            .drop("__graft_row").write.parquet(out))
+        // a file without rows may leave no part file: nothing to merge
+        listDir(Paths.get(out)).find(_.getFileName.toString.endsWith(".parquet"))
+          .map(p => f.copy(path = p.toString, fileSizeInBytes = Files.size(p),
+            sortedBy = Some(pk)))
+      }
+    }
+
   private def rewriteLive(layout: DataFrame => DataFrame,
       recordBuckets: Boolean = false, sortByKey: Boolean = false,
       clustered: Boolean = false,
       /** Dynamic bucket SPLIT: relabel under this count and stamp it into
         * the commit (the one legitimate count change). */
       bucketsOverride: Option[Int] = None): Snapshot = {
-    val before = latestSnapshot.map(_.files).getOrElse(Seq.empty)
-    if (before.isEmpty) return latestSnapshot.orNull
-    val raw = readFiles(before)
-    val resolved = primaryKey match {
-      case None => raw
-      // aggregation tables PRE-MERGE at compaction (Paimon's full-compaction
-      // materialization): the rewritten rows are partial aggregates that
-      // later appends keep merging with — safe because every allowed
-      // function is associative and commutative
-      case Some(pk) => resolveView(raw, pk, keepSeq = true)
-    }
+    val head = latestSnapshot
+    val before = head.map(_.files).getOrElse(Seq.empty)
+    if (before.isEmpty) return head.orNull
     val staging = s"$root/.staging-${UUID.randomUUID()}"
+    val sortedRuns = s"$root/.staging-${UUID.randomUUID()}"
+    val resolved = primaryKey match {
+      case None => readFiles(before)
+      // the connector's merge of every live file, with the commit sequence
+      // and the per-field provenance kept: the rewritten rows keep merging
+      // with later writes (aggregation tables PRE-MERGE — Paimon's
+      // full-compaction materialization — into partial aggregates)
+      case Some(pk) => graft.sources.v2.GraftV2Table.frame(
+        graft.sources.v2.GraftV2Table.library(this, head.map(_.id), stored = true,
+          files = Some(asSortedRuns(before, pk, sortedRuns)), bookkeeping = true))
+    }
     val laid = layout(resolved)
     // compaction re-establishes the sorted-run invariant for PK tables
     // (see writeClustered) — the sort rides inside the clustered write, or
     // after the layout's own repartitioning otherwise
     val sortKey = if (sortByKey) primaryKey else None
     val snapId = latestSnapshot.map(_.id).getOrElse(0L)
-    val moved =
+    val moved = try {
       // a partitioned table's maintenance rewrites MUST keep the
       // single-valued-file clustering, whatever the layout callback did
       if (clustered || partitionKeys.isDefined)
@@ -3625,6 +3293,7 @@ class StreamTable(
           rewritten.write.mode("overwrite").parquet(staging))
         moveStagedParts(staging, dataCompact, s"c$snapId")
       }
+    } finally deleteRecursively(Paths.get(sortedRuns))
     val maxSeq = before.map(_.maxSeq).max
     val metas = withPreservedCreation(before,
       fileMetas(spark, moved.map(_._1), level = 1,
@@ -4198,114 +3867,6 @@ object StreamTable {
     * ≈ 2×10^12 rows) — a runaway-split backstop, not a sizing dial. */
   val DynDefaultTargetRows: Long = 2000000L
   val DynMaxBuckets: Long = 1L << 20
-
-  /** Aggregate-side half of the ordered LIST fold shared by the read merge
-    * ([[StreamTable.aggResolve]]) and the changelog producer
-    * (fusedChangelog): contributions — fresh scalar/array rows AND compacted
-    * companion arrays — flatten into one UNSORTED (s1, s2, v) pair list per
-    * group. Sorting and rendering happen in [[listFoldRender]] over the
-    * NAMED column this aggregate lands in: inlining them into the
-    * aggregate's result projection (the pre-r15 shape) re-evaluated the
-    * whole sort-flatten chain once per reference — and, inside merge_map's
-    * per-element dedup lambda, once per ELEMENT per row. */
-  private[table] def listFoldRaw(fn: String, f: String,
-      schema: org.apache.spark.sql.types.StructType, columns: Seq[String],
-      baseOrd: org.apache.spark.sql.Column, gate: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.types._
-    val dt = schema(f).dataType
-    fn match {
-      case "listagg" => require(dt == StringType,
-        s"listagg($f) needs a STRING field, got ${dt.simpleString}")
-      case "merge_map" => require(dt.isInstanceOf[MapType],
-        s"merge_map($f) needs a MAP field (later entries overwrite earlier " +
-          s"per map key), got ${dt.simpleString}")
-      case _ => require(dt.isInstanceOf[ArrayType],
-        s"collect($f) needs an ARRAY field (contributions concatenate in " +
-          s"sequence order), got ${dt.simpleString}")
-    }
-    val lp = FieldListPrefix + f
-    val listTpe = ArrayType(StructType(Seq(
-      StructField("s1", LongType), StructField("s2", LongType),
-      StructField("v", dt))))
-    val persisted =
-      if (columns.contains(lp)) col(lp) else lit(null).cast(listTpe)
-    val contrib = when(gate,
-      when(persisted.isNotNull, persisted)
-        .when(col(f).isNotNull, array(struct(
-          baseOrd.getField("s1").cast("long").as("s1"),
-          baseOrd.getField("s2").cast("long").as("s2"),
-          col(f).as("v")))))
-    flatten(collect_list(contrib))
-  }
-
-  /** Aggregate-result columns of the ordered LIST fold: the SORTED pair
-    * list under `pairsName`, plus (merge_map only) the reverse-sorted
-    * per-entry list under `revName`. These must be emitted as AGGREGATE
-    * output columns, not as a projection above the aggregate: predicate
-    * pushdown substitutes straight through deterministic Projects (the
-    * explode consumer's inferred `size > 0` filter re-inlined the whole
-    * chain, re-evaluating it per reference and — inside merge_map's dedup
-    * lambda — per ELEMENT per row), but cannot substitute through an
-    * Aggregate's result projection, so here each list is computed exactly
-    * once per group. [[listFoldView]] renders the cheap fold over the named
-    * attributes. `flat` is [[listFoldRaw]] for the gate. */
-  private[table] def listFoldAggCols(fn: String,
-      flat: org.apache.spark.sql.Column, pairsName: String, revName: String)
-      : Seq[org.apache.spark.sql.Column] = {
-    // the natural struct order is (s1, s2, v): provenance first, then the
-    // VALUE as the deterministic tiebreak — real feeds carry duplicate
-    // sequence values (the synthetic lineitem has thousands of duplicate
-    // (order, linenumber) rows), and an arbitrary tie order would make the
-    // fold nondeterministic across runs/engines. MAP values are not
-    // orderable in Spark, so merge_map sorts per-ENTRY below instead.
-    val pairs =
-      if (fn != "merge_map") array_sort(flat)
-      else array_sort(flat, (l, r) =>
-        when(l.getField("s1") < r.getField("s1") ||
-          (l.getField("s1") === r.getField("s1") &&
-            l.getField("s2") < r.getField("s2")), -1)
-          .when(l.getField("s1") === r.getField("s1") &&
-            l.getField("s2") === r.getField("s2"), 0)
-          .otherwise(1))
-    if (fn != "merge_map") Seq(pairs.as(pairsName))
-    else {
-      // every contribution's entries WITH their provenance, sorted by the
-      // natural (s1, s2, key, value) order — sequence first, the entry
-      // itself as the deterministic tiebreak (values must be orderable; a
-      // non-orderable value type refuses at analysis, loudly) — then
-      // reversed so the fold walks latest-first
-      val entries = array_sort(flatten(transform(pairs, x =>
-        transform(map_entries(x.getField("v")), e => struct(
-          x.getField("s1").as("s1"), x.getField("s2").as("s2"),
-          e.getField("key").as("k"), e.getField("value").as("w"))))))
-      Seq(pairs.as(pairsName), reverse(entries).as(revName))
-    }
-  }
-
-  /** Rendered view of the ordered LIST fold over the ATTRIBUTES
-    * [[listFoldAggCols]] produced: cheap enough that a pushed-down filter
-    * duplicating it costs one extra walk of a materialized array, never a
-    * re-sort. merge_map keeps each key's latest-by-(sequence, commit)
-    * entry: walk the reversed entry list keeping first occurrences —
-    * O(one key's contributions²) per row over the staged array. */
-  private[table] def listFoldView(fn: String, pairsName: String,
-      revName: String): org.apache.spark.sql.Column = {
-    val pairs = col(pairsName)
-    val vs = transform(pairs, x => x.getField("v"))
-    fn match {
-      case "listagg" => when(size(pairs) > 0, array_join(vs, ","))
-      case "collect" => when(size(pairs) > 0, flatten(vs))
-      case "merge_map" =>
-        val rev = col(revName)
-        val dedup = filter(rev, (e, i) =>
-          !exists(slice(rev, lit(1), i),
-            x => x.getField("k") === e.getField("k")))
-        when(size(pairs) > 0, map_from_entries(
-          transform(reverse(dedup), e => struct(
-            e.getField("k").as("key"), e.getField("w").as("value")))))
-    }
-  }
 
   /** One `WHEN …` arm of a [[StreamTable.mergeInto]] (ANSI MERGE clause
     * shapes; `cond` is the optional `AND` guard, evaluated over the joined

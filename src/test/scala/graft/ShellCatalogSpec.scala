@@ -122,21 +122,33 @@ class ShellCatalogSpec extends AnyFunSuite {
     assert(rows(t.read).map(_.take(2)) == Seq(Seq(1L, "d,a,c"), Seq(2L, "b,e")))
     agree(t.read, "", withTypes = true)
     agree(t.readAt(0), "VERSION AS OF 0", withTypes = true)
-    // after a compaction the rows still agree at every snapshot. The doors
-    // keep the declared sum type; the library re-sums the compacted partial
-    // sums and widens again (DECIMAL(25, 1)), so types are compared above
+    // rows and types agree at every snapshot after each compaction: the
+    // DECIMAL(5, 1) sum is DECIMAL(15, 1) through every door, widened once
+    // however many compactions re-sum the partial sums
+    def everySnapshot(): Unit = {
+      agree(t.read, "", withTypes = true)
+      assert(types(t.read) == widened)
+      doors("").foreach(d => assert(types(d) == widened))
+      for (v <- 0L to t.latestSnapshot.get.id) {
+        agree(t.readAt(v), s"VERSION AS OF $v", withTypes = true)
+        assert(types(t.readAt(v)) == widened, s"VERSION AS OF $v")
+      }
+    }
     sh.sql("CALL sys.compact('agg_lib', 1)")
+    everySnapshot()
     sh.sql("INSERT INTO agg_lib SELECT * FROM VALUES (3, 'f', 0.1, 'w', 5), " +
       "(1, NULL, 0.4, 'q', 4) AS v(k, tags, amt, last_v, seq)")
-    agree(t.read, "", withTypes = false)
-    for (v <- 0L to 2L) agree(t.readAt(v), s"VERSION AS OF $v", withTypes = false)
-    doors("").foreach(d => assert(types(d) == widened))
-    // a filter over the bridge stays exact
+    everySnapshot()
+    val beforeSecond = rows(t.read)
+    sh.sql("CALL sys.compact('agg_lib', 1)")
+    everySnapshot()
+    assert(rows(t.read) == beforeSecond)
+    // a filter stays exact
     assert(sh.sql("SELECT k FROM agg_lib WHERE last_v = 'q'").collect()
       .map(_.getLong(0)).toSeq == Seq(1L))
     assert(sh.sql("SELECT tags FROM agg_lib WHERE k = 2").collect()
       .map(_.getString(0)).toSeq == Seq("b,e"))
-    // the audit log and change history read the library's views too
+    // the audit log and change history agree with the library's
     def opRows(df: DataFrame) = df.selectExpr((cols :+ "rowkind"): _*).collect()
       .map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
     import org.apache.spark.sql.functions.lit
@@ -172,6 +184,47 @@ class ShellCatalogSpec extends AnyFunSuite {
     assert(rows(sh.sql("SELECT id, label, note FROM sp ORDER BY id")) == want)
     val cat = catalogOn("shellcat_spell", wh)
     assert(rows(spark.sql(s"SELECT id, label, note FROM $cat.default.sp ORDER BY id")) == want)
+  }
+
+  test("shell UPDATE and MERGE after RENAME COLUMN keep the renamed column's " +
+      "values on a primary-key table") {
+    import spark.implicits._
+    val wh = warehouse("dmlren")
+    val sh = new GraftSql(spark, wh)
+    sh.sql("CREATE TABLE rn (id BIGINT, v STRING, n BIGINT, " +
+      "PRIMARY KEY (id) NOT ENFORCED) WITH ('bucket' = '1')")
+    Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)).toDF("id", "v", "n")
+      .createOrReplaceTempView("shellcat_rn_seed")
+    sh.sql("INSERT INTO rn SELECT * FROM shellcat_rn_seed")
+    sh.sql("ALTER TABLE rn RENAME COLUMN v TO label")
+    // re-adding the renamed-away name mints it a storage name: the
+    // write-back maps `label` to the file's `v` and the new `v` to its
+    // minted name in one step
+    sh.sql("ALTER TABLE rn ADD COLUMN v STRING")
+    assert(sh.sql("UPDATE rn SET n = n + 1 WHERE label = 'a'").collect()(0)
+      .getString(0) == "updated 1 rows in rn")
+    Seq((2L, 7L), (4L, 40L)).toDF("id", "n").createOrReplaceTempView("shellcat_rn_cdc")
+    assert(sh.sql(
+      """MERGE INTO rn AS t USING shellcat_rn_cdc AS c ON t.id = c.id
+        |WHEN MATCHED THEN UPDATE SET n = c.n, v = 'm'
+        |WHEN NOT MATCHED THEN INSERT (id, label, n) VALUES (c.id, 'd', c.n)
+        |""".stripMargin).collect()(0).getString(0) ==
+      "merged into rn: 1 updated, 0 deleted, 1 inserted")
+    val want = Seq((1L, "a", 11L, None), (2L, "b", 7L, Some("m")),
+      (3L, "c", 30L, None), (4L, "d", 40L, None))
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getString(1), r.getLong(2), Option(r.getString(3)))).toSeq
+    assert(rows(sh.sql("SELECT id, label, n, v FROM rn ORDER BY id")) == want)
+    val cat = catalogOn("shellcat_dmlren", wh)
+    assert(rows(spark.sql(s"SELECT id, label, n, v FROM $cat.default.rn ORDER BY id")) == want)
+    val lib = sh.catalog.getTable("default", "rn")
+    assert(rows(lib.read.select("id", "label", "n", "v").orderBy("id")) == want)
+    // the library's change surfaces keep the files' names, empty answers too
+    val head = lib.latestSnapshot.get.id
+    assert(lib.changesBetween(head, head).columns.toSet ==
+      lib.changesBetween(head - 1, head).columns.toSet)
+    lib.compact(targetFileCount = 1)
+    assert(rows(sh.sql("SELECT id, label, n, v FROM rn ORDER BY id")) == want)
   }
 
   test("a read in a database with no directory writes nothing to the warehouse") {

@@ -518,6 +518,92 @@ class StreamTableSpec extends AnyFunSuite {
       assert(a._2 <= b._1, s"overlapping x ranges: $ranges") }
   }
 
+  test("sorted runs: a layout without sortedBy refuses the library read but " +
+      "takes appends until compaction sorts it, exact ties kept") {
+    import scala.jdk.CollectionConverters._
+    val root = tmp()
+    def open() = new StreamTable(root, spark, primaryKey = Some(Seq("id")),
+      numBuckets = 1, changelogProducer = true)
+    val t = open()
+    // a key repeated inside one batch: an exact (commit) tie, resolved by
+    // row order within the file
+    t.appendBatch((0 until 200).map(i => (i % 50L, s"v$i")).toDF("id", "v"), 0)
+    t.appendBatch(Seq((3L, "late"), (3L, "later")).toDF("id", "v"), 1)
+    def answers(x: StreamTable) =
+      x.read.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val before = answers(t)
+    // strip the sorted-run flags: a table written before they were required
+    Files.list(java.nio.file.Paths.get(root, "_manifests")).iterator().asScala.foreach { p =>
+      val s = new String(Files.readAllBytes(p))
+      Files.write(p, s.replace("\"sortedBy\":[\"id\"]", "\"sortedBy\":null").getBytes)
+    }
+    val legacy = open()
+    require(legacy.latestSnapshot.get.files.forall(_.sortedBy.isEmpty))
+    val err = intercept[Exception](legacy.read.collect())
+    def messages(e: Throwable): Seq[String] =
+      if (e == null) Nil else String.valueOf(e.getMessage) +: messages(e.getCause)
+    assert(messages(err).exists(_.contains("CALL sys.compact")), messages(err))
+    // the 'input' producer diffs key-sorted copies of the legacy files: the
+    // old images are the ones the sorted layout resolved, exact ties included
+    legacy.appendBatch(Seq((3L, "new3"), (10L, "new10"), (70L, "fresh")).toDF("id", "v"), 2)
+    val ops = spark.read.parquet(legacy.latestSnapshot.get.changelog.map(_.path): _*)
+      .select("op", "id", "v").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    val old = before.toMap
+    assert(ops == Seq(("+I", 70L, "fresh"), ("+U", 3L, "new3"), ("+U", 10L, "new10"),
+      ("-U", 3L, old(3L)), ("-U", 10L, old(10L))), ops)
+    assert(!Files.list(java.nio.file.Paths.get(root)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith(".staging-")), "sorted copies left behind")
+    legacy.compact(targetFileCount = 1)
+    assert(legacy.latestSnapshot.get.files.forall(_.sortedBy.contains(Seq("id"))))
+    assert(answers(legacy) == (old ++ Seq(3L -> "new3", 10L -> "new10", 70L -> "fresh"))
+      .toSeq.sorted, "the upgrade must not change answers")
+  }
+
+  test("plan shape: read and readAt plan one GraftPkScan and no Exchange or " +
+      "Window, every merge engine") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def table(engine: String) = engine match {
+      case "aggregation" => new StreamTable(tmp(), spark, primaryKey = Some(Seq("id")),
+        seqCol = Some("seq"), aggSpec = Some(Seq("n" -> "sum", "v" -> "listagg")))
+      case e => new StreamTable(tmp(), spark, primaryKey = Some(Seq("id")),
+        seqCol = Some("seq"), mergeEngine = e)
+    }
+    for (engine <- Seq("deduplicate", "first-row", "aggregation", "partial-update")) {
+      val t = table(engine)
+      t.appendBatch(Seq((1L, 2L, 5L, "a"), (2L, 1L, 7L, "b")).toDF("id", "seq", "n", "v"), 0)
+      t.appendBatch(Seq((1L, 1L, 3L, "c"), (3L, 4L, 1L, "d")).toDF("id", "seq", "n", "v"), 1)
+      for ((what, df) <- Seq("read" -> t.read, "readAt(0)" -> t.readAt(0))) {
+        assert(df.collect().nonEmpty)
+        val plan = df.queryExecution.executedPlan
+        val scans = plans.collect(plan) {
+          case b: BatchScanExec if b.scan.isInstanceOf[graft.sources.v2.GraftPkScan] => b }
+        val exchanges = plans.collect(plan) {
+          case e: Exchange => e
+          case e: ReusedExchangeExec => e }
+        val windows = plans.collect(plan) { case w if w.nodeName.contains("Window") => w }
+        assert((scans.size, exchanges.size, windows.size) == ((1, 0, 0)),
+          s"$engine $what:\n$plan")
+      }
+    }
+  }
+
+  test("read and readAt stay pinned to the snapshot current at call time") {
+    val t = new StreamTable(tmp(), spark, primaryKey = Some(Seq("id")))
+    t.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0)
+    val df = t.read
+    val at0 = t.readAt(0)
+    t.appendBatch(Seq((1L, "z"), (3L, "c")).toDF("id", "v"), 1)
+    t.compact(targetFileCount = 1)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows(df) == Seq((1L, "a"), (2L, "b")))
+    assert(rows(at0) == Seq((1L, "a"), (2L, "b")))
+    assert(rows(t.read) == Seq((1L, "z"), (2L, "b"), (3L, "c")))
+  }
+
   test("aggregation merge-engine: blind appends merge by declared functions") {
     val t = new StreamTable(tmp(), spark,
       primaryKey = Some(Seq("k")),
