@@ -42,9 +42,9 @@ import graft.table.{DataFileMeta, StreamTable}
   *      race a concurrent writer/compactor (the `snap-<n>.json` contract);
   *   2. comparison/equality filters on stats-covered columns prune whole
   *      files by MANIFEST-persisted min/max (captured once at commit time —
-  *      the `$files` stats, guide.md:205-212; legacy manifests fall back to
-  *      a counted footer read), with conservative keep-on-unparseable
-  *      semantics — skipping can never drop a matching row;
+  *      the `$files` stats, guide.md:205-212), with conservative
+  *      keep-on-unparseable semantics — skipping can never drop a matching
+  *      row;
   *   3. surviving files become one [[InputPartition]] each; the executor-side
   *      reader re-applies the pushed predicate at parquet row-group level
   *      (`FilterCompat`), reads ONLY the projected columns, and Spark
@@ -254,7 +254,7 @@ object GraftV2Table {
     * the table's own rewrites write back; the other arguments are the
     * table-internal ones of the constructor. */
   private[graft] def library(t: StreamTable, at: Option[Long],
-      stored: Boolean = false, files: Option[Seq[DataFileMeta]] = None,
+      stored: Boolean = false, pinned: Option[graft.table.Snapshot] = None,
       bookkeeping: Boolean = false): GraftV2Table = {
     val (declared, renames) = evolutionOf(graft.table.GraftCatalog.pathOptions(t.root))
     val (d, r) =
@@ -262,7 +262,7 @@ object GraftV2Table {
       else (declared.map(st => StructType(st.map(f =>
         f.copy(name = renames.getOrElse(f.name, f.name))))), Map.empty[String, String])
     new GraftV2Table(s"graft.`${t.root}`", t, SparkSession.active, d, at, r,
-      files, bookkeeping)
+      pinned, bookkeeping)
   }
 
   /** `df`, in the declared column names a library read of `t` shows, in
@@ -351,9 +351,10 @@ class GraftV2Table(tableName: String, val table: StreamTable,
       * metadata-only schema evolution (`ALTER TABLE … RENAME COLUMN`): data
       * files keep serving the old name; the scan translates at plan time. */
     renameMap: Map[String, String] = Map.empty,
-    /** Table-internal reads only (compaction): merge exactly these files
-      * instead of the snapshot's. */
-    files: Option[Seq[DataFileMeta]] = None,
+    /** Table-internal reads only (compaction): read this snapshot as given
+      * (its files may be sorted copies, and it may be the version-0 head
+      * the compaction upgrades) instead of loading one. */
+    pinned: Option[graft.table.Snapshot] = None,
     /** Table-internal reads only (compaction): a primary-key read also
       * emits the commit sequence and the per-field provenance columns the
       * merge engine persists, so the rewritten rows keep merging with later
@@ -452,12 +453,11 @@ class GraftV2Table(tableName: String, val table: StreamTable,
       case _ => return false
     }
     if (!conds.forall(c => pks.contains(c._1))) return false
-    val conf = new Configuration()
     val live = table.latestSnapshot.map(_.files).getOrElse(return false)
     // every file must be provably entirely-in or entirely-out — one
     // ambiguous file and the whole drop falls back to the exact row path
     val decided = live.map { f =>
-      val (mins, maxs) = StreamTable.skipStats(f, conf)
+      val (mins, maxs) = StreamTable.skipStats(f)
       def nullCount(c: String) = f.nullStats.flatMap(_.get(c))
         .flatMap(_.toLongOption)
       def allNull(c: String) = nullCount(c).contains(f.rowCount)
@@ -523,10 +523,11 @@ class GraftV2Table(tableName: String, val table: StreamTable,
       declaredSchema, Some(snapshotId), renameMap)
   }
 
-  private[v2] def liveSnapshot: Option[graft.table.Snapshot] = (atSnapshot match {
-    case Some(id) => table.snapshotAt(id)
-    case None => table.latestSnapshot
-  }).map(s => files.fold(s)(fs => s.copy(files = fs)))
+  private[v2] def liveSnapshot: Option[graft.table.Snapshot] =
+    pinned.orElse(atSnapshot match {
+      case Some(id) => table.snapshotAt(id)
+      case None => table.latestSnapshot
+    })
 
   private[v2] def liveFiles: Seq[DataFileMeta] =
     liveSnapshot.map(_.files).getOrElse(Seq.empty)
@@ -536,8 +537,8 @@ class GraftV2Table(tableName: String, val table: StreamTable,
     * capture files and count from the SAME [[liveSnapshot]] value: a
     * dynamic table's inline split can commit between two separate disk
     * reads, and hashing a key under the new count against old-generation
-    * labels prunes the wrong bucket. None = no provable count (legacy
-    * dynamic snapshot): skip pruning. */
+    * labels prunes the wrong bucket. None on an unbucketed or empty
+    * table. */
   private[v2] def bucketCountOf(snap: Option[graft.table.Snapshot]): Option[Int] =
     if (!table.isDynamicBucket) Some(table.numBuckets).filter(_ > 0)
     else snap.flatMap(_.bucketCount)
@@ -795,13 +796,12 @@ class GraftV2Table(tableName: String, val table: StreamTable,
                 table.latestSnapshot.map(_.batchId + 1).getOrElse(0L), 0L)
               partitionConds match {
                 case Some(conds) =>
-                  val conf = new Configuration()
                   // a file is ENTIRELY in the partition iff its stats can't
                   // rule the equality out AND prove single-valuedness; a
                   // ruled-out file is entirely outside; anything else
-                  // (missing stats, multi-valued legacy file) refuses
+                  // (a multi-valued row-level DML output) refuses
                   def entirely(f: DataFileMeta): Boolean = {
-                    val (mins, maxs) = StreamTable.skipStats(f, conf)
+                    val (mins, maxs) = StreamTable.skipStats(f)
                     def nullCount(c: String): Option[Long] =
                       f.nullStats.flatMap(_.get(c)).flatMap(_.toLongOption)
                     conds.forall { case (c, v) =>
@@ -926,8 +926,8 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
     * not null — every metadata shortcut that equates "absent from the
     * file" with "all null" must refuse for such (column, file) pairs and
     * fall back to the real scan (whose readers substitute correctly).
-    * A legacy meta without the fileCols census refuses too. Compaction
-    * materializes defaults, so the pushes return once generations merge. */
+    * Compaction materializes defaults, so the pushes return once
+    * generations merge. */
   private lazy val defaultedDecl: Set[String] = fullSchema.fields.iterator
     .filter(_.metadata.contains(org.apache.spark.sql.catalyst.util
       .ResolveDefaultColumns.EXISTS_DEFAULT_COLUMN_METADATA_KEY))
@@ -1039,17 +1039,14 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
         // both timestamp flavors (epoch micros) — the manifest's
         // ISO-rendered stats convert exactly, so "max(event_time)" (the
         // 100 TB freshness check) answers from metadata alone. Zoned stats
-        // carry the "+0000" offset; a legacy INT96 entry never parses and
-        // refuses the push (the footer fallback's unitMatches proof
-        // refuses INT96 the same way).
+        // carry the "+0000" offset; an INT96 entry never parses and
+        // refuses the push.
         val parse: Option[String => Option[Long]] = sparkType(name) match {
           case LongType | IntegerType => Some((s: String) => s.toLongOption)
           case DateType => Some(TemporalPush.statDays _)
           case TimestampNTZType => Some(TemporalPush.statMicros _)
           case TimestampType => Some(TemporalPush.statMicrosZoned _)
-          // decimals merge as UNSCALED longs (scaled-stat parse is exact);
-          // the footer fallback's unitMatches proof yields the same raw
-          // unscaled values, so manifest and footer paths can never drift
+          // decimals merge as UNSCALED longs (scaled-stat parse is exact)
           case d: DecimalType if d.precision <= 18 =>
             Some((s: String) => DecimalPush.statUnscaled(s, d.scale))
           case _ => None
@@ -1057,12 +1054,9 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
         parse match {
           case None => None
           case Some(p) =>
-            val conf = new Configuration()
             val fileName = nameMap.getOrElse(name, name) // renamed: files keep the old name
-            val perFile: Seq[Option[Option[(Long, Long)]]] = files.map { f =>
-              GraftScanBuilder.metaLongMinMax(f, fileName, conf, p,
-                declared = Some(sparkType(name)))
-            }
+            val perFile: Seq[Option[Option[(Long, Long)]]] =
+              files.map(GraftScanBuilder.metaLongMinMax(_, fileName, p))
             if (perFile.contains(None)) None // stats missing somewhere: refuse
             else {
               val present = perFile.flatten.flatten
@@ -1106,9 +1100,9 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
   // exactly the layout a slice-per-commit ingest leaves behind (one tenant /
   // day / event type per batch — the commonest 100 TB partitioning), so the
   // per-partition census reads ZERO data bytes. Any file that can't prove
-  // single-valuedness (mixed nulls, multi-valued, legacy manifest, missing
-  // null counts, a deletion vector) refuses the whole push — the
-  // distributed aggregate is the fallback, never an approximation.
+  // single-valuedness (mixed nulls, multi-valued, missing null counts, a
+  // deletion vector) refuses the whole push — the distributed aggregate is
+  // the fallback, never an approximation.
   // ---- shared grouped-pushdown helpers (complete AND partial paths) ------
 
   private def sparkTypeOf(name: String): Option[DataType] =
@@ -1178,7 +1172,7 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
             }
           case _ => None // mixed null/non-null (two groups in one file)
         }
-      case _ => None // legacy manifest: no provable layout
+      case _ => None // no census: no provable layout
     }
   }
 
@@ -1198,15 +1192,13 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
     if (keyed.exists(_.isEmpty)) return None
     val byKey = keyed.flatten.groupBy(_._1)
     // aggregate columns over each group's files (manifest stats only)
-    val conf = new Configuration()
     def minMaxIn(group: Seq[DataFileMeta], name: String)
         : Option[Option[(Long, Long)]] =
       sparkType(name).flatMap(statParser)
         .filterNot(_ => group.exists(predatesDefaulted(_, name)))
         .flatMap { p =>
         val fileN = nameMap.getOrElse(name, name)
-        val perFile = group.map(f => GraftScanBuilder.metaLongMinMax(
-          f, fileN, conf, p, declared = sparkType(name)))
+        val perFile = group.map(GraftScanBuilder.metaLongMinMax(_, fileN, p))
         if (perFile.contains(None)) None
         else {
           val present = perFile.flatten.flatten
@@ -1258,7 +1250,7 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
   // SOME files prove single-valuedness — each provable file contributes a
   // per-file partial row (group value, rowCount, min, max) from the manifest
   // alone, and ONLY the unprovable files (mixed layouts, deletion vectors,
-  // legacy manifests, missing agg stats) are read, width-reduced to the same
+  // missing agg stats) are read, width-reduced to the same
   // partial shape (count=1, min=max=value per row; Spark's own map-side
   // partial aggregate collapses them before the shuffle). Spark's final
   // aggregate merges both streams exactly. This removes the all-files cliff
@@ -1291,7 +1283,6 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
       case (_, n, _) if n.nonEmpty => n }
     if (referenced.exists(c => files.exists(predatesDefaulted(_, c))))
       return None
-    val conf = new Configuration()
     val proved = Seq.newBuilder[InternalRow]
     val toRead = Seq.newBuilder[DataFileMeta]
     var nProved = 0
@@ -1308,8 +1299,8 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
         val vs: Seq[Option[Any]] = aggSpecs.map {
           case ("count", _, _) => Some(f.rowCount: Any)
           case (kind, n, dt) =>
-            GraftScanBuilder.metaLongMinMax(f, nameMap.getOrElse(n, n), conf,
-              statParser(dt).get, declared = Some(dt)) match {
+            GraftScanBuilder.metaLongMinMax(f, nameMap.getOrElse(n, n),
+              statParser(dt).get) match {
               case Some(Some((lo, hi))) =>
                 Some(internalOfLong(dt, if (kind == "min") lo else hi))
               case Some(None) => Some(null: Any) // column all-null here
@@ -1354,15 +1345,15 @@ class GraftScanBuilder(table: GraftV2Table, fullSchema: StructType,
 }
 
 object GraftScanBuilder {
-  /** Typed long-valued [min,max] of `col` in one file, manifest-first:
-    *  - `None`          → stats unusable (missing while rows exist): refuse
+  /** Typed long-valued [min,max] of `col` in one file, from the manifest:
+    *  - `None`          → stats unusable (untrusted, or a rendering `parse`
+    *                      refuses): refuse the push
     *  - `Some(None)`    → column contributes no non-null values here: skip
     *  - `Some(Some(p))` → merged min/max
     * Manifest-served stats make the metadata-only MIN/MAX answer with zero
-    * file I/O; only a legacy manifest entry opens the footer (counted). */
-  private[v2] def metaLongMinMax(f: DataFileMeta, col: String, conf: Configuration,
-      parse: String => Option[Long] = _.toLongOption,
-      declared: Option[DataType] = None)
+    * file I/O. */
+  private[v2] def metaLongMinMax(f: DataFileMeta, col: String,
+      parse: String => Option[Long] = _.toLongOption)
       : Option[Option[(Long, Long)]] =
     (f.minStats, f.maxStats, f.fileCols) match {
       case (Some(mins), Some(maxs), Some(cols)) =>
@@ -1376,51 +1367,8 @@ object GraftScanBuilder {
             }
           case _ => Some(None) // present + trusted + no entry ⇒ all-null here
         }
-      case _ => fileLongMinMax(f.path, col, conf, declared)
+      case _ => None
     }
-
-  /** Footer fallback of [[metaLongMinMax]] for legacy manifests (same
-    * three-state contract, from the row-group chunk stats). When `declared`
-    * is given, the column's PHYSICAL layout must decode exactly as that
-    * Spark type ([[GraftVector.matches]]) or the whole push refuses — a raw
-    * INT64 MILLIS/NANOS timestamp merged as micros would poison the answer
-    * by 10³/10⁶ with no error. */
-  private[v2] def fileLongMinMax(path: String, col: String, conf: Configuration,
-      declared: Option[DataType] = None)
-      : Option[Option[(Long, Long)]] = {
-    StreamTable.planFooterReads.incrementAndGet()
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      if (!schema.containsField(col)) return Some(None) // predates the column
-      declared.foreach { dt =>
-        val fld = schema.getType(schema.getFieldIndex(col))
-        if (!fld.isPrimitive ||
-            !GraftVector.unitMatches(dt, fld.asPrimitiveType())) return None
-      }
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var any = false
-      for (b <- reader.getFooter.getBlocks.asScala;
-           c <- b.getColumns.asScala if c.getPath.toDotString == col) {
-        val st = c.getStatistics
-        if (st == null) return None
-        if (st.hasNonNullValue) {
-          val (lo, hi) = st.genericGetMin match {
-            case l: java.lang.Long => (l.longValue(), st.genericGetMax.asInstanceOf[java.lang.Long].longValue())
-            case i: java.lang.Integer => (i.longValue(), st.genericGetMax.asInstanceOf[java.lang.Integer].longValue())
-            case _ => return None
-          }
-          mn = math.min(mn, lo); mx = math.max(mx, hi); any = true
-        } else if (!st.isNumNullsSet || st.getNumNulls < b.getRowCount) {
-          // can't prove the row group is all-null: refuse
-          if (b.getRowCount > 0) return None
-        }
-      }
-      if (any) Some(Some((mn, mx))) else Some(None)
-    } finally reader.close()
-  }
 }
 
 /** Result of a complete aggregate pushdown: precomputed row(s) — one for a
@@ -1567,30 +1515,16 @@ class GraftScan(table: GraftV2Table, required: StructType,
     // `bucketKey = v` can only live in bucket pmod(murmur3(v), n) — on a
     // bucketed table that is a 1/numBuckets metadata-only cut BEFORE any
     // stats pass (Paimon's PK point read). Files without a recorded bucket
-    // (legacy/maintenance) conservatively survive.
+    // (maintenance rewrites, DML output) conservatively survive.
     val bucketPruned = bucketPointLookup match {
       case Some(b) => allFiles.filter(_.bucket.forall(_ == b))
       case None => allFiles
     }
     if (filePushed.isEmpty) bucketPruned
-    else {
-      val conf = new Configuration()
-      bucketPruned.filter { f =>
-        val (mins, maxs) = statsOf(f, conf)
-        filePushed.forall(keepFile(_, mins, maxs, f))
-      }
+    else bucketPruned.filter { f =>
+      val (mins, maxs) = StreamTable.skipStats(f)
+      filePushed.forall(keepFile(_, mins, maxs, f))
     }
-  }
-
-  /** Per-file skipping stats: manifest-served (zero I/O — the commit
-    * captured them) with a counted footer fallback for legacy manifests.
-    * The count surfaces as the `graftFooterReads` driver metric: a
-    * stats-pruned plan over a current-format manifest must show 0. */
-  private var footerOpens = 0L
-  private def statsOf(f: DataFileMeta, conf: Configuration)
-      : (Map[String, String], Map[String, String]) = {
-    if (f.minStats.isEmpty || f.maxStats.isEmpty) footerOpens += 1
-    StreamTable.skipStats(f, conf)
   }
 
   /** The target bucket id when the pushed filters pin the bucket key to a
@@ -1642,7 +1576,9 @@ class GraftScan(table: GraftV2Table, required: StructType,
       GraftScanMetrics.task("graftFilesRead", kept.size),
       GraftScanMetrics.task("graftFilesSkipped", allFiles.size - kept.size),
       GraftScanMetrics.task("graftBytesPlanned", kept.map(_.fileSizeInBytes).sum),
-      GraftScanMetrics.task("graftFooterReads", footerOpens))
+      // planning opens no footer: every version-1 entry carries its stats
+      // (the metric stays for the traces that read it)
+      GraftScanMetrics.task("graftFooterReads", 0L))
 
   override def description(): String =
     s"GraftScan ${table.name()} files=${kept.size}/${allFiles.size} " +
@@ -1677,8 +1613,8 @@ class GraftScan(table: GraftV2Table, required: StructType,
   //
   // Grouping trades away per-file parallelism (one task per bucket), which
   // is exactly the bucketed-table bargain; it engages only under the conf,
-  // only when every live file carries its bucket id (legacy manifests and
-  // maintenance rewrites fall back), and only when the scan projects the
+  // only when every live file carries its bucket id (maintenance rewrites
+  // and DML output fall back), and only when the scan projects the
   // key with a bucketable type.
   private val spjGroups: Option[(Int, Seq[(Int, Seq[DataFileMeta])])] = {
     val t = table.table
@@ -1773,12 +1709,8 @@ class GraftScan(table: GraftV2Table, required: StructType,
     // plan's contract — dropping files here could orphan a bucket group, so
     // runtime pruning stands down (SPJ already avoided the exchange)
     if (spjGroups.isDefined) return
-    val conf = new Configuration()
-    // manifest-served stats; the legacy-footer fallback memoizes per path
-    // (footers are immutable) even across multiple runtime predicates
-    val statsMemo = scala.collection.mutable.Map[String, (Map[String, String], Map[String, String])]()
-    def stats(f: DataFileMeta) =
-      statsMemo.getOrElseUpdate(f.path, statsOf(f, conf))
+    // manifest-served stats (zero I/O)
+    def stats(f: DataFileMeta) = StreamTable.skipStats(f)
     predicates.foreach { p =>
       val perValue: Option[(String, Seq[Any])] = p.name() match {
         case "IN" =>
@@ -2078,7 +2010,7 @@ class GraftVectorReader(path: String, required: StructType,
     // the TESTDATA loader, a user may toggle caseSensitive) change decode
     // behavior mid-table. The row reader is equally conf-independent
     // (declared-type-driven conversions), so the two paths can never
-    // diverge. Like every graft reader (footerStats, the Group reader),
+    // diverge. Like every graft reader (the Group reader, the sink writer),
     // the fresh Configuration assumes default-filesystem access — an
     // object-store deployment supplies credentials via core-site, not
     // session conf.
@@ -2350,8 +2282,8 @@ private[v2] object FileSkip {
   def keep(f: Filter, mins: Map[String, String],
       maxs: Map[String, String],
       /** The file's manifest meta, when available: null counts + physical
-        * column presence serve the IS [NOT] NULL decisions — legacy
-        * manifests (None) conservatively keep. */
+        * column presence serve the IS [NOT] NULL decisions — without it
+        * (None) the decision conservatively keeps. */
       meta: Option[DataFileMeta] = None,
       /** FILE-level names of columns added with DEFAULT: a file that
         * predates such a column serves the (non-null) default, so the
@@ -2572,17 +2504,6 @@ object GraftVector {
       } finally r.close()
     })
   }
-
-  /** Does this parquet primitive decode EXACTLY as the declared Spark type
-    * under the vectorized reader's own schema conversion? Strict by design:
-    * any unknown shape falls back to the row reader. Also the physical-unit
-    * proof the metadata MIN/MAX footer fallback requires
-    * ([[GraftScanBuilder.fileLongMinMax]]) — widened layouts are accepted
-    * there too: an INT32 file merges exactly as a declared BIGINT's longs,
-    * and a narrower same-scale decimal's unscaled values mean the same
-    * number. */
-  private[v2] def unitMatches(dt: DataType, p: PrimitiveType): Boolean =
-    matches(dt, p)
 
   /** Decode proof: the canonical layout OR a safe type-widening
     * (INT32→BIGINT, FLOAT→DOUBLE, same-scale decimal precision growth) —

@@ -286,8 +286,8 @@ private[graft] object ChangelogPlanning {
         oldEv: Seq[graft.table.DataFileMeta]) =
       if (s < 0) (newFiles.map(_.path).toSet, Seq.empty, Seq.empty)
       else {
-        val (added, removedEv) = StreamTable.intervalEvidence(snapAt,
-          table.deltaOf, table.hydrated, s, e)
+        val (added, removedEv) =
+          StreamTable.intervalEvidence(snapAt, table.deltaOf, s, e)
         val endPaths = newFiles.map(_.path).toSet
         // removal evidence LIVE at the start snapshot is read by the merge
         // anyway (zero extra I/O); only evidence live at NEITHER end adds a
@@ -345,7 +345,9 @@ private[graft] object ChangelogPlanning {
       org.apache.spark.sql.SparkSession.active.emptyDataFrame
         .withColumn("op", org.apache.spark.sql.functions.lit(""))
     else GraftV2Table.frame(new GraftStateDiffV2Table(GraftV2Table.library(table,
-      None, stored = true, files = Some(files.distinctBy(_.path))), plan))
+      None, stored = true,
+      pinned = table.latestSnapshot.map(_.copy(files = files.distinctBy(_.path)))),
+      plan))
 
   /** The reader factory: the engine's [[PkMerge.Fold]] (winners for
     * deduplicate/first-row, folds for aggregation, per-field merges for

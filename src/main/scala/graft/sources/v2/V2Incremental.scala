@@ -98,9 +98,9 @@ class GraftIncrementalV2Table(base: GraftV2Table, from: Long, to: Long)
         else {
           // append table: the interval's added level-0 rows ARE its changes
           // — per-commit added files come straight from the delta manifests
-          // (the shared evidence rule; zero hydrations on v2 history)
+          // (the shared evidence rule; zero hydrations)
           (from to to).foreach(snapAt)
-          StreamTable.intervalEvidence(snapAt, t.deltaOf, t.hydrated, from, to)
+          StreamTable.intervalEvidence(snapAt, t.deltaOf, from, to)
             ._1
             .filter(GraftOpScanBuilder.keepBucket(_, onlyBucket))
             .map(f => GraftConstOpPartition(f.path, "+I"): InputPartition).toArray
@@ -288,10 +288,9 @@ class GraftChangeHistoryV2Table(base: GraftV2Table) extends Table with SupportsR
               onlyBucket).toSeq
           else {
             // this commit's added files: the classification shared with
-            // changeHistoryView and intervalEvidence
-            // (StreamTable.addedEvidence — delta-served, re-adds excluded,
-            // hydrate-diff only on legacy history)
-            val added = t.addedEvidenceOf(s, pred)
+            // changeHistoryView and intervalEvidence (delta-served,
+            // re-adds excluded)
+            val added = t.addedEvidenceOf(s)
             if (added.isEmpty) Seq.empty // maintenance-only commit
             else if (t.primaryKey.isEmpty)
               added.filter(GraftOpScanBuilder.keepBucket(_, onlyBucket))

@@ -1,6 +1,5 @@
 package graft.sources.v2
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -148,9 +147,8 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
     }
     if (pushed.isEmpty) bucketPruned
     else {
-      val conf = new Configuration()
       bucketPruned.filter { f =>
-        val (mins, maxs) = StreamTable.skipStats(f, conf)
+        val (mins, maxs) = StreamTable.skipStats(f)
         pushed.forall(FileSkip.keep(_, mins, maxs))
       }
     }
@@ -182,9 +180,9 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
     }.toSet
 
   /** One merge group per recorded bucket; a manifest with any unbucketed
-    * file degrades to a single group (correct, serial — the documented
-    * legacy fallback). Files merge in commit order, `(minSeq, path)`, then
-    * row order: the tie order of every fold. */
+    * file (an unbucketed table, or DML output before a compaction) degrades
+    * to a single group (correct, serial). Files merge in commit order,
+    * `(minSeq, path)`, then row order: the tie order of every fold. */
   private val groups: Seq[(Int, Seq[DataFileMeta])] = {
     PkMerge.requireSortedRuns(table.name(), pk, kept)
     if (kept.isEmpty) Seq.empty
@@ -272,8 +270,8 @@ class GraftPkScan(table: GraftV2Table, fullSchema: StructType,
     GraftPkReaderFactory(internal, pk.map(internal.fieldIndex).toArray, fold, pushed)
 }
 
-/** All live files of one hash bucket (or the whole table for the legacy
-  * unbucketed fallback), with their manifest commit sequences, in tie
+/** All live files of one hash bucket (or the whole table for the
+  * unbucketed single group), with their manifest commit sequences, in tie
   * order. The bucket id doubles as the storage-partitioned-join partition
   * key (ignored unless the scan reported KeyGroupedPartitioning). */
 case class GraftPkInputPartition(files: Seq[(String, Long)], bucketId: Int)

@@ -2,7 +2,6 @@ package graft.sources.v2
 
 import java.util.UUID
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read._
@@ -143,9 +142,8 @@ class GraftCowScan(table: GraftV2Table, required: StructType,
   @volatile private[v2] var kept: Seq[DataFileMeta] =
     if (filePushed.isEmpty) allFiles
     else {
-      val conf = new Configuration()
       allFiles.filter { f =>
-        val (mins, maxs) = StreamTable.skipStats(f, conf)
+        val (mins, maxs) = StreamTable.skipStats(f)
         filePushed.forall(FileSkip.keep(_, mins, maxs))
       }
     }
@@ -192,10 +190,7 @@ class GraftCowScan(table: GraftV2Table, required: StructType,
         case r: NamedReference if r.fieldNames.length == 1 => Some(r.fieldNames.head)
         case _ => None
       }
-    val conf = new Configuration()
-    val statsMemo = scala.collection.mutable.Map[String, (Map[String, String], Map[String, String])]()
-    def stats(f: DataFileMeta) =
-      statsMemo.getOrElseUpdate(f.path, StreamTable.skipStats(f, conf))
+    def stats(f: DataFileMeta) = StreamTable.skipStats(f)
     predicates.foreach { p =>
       val perValue: Option[(String, Seq[Any])] = p.name() match {
         case "IN" =>

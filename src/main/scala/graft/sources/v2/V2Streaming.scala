@@ -120,9 +120,8 @@ class GraftMicroBatchStream(table: StreamTable, schema: StructType,
     val kept =
       if (pushed.isEmpty) newFiles
       else {
-        val conf = new org.apache.hadoop.conf.Configuration()
         newFiles.filter { f =>
-          val (mins, maxs) = StreamTable.skipStats(f, conf)
+          val (mins, maxs) = StreamTable.skipStats(f)
           pushed.forall(FileSkip.keep(_, mins, maxs, Some(f), defaultedCols))
         }
       }

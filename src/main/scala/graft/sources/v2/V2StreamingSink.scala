@@ -3,18 +3,17 @@ package graft.sources.v2
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.io.OutputFile
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.table.StreamTable
@@ -24,8 +23,8 @@ import graft.table.StreamTable
   * streaming source, completing the stream–batch duality natively:
   *
   *  - executors write their partitions as parquet files into the table's
-  *    staging area ([[GraftStreamingDataWriter]] — the symmetric inverse of
-  *    the source's Group reader). On a BUCKETED table each writer computes
+  *    staging area ([[GraftStreamingDataWriter]], through Spark's own
+  *    parquet row writer). On a BUCKETED table each writer computes
   *    every row's bucket (`pmod(murmur3(key), n)`, the
   *    [[GraftBucketFunction]] layout) and writes one file per bucket it
   *    sees, so committed files carry content-derived bucket ids — the PK
@@ -68,8 +67,7 @@ import graft.table.StreamTable
 class GraftStreamingWrite(table: StreamTable, schema: StructType,
     queryId: String) extends StreamingWrite {
 
-  GraftStreamingWrite.parquetSchema(schema,
-    stamp = table.primaryKey.isDefined) // fail at planning, not in tasks
+  GraftStreamingWrite.requireWritable(schema) // fail at planning, not in tasks
   table.primaryKey.foreach { pk =>
     require(pk.forall(schema.fieldNames.contains),
       s"PK sink target needs every key column in the stream schema: $pk")
@@ -218,37 +216,35 @@ object GraftStreamingWrite {
       case None => Array.empty
     }
 
-  /** StructType → parquet MessageType (the safe primitive set — the same
-    * alphabet the source's type bridge reads back); `stamp` appends the
-    * engine's commit-sequence column (PK sink targets). */
-  private[v2] def parquetSchema(schema: StructType, stamp: Boolean = false): MessageType = {
-    val fields = schema.fields.map { f =>
-      val b = f.dataType match {
-        case LongType => Types.optional(PrimitiveTypeName.INT64)
-        case IntegerType => Types.optional(PrimitiveTypeName.INT32)
-        case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE)
-        case FloatType => Types.optional(PrimitiveTypeName.FLOAT)
-        case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN)
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType())
-        case BinaryType => Types.optional(PrimitiveTypeName.BINARY)
-        case DateType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.dateType())
-        case TimestampNTZType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(false, TimeUnit.MICROS))
-        case TimestampType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS))
-        case dt => throw new UnsupportedOperationException(
-          s"graft streaming sink: unsupported type $dt for column ${f.name}")
-      }
-      b.named(f.name): org.apache.parquet.schema.Type
+  /** Refuse, at planning, a column type Spark's parquet writer cannot
+    * write (the writer tasks would fail on it). */
+  private[v2] def requireWritable(schema: StructType): Unit = {
+    val format = new ParquetFileFormat()
+    schema.fields.foreach { f =>
+      if (!format.supportDataType(f.dataType))
+        throw new UnsupportedOperationException(
+          s"graft streaming sink: unsupported type ${f.dataType} for column ${f.name}")
     }
-    val all =
-      if (stamp) fields :+ (Types.optional(PrimitiveTypeName.INT64)
-        .named(StreamTable.SeqColName): org.apache.parquet.schema.Type)
-      else fields
-    new MessageType("spark_schema", all.toList: _*)
   }
+
+  /** The schema a writer task writes: every field nullable (OPTIONAL in
+    * parquet, as every graft write), plus the engine's commit-sequence
+    * column when `stamp` (PK targets). */
+  private[v2] def fileSchema(schema: StructType, stamp: Boolean): StructType = {
+    val all = org.apache.spark.sql.graft.SchemaMerge.asNullable(schema)
+    if (stamp) all.add(StreamTable.SeqColName, LongType) else all
+  }
+}
+
+/** A parquet writer of [[InternalRow]]s through Spark's own
+  * [[ParquetWriteSupport]] — the row layout Spark's file writer gives
+  * every type it supports. */
+private class InternalRowParquetBuilder(file: OutputFile)
+    extends ParquetWriter.Builder[InternalRow, InternalRowParquetBuilder](file) {
+  override def self(): InternalRowParquetBuilder = this
+  override def getWriteSupport(conf: Configuration)
+      : org.apache.parquet.hadoop.api.WriteSupport[InternalRow] =
+    new ParquetWriteSupport()
 }
 
 /** One task's committed files: path + layout labels + the column stats the
@@ -325,11 +321,10 @@ class GraftDynOverwriteBatchWrite(table: StreamTable, schema: StructType,
         truncateAll = true)
       return
     }
-    val conf = new Configuration()
     // a file's partition tuple, per key: Some(None) = the NULL partition,
     // Some(Some(v)) = rendered value v, None = unprovable
     def tupleOf(f: graft.table.DataFileMeta): Option[Seq[Option[String]]] = {
-      val (mins, maxs) = StreamTable.skipStats(f, conf)
+      val (mins, maxs) = StreamTable.skipStats(f)
       def nullCount(c: String): Option[Long] =
         f.nullStats.flatMap(_.get(c)).flatMap(_.toLongOption)
       val comps = pks.map { c =>
@@ -412,16 +407,26 @@ class GraftStreamingDataWriter(tableRoot: String, schema: StructType,
     partPlan: Array[Int] = Array.empty)
     extends DataWriter[InternalRow] {
 
+  // every SQL key the write support reads, pinned rather than inherited
+  // from the session (as GraftVectorReader pins its read keys): the
+  // non-legacy layout, TIMESTAMP as INT64 MICROS (the layout
+  // StreamTable.withMicrosTimestamps gives appendBatch), no field ids
   private val conf = new Configuration()
-  private val msgType = GraftStreamingWrite.parquetSchema(schema, stamp.isDefined)
-  GroupWriteSupport.setSchema(msgType, conf)
-  private val factory = new SimpleGroupFactory(msgType)
+  ParquetWriteSupport.setSchema(
+    GraftStreamingWrite.fileSchema(schema, stamp.isDefined), conf)
+  conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
+  conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+  conf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key, "false")
+  conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key, "false")
+
+  /** `__graft_seq`, appended to every row of a stamped write. */
+  private val stampRow: Option[JoinedRow] =
+    stamp.map(s => new JoinedRow(null, new GenericInternalRow(Array[Any](s))))
 
   private final class Sink(val bucket: Option[Int]) {
     val path = new org.apache.hadoop.fs.Path(
       s"$tableRoot/.sink-$writerId-e$epochId-p$partitionId-b${bucket.getOrElse(-1)}-${UUID.randomUUID().toString.take(8)}.parquet")
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(path, conf))
+    val writer = new InternalRowParquetBuilder(HadoopOutputFile.fromPath(path, conf))
       .withConf(conf)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
@@ -515,29 +520,7 @@ class GraftStreamingDataWriter(tableRoot: String, schema: StructType,
             "file must be a sorted run")
       sink.lastKey = k
     }
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) {
-        val name = schema(i).name
-        schema(i).dataType match {
-          case LongType => g.add(name, row.getLong(i))
-          case IntegerType => g.add(name, row.getInt(i))
-          case DoubleType => g.add(name, row.getDouble(i))
-          case FloatType => g.add(name, row.getFloat(i))
-          case BooleanType => g.add(name, row.getBoolean(i))
-          case StringType =>
-            g.add(name, Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
-          case BinaryType => g.add(name, Binary.fromConstantByteArray(row.getBinary(i)))
-          case DateType => g.add(name, row.getInt(i))
-          case TimestampNTZType | TimestampType => g.add(name, row.getLong(i))
-          case dt => throw new UnsupportedOperationException(dt.toString)
-        }
-      }
-      i += 1
-    }
-    stamp.foreach(s => g.add(StreamTable.SeqColName, s))
-    sink.writer.write(g)
+    sink.writer.write(stampRow.fold(row)(_.withLeft(row)))
     sink.rows += 1
   }
 

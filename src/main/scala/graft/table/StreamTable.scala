@@ -23,17 +23,15 @@ case class DataFileMeta(
     creationTimeMs: Long,
     /** Hash-bucket id of every row in this file (bucket-keyed tables only:
       * pmod(murmur3(key), numBuckets), the shuffle partition index of the
-      * bucketed write). None for unbucketed writes, legacy manifests, and
-      * maintenance rewrites — readers that need the bucket contract
+      * bucketed write). None for unbucketed writes, row-level DML output
+      * and maintenance rewrites — readers that need the bucket contract
       * (storage-partitioned joins) fall back gracefully when absent. */
     bucket: Option[Int] = None,
     /** Columns this file's rows are ascending-sorted by (nulls first), when
       * the writer sorted them. Every data file of a PK table is a SORTED
       * RUN on the primary key — the commit refuses any other — so the
       * per-bucket merge-on-read streams a k-way merge with O(open files)
-      * memory (Paimon's sorted-run LSM invariant). None on append tables
-      * and on manifests written before the invariant, which the PK readers
-      * refuse until a compaction rewrites them. */
+      * memory (Paimon's sorted-run LSM invariant). None on append tables. */
     sortedBy: Option[Seq[String]] = None,
     /** Per-column min/max captured ONCE from the footer at commit time and
       * served from the manifest ever after (Paimon's DataFileMeta value
@@ -41,15 +39,15 @@ case class DataFileMeta(
       * skipping and metadata-only MIN/MAX then plan with ZERO file I/O. A
       * column appears iff it has at least one non-null value AND every row
       * group's chunk stats were trustworthy; values render through the
-      * parquet typed comparator (`minAsString`), exactly what the footer
-      * fallback produces. None on legacy manifests → readers re-open the
-      * footer (the pre-round-8 path). */
+      * parquet typed comparator (`minAsString`). Present on every entry of
+      * a version-1 snapshot ([[StreamTable.FormatVersion]]), like
+      * [[maxStats]], [[fileCols]], [[badStats]] and [[nullStats]]. */
     minStats: Option[Map[String, String]] = None,
     maxStats: Option[Map[String, String]] = None,
     /** All column names physically present in this file (chunk paths, minus
       * engine bookkeeping) — distinguishes "file predates the column"
       * (contributes only nulls: skippable) from "column exists here" for
-      * the metadata-only aggregate push. None on legacy manifests. */
+      * the metadata-only aggregate push. */
     fileCols: Option[Seq[String]] = None,
     /** Columns present in the file whose footer stats could NOT be trusted
       * at capture time (a chunk with rows but null/unprovable stats, or a
@@ -62,8 +60,7 @@ case class DataFileMeta(
       * iff every row group proved its null count — absence means unknown.
       * What they buy: "file is single-valued in column g" becomes provable
       * (nulls=0 ∧ min=max, or nulls=rowCount), which is what the grouped
-      * metadata-only aggregate pushdown stands on. None on legacy
-      * manifests. */
+      * metadata-only aggregate pushdown stands on. */
     nullStats: Option[Map[String, String]] = None,
     /** DELETION-VECTOR sidecar (the Iceberg/Delta position-delete idea):
       * absolute path of a small binary file listing the row POSITIONS of
@@ -72,8 +69,8 @@ case class DataFileMeta(
       * untouched, so a 1-row compliance delete on a 1 GB file costs one
       * tiny sidecar write instead of a 1 GB rewrite. Compaction and COW
       * rewrites materialize the deletions and drop the vector. None =
-      * no deletions (all legacy manifests). Append tables only — PK
-      * deletes are merge-on-read tombstones. */
+      * no deletions. Append tables only — PK deletes are merge-on-read
+      * tombstones. */
     dvPath: Option[String] = None,
     /** Cardinality of [[dvPath]] — lets counts/stats net deletions without
       * opening the sidecar. Physical [[rowCount]] stays untouched:
@@ -101,8 +98,8 @@ case class Snapshot(
       * by exactly one bit, so a split relabels bucket b's keys into b and
       * b+n and nothing else) — and riding the snapshot makes every reader,
       * time travel included, see the count its files were written under.
-      * Commits carry the stamp forward; None on fixed-bucket tables and
-      * legacy manifests. */
+      * Commits carry the stamp forward: present on every version-1
+      * snapshot of a dynamic table, None on fixed-bucket tables. */
     @com.fasterxml.jackson.databind.annotation.JsonDeserialize(contentAs = classOf[java.lang.Integer])
     bucketCount: Option[Int] = None,
     /** Identity + epoch of the external (V2 streaming sink) writer that
@@ -110,7 +107,7 @@ case class Snapshot(
       * epoch commit idempotent PER WRITER — the global batch-id watermark
       * cannot serve that role once independent writers interleave (another
       * writer advancing it must never make a sink epoch look committed).
-      * None for all other commit paths and legacy manifests. */
+      * None for all other commit paths. */
     writer: Option[String] = None,
     // contentAs: erasure makes Jackson materialize small Option[Long]
     // values as Integer, which then CCEs on comparison — pin the content
@@ -141,9 +138,7 @@ case class Snapshot(
       * "overwrite" | "compact" | "replace" (COW row-level DML). The
       * changelog interval walk classifies on it — a compaction's removed
       * files are absorbed layout maintenance, an overwrite's are dropped
-      * STATE whose keys must emit `-D`. Empty on legacy manifests, where
-      * the walk falls back to inferring compaction from added level>0
-      * files. */
+      * STATE whose keys must emit `-D`. Set by every version-1 commit. */
     kind: String = "",
     /** DELTA-MANIFEST list (the Paimon/Iceberg manifest-list structure,
       * guide.md:180-184's snapshot model at metadata scale): ordered
@@ -154,16 +149,24 @@ case class Snapshot(
       * periodic full rebase when the list grows past the cap), so commit
       * metadata is O(delta) instead of an O(live files) rewrite per
       * commit. Readers hydrate `files` from the fold (manifest files are
-      * immutable — parsed once per table handle). Empty on legacy inline
-      * manifests. */
+      * immutable — parsed once per table handle). Empty only while the
+      * live set is empty. */
     manifestList: Seq[String] = Seq.empty,
     /** THIS commit's own change relative to its parent, as a delta-manifest
       * file name (usually the `manifestList` tail entry; a rebase commit
       * writes it separately). The per-commit evidence every change surface
       * (CDC trigger, incremental-between, `$changelog`) plans from — O(this
-      * commit's delta) driver work, no parent hydration. None on legacy
-      * manifests and on no-op commits (whose evidence is empty). */
-    deltaManifest: Option[String] = None)
+      * commit's delta) driver work, no parent hydration. On a version-1
+      * snapshot None means a no-op commit (whose evidence is empty). */
+    deltaManifest: Option[String] = None,
+    /** The on-disk format this snapshot was committed in. Every commit
+      * stamps [[StreamTable.FormatVersion]]; the field is absent (reads 0)
+      * in snapshots written before the format was versioned, which may
+      * hold an inline `files` list, stats-less entries, deltas without
+      * `-D` evidence, no `kind` or no `bucketCount`. The table refuses a
+      * version-0 snapshot everywhere except in `compact`, which upgrades
+      * it, and in snapshot expiry and the orphan sweep. */
+    formatVersion: Int = 0)
 
 /** One immutable delta-manifest file's content: the paths this commit
   * removed from the live set, then the file metas it added. */
@@ -174,7 +177,8 @@ case class ManifestDelta(
       * persisted only for state-REPLACING commits (overwrite / COW DML) —
       * the `-D` evidence a changelog interval needs, served without
       * hydrating the parent snapshot. None for compactions (absorbed layout
-      * maintenance, never evidence) and appends (nothing removed). */
+      * maintenance, never evidence) and appends (nothing removed); present
+      * on every other version-1 delta that removes a path. */
     removedMetas: Option[Seq[DataFileMeta]] = None)
 
 /** A Spark-native streaming table: a directory of immutable parquet files plus
@@ -364,14 +368,13 @@ class StreamTable(
 
   /** The bucket count a SCAN of `snapId` (None = head) must compute the
     * layout hash under — for point-lookup pruning, which must hash with the
-    * scanned generation's count or prune the wrong bucket. None when no
-    * count is provable (legacy dynamic snapshot): callers skip pruning. */
+    * scanned generation's count or prune the wrong bucket. None on an
+    * unbucketed table, or when `snapId` names no snapshot. */
   def bucketCountAt(snapId: Option[Long]): Option[Int] =
     if (!isDynamicBucket) Some(numBuckets).filter(_ > 0)
     else snapId match {
       case Some(id) => snapshotAt(id).flatMap(_.bucketCount)
-      case None => latestSnapshot.flatMap(_.bucketCount)
-        .orElse(Some(dynBucketInitial))
+      case None => Some(currentBuckets)
     }
   aggSpec.foreach(_.foreach { case (f, fn) =>
     require(Set("sum", "min", "max", "count", "bool_and", "bool_or",
@@ -439,18 +442,40 @@ class StreamTable(
         size > 8
     }
 
-  private def hydrate(s: Snapshot): Snapshot = hydrated(s)
+  /** THE format check: `s`, unless it was committed in another on-disk
+    * format than [[StreamTable.FormatVersion]]. Every snapshot accessor
+    * ([[snapshotHeaders]], [[snapshotAt]], [[latestSnapshot]],
+    * [[hydrated]]) runs it, so reads, time travel, change and streaming
+    * reads, metadata views and every write refuse a version-0 snapshot
+    * with one message naming the upgrade. */
+  private def current(s: Snapshot): Snapshot =
+    if (s.formatVersion == FormatVersion) s
+    else if (s.formatVersion > FormatVersion) throw new IllegalStateException(
+      s"$root: snapshot ${s.id} is in on-disk format version " +
+        s"${s.formatVersion}, newer than this engine's $FormatVersion")
+    else throw new IllegalStateException(
+      s"$root: snapshot ${s.id} is in on-disk format version " +
+        s"${s.formatVersion}; this engine reads version $FormatVersion " +
+        "only. Upgrade the table with CALL sys.compact (StreamTable.compact), " +
+        "then expire the snapshots older than the upgrade")
 
-  /** Materialize a v2 snapshot's live set from its manifest-list fold
-    * (memoized — see [[hydrateCache]]); legacy inline snapshots pass through
-    * untouched. Every fold increments [[StreamTable.hydrateFolds]], the
-    * observability specs assert O(delta) planning on. */
-  def hydrated(s: Snapshot): Snapshot =
-    if (s.manifestList.isEmpty) s
+  /** Materialize a snapshot's live set from its manifest-list fold
+    * (memoized — see [[hydrateCache]]), after the format check. Every fold
+    * increments [[StreamTable.hydrateFolds]], the observability specs
+    * assert O(delta) planning on. */
+  def hydrated(s: Snapshot): Snapshot = current(s).copy(files = storedFiles(s))
+
+  /** A snapshot's live set in any format, for the maintenance that must
+    * read a version-0 snapshot ([[compact]] upgrades it; expiry and the
+    * orphan sweep keep its files): the manifest-list fold, where an empty
+    * list folds to the snapshot's own `files` — persisted empty by every
+    * version-1 commit, the inline live set of a version-0 one. */
+  private def storedFiles(s: Snapshot): Seq[DataFileMeta] =
+    if (s.manifestList.isEmpty) s.files
     else {
       val key = (s.id, s.manifestList)
       val cached = hydrateCache.synchronized(Option(hydrateCache.get(key)))
-      val files = cached.getOrElse {
+      cached.getOrElse {
         StreamTable.hydrateFolds.incrementAndGet()
         val live = new java.util.LinkedHashMap[String, DataFileMeta]()
         s.manifestList.foreach { n =>
@@ -462,27 +487,28 @@ class StreamTable(
         hydrateCache.synchronized(hydrateCache.put(key, fs))
         fs
       }
-      s.copy(files = files)
     }
 
-  /** This commit's own change, resolved from its delta manifest. None =
-    * legacy snapshot (diff the hydrated pair) or a no-op commit. */
+  /** This commit's own change, resolved from its delta manifest. None = a
+    * no-op commit. */
   def deltaOf(s: Snapshot): Option[ManifestDelta] =
     s.deltaManifest.map(manifestDelta)
 
-  /** One commit's ADDED level-0 evidence vs its predecessor — see
-    * [[StreamTable.addedEvidence]] (the shared classification). */
-  def addedEvidenceOf(cur: Snapshot, pred: Option[Snapshot]): Seq[DataFileMeta] =
-    StreamTable.addedEvidence(deltaOf, hydrated, cur, pred)
+  /** One commit's ADDED level-0 evidence from its persisted delta (none:
+    * a no-op commit, nothing added) — THE added-file classification
+    * `changeHistoryView` (the `$changelog`/`audit_log` door) and the V2
+    * change-history planner share, so the sites cannot drift. */
+  def addedEvidenceOf(cur: Snapshot): Seq[DataFileMeta] =
+    deltaOf(cur).map(StreamTable.deltaEvidence).getOrElse(Seq.empty)
 
   /** Fold ONE commit's change into a caller's running live-state: applies
-    * the commit's persisted delta (or nothing, for a no-op detected by
-    * manifest-list equality with the parent) and returns true; returns
-    * FALSE when the commit is not delta-served — legacy history or a
-    * retention gap (`prev` is not the parent) — and the caller must
-    * re-seed from a hydration. THE delta/no-op/legacy classification every
-    * incremental walk shares ([[addedBetween]], [[snapshotsView]],
-    * retention/rollback's [[liveUnions]]), so the rules cannot drift. */
+    * the commit's persisted delta (or nothing, for a no-op: no delta, and
+    * the parent's stored list and files) and returns true; returns FALSE
+    * at a retention gap (`prev` is not the parent) or a version-0 commit
+    * stored inline, and the caller must re-seed from the snapshot's live
+    * set. THE delta/no-op classification every incremental walk shares
+    * ([[addedBetween]], [[snapshotsView]], retention/rollback's
+    * [[liveUnions]]), so the rules cannot drift. */
   private def foldCommit(prev: Option[Snapshot], cur: Snapshot)(
       remove: String => Unit, add: DataFileMeta => Unit): Boolean = {
     val contiguous = prev.exists(_.id == cur.id - 1)
@@ -491,19 +517,23 @@ class StreamTable(
         d.removed.foreach(remove(_))
         d.added.foreach(add(_))
         true
-      case None if contiguous && cur.manifestList.nonEmpty &&
-          prev.exists(_.manifestList == cur.manifestList) =>
+      case None if contiguous && prev.exists(p =>
+          p.manifestList == cur.manifestList && p.files == cur.files) =>
         true // no-op commit: parent's fold is this commit's fold
       case _ => false
     }
   }
 
-  /** Raw snapshot manifests, id-ordered, WITHOUT hydration — `files` stays
-    * empty on v2 snapshots. O(retained) parses of O(delta)-sized JSON;
-    * surfaces needing a live set hydrate exactly the snapshots they touch
-    * ([[hydrated]]). Entries vanishing under the walk (concurrent
-    * rollback/expiry) are skipped. */
-  def snapshotHeaders: Seq[Snapshot] =
+  /** Snapshot manifests, id-ordered, WITHOUT hydration (`files` stays
+    * empty) and after the format check. O(retained) parses of
+    * O(delta)-sized JSON; surfaces needing a live set hydrate exactly the
+    * snapshots they touch ([[hydrated]]). */
+  def snapshotHeaders: Seq[Snapshot] = storedHeaders.map(current)
+
+  /** [[snapshotHeaders]] in any format, for expiry and the orphan sweep.
+    * Entries vanishing under the walk (concurrent rollback/expiry) are
+    * skipped. */
+  private def storedHeaders: Seq[Snapshot] =
     listDir(Paths.get(snapDir)).iterator
       .filter(_.getFileName.toString.matches("snap-\\d+\\.json"))
       .flatMap { p =>
@@ -543,9 +573,23 @@ class StreamTable(
   def snapshots: Seq[Snapshot] = snapshotHeaders.map(hydrated)
 
   /** The head snapshot, reading ONLY the max-id manifest — commit planning
-    * and scans never pay an O(retained snapshots) parse. Retries the list
-    * when a concurrent rollback deletes the chosen head under the read. */
-  def latestSnapshot: Option[Snapshot] = {
+    * and scans never pay an O(retained snapshots) parse. */
+  def latestSnapshot: Option[Snapshot] = headAs(hydrated)
+
+  /** The head snapshot's header, after the format check (no hydration). */
+  private def latestHeader: Option[Snapshot] = headAs(current)
+
+  /** The head snapshot with its live set, where a version-0 head passes
+    * the format check: the base of [[compact]], the format upgrade. */
+  private def upgradeHead: Option[Snapshot] = headAs { s =>
+    val checked = if (s.formatVersion < FormatVersion) s else current(s)
+    checked.copy(files = storedFiles(s))
+  }
+
+  /** The head snapshot through `load`. Retries the list when a concurrent
+    * rollback deletes the chosen head (or a manifest `load` folds) under
+    * the read. */
+  private def headAs(load: Snapshot => Snapshot): Option[Snapshot] = {
     var attempt = 0
     while (attempt < 4) {
       val ids = listDir(Paths.get(snapDir)).flatMap { p =>
@@ -555,7 +599,7 @@ class StreamTable(
         else None
       }
       if (ids.isEmpty) return None
-      try return Some(hydrate(mapper.readValue(
+      try return Some(load(mapper.readValue(
         Files.readAllBytes(Paths.get(snapDir, s"snap-${ids.max}.json")),
         classOf[Snapshot])))
       catch { case _: java.nio.file.NoSuchFileException => attempt += 1 }
@@ -569,7 +613,7 @@ class StreamTable(
         Some(n.stripPrefix("snap-").stripSuffix(".json").toLong)
       else None
     }.sorted.reverse.foreach { id =>
-      try return Some(hydrate(mapper.readValue(
+      try return Some(load(mapper.readValue(
         Files.readAllBytes(Paths.get(snapDir, s"snap-$id.json")),
         classOf[Snapshot])))
       catch { case _: java.nio.file.NoSuchFileException => () }
@@ -593,10 +637,15 @@ class StreamTable(
       /** Dynamic bucket mode: the count this commit's staged labels were
         * stamped under — carried into the snapshot. None = carry the base's
         * stamp forward unchanged (metadata-only commits, fixed tables). */
-      buckets: Option[Int] = None): Snapshot = {
+      buckets: Option[Int] = None,
+      /** [[compact]]: the base may be a version-0 snapshot, and then this
+        * commit is the format upgrade — it must replace every live file,
+        * and it rebases the manifest list into one full manifest. */
+      upgrade: Boolean = false): Snapshot = {
     var attempt = 0
     while (true) {
-      val base = latestSnapshot
+      val base = if (upgrade) upgradeHead else latestSnapshot
+      val upgrading = base.exists(_.formatVersion < FormatVersion)
       // dynamic-bucket conflict guard: labels were stamped under `buckets`;
       // if the table's count moved since (an external split — the inline
       // split runs on the writer's own thread and cannot race itself),
@@ -625,9 +674,13 @@ class StreamTable(
       // an added meta whose path is already live replaces it: remove+re-add
       val removedAll =
         ch.removedPaths ++ ch.added.iterator.map(_.path).filter(basePaths)
+      if (upgrading && !baseFiles.forall(f => removedAll(f.path)))
+        throw new java.util.ConcurrentModificationException(
+          s"$root: the format upgrade must rewrite every live file, but " +
+            "files were committed since it read the table — rerun it")
       val files = baseFiles.filterNot(f => removedAll(f.path)) ++ ch.added
-      val (list, deltaName) =
-        planManifestList(base, files, ch.added, removedAll, baseFiles, kind)
+      val (list, deltaName) = planManifestList(base, files, ch.added,
+        removedAll, baseFiles, kind, rebase = upgrading)
       val next = Snapshot(base.map(_.id + 1).getOrElse(0L),
         System.currentTimeMillis(), ch.batchId, files,
         bucketCount =
@@ -635,7 +688,8 @@ class StreamTable(
           else None,
         writer = writer.map(_._1), writerEpoch = writer.map(_._2),
         changelog = changelog, clogProduced = produced, clogFromId = clogFrom,
-        kind = kind, manifestList = list, deltaManifest = deltaName)
+        kind = kind, manifestList = list, deltaManifest = deltaName,
+        formatVersion = FormatVersion)
       // the snapshot JSON persists files = [] — the live set is the
       // manifest-list fold, so commit metadata stays O(this commit's delta).
       // The publish itself is the pluggable CAS primitive (POSIX link by
@@ -670,13 +724,13 @@ class StreamTable(
   /** The next snapshot's (manifestList, deltaManifest): reuse the base list
     * and append one delta carrying EXACTLY this commit's change (handed in
     * by [[commit]] — never re-derived by diffing full lists); rebase to a
-    * single full manifest when the list is at cap or the base is a legacy
-    * inline snapshot (one-time conversion), still recording the commit's
-    * own delta separately so change surfaces stay O(delta) across rebases.
-    * A no-op commit reuses the base list verbatim — zero manifest bytes. */
+    * single full manifest when the list is at cap or on `rebase` (the
+    * format upgrade), still recording the commit's own delta separately so
+    * change surfaces stay O(delta) across rebases. A no-op commit reuses
+    * the base list verbatim — zero manifest bytes. */
   private def planManifestList(base: Option[Snapshot], files: Seq[DataFileMeta],
       added: Seq[DataFileMeta], removed: Set[String],
-      baseFiles: Seq[DataFileMeta], kind: String)
+      baseFiles: Seq[DataFileMeta], kind: String, rebase: Boolean)
       : (Seq[String], Option[String]) = {
     def write(d: ManifestDelta): String = {
       val name = s"mf-${UUID.randomUUID()}.json"
@@ -685,12 +739,8 @@ class StreamTable(
       name
     }
     val baseList = base.map(_.manifestList).getOrElse(Seq.empty)
-    val legacyBase = base.exists(s => s.manifestList.isEmpty && s.files.nonEmpty)
     val noop = added.isEmpty && removed.isEmpty
-    // a legacy base must STILL rebase on a no-op commit: the snapshot JSON
-    // persists files = [], so an empty manifest list would read as an empty
-    // table — the live set must ride in the (full) manifest either way
-    if (noop && !legacyBase) return (baseList, None)
+    if (noop && !rebase) return (baseList, None)
     // `-D` evidence rides in the delta for state-REPLACING commits only: a
     // compaction's removals are absorbed maintenance, an append removes
     // nothing — so evidence bytes stay O(logical change)
@@ -701,7 +751,7 @@ class StreamTable(
     val deltaName =
       if (noop) None
       else Some(write(ManifestDelta(added, removed.toSeq.sorted, evidence)))
-    if (legacyBase || baseList.size >= MaxManifestList)
+    if (rebase || baseList.size >= MaxManifestList)
       (Seq(write(ManifestDelta(added = files))), deltaName)
     else (baseList :+ deltaName.get, deltaName)
   }
@@ -747,7 +797,6 @@ class StreamTable(
     * the payoff is every downstream CDC trigger reading O(interval
     * changelog) instead of re-resolving two full snapshots. */
   private def stageChangelog(newMetas: Seq[DataFileMeta], batchId: Long): Seq[DataFileMeta] = {
-    val pk = primaryKey.get
     val prev = latestSnapshot.map(_.files).getOrElse(Seq.empty)
     // only buckets this commit touched can change — prune the resolve to them
     val prevKept =
@@ -760,17 +809,10 @@ class StreamTable(
     // the previous files retracts and the fold of previous + new asserts
     // (first commit into a bucket: every touched key is +I); persisted
     // co-located with its key's bucket (writeClustered's content-derived
-    // labeling) so the CDC reader keeps the per-bucket plan. A previous
-    // file written before sorted runs were required is diffed through a
-    // key-sorted copy, so appends keep working until compaction upgrades
-    // the layout.
-    val sortedRuns = s"$root/.staging-${UUID.randomUUID()}"
-    try {
-      val prevRuns = asSortedRuns(prevKept, pk, sortedRuns)
-      val ops = graft.sources.v2.ChangelogPlanning.diffFrame(this, prevRuns,
-        prevRuns ++ newMetas, newMetas)
-      persistChangelog(ops, batchId, s"cl$batchId")
-    } finally deleteRecursively(Paths.get(sortedRuns))
+    // labeling) so the CDC reader keeps the per-bucket plan
+    val ops = graft.sources.v2.ChangelogPlanning.diffFrame(this, prevKept,
+      prevKept ++ newMetas, newMetas)
+    persistChangelog(ops, batchId, s"cl$batchId")
   }
 
   /** Stage a netted-ops frame (`op` column + images) as level-0 changelog
@@ -1943,10 +1985,9 @@ class StreamTable(
         spark.sessionState.conf.caseSensitiveAnalysis)
     if (columnDefaults.isEmpty) return readFilesRaw(files, schema)
     // EXISTS_DEFAULT substitution (ADD COLUMN … DEFAULT): group files by
-    // the set of defaulted columns each provably lacks (manifest fileCols;
-    // a legacy meta without the census conservatively counts as carrying
-    // everything = plain null-fill), fill each group's absent columns with
-    // the frozen literal, and union back in the schema's column order.
+    // the set of defaulted columns each provably lacks (manifest fileCols),
+    // fill each group's absent columns with the frozen literal, and union
+    // back in the schema's column order.
     // Group count is bounded by the (tiny) number of schema generations.
     val groups = files.groupBy(f =>
       columnDefaults.keySet.filter(c => f.fileCols.exists(!_.contains(c))))
@@ -2075,15 +2116,14 @@ class StreamTable(
     * file — skipping must never be able to drop a matching row). Stats are
     * manifest-served (persisted per file at commit time, Paimon's
     * DataFileMeta model) — the pruning pass is pure driver-side metadata
-    * work with zero file I/O; only legacy manifests re-open footers. */
+    * work with zero file I/O. */
   def readWhere(column: String, lo: Double, hi: Double): DataFrame = {
     require(primaryKey.isEmpty,
       "readWhere data skipping is append-table only (PK resolution needs all files)")
     val files = latestSnapshot.map(_.files).getOrElse(Seq.empty)
     if (files.isEmpty) return spark.emptyDataFrame
-    val conf = new org.apache.hadoop.conf.Configuration()
     val kept = files.filter { f =>
-      val (mins, maxs) = skipStats(f, conf)
+      val (mins, maxs) = skipStats(f)
       (mins.get(column), maxs.get(column)) match {
         case (Some(mn), Some(mx)) =>
           try !(mx.toDouble < lo || mn.toDouble > hi)
@@ -2137,9 +2177,9 @@ class StreamTable(
   /** Files added in `(fromId, toId]` and still live at `toId` — the
     * incremental end-state file diff, folded from the interval's per-commit
     * delta manifests: O(interval delta) driver work, zero snapshot
-    * hydrations. Falls back to hydrating the two endpoints when any covered
-    * commit predates delta manifests. Shared by [[changesBetween]] and the
-    * V2 snapshot-offset streaming source. */
+    * hydrations. Falls back to hydrating the two endpoints across a
+    * retention gap. Shared by [[changesBetween]] and the V2 snapshot-offset
+    * streaming source. */
   private[graft] def addedBetween(fromId: Long, toId: Long): Seq[DataFileMeta] = {
     val byId = snapshotHeaders.map(s => s.id -> s).toMap
     def headAt(id: Long) = byId.getOrElse(id,
@@ -2157,7 +2197,7 @@ class StreamTable(
     while (ok && id <= toId) {
       byId.get(id) match {
         case Some(cur) =>
-          // legacy history / gaps: abort to the endpoint-diff fallback
+          // a retention gap: abort to the endpoint-diff fallback
           ok = foldCommit(prev, cur)(
             p => if (live.remove(p) == null) preInterval += p,
             f => if (!preInterval.contains(f.path)) live.put(f.path, f))
@@ -2220,8 +2260,7 @@ class StreamTable(
     * rows — a `SELECT … FROM t$files` over a million-file table never
     * builds per-file rows on the driver, and filters/aggregates over the
     * view run as ordinary distributed plan nodes. Stats come straight from
-    * the manifests (zero file opens); legacy inline snapshots keep the
-    * driver-meta path with a distributed footer fallback. */
+    * the manifests (zero file opens). */
   /** The distributed `$files` scan's driver payload: one task per manifest
     * in the head's list — (manifest path, suppression set: paths whose add
     * entry in THAT manifest is not the surviving one). Size is bounded by
@@ -2231,9 +2270,7 @@ class StreamTable(
     * bound so a regression cannot silently ship O(history) payloads.
     * Exposed for that spec; [[filesView]] is the consumer. */
   private[graft] def filesScanTasks: Seq[(String, Seq[String])] = {
-    val head = snapshotHeaders.lastOption
-    if (!head.exists(_.manifestList.nonEmpty)) return Seq.empty
-    val list = head.get.manifestList.toVector
+    val list = latestHeader.map(_.manifestList.toVector).getOrElse(Vector.empty)
     // fold decisions on PATH STRINGS only: a file row emits from the
     // manifest of its LAST add, unless a later manifest removed it
     val lastAdd = scala.collection.mutable.HashMap.empty[String, Int]
@@ -2252,74 +2289,39 @@ class StreamTable(
 
   def filesView: DataFrame = {
     import spark.implicits._
-    val head = snapshotHeaders.lastOption
-    if (head.exists(_.manifestList.nonEmpty)) {
-      val tasks = filesScanTasks
-      val metas = spark.createDataset(tasks)
-        .repartition(math.max(1, math.min(tasks.size, 32)))
-        .flatMap { case (mpath, sup) =>
-          val supSet = sup.toSet
-          val conf = new org.apache.hadoop.conf.Configuration()
-          // a manifest vanishing between planning and execution means
-          // concurrent expiry/rollback retired the PLANNED head — its
-          // surviving adds were rebased into manifests this plan doesn't
-          // hold, so skipping would silently UNDER-REPORT live files. Fail
-          // loudly with the remedy instead: a re-run plans from the new
-          // head (snapshot isolation at query granularity — the same
-          // posture as a time-travel read of an expired version).
-          val delta =
-            try StreamTable.parseManifest(mpath)
-            catch {
-              case e @ (_: java.nio.file.NoSuchFileException |
-                  _: java.io.FileNotFoundException) =>
-                throw new IllegalStateException(
-                  s"$$files scan lost manifest $mpath to concurrent " +
-                    "snapshot maintenance (expiry/rollback); re-run the " +
-                    "query to plan from the current head", e)
-            }
-          delta.added
-            .filterNot(f => supSet(f.path))
-            .map { f => // stats-less entry (hand-edited/older manifest):
-              if (f.minStats.isDefined && f.maxStats.isDefined) f
-              else { // footer fallback runs HERE, in the executor task
-                val (_, mn, mx) = StreamTable.footerStats(f.path, conf)
-                f.copy(minStats = Some(mn), maxStats = Some(mx))
-              }
-            }
-        }
-      return metas.map(f => (f.path, f.rowCount,
-          f.minStats.getOrElse(Map.empty[String, String]),
-          f.maxStats.getOrElse(Map.empty[String, String]),
-          f.level, f.bucket, f.fileSizeInBytes, f.minSeq, f.maxSeq,
-          f.creationTimeMs, f.dvCount.getOrElse(0L)))
-        .toDF("file_path", "record_count", "min_value_stats",
-          "max_value_stats", "level", "bucket", "file_size_in_bytes",
-          "min_sequence_number", "max_sequence_number", "creation_time_ms",
-          "delete_row_count")
-        .withColumn("creation_time", timestamp_millis(col("creation_time_ms")))
-        .drop("creation_time_ms")
-        .orderBy("min_sequence_number", "file_path")
-    }
-    val files = head.map(_.files).getOrElse(Seq.empty)
-    val statsDf =
-      if (files.forall(f => f.minStats.isDefined && f.maxStats.isDefined))
-        spark.createDataset(files.map(f =>
-          (f.path, f.rowCount, f.minStats.get, f.maxStats.get)))
-          .toDF("file_path", "record_count", "min_value_stats", "max_value_stats")
-      else spark.createDataset(files.map(_.path)).mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        it.map { p =>
-          val stats = footerStats(p, conf)
-          (p, stats._1, stats._2, stats._3)
-        }
-      }.toDF("file_path", "record_count", "min_value_stats", "max_value_stats")
-    val metaDf = spark.createDataset(files.map(f =>
-      (f.path, f.level, f.bucket, f.fileSizeInBytes, f.minSeq, f.maxSeq,
-        f.creationTimeMs, f.dvCount.getOrElse(0L))))
-      .toDF("file_path", "level", "bucket", "file_size_in_bytes",
+    val tasks = filesScanTasks
+    spark.createDataset(tasks)
+      .repartition(math.max(1, math.min(tasks.size, 32)))
+      .flatMap { case (mpath, sup) =>
+        val supSet = sup.toSet
+        // a manifest vanishing between planning and execution means
+        // concurrent expiry/rollback retired the PLANNED head — its
+        // surviving adds were rebased into manifests this plan doesn't
+        // hold, so skipping would silently UNDER-REPORT live files. Fail
+        // loudly with the remedy instead: a re-run plans from the new
+        // head (snapshot isolation at query granularity — the same
+        // posture as a time-travel read of an expired version).
+        val delta =
+          try StreamTable.parseManifest(mpath)
+          catch {
+            case e @ (_: java.nio.file.NoSuchFileException |
+                _: java.io.FileNotFoundException) =>
+              throw new IllegalStateException(
+                s"$$files scan lost manifest $mpath to concurrent " +
+                  "snapshot maintenance (expiry/rollback); re-run the " +
+                  "query to plan from the current head", e)
+          }
+        delta.added.filterNot(f => supSet(f.path))
+      }
+      .map(f => (f.path, f.rowCount,
+        f.minStats.getOrElse(Map.empty[String, String]),
+        f.maxStats.getOrElse(Map.empty[String, String]),
+        f.level, f.bucket, f.fileSizeInBytes, f.minSeq, f.maxSeq,
+        f.creationTimeMs, f.dvCount.getOrElse(0L)))
+      .toDF("file_path", "record_count", "min_value_stats",
+        "max_value_stats", "level", "bucket", "file_size_in_bytes",
         "min_sequence_number", "max_sequence_number", "creation_time_ms",
         "delete_row_count")
-    statsDf.join(metaDf, "file_path")
       .withColumn("creation_time", timestamp_millis(col("creation_time_ms")))
       .drop("creation_time_ms")
       .orderBy("min_sequence_number", "file_path")
@@ -2334,8 +2336,8 @@ class StreamTable(
     // ONE incremental pass over the retained history: per snapshot apply
     // its own delta manifest to a running (files, rows, bytes) state —
     // O(total delta entries) for the whole view, never O(retained × live
-    // files). Only legacy snapshots and retention gaps (a tagged survivor
-    // whose neighbors expired) re-fold from scratch.
+    // files). Only retention gaps (a tagged survivor whose neighbors
+    // expired) re-fold from scratch.
     val heads = snapshotHeaders
     val live = new java.util.HashMap[String, (Long, Long)]()
     var rows = 0L
@@ -2354,13 +2356,12 @@ class StreamTable(
     }
     val out = heads.map { s =>
       if (!foldCommit(prev, s)(drop, put)) {
-        // legacy snapshot or retention gap: re-seed from the hydration
+        // retention gap: re-seed from the hydration
         live.clear(); rows = 0L; bytes = 0L
         hydrated(s).files.foreach(put)
       }
       prev = Some(s)
-      (s.id, s.committedAtMs, s.batchId,
-        if (s.kind.isEmpty) "append" else s.kind, live.size.toLong, rows, bytes)
+      (s.id, s.committedAtMs, s.batchId, s.kind, live.size.toLong, rows, bytes)
     }
     spark.createDataset(out)
       .toDF("snapshot_id", "committed_at_ms", "batch_id", "commit_kind",
@@ -2384,51 +2385,36 @@ class StreamTable(
     val pks = partitionKeys.getOrElse(throw new UnsupportedOperationException(
       s"$root is not a partitioned table — `$$partitions` needs PARTITIONED BY"))
     val rootStr = root
-    val head = snapshotHeaders.lastOption
+    // distributed census: executors fold their manifest slices into
+    // per-file census rows (the same manifest-partition scan `$files`
+    // rides — at a million files the driver never materializes the
+    // per-file list), then ONE map-side-combined aggregation returns
+    // |partitions| rows to the driver
+    val tasks = filesScanTasks
     val perFile: Dataset[(String, Long, Long, Long, Long, Long)] =
-      if (head.exists(_.manifestList.nonEmpty)) {
-        // distributed census: executors fold their manifest slices into
-        // per-file census rows (the same manifest-partition scan `$files`
-        // rides — at a million files the driver never materializes the
-        // per-file list), then ONE map-side-combined aggregation returns
-        // |partitions| rows to the driver
-        val tasks = filesScanTasks
-        spark.createDataset(tasks)
-          .repartition(math.max(1, math.min(tasks.size, 32)))
-          .flatMap { case (mpath, sup) =>
-            val supSet = sup.toSet
-            val conf = new org.apache.hadoop.conf.Configuration()
-            // same loud-failure posture as the $files scan: a manifest lost
-            // to concurrent expiry/rollback means the planned head retired
-            val delta =
-              try StreamTable.parseManifest(mpath)
-              catch {
-                case e @ (_: java.nio.file.NoSuchFileException |
-                    _: java.io.FileNotFoundException) =>
-                  throw new IllegalStateException(
-                    s"$$partitions scan lost manifest $mpath to concurrent " +
-                      "snapshot maintenance (expiry/rollback); re-run the " +
-                      "query to plan from the current head", e)
-              }
-            delta.added.filterNot(f => supSet(f.path)).map { f =>
-              (StreamTable.renderPartitionLabel(
-                  StreamTable.partitionTupleOf(f, pks, conf, rootStr)),
-                f.liveRowCount, f.rowCount, f.dvCount.getOrElse(0L),
-                f.fileSizeInBytes, f.creationTimeMs)
+      spark.createDataset(tasks)
+        .repartition(math.max(1, math.min(tasks.size, 32)))
+        .flatMap { case (mpath, sup) =>
+          val supSet = sup.toSet
+          // same loud-failure posture as the $files scan: a manifest lost
+          // to concurrent expiry/rollback means the planned head retired
+          val delta =
+            try StreamTable.parseManifest(mpath)
+            catch {
+              case e @ (_: java.nio.file.NoSuchFileException |
+                  _: java.io.FileNotFoundException) =>
+                throw new IllegalStateException(
+                  s"$$partitions scan lost manifest $mpath to concurrent " +
+                    "snapshot maintenance (expiry/rollback); re-run the " +
+                    "query to plan from the current head", e)
             }
-          }
-      } else {
-        // legacy inline snapshot: its file list already lives in the
-        // snapshot JSON (bounded), so a driver map is the right cost
-        val conf = new org.apache.hadoop.conf.Configuration()
-        spark.createDataset(
-          head.map(hydrated(_).files).getOrElse(Seq.empty).map { f =>
+          delta.added.filterNot(f => supSet(f.path)).map { f =>
             (StreamTable.renderPartitionLabel(
-                StreamTable.partitionTupleOf(f, pks, conf, rootStr)),
+                StreamTable.partitionTupleOf(f, pks, rootStr)),
               f.liveRowCount, f.rowCount, f.dvCount.getOrElse(0L),
               f.fileSizeInBytes, f.creationTimeMs)
-          })
-      }
+          }
+        }
     perFile
       .toDF("partition", "live_rows", "phys_rows", "dv_rows", "bytes", "created")
       .groupBy("partition")
@@ -2583,7 +2569,7 @@ class StreamTable(
     val tailIds: Set[Long] = heads.iterator.filter { s =>
       s.id > 0 && !s.clogProduced && !coveredByDeferred(s.id) &&
         byId.contains(s.id - 1) && s.kind != "overwrite" &&
-        addedEvidenceOf(s, byId.get(s.id - 1)).nonEmpty
+        addedEvidenceOf(s).nonEmpty
     }.map(_.id).toSet
     tailIds.toSeq.sorted.filterNot(id => tailIds.contains(id - 1)).map { st =>
       var e = st
@@ -2643,9 +2629,8 @@ class StreamTable(
           .withColumnRenamed("op", "rowkind"))
       else {
         // this commit's added files: the shared classification
-        // (delta-manifest-served, re-adds excluded, hydrate-diff only for
-        // legacy history — StreamTable.addedEvidence)
-        val added = addedEvidenceOf(s, pred)
+        // (delta-manifest-served, re-adds excluded)
+        val added = addedEvidenceOf(s)
         if (added.isEmpty) None // maintenance-only commit
         else if (primaryKey.isEmpty)
           Some(readFiles(added).drop(SeqColName).withColumn("rowkind", lit("+I")))
@@ -2718,9 +2703,8 @@ class StreamTable(
         "(update-time | values-time)")
     val live = latestSnapshot.map(_.files).getOrElse(Seq.empty)
     if (live.isEmpty) return 0
-    val conf = new org.apache.hadoop.conf.Configuration()
     val byPart = live.groupBy(f =>
-      StreamTable.partitionTupleOf(f, pks, conf, root))
+      StreamTable.partitionTupleOf(f, pks, root))
     val cutoff = System.currentTimeMillis() - expireAfterMs
     val expired = strategy match {
       case "update-time" =>
@@ -2865,7 +2849,7 @@ class StreamTable(
       // branch to the initial count and scatter later branch writes
       bucketCount = seed.bucketCount,
       kind = "append", manifestList = Seq(mfName),
-      deltaManifest = Some(mfName))
+      deltaManifest = Some(mfName), formatVersion = FormatVersion)
     Files.write(bRoot.resolve("_snapshots").resolve(s"snap-$seedId.json"),
       mapper.writeValueAsBytes(snap))
     Files.write(bRoot.resolve("_branch.json"),
@@ -2945,7 +2929,15 @@ class StreamTable(
     * guide.md:172-177): rewrite the current live set into `targetFileCount`
     * level-1 files and swap the manifest. Row count is conserved
     * (guide.md:212-231 → :258-259); for PK tables the rewrite also resolves
-    * last-writer-wins, shrinking data like Paimon's full compaction. */
+    * last-writer-wins, shrinking data like Paimon's full compaction.
+    *
+    * Also THE format upgrade: on a version-0 head (written before
+    * [[StreamTable.FormatVersion]]) this is the one operation that reads
+    * it — every live file is rewritten as a current entry (a PK file
+    * without `sortedBy` first becomes a sorted run) into one full
+    * manifest, and the commit is stamped version 1. An empty version-0 head
+    * commits an empty upgrade. The older snapshots stay refused until
+    * [[expireSnapshots]] drops them. */
   def compact(targetFileCount: Int): Snapshot =
     // bucketed tables preserve the hash-bucket layout through compaction
     // (Paimon compacts WITHIN buckets — the bucket count is invariant):
@@ -2958,7 +2950,7 @@ class StreamTable(
       resolved =>
         if (bucketKey.isDefined) resolved else resolved.repartition(targetFileCount),
       recordBuckets = bucketKey.isDefined, sortByKey = primaryKey.isDefined,
-      clustered = bucketKey.isDefined)
+      clustered = bucketKey.isDefined, upgrade = true)
 
   /** Dynamic bucket growth (`bucket = -1`): a metadata-only census probe —
     * live rows per recorded bucket label, folded from the manifest — and,
@@ -2976,7 +2968,7 @@ class StreamTable(
     if (!isDynamicBucket) return None
     val snap = latestSnapshot.getOrElse(return None)
     if (snap.files.isEmpty) return None
-    // a file without a provable label (legacy, row-level DML output) makes
+    // a file without a provable label (row-level DML output) makes
     // the census unsound — wait for the next compaction to relabel it
     if (!snap.files.forall(_.bucket.isDefined)) return None
     val n = snap.bucketCount.getOrElse(dynBucketInitial)
@@ -3142,7 +3134,7 @@ class StreamTable(
     val live = latestSnapshot.map(_.files).getOrElse(Seq.empty)
     if (live.isEmpty) return None
     val clustered = bucketKey.isDefined && live.forall(_.bucket.isDefined)
-    // unbucketed layout: the single legacy group IS the whole table
+    // unbucketed layout: the single group IS the whole table
     val groups: Seq[Seq[DataFileMeta]] =
       if (clustered) live.groupBy(_.bucket.get).values.toSeq else Seq(live)
     val targets = groups.map(_.filter(_.fileSizeInBytes < smallBytes))
@@ -3213,10 +3205,9 @@ class StreamTable(
     partitionKeys match {
       case None => outputs.map(_.copy(creationTimeMs = globalMax))
       case Some(pks) =>
-        val conf = new org.apache.hadoop.conf.Configuration()
         def tupleOf(f: DataFileMeta): Option[Seq[Option[String]]] =
           scala.util.Try(
-            StreamTable.partitionTupleOf(f, pks, conf, root)).toOption
+            StreamTable.partitionTupleOf(f, pks, root)).toOption
         val perPart: Map[Seq[Option[String]], Long] = sources
           .flatMap(f => tupleOf(f).map(_ -> f.creationTimeMs))
           .groupMapReduce(_._1)(_._2)(math.max)
@@ -3256,10 +3247,22 @@ class StreamTable(
       clustered: Boolean = false,
       /** Dynamic bucket SPLIT: relabel under this count and stamp it into
         * the commit (the one legitimate count change). */
-      bucketsOverride: Option[Int] = None): Snapshot = {
-    val head = latestSnapshot
+      bucketsOverride: Option[Int] = None,
+      /** [[compact]]: a version-0 head is read and upgraded. */
+      upgrade: Boolean = false): Snapshot = {
+    val head = if (upgrade) upgradeHead else latestSnapshot
     val before = head.map(_.files).getOrElse(Seq.empty)
+    val upgrading = head.exists(_.formatVersion < FormatVersion)
+    if (before.isEmpty && upgrading)
+      return commit(_ => CommitChange(Seq.empty, Set.empty, head.get.batchId),
+        produced = clogAtWrite, kind = "compact", upgrade = true)
     if (before.isEmpty) return head.orNull
+    // the upgrade relabels a dynamic table under the count it carries (or
+    // the initial count, which a version-0 snapshot may lack)
+    val buckets = bucketsOverride.orElse(
+      if (upgrading && isDynamicBucket)
+        Some(head.get.bucketCount.getOrElse(dynBucketInitial))
+      else None)
     val staging = s"$root/.staging-${UUID.randomUUID()}"
     val sortedRuns = s"$root/.staging-${UUID.randomUUID()}"
     val resolved = primaryKey match {
@@ -3270,20 +3273,21 @@ class StreamTable(
       // full-compaction materialization — into partial aggregates)
       case Some(pk) => graft.sources.v2.GraftV2Table.frame(
         graft.sources.v2.GraftV2Table.library(this, head.map(_.id), stored = true,
-          files = Some(asSortedRuns(before, pk, sortedRuns)), bookkeeping = true))
+          pinned = head.map(_.copy(files = asSortedRuns(before, pk, sortedRuns))),
+          bookkeeping = true))
     }
     val laid = layout(resolved)
     // compaction re-establishes the sorted-run invariant for PK tables
     // (see writeClustered) — the sort rides inside the clustered write, or
     // after the layout's own repartitioning otherwise
     val sortKey = if (sortByKey) primaryKey else None
-    val snapId = latestSnapshot.map(_.id).getOrElse(0L)
+    val snapId = head.get.id
     val moved = try {
       // a partitioned table's maintenance rewrites MUST keep the
       // single-valued-file clustering, whatever the layout callback did
       if (clustered || partitionKeys.isDefined)
         writeClustered(laid, sortKey, staging, dataCompact, s"c$snapId",
-          bucketsOverride)
+          buckets)
       else {
         val rewritten = sortKey match {
           case Some(pk) => laid.sortWithinPartitions(pk.map(col): _*)
@@ -3326,8 +3330,9 @@ class StreamTable(
     // so the span's retractions are computed here, once, from the two
     // endpoint states (the deferred price; O(span delta) evidence +
     // touched-key resolves, not a per-commit walk)
+    // (the upgrade stages none: the span would reach into version-0 history)
     val (deferredClog, deferredFrom) =
-      if (clogAtCompact && primaryKey.isDefined) {
+      if (clogAtCompact && primaryKey.isDefined && !upgrading) {
         val heads = snapshotHeaders
         val headId = heads.last.id
         val from = heads.reverse.find(_.clogProduced).map(_.id)
@@ -3355,15 +3360,18 @@ class StreamTable(
           s"concurrent write during deferred-changelog compaction of $root " +
             s"(${extra.size} new file(s)) — rerun the compaction")
       }
+      // (only another upgrade can commit on a version-0 head, and it fails
+      // the check above: the start head's watermark is current)
       CommitChange(metas, compactedPaths,
-        latestSnapshot.map(_.batchId).getOrElse(-1L))
+        if (upgrading) head.get.batchId
+        else latestSnapshot.map(_.batchId).getOrElse(-1L))
     }, // a layout rewrite changes no logical row — an empty PRODUCED
        // changelog keeps CDC intervals spanning it on the delta fast path
        // ('input'); deferred modes attach the span's netted changelog here
       changelog = deferredClog,
       produced = clogAtWrite || deferredFrom.isDefined,
       clogFrom = deferredFrom,
-      kind = "compact", buckets = bucketsOverride)
+      kind = "compact", buckets = buckets, upgrade = upgrade)
     catch { case e: Throwable =>
       // an aborted commit must not leak its staged output: the span
       // changelog AND the level-1 rewrite of the live set (a retried-and-
@@ -3399,9 +3407,9 @@ class StreamTable(
     * "orphan files cleaned" must not conflate the two). */
   /** Every data/changelog path a snapshot's METADATA references: the union
     * of its manifests' ADDED paths (⊇ the live set — removals never shrink
-    * what the metadata mentions) plus legacy inline files and changelog
-    * files. The ORPHAN sweep keys on this — O(distinct manifests), no
-    * hydration, and safely over-approximate (a manifest-referenced file is
+    * what the metadata mentions) plus a version-0 snapshot's inline files
+    * and the changelog files. The ORPHAN sweep keys on this — O(distinct
+    * manifests), no hydration, and safely over-approximate (a manifest-referenced file is
     * retention-managed, not a crash leftover; expiry reclaims it when its
     * referencing snapshots go). */
   private def refPaths(s: Snapshot): Iterator[String] = {
@@ -3421,7 +3429,7 @@ class StreamTable(
     * otherUnion) — what retention/rollback deletion decisions key on
     * (changelog paths included). ONE incremental delta fold across the
     * id-ordered history: the running live set updates in O(each commit's
-    * delta); only legacy snapshots and retention gaps re-fold. */
+    * delta); only retention gaps and inline version-0 snapshots re-fold. */
   private def liveUnions(snaps: Seq[Snapshot], inKept: Snapshot => Boolean)
       : (Set[String], Set[String]) = {
     val live = new java.util.LinkedHashSet[String]()
@@ -3433,7 +3441,7 @@ class StreamTable(
     // run's deltas ADD (removals never shrink a union) — so the fold's add
     // callback feeds the union directly, O(delta) per commit, and the full
     // O(live) re-seed happens only at kept↔other boundaries and fold
-    // fallbacks (legacy snapshots, retention gaps).
+    // fallbacks (retention gaps, inline version-0 snapshots).
     var prevTarget: scala.collection.mutable.HashSet[String] = null
     // deletion-vector sidecars ride with their meta: the fold's remove
     // callback names only the data path, so the data→dv association is
@@ -3457,7 +3465,7 @@ class StreamTable(
       val folded = foldCommit(prev, s)(dropMeta, addMeta(_, target, sameRun))
       if (!folded) {
         live.clear(); dvOf.clear()
-        hydrated(s).files.foreach { f =>
+        storedFiles(s).foreach { f =>
           live.add(f.path)
           f.dvPath.foreach { d => live.add(d); dvOf(f.path) = d }
         }
@@ -3504,8 +3512,8 @@ class StreamTable(
               _: java.io.FileNotFoundException => Vector.empty[String]
         }
       }
-    // legacy inline live sets and per-commit changelog files are already in
-    // the parsed headers — small, and the only driver-held path lists
+    // version-0 inline live sets and per-commit changelog files are already
+    // in the parsed headers — small, and the only driver-held path lists
     val inline = spark.createDataset(snaps.flatMap(s =>
       (if (s.manifestList.isEmpty)
         s.files.flatMap(f => f.path +: f.dvPath.toSeq) else Seq.empty) ++
@@ -3557,7 +3565,9 @@ class StreamTable(
 
   def removeOrphanFiles(olderThanMs: Long = 24L * 3600 * 1000): Int = {
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val snaps = snapshotHeaders
+    // every retained snapshot in any format: a version-0 snapshot's files
+    // stay referenced until expiry drops it
+    val snaps = storedHeaders
     // Below the threshold the sweep is a driver loop (tiny tables, tests);
     // above it EVERYTHING per-file distributes — executors list the data
     // dirs, parse the manifests into the referenced set, anti-join, and
@@ -3624,7 +3634,9 @@ class StreamTable(
   @volatile var lastOrphanManifestsRemoved: Int = 0
 
   def expireSnapshots(numRetainedMin: Int, numRetainedMax: Int, timeRetainedMs: Long): Int = {
-    val snaps = snapshotHeaders
+    // any format: expiring the history older than the format upgrade is
+    // the upgrade's last step
+    val snaps = storedHeaders
     if (snaps.size <= numRetainedMin) return 0
     val now = System.currentTimeMillis()
     // tags are retention roots; so are branch SEEDS — a live branch's whole
@@ -3660,6 +3672,17 @@ class StreamTable(
 }
 
 object StreamTable {
+  /** The on-disk format every commit stamps into its snapshot
+    * ([[Snapshot.formatVersion]]). Version 1: the live set lives in delta
+    * manifests (never inline), every entry carries its commit-time stats
+    * (`minStats`/`maxStats`/`fileCols`/`badStats`/`nullStats`), every PK
+    * data file is a sorted run, every delta that replaces state carries its
+    * `-D` evidence, every commit its `kind`, every dynamic-bucket snapshot
+    * its `bucketCount`. A snapshot is version 1 only when its whole live
+    * set and manifest list are: the first commit on a version-0 base is
+    * the upgrade, a full [[StreamTable.compact]]. */
+  val FormatVersion = 1
+
   /** Run a staging parquet write with zoned timestamps emitted as INT64
     * TIMESTAMP_MICROS (UTC-adjusted) instead of Spark's INT96 default, then
     * restore the session setting. INT96 is stats-less and
@@ -3720,6 +3743,16 @@ object StreamTable {
     }
   }
 
+  /** Added level-0 evidence of ONE persisted delta: a path both removed
+    * and re-added is an in-place meta replacement (a deletion vector), not
+    * change evidence — the added half of the commit-evidence contract,
+    * single-sourced for [[intervalEvidence]] and
+    * [[StreamTable#addedEvidenceOf]]. */
+  def deltaEvidence(d: ManifestDelta): Seq[DataFileMeta] = {
+    val readd = d.removed.filter(d.added.iterator.map(_.path).toSet).toSet
+    d.added.filterNot(f => readd(f.path)).filter(_.level == 0)
+  }
+
   /** Changed-key evidence for a changelog interval, walked COMMIT-BY-COMMIT
     * over `(from, to]` — THE rule shared by the library door
     * ([[StreamTable.changelogWithRetractions]]) and the V2 planner
@@ -3729,95 +3762,31 @@ object StreamTable {
     *  - level-0 files ADDED at each covered commit — even when a later
     *    in-interval compaction absorbed them (an end-state diff would
     *    silently lose that commit's changes);
-    *  - files REMOVED (any level) by a commit that replaces state —
-    *    `kind = "overwrite"` (or a legacy-manifest commit that removes
-    *    files without adding any level>0 output, the pre-kind inference):
-    *    keys the replacement dropped must emit `-D`. A compaction's
-    *    removals are absorbed layout maintenance and contribute nothing.
+    *  - files REMOVED (any level) by a commit that replaces state
+    *    (overwrite, copy-on-write DML): keys the replacement dropped must
+    *    emit `-D`. A compaction's removals are absorbed layout maintenance
+    *    and contribute nothing.
     *
     * Per-commit evidence is served from the commit's own PERSISTED delta
-    * manifest (`deltaOf` — O(this commit's change), no hydration); only
-    * legacy history falls back to diffing the two hydrated live sets, so a
+    * manifest (`deltaOf` — O(this commit's change), no hydration), so a
     * CDC trigger over a million-file table does O(interval delta) driver
     * work, not O(interval × live files). `snapAt` may return unhydrated
     * headers.
     */
-  /** (re-added paths, added level-0 evidence) of ONE persisted delta: a path
-    * both removed and re-added is an in-place meta replacement, not change
-    * evidence (matching the hydrate-diff rule, which compares by path) — the
-    * added half of the commit-evidence contract, single-sourced for
-    * [[intervalEvidence]] and [[addedEvidence]]. */
-  def deltaEvidence(d: ManifestDelta): (Set[String], Seq[DataFileMeta]) = {
-    val readd = d.removed.filter(d.added.iterator.map(_.path).toSet).toSet
-    (readd, d.added.filterNot(f => readd(f.path)).filter(_.level == 0))
-  }
-
-  /** One commit's ADDED level-0 evidence vs its predecessor: the persisted
-    * delta when available (O(delta), re-adds excluded), the manifest-list
-    * no-op check, then the legacy hydrate-diff fallback — THE added-file
-    * classification `changeHistoryView` (the `$changelog`/`audit_log` door)
-    * and the V2 change-history planner share, so the sites cannot drift. */
-  def addedEvidence(deltaOf: Snapshot => Option[ManifestDelta],
-      hydrate: Snapshot => Snapshot, cur: Snapshot,
-      pred: Option[Snapshot]): Seq[DataFileMeta] =
-    deltaOf(cur) match {
-      case Some(d) => deltaEvidence(d)._2
-      case None if cur.manifestList.nonEmpty &&
-          pred.exists(_.manifestList == cur.manifestList) =>
-        Seq.empty // no-op commit: nothing added
-      case None =>
-        val predPaths = pred.map(p => hydrate(p).files.map(_.path).toSet)
-          .getOrElse(Set.empty[String])
-        hydrate(cur).files.filterNot(f => predPaths(f.path)).filter(_.level == 0)
-    }
-
   def intervalEvidence(snapAt: Long => Snapshot,
       deltaOf: Snapshot => Option[ManifestDelta],
-      hydrate: Snapshot => Snapshot,
       from: Long, to: Long): (Seq[DataFileMeta], Seq[DataFileMeta]) = {
     val added = Seq.newBuilder[DataFileMeta]
     val removedEv = Seq.newBuilder[DataFileMeta]
-    var prev = snapAt(from)
     ((from + 1) to to).foreach { id =>
       val cur = snapAt(id)
-      // O(delta) fast path: the commit's own persisted delta manifest IS its
-      // evidence — no snapshot hydration, however many files are live.
-      // Identical manifest lists ⇒ a no-op commit ⇒ empty evidence. Legacy
-      // snapshots (and pre-evidence deltas) fall back to diffing the two
-      // hydrated live sets, exactly the pre-delta rule.
-      val fast: Option[(Seq[DataFileMeta], Seq[DataFileMeta])] =
-        deltaOf(cur) match {
-          case Some(d) if cur.kind.nonEmpty =>
-            val (readd, addedEv) = deltaEvidence(d)
-            if (cur.kind == "compact") Some((addedEv, Seq.empty))
-            else d.removedMetas match {
-              case Some(ms) => Some((addedEv, ms))
-              case None if d.removed.forall(readd) => Some((addedEv, Seq.empty))
-              case None => None // pre-evidence delta: hydrate-diff fallback
-            }
-          case Some(_) => None
-          case None if cur.manifestList.nonEmpty &&
-              cur.manifestList == prev.manifestList =>
-            Some((Seq.empty, Seq.empty))
-          case None => None
-        }
-      fast match {
-        case Some((a, r)) =>
-          added ++= a
-          removedEv ++= r
-        case None =>
-          val prevH = hydrate(prev)
-          val curH = hydrate(cur)
-          val prevPaths = prevH.files.map(_.path).toSet
-          val curPaths = curH.files.map(_.path).toSet
-          val addedAll = curH.files.filterNot(f => prevPaths(f.path))
-          val removed = prevH.files.filterNot(f => curPaths(f.path))
-          added ++= addedAll.filter(_.level == 0)
-          val isCompaction = curH.kind == "compact" ||
-            (curH.kind.isEmpty && addedAll.exists(_.level > 0))
-          if (!isCompaction && removed.nonEmpty) removedEv ++= removed
+      // the commit's own persisted delta manifest IS its evidence — no
+      // snapshot hydration, however many files are live; no delta is a
+      // no-op commit
+      deltaOf(cur).foreach { d =>
+        added ++= deltaEvidence(d)
+        if (cur.kind != "compact") removedEv ++= d.removedMetas.getOrElse(Seq.empty)
       }
-      prev = cur
     }
     (added.result().distinct, removedEv.result().distinct)
   }
@@ -3950,11 +3919,11 @@ object StreamTable {
     }
   }
 
-  /** Plan-time footer opens (the fallback path for legacy manifests without
-    * persisted stats). Commit-time capture is NOT counted — that read is
-    * paid once per file ever; this counter exists so specs can assert a
-    * stats-pruned plan over a current-format manifest performs ZERO footer
-    * I/O on the driver. */
+  /** Plan-time footer opens for file stats. Every entry of a version-1
+    * manifest carries the stats its commit captured, so planning opens no
+    * footer for them and this stays 0: specs and the benchmark's
+    * `table.footer_reads` read it as that guard. Commit-time capture is
+    * counted in [[driverCommitFooterReads]]. */
   val planFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Driver footer opens made by [[fileSchema]] for a file its memo has not
@@ -4078,20 +4047,12 @@ object StreamTable {
     * one fold per covered commit. */
   val hydrateFolds = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Rendered per-file [min,max] maps for stats skipping: manifest-served
-    * when the commit captured them (zero I/O), footer fallback for legacy
-    * manifests. The two sources render identically (same typed-comparator
-    * `minAsString`), so [[graft.sources.v2.FileSkip]] semantics are
-    * unchanged either way. */
-  private[graft] def skipStats(f: DataFileMeta,
-      conf: org.apache.hadoop.conf.Configuration)
+  /** Rendered per-file [min,max] maps for stats skipping, served from the
+    * manifest (zero I/O — the commit captured them). A column without an
+    * entry keeps the file in [[graft.sources.v2.FileSkip]]. */
+  private[graft] def skipStats(f: DataFileMeta)
       : (Map[String, String], Map[String, String]) =
-    (f.minStats, f.maxStats) match {
-      case (Some(mn), Some(mx)) => (mn, mx)
-      case _ =>
-        val (_, mn, mx) = footerStats(f.path, conf)
-        (mn, mx)
-    }
+    (f.minStats.getOrElse(Map.empty), f.maxStats.getOrElse(Map.empty))
 
   /** The rendered label of the all-NULL partition component (Paimon's
     * `__DEFAULT_PARTITION__` convention, under a graft-owned name): NULL
@@ -4104,11 +4065,10 @@ object StreamTable {
     * Throws when the file cannot PROVE single-valuedness (row-level-DML
     * output that was never compacted) — an approximate census/expiry would
     * silently misattribute rows. Executor-safe: everything rides the
-    * manifest's captured stats (footer fallback only for legacy entries). */
+    * manifest's captured stats. */
   private[graft] def partitionTupleOf(f: DataFileMeta, pks: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration, root: String)
-      : Seq[Option[String]] = {
-    val (mins, maxs) = skipStats(f, conf)
+      root: String): Seq[Option[String]] = {
+    val (mins, maxs) = skipStats(f)
     def nullCount(c: String): Option[Long] =
       f.nullStats.flatMap(_.get(c)).flatMap(_.toLongOption)
     pks.map { c =>
@@ -4182,10 +4142,10 @@ object StreamTable {
   val driverCommitFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Commit-time footer capture: rows + per-column merged min/max +
-    * presence/usability — everything [[DataFileMeta]] persists. Stricter
-    * than [[footerStats]]: a column chunk with rows but null or unprovable
-    * stats poisons the COLUMN (`bad`) instead of being silently skipped, so
-    * manifest-served pruning can trust an entry's absence. */
+    * presence/usability — everything [[DataFileMeta]] persists. A column
+    * chunk with rows but null or unprovable stats poisons the COLUMN
+    * (`bad`) instead of being silently skipped, so manifest-served pruning
+    * can trust an entry's absence. */
   private[graft] def footerColumnStats(path: String,
       conf: org.apache.hadoop.conf.Configuration,
       seedSchema: Boolean = false): CapturedStats = {
@@ -4244,46 +4204,6 @@ object StreamTable {
       }
       CapturedStats(rows, mins.toMap, maxs.toMap, cols.toSeq, bad.toSeq,
         nulls = (nullsAcc -- nullsUnknown -- bad).toMap)
-    } finally reader.close()
-  }
-
-  /** (rowCount, min_value_stats, max_value_stats) from a parquet footer —
-    * the stats Paimon surfaces in `$files` (guide.md:205, :212) and what
-    * parquet predicate-pushdown data skipping reads. */
-  private[graft] def footerStats(path: String, conf: org.apache.hadoop.conf.Configuration)
-      : (Long, Map[String, String], Map[String, String]) = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    planFooterReads.incrementAndGet()
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks.asScala
-      val rows = blocks.map(_.getRowCount).sum
-      // Merge per-row-group stats with the column's TYPED comparator (the
-      // parquet Statistics object), never lexicographically — '9' > '10' as
-      // strings but not as numbers; stringify only for display.
-      type AnyStats = org.apache.parquet.column.statistics.Statistics[_ <: Comparable[_]]
-      def merge[T <: Comparable[T]](a: AnyStats, b: AnyStats): Unit =
-        a.asInstanceOf[org.apache.parquet.column.statistics.Statistics[T]]
-          .mergeStatistics(
-            b.asInstanceOf[org.apache.parquet.column.statistics.Statistics[T]])
-      val acc = scala.collection.mutable.Map[String, AnyStats]()
-      for (b <- blocks; c <- b.getColumns.asScala) {
-        val name = c.getPath.toDotString
-        val st = c.getStatistics
-        if (st != null && st.hasNonNullValue && name != SeqColName &&
-            name != TombstoneColName) {
-          acc.get(name) match {
-            case Some(prev) => merge(prev, st)
-            case None       => acc(name) = st.copy()
-          }
-        }
-      }
-      val mins = acc.map { case (k, s) => k -> s.minAsString() }.toMap
-      val maxs = acc.map { case (k, s) => k -> s.maxAsString() }.toMap
-      (rows, mins, maxs)
     } finally reader.close()
   }
 }

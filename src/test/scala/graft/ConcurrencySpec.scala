@@ -308,9 +308,8 @@ class ConcurrencySpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_powc_").toString
     val t = new StreamTable(root, spark, partitionKeys = Some(Seq("seg")))
     t.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "seg"), 0L)
-    val conf = new org.apache.hadoop.conf.Configuration()
     def segOf(f: graft.table.DataFileMeta): Option[String] =
-      StreamTable.skipStats(f, conf)._1.get("seg")
+      StreamTable.skipStats(f)._1.get("seg")
     // a concurrent append lands BETWEEN the overwrite's staging and its
     // commit: the CAS retry re-evaluates removedOf against the fresh live
     // set, so the racer's rows (another partition) survive the swap
@@ -347,7 +346,7 @@ class ConcurrencySpec extends AnyFunSuite {
     t.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "seg"), 0L)
     val conf = new org.apache.hadoop.conf.Configuration()
     def segOf(f: graft.table.DataFileMeta): Option[String] =
-      StreamTable.skipStats(f, conf)._1.get("seg")
+      StreamTable.skipStats(f)._1.get("seg")
     // an externally-staged replacement for partition 'a' (the dynamic
     // BatchWrite's shape: parquet + task-captured stats, stamped rows)
     def stageFile(rows: Seq[(Long, String)], seq: Long): StreamTable.StagedSinkFile = {

@@ -36,11 +36,10 @@ class PartitionSpec extends AnyFunSuite {
       "SELECT id, concat('s', id % 5), id * 1.5 FROM range(0, 1000)")
     val t = graft.table.GraftCatalog.openPath(spark, s"$wh/d.db/p")
     assert(t.partitionKeys.contains(Seq("seg")))
-    val conf = new org.apache.hadoop.conf.Configuration()
     val files = t.latestSnapshot.get.files
     assert(files.size >= 5, files.size.toString)
     files.foreach { f =>
-      val (mins, maxs) = StreamTable.skipStats(f, conf)
+      val (mins, maxs) = StreamTable.skipStats(f)
       assert(mins.get("seg").exists(maxs.get("seg").contains),
         s"file not single-valued in seg: ${f.path}")
     }
@@ -50,7 +49,7 @@ class PartitionSpec extends AnyFunSuite {
     val Files = "files=(\\d+)/(\\d+)".r.unanchored
     val Files(kept, total) = desc
     val s3Files = files.count { f =>
-      val (mins, _) = StreamTable.skipStats(f, conf)
+      val (mins, _) = StreamTable.skipStats(f)
       mins.get("seg").contains("s3")
     }
     assert(kept.toInt == s3Files && kept.toInt < total.toInt, desc)
@@ -71,9 +70,8 @@ class PartitionSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $cat.d.o " +
       "SELECT id, concat('s', id % 4), 1.0 FROM range(0, 400)")
     val t0 = graft.table.GraftCatalog.openPath(spark, s"$wh/d.db/o")
-    val conf = new org.apache.hadoop.conf.Configuration()
     def segOf(f: graft.table.DataFileMeta): String =
-      StreamTable.skipStats(f, conf)._1("seg")
+      StreamTable.skipStats(f)._1("seg")
     val before = t0.latestSnapshot.get.files
       .map(f => (f.path, segOf(f),
         java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(f.path))))
@@ -125,11 +123,10 @@ class PartitionSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $cat.d.b " +
       "SELECT id, concat('s', id % 3), id * 1.0 FROM range(0, 300)")
     val t = graft.table.GraftCatalog.openPath(spark, s"$wh/d.db/b")
-    val conf = new org.apache.hadoop.conf.Configuration()
     val files = t.latestSnapshot.get.files
     assert(files.forall(_.bucket.isDefined), "bucket labels must survive")
     files.foreach { f =>
-      val (mins, maxs) = StreamTable.skipStats(f, conf)
+      val (mins, maxs) = StreamTable.skipStats(f)
       assert(mins.get("seg").exists(maxs.get("seg").contains), f.path)
     }
     assert(spark.sql(s"SELECT count(*) FROM $cat.d.b WHERE seg = 's1'")
@@ -139,7 +136,7 @@ class PartitionSpec extends AnyFunSuite {
     t.compact(targetFileCount = 2)
     val t2 = graft.table.GraftCatalog.openPath(spark, s"$wh/d.db/b")
     t2.latestSnapshot.get.files.foreach { f =>
-      val (mins, maxs) = StreamTable.skipStats(f, conf)
+      val (mins, maxs) = StreamTable.skipStats(f)
       assert(mins.get("seg").exists(maxs.get("seg").contains),
         s"compaction must keep partition clustering: ${f.path}")
     }
@@ -219,9 +216,8 @@ class PartitionSpec extends AnyFunSuite {
       if (p.getFileName.toString.endsWith(".parquet")) staged = p
     }
     t.commitDeltaDml(Map.empty, Seq(staged.toString), "MERGE")
-    val conf = new org.apache.hadoop.conf.Configuration()
     val mixed = t.latestSnapshot.get.files.filter(_.rowCount == 2L)
-    assert(mixed.size == 1 && StreamTable.skipStats(mixed.head, conf)
+    assert(mixed.size == 1 && StreamTable.skipStats(mixed.head)
       ._1.get("seg").contains("s1"), "fixture must be a mixed stats=s1 file")
     // partition-aligned DELETE must NOT drop the mixed file metadata-only:
     // the exact row path runs and the NULL-partition row survives
@@ -253,10 +249,9 @@ class PartitionSpec extends AnyFunSuite {
   }
 
   test("row-level DML output is partition-clustered: proofs survive UPDATE") {
-    val conf = new org.apache.hadoop.conf.Configuration()
     def singleValued(t: graft.table.StreamTable): Unit =
       t.latestSnapshot.get.files.foreach { f =>
-        val (mins, maxs) = StreamTable.skipStats(f, conf)
+        val (mins, maxs) = StreamTable.skipStats(f)
         val nulls = f.nullStats.flatMap(_.get("seg")).flatMap(_.toLongOption)
         assert(nulls.contains(0L) && mins.get("seg").exists(maxs.get("seg").contains) ||
           nulls.contains(f.rowCount),
@@ -306,9 +301,8 @@ class PartitionSpec extends AnyFunSuite {
       "SELECT id, concat('s', id % 3) AS seg FROM range(0, 90)")
     val t = graft.table.GraftCatalog.openPath(spark, s"$wh/d.db/c")
     assert(t.partitionKeys.contains(Seq("seg")))
-    val conf = new org.apache.hadoop.conf.Configuration()
     t.latestSnapshot.get.files.foreach { f =>
-      val (mins, maxs) = StreamTable.skipStats(f, conf)
+      val (mins, maxs) = StreamTable.skipStats(f)
       assert(mins.get("seg").exists(maxs.get("seg").contains), f.path)
     }
     assert(spark.sql(s"SELECT count(*) FROM $cat.d.c WHERE seg = 's2'")
@@ -323,11 +317,10 @@ class PartitionSpec extends AnyFunSuite {
     spark.sql(s"INSERT INTO $cat.d.y SELECT id, " +
       "CASE WHEN id % 5 = 4 THEN NULL ELSE concat('s', id % 5) END, 1.0 " +
       "FROM range(0, 500)")
-    val conf = new org.apache.hadoop.conf.Configuration()
     def segOf(f: graft.table.DataFileMeta): Option[String] = {
       val nulls = f.nullStats.flatMap(_.get("seg")).flatMap(_.toLongOption)
       if (nulls.contains(f.rowCount)) None
-      else StreamTable.skipStats(f, conf)._1.get("seg")
+      else StreamTable.skipStats(f)._1.get("seg")
     }
     val t0 = graft.table.GraftCatalog.openPath(spark, s"$wh/d.db/y")
     val before = t0.latestSnapshot.get.files.map(f => (f.path, segOf(f),
@@ -390,11 +383,10 @@ class PartitionSpec extends AnyFunSuite {
     q.awaitTermination()
     val t = graft.table.GraftCatalog.openPath(spark, dst)
     assert(t.partitionKeys.contains(Seq("seg")))
-    val conf = new org.apache.hadoop.conf.Configuration()
     val files = t.latestSnapshot.get.files
     assert(files.size >= 5, s"expected ≥1 file per segment, got ${files.size}")
     files.foreach { f =>
-      val (mins, maxs) = StreamTable.skipStats(f, conf)
+      val (mins, maxs) = StreamTable.skipStats(f)
       assert(mins.get("seg").exists(maxs.get("seg").contains),
         s"sink file not single-valued in the partition key: ${f.path}")
       val nulls = f.nullStats.flatMap(_.get("seg")).flatMap(_.toLongOption)
@@ -407,13 +399,13 @@ class PartitionSpec extends AnyFunSuite {
     val Files = "files=(\\d+)/(\\d+)".r.unanchored
     val Files(kept, total) = desc
     val s3Files = files.count(f =>
-      StreamTable.skipStats(f, conf)._1.get("seg").contains("s3"))
+      StreamTable.skipStats(f)._1.get("seg").contains("s3"))
     assert(kept.toInt == s3Files && kept.toInt < total.toInt, desc)
     assert(one.count() == 100L)
     // a partition overwrite works on the sink-fed table (the proofs held):
     // dynamically replace s3, every other sink file byte-identical
     val beforeOther = files.filterNot(f =>
-      StreamTable.skipStats(f, conf)._1.get("seg").contains("s3"))
+      StreamTable.skipStats(f)._1.get("seg").contains("s3"))
       .map(_.path).toSet
     spark.range(3).selectExpr("id + 8000 AS id", "'s3' AS seg", "0.0 AS x")
       .writeTo(s"$cat.d.sk").overwritePartitions()

@@ -89,15 +89,13 @@ class PropertySpec extends AnyFunSuite {
     * `k`; `fold` is the model: one key's ops in write order (write index,
     * the row, whether it is a delete) to the key's resolved row over
     * `view` (the read schema's columns, by default every column), if any.
-    * The table compacts after each batch in `compactAt`; `sink` = some
-    * batches arrive through the streaming sink, which writes primitive
-    * columns only. */
+    * The table compacts after each batch in `compactAt`; batches arrive
+    * through `appendBatch` and the streaming sink. */
   private case class PkEngine(name: String,
       schema: org.apache.spark.sql.types.StructType, props: String,
       deletes: Boolean, row: (Long, scala.util.Random) => Seq[Any],
       fold: Seq[(Int, Seq[Any], Boolean)] => Option[Seq[Any]],
-      view: Option[Seq[String]] = None, compactAt: Set[Int] = Set(2),
-      sink: Boolean = true)
+      view: Option[Seq[String]] = None, compactAt: Set[Int] = Set(2))
 
   private def pkEngines: Seq[PkEngine] = {
     import org.apache.spark.sql.types._
@@ -186,7 +184,7 @@ class PropertySpec extends AnyFunSuite {
             some(nn(6))(_.last)))
         },
         view = Some(Seq("id", "amt", "tags", "arr", "m", "last")),
-        compactAt = Set(2, 4), sink = false))
+        compactAt = Set(2, 4)))
   }
 
   test("PK doors agree: library, connector and model, every engine, both writers") {
@@ -247,7 +245,7 @@ class PropertySpec extends AnyFunSuite {
       for (b <- 0 until 6) {
         val keys = rnd.shuffle((0L to 5L).toList).take(1 + rnd.nextInt(4))
         val kind =
-          if (b == 0 || !e.sink) "append" else if (b == 1) "sink"
+          if (b == 0) "append" else if (b == 1) "sink"
           else if (e.deletes && rnd.nextInt(4) == 0) "delete"
           else if (rnd.nextBoolean()) "sink" else "append"
         if (kind == "delete") {

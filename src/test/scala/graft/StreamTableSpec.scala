@@ -518,46 +518,42 @@ class StreamTableSpec extends AnyFunSuite {
       assert(a._2 <= b._1, s"overlapping x ranges: $ranges") }
   }
 
-  test("sorted runs: a layout without sortedBy refuses the library read but " +
-      "takes appends until compaction sorts it, exact ties kept") {
+  test("sorted runs: a version-0 layout refuses reads and appends") {
     import scala.jdk.CollectionConverters._
-    val root = tmp()
-    def open() = new StreamTable(root, spark, primaryKey = Some(Seq("id")),
-      numBuckets = 1, changelogProducer = true)
-    val t = open()
+    val doors = new FormatFixture.Doors("unsorted", Map("primary-key" -> "id",
+      "bucket" -> "1", "changelog-producer" -> "input"))
+    val t = doors.table
     // a key repeated inside one batch: an exact (commit) tie, resolved by
     // row order within the file
     t.appendBatch((0 until 200).map(i => (i % 50L, s"v$i")).toDF("id", "v"), 0)
     t.appendBatch(Seq((3L, "late"), (3L, "later")).toDF("id", "v"), 1)
-    def answers(x: StreamTable) =
-      x.read.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    val before = answers(t)
-    // strip the sorted-run flags: a table written before they were required
-    Files.list(java.nio.file.Paths.get(root, "_manifests")).iterator().asScala.foreach { p =>
-      val s = new String(Files.readAllBytes(p))
-      Files.write(p, s.replace("\"sortedBy\":[\"id\"]", "\"sortedBy\":null").getBytes)
-    }
-    val legacy = open()
-    require(legacy.latestSnapshot.get.files.forall(_.sortedBy.isEmpty))
-    val err = intercept[Exception](legacy.read.collect())
-    def messages(e: Throwable): Seq[String] =
-      if (e == null) Nil else String.valueOf(e.getMessage) +: messages(e.getCause)
-    assert(messages(err).exists(_.contains("CALL sys.compact")), messages(err))
-    // the 'input' producer diffs key-sorted copies of the legacy files: the
-    // old images are the ones the sorted layout resolved, exact ties included
-    legacy.appendBatch(Seq((3L, "new3"), (10L, "new10"), (70L, "fresh")).toDF("id", "v"), 2)
-    val ops = spark.read.parquet(legacy.latestSnapshot.get.changelog.map(_.path): _*)
+    val before = doors.answers(Seq("id", "v"))
+    assert(before.distinct.size == 1, before)
+    // strip the sorted-run flags: a table written before they were
+    // required, in the version-0 format
+    FormatFixture.editManifests(t.root)(
+      _.replace("\"sortedBy\":[\"id\"]", "\"sortedBy\":null"))
+    FormatFixture.toVersion0(t.root)
+    doors.assertAllRefused()
+    // the 'input' producer would diff unsorted files: appends refuse too
+    FormatFixture.assertRefused("append")(
+      doors.reopen().appendBatch(Seq((3L, "new3")).toDF("id", "v"), 2))
+    doors.upgrade()
+    val up = doors.reopen()
+    FormatFixture.assertUpgraded(up)
+    assert(up.latestSnapshot.get.files.forall(_.sortedBy.contains(Seq("id"))))
+    assert(doors.answers(Seq("id", "v")) == before,
+      "the upgrade must not change answers, exact ties kept")
+    assert(!Files.list(java.nio.file.Paths.get(t.root)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith(".staging-")), "sorted copies left behind")
+    // appends work again: the producer diffs the upgraded sorted runs
+    up.appendBatch(Seq((3L, "new3"), (10L, "new10"), (70L, "fresh")).toDF("id", "v"), 2)
+    val ops = spark.read.parquet(up.latestSnapshot.get.changelog.map(_.path): _*)
       .select("op", "id", "v").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sorted.toSeq
-    val old = before.toMap
+    val old = before.head.map { r => val Array(k, v) = r.split("\\|"); k.toLong -> v }.toMap
     assert(ops == Seq(("+I", 70L, "fresh"), ("+U", 3L, "new3"), ("+U", 10L, "new10"),
       ("-U", 3L, old(3L)), ("-U", 10L, old(10L))), ops)
-    assert(!Files.list(java.nio.file.Paths.get(root)).iterator().asScala
-      .exists(_.getFileName.toString.startsWith(".staging-")), "sorted copies left behind")
-    legacy.compact(targetFileCount = 1)
-    assert(legacy.latestSnapshot.get.files.forall(_.sortedBy.contains(Seq("id"))))
-    assert(answers(legacy) == (old ++ Seq(3L -> "new3", 10L -> "new10", 70L -> "fresh"))
-      .toSeq.sorted, "the upgrade must not change answers")
   }
 
   test("plan shape: read and readAt plan one GraftPkScan and no Exchange or " +
@@ -1289,7 +1285,8 @@ class StreamTableSpec extends AnyFunSuite {
     assert(t.expireSnapshots(2, 2, 0L) > 0)
     assert(mfNames().size < beforeExpiry, "expired deltas must be deleted")
     assert(t.read.count() == n.toLong)
-    // a LEGACY inline snapshot converts on the next commit (one rebase)
+    // a version-0 snapshot holding its live set inline is refused until
+    // the compaction upgrades it into one full manifest
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     mapper.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
     val t2root = tmp()
@@ -1299,12 +1296,16 @@ class StreamTableSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(t2root, "_snapshots", s"snap-${inline.id}.json"),
       mapper.writeValueAsBytes(inline))
+    FormatFixture.toVersion0(t2root)
     val t3 = new StreamTable(t2root, spark)
-    assert(t3.latestSnapshot.get.files.size == 2, "inline snapshot reads as-is")
+    FormatFixture.assertRefused("inline read")(t3.read.count())
+    FormatFixture.assertRefused("inline append")(
+      t3.appendBatch(Seq((3L, "c")).toDF("id", "v"), 1L))
+    t3.compact(targetFileCount = 1)
+    FormatFixture.assertUpgraded(t3)
+    assert(t3.read.count() == 2)
     t3.appendBatch(Seq((3L, "c")).toDF("id", "v"), 1L)
-    val converted = t3.latestSnapshot.get
-    assert(converted.manifestList.size == 1, "legacy base must rebase")
-    assert(t3.read.count() == 3)
+    assert(t3.latestSnapshot.get.manifestList.size == 2 && t3.read.count() == 3)
   }
 
   test("in-place meta replacement (remove+re-add) is not re-delivered by addedBetween") {
@@ -1406,50 +1407,46 @@ class StreamTableSpec extends AnyFunSuite {
     val taf2 = new StreamTable(rootA, spark)
     val byId = taf2.snapshotHeaders.map(s => s.id -> s).toMap
     val (ev, nEv) = folds(StreamTable.intervalEvidence(
-      byId(_), taf2.deltaOf, taf2.hydrated, 1L, 6L))
+      byId(_), taf2.deltaOf, 1L, 6L))
     assert(nEv == 0, s"evidence walk must read deltas only, hydrated $nEv")
     assert(ev._1.size == 4 && ev._1.forall(_.level == 0),
       s"absorbed level-0 commits must stay evidence: ${ev._1.map(_.path)}")
   }
 
-  test("empty commit on a LEGACY inline base still rebases (no data loss)") {
-    import spark.implicits._
-    // BUCKETED table: an empty micro-batch's partitionBy write stages zero
-    // files, so the commit is a genuine NO-OP — on a legacy inline base the
-    // snapshot JSON persists files=[], and skipping the conversion rebase
-    // would publish a head that reads as an EMPTY table
-    val root = tmp()
-    val t = new StreamTable(root, spark, bucketKey = Some("id"), numBuckets = 2)
-    t.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
+  test("empty version-0 commit base: refused, compact upgrades") {
+    // a version-0 head stores its live set inline; the snapshot JSON of a
+    // version-1 commit persists files=[], so a commit on that base that
+    // carried the inline list over without a full manifest would read as
+    // an EMPTY table. The commit refuses; the compaction upgrades.
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     mapper.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    val inline = t.latestSnapshot.get.copy(
-      manifestList = Seq.empty, deltaManifest = None)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root, "_snapshots", s"snap-${inline.id}.json"),
-      mapper.writeValueAsBytes(inline))
-    val t2 = new StreamTable(root, spark, bucketKey = Some("id"), numBuckets = 2)
-    t2.appendBatch(spark.emptyDataset[(Long, String)].toDF("id", "v"), 1L)
-    val head = t2.latestSnapshot.get
-    assert(head.id == inline.id + 1 && head.manifestList.nonEmpty,
-      s"legacy no-op must rebase: $head")
-    if (head.files.isEmpty || t2.read.count() != 2)
-      fail(s"live rows must survive the empty commit: $head")
-    assert(new StreamTable(root, spark, bucketKey = Some("id"), numBuckets = 2)
-      .read.count() == 2)
-    // the UNBUCKETED shape (one staged 0-row part) must also convert safely
-    val root2 = tmp()
-    val u = new StreamTable(root2, spark)
-    u.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
-    val inline2 = u.latestSnapshot.get.copy(
-      manifestList = Seq.empty, deltaManifest = None)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(root2, "_snapshots", s"snap-${inline2.id}.json"),
-      mapper.writeValueAsBytes(inline2))
-    val u2 = new StreamTable(root2, spark)
-    u2.appendBatch(spark.emptyDataset[(Long, String)].toDF("id", "v"), 1L)
-    assert(u2.latestSnapshot.get.manifestList.nonEmpty)
-    assert(u2.read.count() == 2)
+    def inlineV0(t: StreamTable): Unit = {
+      val inline = t.latestSnapshot.get.copy(
+        manifestList = Seq.empty, deltaManifest = None)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(t.root, "_snapshots", s"snap-${inline.id}.json"),
+        mapper.writeValueAsBytes(inline))
+      FormatFixture.toVersion0(t.root)
+    }
+    // BUCKETED (an empty micro-batch stages zero files: a genuine no-op)
+    // and UNBUCKETED (one staged 0-row part)
+    Seq(Map("bucket-key" -> "id", "bucket" -> "2"), Map.empty[String, String])
+      .zipWithIndex.foreach { case (opts, i) =>
+        val doors = new FormatFixture.Doors(s"inline$i", opts)
+        doors.table.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L)
+        val before = doors.answers(Seq("id", "v"))
+        inlineV0(doors.table)
+        doors.assertAllRefused()
+        FormatFixture.assertRefused(s"$opts empty append")(doors.reopen()
+          .appendBatch(spark.emptyDataset[(Long, String)].toDF("id", "v"), 1L))
+        doors.upgrade()
+        val t = doors.reopen()
+        FormatFixture.assertUpgraded(t)
+        assert(doors.answers(Seq("id", "v")) == before, opts)
+        t.appendBatch(spark.emptyDataset[(Long, String)].toDF("id", "v"), 1L)
+        assert(doors.answers(Seq("id", "v")) == before,
+          s"$opts: live rows must survive the empty commit")
+      }
   }
 
   test("interval evidence: delta-served ≡ hydrated diff over a random history") {
@@ -1504,8 +1501,7 @@ class StreamTableSpec extends AnyFunSuite {
       (a, b)
     } :+ (0L, maxId)
     pairs.foreach { case (from, to) =>
-      val (a1, r1) = StreamTable.intervalEvidence(byId(_), t.deltaOf, t.hydrated,
-        from, to)
+      val (a1, r1) = StreamTable.intervalEvidence(byId(_), t.deltaOf, from, to)
       val (a2, r2) = diffEvidence(byId, from, to)
       assert(a1.map(_.path).toSet == a2, s"added evidence diverged on ($from, $to]")
       assert(r1.map(_.path).toSet == r2, s"removed evidence diverged on ($from, $to]")
@@ -1608,5 +1604,147 @@ class StreamTableSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       new StreamTable(tmp(), spark, primaryKey = Some(Seq("k")),
         bucketKey = Some("k"), numBuckets = -1, dynBucketInitial = 3))
+  }
+
+  test("format version: every commit path stamps version 1") {
+    import scala.jdk.CollectionConverters._
+    val wh = tmp()
+    val cat = s"gfv_${Integer.toHexString(wh.hashCode).take(6)}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.v2.GraftSparkCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val gc = new graft.table.GraftCatalog(spark, wh)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    /** (root, snapshot id, stamped version) of every snapshot JSON under
+      * the warehouse and `roots`, branches included. */
+    def stamps(roots: Seq[String]): Seq[(String, String)] =
+      (wh +: roots).flatMap { r =>
+        val w = Files.walk(java.nio.file.Paths.get(r))
+        try w.iterator().asScala.filter(p => p.getFileName.toString
+            .matches("snap-\\d+\\.json") && p.getParent.getFileName.toString == "_snapshots")
+          .map { p =>
+            val v = mapper.readTree(Files.readAllBytes(p)).get("formatVersion")
+            p.toString -> String.valueOf(v)
+          }.toVector
+        finally w.close()
+      }
+    // append, overwrite, compact, sort-compact, expire, rollback
+    val a = new StreamTable(tmp(), spark)
+    (0 until 3).foreach(b => a.appendBatch(
+      Seq((b.toLong, b * 1.5, b * 2.5)).toDF("id", "x", "y"), b.toLong))
+    a.overwriteBatch(Seq((9L, 1.0, 2.0), (8L, 3.0, 4.0)).toDF("id", "x", "y"), 3L)
+    a.appendBatch(Seq((7L, 5.0, 6.0)).toDF("id", "x", "y"), 4L)
+    a.compact(1)
+    a.sortCompact("x", "y", 1)
+    a.sortCompactOrder(Seq("x"), 1)
+    a.rollbackTo(a.latestSnapshot.get.id - 1)
+    a.expireSnapshots(2, 2, 0L)
+    // branch fast-forward (the seed and the branch's own commit)
+    a.createBranch("audit")
+    a.branchTable("audit").appendBatch(Seq((6L, 0.0, 0.0)).toDF("id", "x", "y"), 5L)
+    a.fastForward("audit")
+    // dynamic bucket split
+    val d = new StreamTable(tmp(), spark, primaryKey = Some(Seq("k")),
+      bucketKey = Some("k"), numBuckets = -1, dynBucketTargetRows = 5L,
+      dynBucketInitial = 1)
+    d.appendBatch((1L to 20L).map(k => (k, s"v$k")).toDF("k", "v"), 0L)
+    assert(d.latestSnapshot.get.bucketCount.exists(_ > 1), "split expected")
+    // PK DML (library and SQL), rescale, dynamic overwrite, COW and DV DML
+    spark.sql(s"CREATE TABLE $cat.db.pk (id BIGINT, v STRING) " +
+      "TBLPROPERTIES ('primary-key' = 'id', 'bucket' = '2')")
+    spark.sql(s"INSERT INTO $cat.db.pk VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    spark.sql(s"UPDATE $cat.db.pk SET v = 'u' WHERE id = 2")
+    spark.sql(s"DELETE FROM $cat.db.pk WHERE id = 3")
+    gc.getTable("db", "pk").updateWhere(col("id") === 1L, Seq("v" -> lit("w")))
+    gc.rescale("db", "pk", 3)
+    spark.sql(s"CREATE TABLE $cat.db.part (id BIGINT, seg STRING) " +
+      "PARTITIONED BY (seg)")
+    spark.sql(s"INSERT INTO $cat.db.part VALUES (1, 'a'), (2, 'b')")
+    Seq((3L, "a")).toDF("id", "seg").writeTo(s"$cat.db.part").overwritePartitions()
+    spark.sql(s"CREATE TABLE $cat.db.cow (id BIGINT, x DOUBLE)")
+    spark.sql(s"INSERT INTO $cat.db.cow SELECT id, id * 1.5 FROM range(0, 20)")
+    spark.sql(s"UPDATE $cat.db.cow SET x = -1.0 WHERE id % 3 = 0")
+    spark.sql(s"CREATE TABLE $cat.db.dv (id BIGINT, x DOUBLE) " +
+      "TBLPROPERTIES ('rowlevel.mode' = 'dv')")
+    spark.sql(s"INSERT INTO $cat.db.dv SELECT id, id * 1.5 FROM range(0, 20)")
+    spark.sql(s"UPDATE $cat.db.dv SET x = -1.0 WHERE id % 3 = 0")
+    // a sink epoch
+    val sink = tmp()
+    val src = new StreamTable(tmp(), spark)
+    src.appendBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), 0L)
+    spark.readStream.format("graft").load(src.root).writeStream.format("graft")
+      .option("path", sink).option("checkpointLocation", tmp())
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    assert(new StreamTable(sink, spark).read.count() == 2)
+    val all = stamps(Seq(a.root, d.root, sink))
+    assert(all.size >= 15, all.size)
+    val off = all.filterNot(_._2 == StreamTable.FormatVersion.toString)
+    assert(off.isEmpty, s"snapshots not stamped version 1: $off")
+  }
+
+  test("format upgrade: retained version-0 history, expiry and orphans") {
+    import scala.jdk.CollectionConverters._
+    val root = tmp()
+    val t = new StreamTable(root, spark)
+    (0 until 3).foreach(b => t.appendBatch(
+      Seq((b.toLong, s"v$b"), (b + 10L, s"w$b")).toDF("id", "v").coalesce(1), b.toLong))
+    t.compact(1)
+    t.appendBatch(Seq((20L, "x")).toDF("id", "v").coalesce(1), 3L)
+    val before = FormatFixture.rows(t.read)
+    // snapshot 0 keeps its live set inline, as the oldest format did;
+    // then the whole history is version 0
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    mapper.registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+    val s0 = t.snapshotAt(0L).get.copy(manifestList = Seq.empty, deltaManifest = None)
+    Files.write(java.nio.file.Paths.get(root, "_snapshots", "snap-0.json"),
+      mapper.writeValueAsBytes(s0))
+    FormatFixture.toVersion0(root)
+    /** Every data file a retained snapshot JSON references: inline entries
+      * and every manifest entry its list adds. */
+    def referenced(): Set[String] =
+      StreamTable.listDir(java.nio.file.Paths.get(root, "_snapshots"))
+        .filter(_.getFileName.toString.matches("snap-\\d+\\.json")).flatMap { p =>
+          val node = mapper.readTree(Files.readAllBytes(p))
+          val inline = node.get("files").elements().asScala.map(_.get("path").asText)
+          val listed = node.get("manifestList").elements().asScala.flatMap { m =>
+            mapper.readTree(Files.readAllBytes(java.nio.file.Paths.get(
+              root, "_manifests", m.asText))).get("added").elements().asScala
+              .map(_.get("path").asText)
+          }
+          inline ++ listed
+        }.toSet
+    val v0 = new StreamTable(root, spark)
+    FormatFixture.assertRefused("head read")(v0.read.collect())
+    FormatFixture.assertRefused("time travel")(v0.readAt(0L).collect())
+    FormatFixture.assertRefused("$snapshots")(v0.snapshotsView.collect())
+    v0.compact(1)
+    FormatFixture.assertUpgraded(v0)
+    assert(FormatFixture.rows(v0.read) == before)
+    assert(FormatFixture.rows(spark.read.format("graft").load(root)) == before)
+    // the history before the upgrade stays refused
+    FormatFixture.assertRefused("pre-upgrade time travel")(v0.readAt(2L).collect())
+    // the orphan sweep keeps every file a retained snapshot references,
+    // the inline live set of snapshot 0 included, and reaps a real orphan
+    val orphan = java.nio.file.Paths.get(root, "data", "append", "orphan.parquet")
+    Files.write(orphan, Array[Byte](1, 2, 3))
+    Files.setLastModifiedTime(orphan,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000L))
+    val refs = referenced()
+    assert(refs.exists(p => s0.files.exists(_.path == p)))
+    v0.removeOrphanFiles(olderThanMs = 1000L)
+    assert(!Files.exists(orphan), "the orphan must be reaped")
+    assert(refs.forall(p => Files.exists(java.nio.file.Paths.get(p))),
+      s"orphan sweep deleted referenced files: ${refs.filterNot(p =>
+        Files.exists(java.nio.file.Paths.get(p)))}")
+    // expiry drops the version-0 history and only what nothing retained uses
+    assert(v0.expireSnapshots(1, 1, 0L) > 0)
+    val kept = referenced()
+    assert(kept.forall(p => Files.exists(java.nio.file.Paths.get(p))))
+    v0.removeOrphanFiles(olderThanMs = 0L)
+    assert(kept.forall(p => Files.exists(java.nio.file.Paths.get(p))))
+    val fresh = new StreamTable(root, spark)
+    assert(fresh.snapshotHeaders.forall(_.formatVersion == StreamTable.FormatVersion))
+    assert(FormatFixture.rows(fresh.read) == before, "answers after expiry")
+    assert(fresh.snapshotsView.count() == 1)
   }
 }

@@ -723,29 +723,26 @@ class V2ConnectorSpec extends AnyFunSuite {
     StreamTable.deleteTree(java.nio.file.Paths.get(root))
   }
 
-  test("legacy manifests without persisted stats fall back to footers, same answers") {
+  test("version-0 manifests without stats: refused, compact upgrades") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("v2_legacy_").toString
-    val tbl = new StreamTable(root, spark)
+    val doors = new FormatFixture.Doors("nostats", Map.empty)
+    val tbl = doors.table
     (0 until 3).foreach { b =>
       tbl.appendBatch((b * 100L until (b + 1) * 100L)
         .map(i => (i, i * 1.5)).toDF("id", "x"), b.toLong)
     }
-    def run() = spark.read.format("graft").load(root)
+    def pruned() = doors.connector
       .where(col("id").between(120L, 180L)).orderBy("id").collect().toSeq
-    def statsMaps(t: StreamTable) = t.filesView
-      .select("file_path", "min_value_stats", "max_value_stats")
-      .collect().map(r => (r.getString(0),
-        r.getAs[Map[String, String]](1), r.getAs[Map[String, String]](2)))
-      .sortBy(_._1).toSeq
-    val (before, mapsBefore) = (run(), statsMaps(tbl))
-    // strip the persisted stats from every metadata JSON — the pre-round-8
-    // format (Jackson leaves the absent fields as None). File entries live
-    // in the delta manifests; changelog entries stay inline in snapshots.
+    val before = (pruned(), doors.answers(Seq("id", "x")))
+    assert(before._2.distinct.size == 1, before._2)
+    // strip the persisted stats from every metadata JSON and stamp the
+    // snapshots version 0: a table written before the commits captured
+    // stats. File entries live in the delta manifests; changelog entries
+    // stay inline in snapshots.
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     Seq("_snapshots", "_manifests").foreach { d =>
-      val dir = java.nio.file.Paths.get(root, d)
+      val dir = java.nio.file.Paths.get(tbl.root, d)
       StreamTable.listDir(dir).filter(_.toString.endsWith(".json")).foreach { p =>
         val node = mapper.readTree(java.nio.file.Files.readAllBytes(p))
           .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
@@ -760,15 +757,18 @@ class V2ConnectorSpec extends AnyFunSuite {
         java.nio.file.Files.write(p, mapper.writeValueAsBytes(node))
       }
     }
+    FormatFixture.toVersion0(tbl.root)
+    doors.assertAllRefused()
+    FormatFixture.assertRefused("$files")(doors.reopen().filesView.collect())
+    doors.upgrade()
+    val up = doors.reopen()
+    FormatFixture.assertUpgraded(up)
+    assert(up.latestSnapshot.get.files.forall(f =>
+      f.minStats.isDefined && f.maxStats.isDefined && f.fileCols.isDefined))
     StreamTable.planFooterReads.set(0L)
-    assert(run() == before, "legacy fallback must read the same rows")
-    assert(StreamTable.planFooterReads.get() > 0L,
-      "a stats-less manifest must have taken the footer fallback")
-    // and the two stats sources render identically ($files footer pass) —
-    // through a FRESH handle (the old one's manifest cache predates the edit)
-    assert(statsMaps(new StreamTable(root, spark)) == mapsBefore,
-      "footer and manifest stats must agree")
-    StreamTable.deleteTree(java.nio.file.Paths.get(root))
+    assert((pruned(), doors.answers(Seq("id", "x"))) == before,
+      "the upgrade must not change answers")
+    assert(StreamTable.planFooterReads.get() == 0L)
   }
 
   test("columnar fast path engages iff provably safe") {
