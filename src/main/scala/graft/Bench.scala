@@ -64,7 +64,7 @@ object Bench {
 
     // untimed warmup: parquet reader + codegen + shuffle machinery, plus the
     // bucketed join's one-off table staging (measurement setup, not a query)
-    spark.read.parquet(s"$sfDir/lineitem.parquet")
+    Tables.lineitem(spark, sfDir)
       .groupBy("l_returnflag").count().collect()
     ops.Joins.stageBucketed(spark, sfDir)
     // ... and the STREAMING runtime: the first streaming query in a session

@@ -29,10 +29,25 @@ object QDef {
   * only reads under `spark.sql.legacy.parquet.nanosAsLong`; we normalize it to
   * TIMESTAMP_NTZ (µs) here so every query sees a proper timestamp column. The
   * DuckDB oracle matches with `CAST(ts AS TIMESTAMP)` (ns → µs truncation).
+  *
+  * A load plans with no Spark job: a single-file fixture passes the schema
+  * [[graft.table.StreamTable.pathSchema]] converts from its footer, memoized
+  * under (path, length, modification time) so a file rewritten in place
+  * misses, and converted under the session's settings on every call (so
+  * `nanosAsLong` still applies). A directory, or a missing path, stays on
+  * Spark's own inference.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val hp = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try(hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(hp)).toOption.filter(_.isFile) match {
+      case Some(f) => spark.read.schema(graft.table.StreamTable.pathSchema(spark,
+        Seq((path, f.getLen, f.getModificationTime)))).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")

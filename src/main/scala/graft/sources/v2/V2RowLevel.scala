@@ -701,7 +701,7 @@ class GraftPkDeltaBatchWrite(table: GraftV2Table, rowSchema0: StructType,
         // silently drop the loser. Cross-driver concurrency keeps the
         // library doors' single-logical-writer contract.
         val df = spark.read.schema(StreamTable.pathSchema(spark,
-          visible.map(p => (p, java.nio.file.Files.size(java.nio.file.Paths.get(p))))))
+          visible.map(p => (p, java.nio.file.Files.size(java.nio.file.Paths.get(p)), 0L))))
           .parquet(visible: _*)
         GraftPkDeltaBatchWrite.dmlLock
           .computeIfAbsent(t.root, _ => new Object).synchronized {

@@ -73,9 +73,17 @@ object LookupRetry {
           .map(_.stripPrefix("pending-").toLong)
           .filter(_ < id).toSeq.sorted.lastOption
           .map(m => s"$retryDir/pending-$m")
-        val input = pendingDir
-          .map(p => fresh.unionByName(s.read.schema(fresh.schema).parquet(p)))
-          .getOrElse(fresh)
+        val pendingRows = pendingDir.map(parquetRows(s, _))
+        // a pending file whose footers hold no rows is not scanned; the
+        // batch still writes `__attempts` OPTIONAL, as the union would (a
+        // null branch types the 0 nullable; `lit(0)` alone is REQUIRED)
+        val input = pendingDir match {
+          case Some(p) if pendingRows.exists(_ > 0L) =>
+            fresh.unionByName(s.read.schema(fresh.schema).parquet(p))
+          case Some(_) =>
+            batch.withColumn("__attempts", when(lit(false), lit(null)).otherwise(0))
+          case None => fresh
+        }
 
         val d = dim().withColumn("__hit", lit(1))
         // one job routes the joined rows by the next attempt count; every
@@ -86,7 +94,7 @@ object LookupRetry {
         // a batch with no rows (a compaction commit fires one) writes its
         // schema-only outputs from an empty plan: no dimension read, no job
         val noRows = batch.queryExecution.toRdd.getNumPartitions == 0 &&
-          pendingDir.forall(parquetRows(s, _) == 0L)
+          pendingRows.forall(_ == 0L)
         RoutedWrite.write(if (noRows) joined.limit(0) else joined, Seq(
           RoutedWrite.Dest(s"$outDir/data/batch-$id", col("__hit").isNotNull,
             joined.columns.toSeq.filterNot(Set("__hit", "__attempts"))),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 
 import graft.{QDef, Tables}
@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming queries (SURVEY.md §2B "Streaming").
   *
@@ -71,7 +72,7 @@ object StreamOps {
     * need TIMESTAMP (LTZ); outputs cast back to NTZ for oracle parity. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = Tables.t(s, d, "events").schema
     val raw = s.readStream.schema(schema).parquet(eventsSourceDir(d))
     // normalize `ts` to TIMESTAMP (LTZ, µs) for watermarks whichever
     // physical type the driver wrote: nanos-long (early testdata) or a
@@ -652,8 +653,7 @@ object StreamOps {
       val root = Files.createTempDirectory("graft_idx_update_").toString
       val table = new graft.table.StreamTable(root, s, bucketKey = Some("cid"))
       withStreamShuffle(s) {
-        val schema = s.read.parquet(dir).schema
-        val stream = s.readStream.schema(schema)
+        val stream = s.readStream.schema(stagedSchema(s, dir))
           .option("maxFilesPerTrigger", "1").parquet(dir)
         val q = stream.writeStream
           .foreachBatch { (b: DataFrame, id: Long) =>
@@ -693,8 +693,7 @@ object StreamOps {
         primaryKey = Some(Seq("o_orderkey")), seqCol = Some("seq"),
         mergeEngine = "partial-update")
       withStreamShuffle(s) {
-        val schema = s.read.parquet(dir).schema
-        val stream = s.readStream.schema(schema)
+        val stream = s.readStream.schema(stagedSchema(s, dir))
           .option("maxFilesPerTrigger", "2").parquet(dir)
         table.writeStream(stream, Trigger.AvailableNow()).awaitTermination()
       }
@@ -720,8 +719,7 @@ object StreamOps {
         primaryKey = Some(Seq("user_id")), seqCol = Some("event_id"),
         mergeEngine = "first-row")
       withStreamShuffle(s) {
-        val schema = s.read.parquet(dir).schema
-        val stream = s.readStream.schema(schema)
+        val stream = s.readStream.schema(stagedSchema(s, dir))
           .option("maxFilesPerTrigger", "2").parquet(dir)
           .select("user_id", "event_id", "event_type", "value")
         table.writeStream(stream, Trigger.AvailableNow()).awaitTermination()
@@ -767,7 +765,7 @@ object StreamOps {
     * priorities (seq 2), the %10 reprice (seq 3), shuffled across 6 files so
     * micro-batches interleave the waves. */
   private val stagedPartial = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def partialUpdDir(s: SparkSession, d: String): String =
+  private[graft] def partialUpdDir(s: SparkSession, d: String): String =
     stagedPartial.computeIfAbsent(d, { _ =>
       val dir = Files.createTempDirectory("graft_partial_upd_src_").toString
       val o = graft.Tables.orders(s, d)
@@ -791,8 +789,7 @@ object StreamOps {
     * final complete-mode aggregate and the number of data batches. */
   def incrementalCounts(s: SparkSession, d: String): (DataFrame, Int) = {
     val dir = eventsMultiDir(s, d)
-    val schema = s.read.parquet(dir).schema
-    val stream = s.readStream.schema(schema)
+    val stream = s.readStream.schema(stagedSchema(s, dir))
       .option("maxFilesPerTrigger", "2").parquet(dir)
     val agg = stream.groupBy("event_type")
       .agg(count(lit(1)).as("n"), graft.X.dsum(col("value")).as("sum_value"))
@@ -803,10 +800,10 @@ object StreamOps {
   /** Stage (once per sf dir) the embeddings table as 4 parquet files — the
     * arriving-vectors backlog q_stream_index_update walks. */
   private val stagedEmb = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def embMultiDir(s: SparkSession, d: String): String =
+  private[graft] def embMultiDir(s: SparkSession, d: String): String =
     stagedEmb.computeIfAbsent(d, { _ =>
       val dir = Files.createTempDirectory("graft_emb_multi_").toString
-      s.read.parquet(s"$d/embeddings.parquet").repartition(4)
+      Tables.embeddings(s, d).repartition(4)
         .write.mode("overwrite").parquet(dir)
       dir
     })
@@ -814,12 +811,23 @@ object StreamOps {
   /** Stage (once per sf dir) the events table as 8 parquet files so the
     * file source's `maxFilesPerTrigger` has a backlog to walk. */
   private val stagedMulti = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def eventsMultiDir(s: SparkSession, d: String): String =
+  private[graft] def eventsMultiDir(s: SparkSession, d: String): String =
     stagedMulti.computeIfAbsent(d, { _ =>
       val dir = Files.createTempDirectory("graft_events_multi_").toString
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.read.parquet(s"$d/events.parquet").repartition(8)
+      Tables.t(s, d, "events").repartition(8)
         .write.mode("overwrite").parquet(dir)
       dir
     })
+
+  /** A staged directory's schema with no Spark job. One write made all its
+    * files, so one data file's footer gives it, as Spark's inference takes
+    * it without `mergeSchema`; the file is immutable, so it keys the footer
+    * memo like a table file. */
+  private[graft] def stagedSchema(s: SparkSession, dir: String): StructType = {
+    val file = graft.table.StreamTable.listDir(Paths.get(dir))
+      .filterNot { p => val n = p.getFileName.toString; n.startsWith("_") || n.startsWith(".") }
+      .minBy(_.getFileName.toString)
+    graft.table.StreamTable.pathSchema(s, Seq((file.toString, Files.size(file), 0L)))
+  }
 }

@@ -3926,27 +3926,30 @@ object StreamTable {
     * counted in [[driverCommitFooterReads]]. */
   val planFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Driver footer opens made by [[fileSchema]] for a file its memo has not
-    * seen (a sink-committed file, or one committed by another JVM). A
+  /** Driver footer opens made by [[pathSchema]] for a file its memo has not
+    * seen (a sink-committed file, one committed by another JVM, or a
+    * [[graft.Tables]] fixture on its first load or after a rewrite). A
     * second read of the same files leaves this untouched. */
   val schemaFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Footer metadata (parquet schema + key/value metadata) per data file,
-    * keyed by (path, size). Table files are immutable and UUID-named, so an
-    * entry never goes stale. BOUNDED (LRU) like the manifest cache: a
-    * long-running writer commits new files forever; a miss costs one
-    * footer open. */
+    * keyed by (path, size, modified). Table files are immutable and
+    * UUID-named, so they key with `modified` = 0 and an entry never goes
+    * stale. A [[graft.Tables]] fixture can be rewritten in place, so it keys
+    * with its modification time and a rewrite (new length or new time)
+    * misses. BOUNDED (LRU) like the manifest cache: a long-running writer
+    * commits new files forever; a miss costs one footer open. */
   private val FileSchemaMemoSize = 8192
-  private val fileSchemaMemo = new java.util.LinkedHashMap[(String, Long),
+  private val fileSchemaMemo = new java.util.LinkedHashMap[(String, Long, Long),
       org.apache.parquet.hadoop.metadata.FileMetaData](256, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[(String, Long),
+    override def removeEldestEntry(e: java.util.Map.Entry[(String, Long, Long),
         org.apache.parquet.hadoop.metadata.FileMetaData]): Boolean =
       size > FileSchemaMemoSize
   }
 
   private def memoFileMeta(path: String, size: Long,
       m: org.apache.parquet.hadoop.metadata.FileMetaData): Unit =
-    fileSchemaMemo.synchronized(fileSchemaMemo.put((path, size), m))
+    fileSchemaMemo.synchronized(fileSchemaMemo.put((path, size, 0L), m))
 
   /** The Spark schema of a set of table data files — exactly what
     * `spark.read.option("mergeSchema","true").parquet(paths).schema` infers,
@@ -3955,17 +3958,21 @@ object StreamTable {
     * schemas merge on the driver in Spark's own order (files sorted by path
     * string, a left fold of `StructType.merge` under
     * `spark.sql.caseSensitive`), so column order matches the inferred one.
-    * Footers come from the (path, size) memo; a miss opens the footer once.
+    * Footers come from the memo under (path, size, 0); a miss opens the
+    * footer once.
     * Every read of table files passes this as its `.schema(...)`: tombstone
     * files carry only key + sequence columns and evolved files differ, and
     * the merged schema null-fills what a file lacks. */
   private[graft] def fileSchema(spark: SparkSession,
       files: Seq[DataFileMeta]): org.apache.spark.sql.types.StructType =
-    pathSchema(spark, files.map(f => (f.path, f.fileSizeInBytes)))
+    pathSchema(spark, files.map(f => (f.path, f.fileSizeInBytes, 0L)))
 
-  /** [[fileSchema]] over (path, size) pairs. */
+  /** [[fileSchema]] over (path, size, modified) keys of the memo: `modified`
+    * is 0 for table files and the file's modification time for a fixture
+    * load ([[graft.Tables.t]]), whose single file this converts under the
+    * session's settings on every call, as Spark's inference does. */
   private[graft] def pathSchema(spark: SparkSession,
-      files: Seq[(String, Long)]): org.apache.spark.sql.types.StructType = {
+      files: Seq[(String, Long, Long)]): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
     import org.apache.spark.sql.graft.SchemaMerge
@@ -3973,16 +3980,16 @@ object StreamTable {
     val sqlConf = spark.sessionState.conf
     val converter = new ParquetToSparkSchemaConverter(sqlConf)
     lazy val hadoopConf = spark.sessionState.newHadoopConf()
-    val schemas = files.distinct.sortBy(_._1).map { case (path, size) =>
+    val schemas = files.distinct.sortBy(_._1).map { case key @ (path, _, _) =>
       val meta = fileSchemaMemo.synchronized(
-        Option(fileSchemaMemo.get((path, size)))).getOrElse {
+        Option(fileSchemaMemo.get(key))).getOrElse {
         schemaFooterReads.incrementAndGet()
         val m = ParquetFooterReader.readFooter(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
             new org.apache.hadoop.fs.Path(path), hadoopConf),
           org.apache.parquet.format.converter.ParquetMetadataConverter
             .SKIP_ROW_GROUPS).getFileMetaData
-        memoFileMeta(path, size, m)
+        fileSchemaMemo.synchronized(fileSchemaMemo.put(key, m))
         m
       }
       ParquetFileFormat.readSchemaFromFooter(

@@ -1,11 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +12,7 @@ import graft.table.{GraftCatalog, GraftSql, StreamTable}
   * so building a read launches no Spark job. */
 class FileSchemaSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
+  import SparkFixture.jobsDuring
   import spark.implicits._
 
   private def tmp(tag: String): String =
@@ -88,31 +85,6 @@ class FileSchemaSpec extends AnyFunSuite {
     part.appendBatch(Seq((1L, "2024-01-01"), (2L, "2024-01-02")).toDF("id", "dt"), 0)
     part.appendBatch(Seq((3L, "2024-01-02", 9.0)).toDF("id", "dt", "w"), 1)
     assertParity(part)
-  }
-
-  /** Jobs started while `build` runs. The listener bus is asynchronous, so
-    * a marked job submitted afterwards flushes it: every job started during
-    * `build` is delivered before the marker's start. */
-  private def jobsDuring(build: => Unit): Seq[Int] = {
-    val seen = new ConcurrentLinkedQueue[(Int, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add((e.jobId, Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).orNull))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      build
-      spark.sparkContext.setJobDescription("file-schema-marker")
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.currentTimeMillis() + 30000
-      while (!seen.asScala.exists(_._2 == "file-schema-marker") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(10)
-      val all = seen.asScala.toSeq
-      assert(all.exists(_._2 == "file-schema-marker"), "listener bus never drained")
-      all.takeWhile(_._2 != "file-schema-marker").map(_._1)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("building a read launches no Spark job, through every door") {

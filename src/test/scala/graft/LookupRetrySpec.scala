@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import graft.streaming.{LookupRetry, RoutedWrite}
 import graft.table.StreamTable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.parquet.schema.Type.Repetition
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -61,6 +63,37 @@ class LookupRetrySpec extends AnyFunSuite {
         (exec, bytes.filter(b => stages.contains(b._1)).map(_._2).sum)
       }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The physical plan text of every SQL execution started while `body`
+    * runs. Both listeners sit on the shared listener queue, so once
+    * `jobsDuring`'s marker job is seen every earlier event has reached this
+    * one too. */
+  private def plansDuring(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SparkFixture.jobsDuring(body)
+      plans.asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The repetition of a column in the footer of a directory's one parquet file. */
+  private def repetition(dir: String, column: String) = {
+    val Seq(file) = parquetFiles(dir)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/$file"), spark.sessionState.newHadoopConf()))
+    try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      schema.getType(schema.getFieldIndex(column)).getRepetition
+    } finally r.close()
   }
 
   private def parquetFiles(dir: String): Seq[String] =
@@ -226,6 +259,37 @@ class LookupRetrySpec extends AnyFunSuite {
     assert(kernelJobs.isEmpty, s"(execution id, bytes written) per job: $kernelJobs")
     assertSchemaOnly(s"$kernelDir/a", pendingSchema)
     assertSchemaOnly(s"$kernelDir/b", deadSchema)
+  }
+
+  test("a batch after a pending file with no rows plans no pending scan, " +
+      "and the pending footers keep their `__attempts` repetition") {
+    import spark.implicits._
+    val srcDir = Files.createTempDirectory("graft_lr7_src_").toString
+    val outDir = Files.createTempDirectory("graft_lr7_out_").toString
+    def dim(): DataFrame = Seq((1L, "one")).toDF("k", "name")
+    val schema = Seq((0L, "")).toDF("k", "payload").schema
+    def runOnce(): Unit = LookupRetry.start(spark,
+      spark.readStream.schema(schema).parquet(srcDir),
+      dim _, "k", outDir, maxAttempts = 1, Trigger.AvailableNow()).awaitTermination()
+    // batch 0: with one attempt a miss dead-letters at once, so nothing parks
+    Seq((1L, "a"), (2L, "b")).toDF("k", "payload").write.mode("append").parquet(srcDir)
+    runOnce()
+    assert(spark.read.parquet(s"$outDir/retry/pending-0").count() == 0L)
+    Seq((1L, "c"), (3L, "d")).toDF("k", "payload").write.mode("append").parquet(srcDir)
+    val plans = plansDuring(runOnce())
+    assert(plans.nonEmpty, "no SQL execution seen")
+    assert(!plans.exists(_.contains("retry/pending-")),
+      s"batch 1 scanned the empty pending file: ${plans.mkString("\n---\n")}")
+    assert(spark.read.parquet(s"$outDir/data/batch-1").as[(Long, String, String)]
+      .collect().toSeq == Seq((1L, "c", "one")))
+    assert(spark.read.parquet(s"$outDir/dead/batch-1").as[(Long, String)]
+      .collect().toSeq == Seq((3L, "d")))
+    val pending1 = spark.read.parquet(s"$outDir/retry/pending-1")
+    assert(pending1.schema == pendingSchema && pending1.count() == 0L)
+    // a first batch writes the fresh attempt count REQUIRED; every later
+    // batch writes it OPTIONAL, whether or not it scanned its predecessor
+    assert(repetition(s"$outDir/retry/pending-0", "__attempts") == Repetition.REQUIRED)
+    assert(repetition(s"$outDir/retry/pending-1", "__attempts") == Repetition.OPTIONAL)
   }
 
   test("a replayed batch leaves one copy of its outputs") {
