@@ -3,10 +3,9 @@ package graft.sources.v2
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1992,7 +1991,7 @@ class GraftVectorReader(path: String, required: StructType,
     new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
       /* useOffHeap = */ false, /* capacity = */ 4096)
   locally {
-    val conf = new Configuration()
+    val conf = StreamTable.hadoopConf()
     conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport].getName)
     conf.set(
@@ -2011,9 +2010,10 @@ class GraftVectorReader(path: String, required: StructType,
     // behavior mid-table. The row reader is equally conf-independent
     // (declared-type-driven conversions), so the two paths can never
     // diverge. Like every graft reader (the Group reader, the sink writer),
-    // the fresh Configuration assumes default-filesystem access — an
-    // object-store deployment supplies credentials via core-site, not
-    // session conf.
+    // this conf is a copy of the one loaded base (StreamTable.hadoopConf:
+    // the content of `new Configuration()`, parsed once per JVM) and assumes
+    // default-filesystem access — an object-store deployment supplies
+    // credentials via core-site, not session conf.
     locally {
       import org.apache.spark.sql.internal.SQLConf
       conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
@@ -2490,9 +2490,8 @@ object GraftVector {
   private[v2] def layout(path: String): Map[String, Option[PrimitiveType]] = {
     if (fieldCache.size() > 8192) fieldCache.clear()
     fieldCache.computeIfAbsent(path, { p =>
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p), new Configuration())
-      val r = ParquetFileReader.open(in)
+      val r = StreamTable.openFooter(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p), StreamTable.hadoopConf()))
       try {
         val s = r.getFooter.getFileMetaData.getSchema
         s.getFields.asScala.map { f =>
@@ -2760,7 +2759,12 @@ object GraftVector {
   * requested columns, re-applies the pushed predicate at parquet row-group
   * level, and materializes [[InternalRow]]s from example Groups. Row-by-row
   * Group assembly is the API-pure route (the vectorized reader is Spark
-  * internal); the per-file work is embarrassingly parallel either way. */
+  * internal); the per-file work is embarrassingly parallel either way.
+  *
+  * The footer open and the row reader share one configuration: this
+  * reader's copy of the one loaded base ([[StreamTable.hadoopConf]]), which
+  * alone carries its read schema, so concurrent readers of the same file
+  * never see each other's projection and opening the file parses no XML. */
 class GraftPartitionReader(path: String, required: StructType,
     pushed: Array[Filter], limit: Option[Int] = None, fileSeq: Long = -1L,
     /** Deletion-vector positions to suppress (sorted). Non-empty DISABLES
@@ -2770,11 +2774,11 @@ class GraftPartitionReader(path: String, required: StructType,
     dv: Array[Long] = Array.empty)
     extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
-  private val hPath = new org.apache.hadoop.fs.Path(path)
+  private val conf = StreamTable.hadoopConf()
+  private val file = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
 
   private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(hPath, conf))
+    val r = StreamTable.openFooter(file)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
   private def inFile(name: String) = fileSchema.containsField(name)
@@ -2792,8 +2796,12 @@ class GraftPartitionReader(path: String, required: StructType,
     present.map(f => fieldType(f.name)).toList.asJava)
 
   private val reader: ParquetReader[Group] = {
+    // the builder reads `conf` through `file`, so parquet-mr builds no
+    // configuration of its own
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), hPath).withConf(conf)
+    val b = new ParquetReader.Builder[Group](file) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+    }
     // row-group + record-level re-check of the pushed filters; only when
     // every referenced column exists in this file — and never under a
     // deletion vector or a requested _graft_pos (position fidelity: skipped

@@ -1184,9 +1184,8 @@ object V2Queries {
       }
       // pin the writer contract: INT64 micros adjusted-to-UTC in every file
       tbl.latestSnapshot.get.files.foreach { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.path), new org.apache.hadoop.conf.Configuration())
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = StreamTable.openFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.path), StreamTable.hadoopConf()))
         try {
           val sch = r.getFooter.getFileMetaData.getSchema
           val fld = sch.getType(sch.getFieldIndex("ts")).asPrimitiveType()
@@ -1225,9 +1224,8 @@ object V2Queries {
       }
       // pin the writer contract: INT32 unscaled with the declared annotation
       tbl.latestSnapshot.get.files.foreach { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.path), new org.apache.hadoop.conf.Configuration())
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        val r = StreamTable.openFooter(org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.path), StreamTable.hadoopConf()))
         try {
           val sch = r.getFooter.getFileMetaData.getSchema
           val fld = sch.getType(sch.getFieldIndex("o_price")).asPrimitiveType()

@@ -407,11 +407,12 @@ class GraftStreamingDataWriter(tableRoot: String, schema: StructType,
     partPlan: Array[Int] = Array.empty)
     extends DataWriter[InternalRow] {
 
-  // every SQL key the write support reads, pinned rather than inherited
-  // from the session (as GraftVectorReader pins its read keys): the
-  // non-legacy layout, TIMESTAMP as INT64 MICROS (the layout
+  // this writer's copy of the one loaded base (StreamTable.hadoopConf),
+  // with every SQL key the write support reads pinned on the copy rather
+  // than inherited from the session (as GraftVectorReader pins its read
+  // keys): the non-legacy layout, TIMESTAMP as INT64 MICROS (the layout
   // StreamTable.withMicrosTimestamps gives appendBatch), no field ids
-  private val conf = new Configuration()
+  private val conf = StreamTable.hadoopConf()
   ParquetWriteSupport.setSchema(
     GraftStreamingWrite.fileSchema(schema, stamp.isDefined), conf)
   conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -123,7 +122,8 @@ object LookupRetry {
     graft.table.StreamTable.listDir(Paths.get(dir)).iterator
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map { p =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p.toString), conf))
+        val r = graft.table.StreamTable.openFooter(
+          HadoopInputFile.fromPath(new Path(p.toString), conf))
         try r.getRecordCount finally r.close()
       }.sum
   }

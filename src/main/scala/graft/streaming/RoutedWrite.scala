@@ -5,7 +5,7 @@ import java.util.UUID
 
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
+import org.apache.spark.{JobExecutionStatus, SparkContext, TaskContext}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
@@ -36,8 +36,10 @@ import graft.table.StreamTable
   * Tasks write into a staging directory. After the job, `write` replaces
   * each destination directory (delete, then an atomic move), keeping only
   * the files of each partition's successful attempt. A failed job replaces
-  * nothing and leaves no staging directory; a rerun rewrites exactly its
-  * own destinations. */
+  * nothing and leaves no staging directory: `write` returns only after
+  * every task of the job has ended (a task still running when another one
+  * failed would otherwise re-create the directory when it opens a writer).
+  * A rerun rewrites exactly its own destinations. */
 object RoutedWrite {
 
   /** Rows satisfying `where` (and no earlier destination's predicate) land
@@ -71,17 +73,26 @@ object RoutedWrite {
     val jobId = UUID.randomUUID().toString
     val staging = Paths.get(stagingParent, s"_routed-$jobId")
     val write = writeTask(staging.toString, jobId, schemas, factories, confs, ordinals) _
+    val sc = spark.sparkContext
+    val tag = s"graft-routed-$jobId"
     try {
       val qe = routed.queryExecution
       val written = SQLExecution.withNewExecutionId(qe, Some("routedWrite")) {
         val rdd = qe.toRdd
         if (rdd.getNumPartitions == 0) Array(write(0, 0, 0, Iterator.empty)._1)
-        else spark.sparkContext.runJob(rdd, (tc: TaskContext, rows: Iterator[InternalRow]) => {
-          val (names, bytes, records) =
-            write(tc.partitionId(), tc.stageId(), tc.attemptNumber(), rows)
-          TaskWrite.reportOutput(tc, bytes, records)
-          names
-        })
+        else {
+          sc.addJobTag(tag)
+          try sc.runJob(rdd, (tc: TaskContext, rows: Iterator[InternalRow]) => {
+            val (names, bytes, records) =
+              write(tc.partitionId(), tc.stageId(), tc.attemptNumber(), rows)
+            TaskWrite.reportOutput(tc, bytes, records)
+            names
+          }) catch {
+            case t: Throwable =>
+              try awaitTasks(sc, tag) catch { case e: Throwable => t.addSuppressed(e) }
+              throw t
+          } finally sc.removeJobTag(tag)
+        }
       }
       dests.zipWithIndex.foreach { case (d, i) =>
         val from = staging.resolve(i.toString)
@@ -97,6 +108,26 @@ object RoutedWrite {
         Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
       }
     } finally if (Files.exists(staging)) StreamTable.deleteTree(staging)
+  }
+
+  /** The longest a failed `write` waits for its job's other tasks. */
+  private val TaskEndWaitMs = 60000L
+
+  /** Wait, at most [[TaskEndWaitMs]], until every task of the jobs tagged
+    * `tag` has ended. A failed job's other tasks may still run; Spark only
+    * flags them killed. The status store hears of tasks through the
+    * listener bus, after the job has already failed, so this waits for the
+    * store to record each job's end and then for its stages' active tasks
+    * to reach zero. */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    def ended: Boolean = {
+      val jobs = st.getJobIdsForTag(tag).toSeq.flatMap(st.getJobInfo(_))
+      jobs.nonEmpty && jobs.forall(j => j.status != JobExecutionStatus.RUNNING &&
+        j.stageIds.forall(s => st.getStageInfo(s).forall(_.numActiveTasks == 0)))
+    }
+    val deadline = System.currentTimeMillis() + TaskEndWaitMs
+    while (!ended && System.currentTimeMillis() < deadline) Thread.sleep(10)
   }
 
   /** One partition: send each row to its destination's writer, opening a

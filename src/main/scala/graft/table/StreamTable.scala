@@ -1167,10 +1167,8 @@ class StreamTable(
         val cached = stampGuardCache.synchronized(
           Option(stampGuardCache.get(f.path)))
         val stamped = cached.getOrElse {
-          val conf = new org.apache.hadoop.conf.Configuration()
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f.path), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val r = openFooter(org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromPath(new org.apache.hadoop.fs.Path(f.path), hadoopConf()))
           val b = try java.lang.Boolean.valueOf(
             r.getFooter.getFileMetaData.getSchema.containsField(SeqColName))
           finally r.close()
@@ -3895,7 +3893,7 @@ object StreamTable {
     // manifest from here on, so no query plan ever re-opens this footer
     val captured: Seq[(String, CapturedStats, Long)] =
       if (paths.size < DistributedStatsThreshold) {
-        val conf = new org.apache.hadoop.conf.Configuration()
+        val conf = hadoopConf()
         paths.map(p =>
           (p, footerColumnStats(p, conf, seedSchema = true), Files.size(Paths.get(p))))
       } else {
@@ -3905,7 +3903,7 @@ object StreamTable {
         val byPath = spark.sparkContext
           .parallelize(paths, math.min(paths.size, 64))
           .map { p =>
-            val conf = new org.apache.hadoop.conf.Configuration()
+            val conf = hadoopConf()
             (p, footerColumnStats(p, conf, seedSchema = true), Files.size(Paths.get(p)))
           }.collect().map(x => x._1 -> x).toMap
         paths.map(byPath)
@@ -3979,14 +3977,14 @@ object StreamTable {
     require(files.nonEmpty, "no data files to take a schema from")
     val sqlConf = spark.sessionState.conf
     val converter = new ParquetToSparkSchemaConverter(sqlConf)
-    lazy val hadoopConf = spark.sessionState.newHadoopConf()
+    lazy val sessionConf = spark.sessionState.newHadoopConf()
     val schemas = files.distinct.sortBy(_._1).map { case key @ (path, _, _) =>
       val meta = fileSchemaMemo.synchronized(
         Option(fileSchemaMemo.get(key))).getOrElse {
         schemaFooterReads.incrementAndGet()
         val m = ParquetFooterReader.readFooter(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(path), hadoopConf),
+            new org.apache.hadoop.fs.Path(path), sessionConf),
           org.apache.parquet.format.converter.ParquetMetadataConverter
             .SKIP_ROW_GROUPS).getFileMetaData
         fileSchemaMemo.synchronized(fileSchemaMemo.put(key, m))
@@ -4148,6 +4146,35 @@ object StreamTable {
     * writer tasks / the distributed pass; specs assert the zero. */
   val driverCommitFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Hadoop's defaults, parsed once per JVM: the first read of a
+    * `new Configuration()` parses the core, hdfs, mapred and yarn
+    * `*-default.xml` files and probes the classpath for each `*-site.xml`,
+    * while a copy of a loaded configuration parses nothing. Never mutated.
+    * Hadoop's `addDefaultResource` reloads every live configuration, this
+    * one included, so a resource registered later reaches later copies. */
+  private lazy val baseHadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The configuration every graft file open and file write starts from: a
+    * copy of [[baseHadoopConf]], so its content is exactly that of
+    * `new Configuration()` (not the session's: `spark.hadoop.*` does not
+    * reach graft's readers). A site that sets keys (a read schema, pinned
+    * decode or write keys) sets them on its own copy. */
+  def hadoopConf(): org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration(baseHadoopConf)
+    // the class loader `new Configuration()` would take on this thread
+    c.setClassLoader(Option(Thread.currentThread().getContextClassLoader)
+      .getOrElse(classOf[org.apache.hadoop.conf.Configuration].getClassLoader))
+    c
+  }
+
+  /** Open a parquet file with read options built from the input file's own
+    * configuration. The one-argument `ParquetFileReader.open(in)` builds
+    * its options from a `new Configuration()` of its own. */
+  def openFooter(in: org.apache.parquet.hadoop.util.HadoopInputFile)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(in.getConfiguration).build())
+
   /** Commit-time footer capture: rows + per-column merged min/max +
     * presence/usability — everything [[DataFileMeta]] persists. A column
     * chunk with rows but null or unprovable stats poisons the COLUMN
@@ -4156,12 +4183,11 @@ object StreamTable {
   private[graft] def footerColumnStats(path: String,
       conf: org.apache.hadoop.conf.Configuration,
       seedSchema: Boolean = false): CapturedStats = {
-    import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     if (org.apache.spark.TaskContext.get() == null)
       driverCommitFooterReads.incrementAndGet()
     val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
-    val reader = ParquetFileReader.open(in)
+    val reader = openFooter(in)
     try {
       // a committed file's schema is known from this open: reads of it
       // then plan without a footer open of their own ([[fileSchema]])

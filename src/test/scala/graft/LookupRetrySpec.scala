@@ -1,7 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +12,7 @@ import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.functions.{col, lit, udf}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -354,9 +355,48 @@ class LookupRetrySpec extends AnyFunSuite {
     assert(keys(spark.read.parquet(s"$outDir/retry/pending-0")) == Seq(13L))
     assert(spark.read.parquet(s"$outDir/dead/batch-0").count() == 0L)
   }
+
+  test("a failed routed write returns after its job's last task and leaves no staging dir") {
+    val outDir = Files.createTempDirectory("graft_lr7_out_").toString
+    sleeperIn.set(new CountDownLatch(1))
+    // partition 0 fails once partition 1 is inside its row; partition 1
+    // then computes past the failure (a busy loop, which the kill's
+    // interrupt does not stop) and emits that row, so it opens its writer
+    // after the job has failed
+    val slow = udf { (k: Long) =>
+      if (k == 0L) {
+        sleeperIn.get.await(30, TimeUnit.SECONDS)
+        throw new IllegalStateException("boom on partition 0")
+      }
+      sleeperIn.get.countDown()
+      val until = System.nanoTime() + 1500L * 1000 * 1000
+      while (System.nanoTime() < until) {}
+      k
+    }
+    val frame = spark.range(0, 2, 1, 2).select(slow(col("id")).as("k"))
+    val ended = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = ended.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = intercept[Exception](RoutedWrite.write(frame,
+        Seq(RoutedWrite.Dest(s"$outDir/out", lit(true), Seq("k"))), outDir))
+      assert(String.valueOf(e.getMessage).contains("boom on partition 0"), e)
+      val deadline = System.currentTimeMillis() + 30000
+      while (ended.get < 2 && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(ended.get == 2, "both tasks ended")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(!StreamTable.listDir(Paths.get(outDir))
+      .exists(_.getFileName.toString.startsWith("_routed-")), "no staging dir is left")
+    assert(!Files.exists(Paths.get(s"$outDir/out")), "a failed job writes no destination")
+  }
 }
 
 object LookupRetrySpec {
   /** The key a test's UDF throws on; -1 for none. */
   val failOn = new java.util.concurrent.atomic.AtomicLong(-1L)
+
+  /** Opened by the routed-write test's slow partition once it holds its row. */
+  val sleeperIn = new AtomicReference(new CountDownLatch(0))
 }
